@@ -11,6 +11,18 @@ value-hash, columns sorted by name):
   accumulation; single-division ratios; no round() on hashed doubles);
 - DuckDB numeric literals are DECIMAL — oracle SQL casts to DOUBLE wherever
   Spark computes a double.
+
+Writing a streaming gate (the ``st*`` entries): build the input with
+``_gate_source`` (tune + pyds registration + readStream), add the Kafka
+envelope round trip with ``_via_envelope`` if the gate parses, and run it
+with ``_run_gate(spark, name, start, done)`` — it scopes the gate conf,
+starts ``start(ckpt)``, drains until ``done()`` (or, without ``done``,
+until an availableNow query ends), always stops the query and returns the
+checkpoint, which a restart gate passes to its next phase. Gates carry
+no retry of their own: the registry wraps each WHOLE gate function in
+``_retry_stream_flake``, because a start-level retry on a fresh checkpoint
+would replay epoch ids into the foreachBatch accumulators (st21/25/31/33/
+34/35), whose epoch guards would then skip those epochs.
 """
 
 from __future__ import annotations
@@ -24,6 +36,7 @@ from ..catalog import load_table
 from ..sources.io import scratch_dir as _scratch_dir
 from ..operators import shapes
 from ..session import tune
+from ..streaming import jobs
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -40,9 +53,9 @@ def _retry_stream_flake(name: str, fn):
     9.7 ms hrtimer interrupts) the runner misses the window, the
     stream dies at startup, and the gate raises. Every gate is a
     deterministic pure function of its (fresh-tempdir) inputs, so a
-    rerun computes the identical result; the poll loops fail FAST on
-    stream death (awaitTermination instead of sleep), so a flake costs
-    seconds, not the 120 s deadline. Batch queries never raise these.
+    rerun computes the identical result; _run_gate fails FAST on
+    stream death, so a flake costs seconds, not the gate deadline.
+    Batch queries never raise these.
     The retry is logged to stderr so bench/verify logs show it."""
     import functools
 
@@ -966,8 +979,6 @@ def st4_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window counts (ST4) via the streaming
     operator run in batch. One aggregate shuffle keyed on (window, type);
     state in streaming mode is O(open windows × types), never O(events)."""
-    from ..streaming import jobs
-
     events = _t(spark, sf_dir, "events")
     return jobs.windowed_votes(
         events, size="1 hour", ts_col="ts", group_cols=("event_type",)
@@ -998,8 +1009,6 @@ def st4_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     size/slide window copies BEFORE the aggregate (Expand node) — the 4×
     fan-out happens map-side and combines partially, so the shuffle carries
     aggregated (window, type) rows only."""
-    from ..streaming import jobs
-
     events = _t(spark, sf_dir, "events")
     return jobs.windowed_votes(
         events,
@@ -1042,8 +1051,6 @@ def st9_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     native session_window run in batch. Shuffles once on user_id, then
     merges intervals within each partition; streaming state is O(users ×
     open sessions), GC'd by the watermark."""
-    from ..streaming import jobs
-
     events = _t(spark, sf_dir, "events")
     return jobs.session_votes(
         events, gap="1 hour", ts_col="ts", group_cols=("user_id",)
@@ -1097,14 +1104,15 @@ _PYDS_DIM_SQL = ", ".join(f"('{c}', '{n}', '{p}')" for c, n, p in _PYDS_DIM)
 from contextlib import contextmanager
 
 
-_STREAM_WIDTH = 4  # state-store partitions per stateful op (see below)
-# stream-stream join gates pin their own width (the join commits FOUR
-# stateful-operator stores per partition per micro-batch — width 4 means
-# 16 store commits per batch instead of 32; interleaved A/B at widths
-# 8/4/2: st32 7.06/6.21/6.14 s, st15 5.27/5.13/4.98 s min-of-3 — 8→4 is
-# a consistent win, 4→2 is inside the noise, so 4 matches the non-join
-# gates' width)
-_JOIN_GATE_WIDTH = "4"
+# State-store partitions per stateful operator in every streaming gate.
+# Interleaved A/B (3 trials, medians) against the old defaultParallelism
+# width of 32: st2 13.7→5.2 s, st31 20.2→12.7 s, st30 26→13 s, st7
+# 18→8 s. Stream-stream joins commit FOUR stores per partition per
+# micro-batch; their A/B at widths 8/4/2 (min-of-3): st32 7.06/6.21/
+# 6.14 s, st15 5.27/5.13/4.98 s — 8→4 is a consistent win, 4→2 is inside
+# the noise, so one width serves join and non-join gates alike.
+_STREAM_WIDTH = 4
+_GATE_DEADLINE_S = 120.0  # wall-clock budget of one gate run
 
 
 def _local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
@@ -1137,7 +1145,7 @@ _STREAM_CONF = {
 }
 
 
-def _drain_until(q, check, what: str, deadline_s: float = 120.0) -> None:
+def _drain_until(q, check, what: str) -> None:
     """Wait for a streaming gate's completion condition, re-evaluating it
     only when a NEW micro-batch has committed. The condition is a real
     Spark job (memory-sink count/aggregate, manifest re-read), and it can
@@ -1153,7 +1161,7 @@ def _drain_until(q, check, what: str, deadline_s: float = 120.0) -> None:
     out exactly as before."""
     import time as _time
 
-    deadline = _time.time() + deadline_s
+    deadline = _time.time() + _GATE_DEADLINE_S
     last = None
     while _time.time() < deadline:
         p = q.lastProgress
@@ -1167,25 +1175,24 @@ def _drain_until(q, check, what: str, deadline_s: float = 120.0) -> None:
 
 
 @contextmanager
-def _stream_shuffle_conf(spark: SparkSession):
-    """Scope shuffle partitions to a SMALL fixed width (plus
-    _STREAM_CONF) around a streaming run and RESTORE the caller's
-    values after: state-store instances = shuffle partitions, so every
-    stateful operator commits that many store files per micro-batch —
-    pure checkpoint overhead at gate-sized event volumes (≤200 events,
-    ≤5 distinct keys). Measured interleaved A/B on this box (3 trials,
-    medians): width 32 → 4 cuts st2 13.7→5.2 s, st31 20.2→12.7 s, st30
-    26→13 s, st7 18→8 s, with identical results (the gates are
-    value-hashed). Production sizes this knob to key cardinality and
-    throughput; the gate pins it small for the same reason its sources
-    cap at max_rows. The width is baked into the checkpoint at first
-    start, so the scope must cover every (re)start against the same
-    checkpoint; the caller's batch-query conf is none of our business."""
+def _stream_shuffle_conf(spark: SparkSession, conf: dict | None = None):
+    """Scope shuffle partitions to _STREAM_WIDTH (plus _STREAM_CONF and
+    the gate's own ``conf``) around a streaming run and RESTORE the
+    caller's values after: state-store instances = shuffle partitions,
+    so every stateful operator commits that many store files per
+    micro-batch — pure checkpoint overhead at gate-sized event volumes
+    (≤200 events, ≤5 distinct keys). Production sizes this knob to key
+    cardinality and throughput; the gate pins it small for the same
+    reason its sources cap at max_rows. The width is baked into the
+    checkpoint at first start, so every (re)start against one
+    checkpoint must run inside such a scope; the caller's batch-query
+    conf is none of our business."""
     confs = {
         "spark.sql.shuffle.partitions": str(
             min(spark.sparkContext.defaultParallelism, _STREAM_WIDTH)
         ),
         **_STREAM_CONF,
+        **(conf or {}),
     }
     old = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
@@ -1197,53 +1204,74 @@ def _stream_shuffle_conf(spark: SparkSession):
             spark.conf.set(k, v)
 
 
-def _pyds_stream_table(
-    spark: SparkSession, agg_of, name: str, count_col: str
-) -> DataFrame:
-    """Shared harness for the pyds streaming parity entries: run a REAL
-    streaming query (micro-batched source, WAL'd checkpoint,
-    complete-mode state carried across batches) over the X97 transport —
-    source → envelope serialize → envelope parse → ``agg_of(parsed)`` —
-    into a memory sink, poll until every event is accounted for
-    (sum(count_col) == max_rows), stop, and return the final table for
-    the hash gate. Deadline-guarded; the source caps at max_rows so the
-    run is bounded."""
-    import time as _time
+# micro-batch as fast as the gate's capped source delivers
+_NOW = {"processingTime": "0 seconds"}
 
+
+def _gate_source(spark: SparkSession, fmt: str = "vote_stream", **options):
+    """The readStream of a pyds transport (``vote_stream``: the Simple
+    driver-side reader; ``vote_stream_dist``: the partitioned one) with
+    ``options`` as reader options. Runs tune() first: batch entries
+    inherit it from _t's parquet load, and a stream source has none."""
     from ..sources import pyds
-    from ..streaming import envelope, jobs
 
-    # the batch entries inherit tune() via _t's parquet load; a stream
-    # source has no table load, so tune here (UTC/AQE/arrow)
     tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST1_PYDS_N)
-        .load()
+    (pyds.register if fmt == "vote_stream" else pyds.register_dist)(spark)
+    return spark.readStream.format(fmt).options(**options).load()
+
+
+def _via_envelope(stream: DataFrame) -> DataFrame:
+    """The Kafka-style round trip every parsed gate runs: to_envelope
+    (the producer's serialize) → parse_envelope (the consumer's)."""
+    from ..streaming import envelope
+
+    return envelope.parse_envelope(
+        envelope.to_envelope(stream, "vote_id"), stream.schema
     )
-    env = envelope.to_envelope(stream, "vote_id")
-    parsed = envelope.parse_envelope(env, stream.schema)
-    agg = agg_of(parsed)
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="complete",
-            trigger={"processingTime": "0 seconds"},
-        )
+
+
+def _run_gate(
+    spark: SparkSession, name: str, start, done=None,
+    ckpt: str | None = None, conf: dict | None = None,
+) -> str:
+    """Run one streaming gate phase: ``start(ckpt)`` inside the gate
+    conf scope (_stream_shuffle_conf with ``conf``), then wait — for
+    ``done()`` via _drain_until, or, with no condition, for the
+    self-terminating (availableNow) query to finish — and ALWAYS stop
+    the query. Either wait raises TimeoutError after _GATE_DEADLINE_S;
+    a stream that dies raises its StreamingQueryException at once.
+    Creates a fresh checkpoint unless ``ckpt`` is given (restart gates
+    pass the first phase's), and returns it."""
+    if ckpt is None:
+        ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
+    what = f"{name}: not finished within {_GATE_DEADLINE_S:.0f} s"
+    with _stream_shuffle_conf(spark, conf):
+        q = start(ckpt)
         try:
-            _drain_until(
-                q,
-                lambda: spark.table(name)
-                .agg(F.sum(count_col))
-                .collect()[0][0]
-                == _ST1_PYDS_N,
-                f"{name}: sink never reached {_ST1_PYDS_N} events",
-            )
+            if done is not None:
+                _drain_until(q, done, what)
+            elif not q.awaitTermination(_GATE_DEADLINE_S):
+                raise TimeoutError(what)
         finally:
             q.stop()
-    return spark.table(name)
+    return ckpt
+
+
+def _verdict_counts(spark: SparkSession, results: dict) -> DataFrame:
+    """Per-vote delivery verdicts of the index-dedup gates (st31/33/35):
+    ``results`` maps epoch id → that epoch's probe rows."""
+    flat = [
+        (r["doc_id"], r["status"]) for rows in results.values() for r in rows
+    ]
+    verdicts = _local_df(spark, flat, "vote_id string, status string")
+    status = F.col("status")
+    return verdicts.groupBy("vote_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_deliveries"),
+        F.sum((status == "kept").cast("long")).alias("n_kept"),
+        F.sum((status == "dup_in_index").cast("long")).alias(
+            "n_dup_in_index"
+        ),
+    )
 
 
 _ST1_PYDS_SQL = f"""
@@ -1261,23 +1289,27 @@ def st1_pyds_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST1 end-to-end over the X97 transport: readStream("vote_stream")
     (3 micro-batches of 40 deterministic events) → to_envelope (the S2
     producer serialize) → parse_envelope (the S4 consumer parse) →
-    windowed_votes 1-minute tumbling (ST4) → complete-mode memory sink
-    (see _pyds_stream_table for the execution contract).
+    windowed_votes 1-minute tumbling (ST4) → complete-mode memory sink,
+    run by _run_gate until the sink has counted every event.
 
     ``sf_dir`` is unused — the transport IS the source (these pyds
     entries are the registered queries whose input is a stream, not the
     parquet corpus)."""
-    from ..streaming import jobs
-
-    return _pyds_stream_table(
-        spark,
-        lambda parsed: jobs.windowed_votes(
-            parsed, size="1 minute", ts_col="voted_at",
-            group_cols=("candidate_id",),
-        ),
-        "st1_pyds_parity",
-        "vote_count",
+    name = "st1_pyds_parity"
+    parsed = _via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST1_PYDS_N)
     )
+    agg = jobs.windowed_votes(
+        parsed, size="1 minute", ts_col="voted_at",
+        group_cols=("candidate_id",),
+    )
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "complete", _NOW),
+        lambda: spark.table(name).agg(F.sum("vote_count")).first()[0]
+        == _ST1_PYDS_N,
+    )
+    return spark.table(name)
 
 
 @query("st5_pyds_checkpoint_recovery", _ST1_PYDS_SQL)
@@ -1302,77 +1334,35 @@ def st5_pyds_checkpoint_recovery(
     guaranteed forward progress. (The reference offers no recovery
     story at all; a crashed consumer re-reads from its consumer-group
     offset with at-least-once semantics.)"""
-    import time as _time
+    name = "st5_pyds_parity"
 
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
-
-    def build(max_rows: int):
-        stream = (
-            spark.readStream.format("vote_stream")
-            .option("rows_per_batch", 30)
-            .option("max_rows", max_rows)
-            .load()
+    def start(max_rows: int):
+        parsed = _via_envelope(
+            _gate_source(spark, rows_per_batch=30, max_rows=max_rows)
         )
-        parsed = envelope.parse_envelope(
-            envelope.to_envelope(stream, "vote_id"), stream.schema
-        )
-        return jobs.windowed_votes(
+        agg = jobs.windowed_votes(
             parsed, size="1 minute", ts_col="voted_at",
             group_cols=("candidate_id",),
         )
+        return lambda ck: jobs.start_to_memory(
+            agg, name, ck, "complete", _NOW
+        )
 
-    name = "st5_pyds_parity"
-    ckpt = _scratch_dir(prefix="rtvs_st5_pyds_")
+    def reached(n: int):
+        return (
+            lambda: spark.table(name).agg(F.sum("vote_count")).first()[0]
+            == n
+        )
+
+    # phase 1: source capped at half the events — runs to exhaustion
+    # (sink sum == half, deterministic), then a clean stop
     half = _ST1_PYDS_N // 2
-
-    # the conf scope covers BOTH starts: the state width is baked into
-    # the checkpoint at first start and the restart must match it
-    with _stream_shuffle_conf(spark):
-        # phase 1: source capped at half the events — runs to exhaustion
-        # (sink sum == half, deterministic), then a clean stop
-        q = jobs.start_to_memory(
-            build(half), name, ckpt, output_mode="complete",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            deadline = _time.time() + 120
-            while _time.time() < deadline:
-                got = (
-                    spark.table(name)
-                    .agg(F.sum("vote_count"))
-                    .collect()[0][0]
-                )
-                if got == half:
-                    break
-                q.awaitTermination(0.05)
-            else:
-                raise TimeoutError(f"{name}: phase 1 never reached cap")
-        finally:
-            q.stop()
-
-        # phase 2: restart from the SAME checkpoint with the cap lifted;
-        # the source has guaranteed new rows past the committed offset,
-        # so the restarted query always runs batches and must converge
-        # to the uninterrupted result
-        q = jobs.start_to_memory(
-            build(_ST1_PYDS_N), name, ckpt, output_mode="complete",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name)
-                .agg(F.sum("vote_count"))
-                .collect()[0][0]
-                == _ST1_PYDS_N,
-                f"{name}: restart never completed",
-            )
-        finally:
-            q.stop()
+    ckpt = _run_gate(spark, name, start(half), reached(half))
+    # phase 2: restart from the SAME checkpoint with the cap lifted;
+    # the source has guaranteed new rows past the committed offset,
+    # so the restarted query always runs batches and must converge
+    # to the uninterrupted result
+    _run_gate(spark, name, start(_ST1_PYDS_N), reached(_ST1_PYDS_N), ckpt)
     return spark.table(name)
 
 
@@ -1401,8 +1391,6 @@ def st2_pyds_votes_per_candidate(
     path executes) → stream-static broadcast enrichment with the
     candidate dimension (the normalized layout the reference sidesteps
     by denormalizing) → running count per (candidate, name, party)."""
-    from ..streaming import jobs
-
     # JVM LocalRelation (VALUES), not createDataFrame: the static side of
     # a stream-static join re-executes EVERY micro-batch, and a
     # Python-parallelized 3-row frame costs defaultParallelism Python
@@ -1413,17 +1401,22 @@ def st2_pyds_votes_per_candidate(
         f"SELECT * FROM (VALUES {_PYDS_DIM_SQL}) AS "
         "t(candidate_id, candidate_name, party)"
     )
-
-    def build(parsed: DataFrame) -> DataFrame:
-        deduped = jobs.dedup_votes(parsed)
-        enriched = jobs.enrich_with_dim(
-            deduped, dim, "candidate_id", ("candidate_name", "party")
-        )
-        return jobs.votes_per_candidate(enriched)
-
-    return _pyds_stream_table(
-        spark, build, "st2_pyds_parity", "vote_count"
+    name = "st2_pyds_parity"
+    parsed = _via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST1_PYDS_N)
     )
+    enriched = jobs.enrich_with_dim(
+        jobs.dedup_votes(parsed), dim, "candidate_id",
+        ("candidate_name", "party"),
+    )
+    agg = jobs.votes_per_candidate(enriched)
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "complete", _NOW),
+        lambda: spark.table(name).agg(F.sum("vote_count")).first()[0]
+        == _ST1_PYDS_N,
+    )
+    return spark.table(name)
 
 
 _ST3_PYDS_SQL = f"""
@@ -1444,14 +1437,17 @@ def st3_pyds_turnout_by_location(
     running turnout per state. 5 state keys → bounded complete-mode
     state; the oracle recomputes pyds.vote_event's state pick
     (h//100 % 5) in SQL."""
-    from ..streaming import jobs
-
-    return _pyds_stream_table(
-        spark,
-        lambda parsed: jobs.turnout_by_location(parsed),
-        "st3_pyds_parity",
-        "turnout",
+    name = "st3_pyds_parity"
+    agg = jobs.turnout_by_location(_via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST1_PYDS_N)
+    ))
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "complete", _NOW),
+        lambda: spark.table(name).agg(F.sum("turnout")).first()[0]
+        == _ST1_PYDS_N,
     )
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -1561,48 +1557,24 @@ def st6_pyds_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     the entire lateness contract is hash-verified, not just asserted.
 
     ``sf_dir`` is unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
     cfg = _ST6
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", cfg["rpb"])
-        .option("max_rows", cfg["n"])
-        .option("late_every", cfg["late_every"])
-        .option("late_by", cfg["late_by"])
-        .option("very_late_every", cfg["very_late_every"])
-        .option("very_late_by", cfg["very_late_by"])
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
+    name = "st6_pyds_parity"
+    parsed = _via_envelope(_gate_source(
+        spark, rows_per_batch=cfg["rpb"], max_rows=cfg["n"],
+        late_every=cfg["late_every"], late_by=cfg["late_by"],
+        very_late_every=cfg["very_late_every"],
+        very_late_by=cfg["very_late_by"],
+    ))
     agg = jobs.windowed_votes(
         parsed, size="1 minute", watermark=f"{cfg['delay_s']} seconds",
         ts_col="voted_at", group_cols=("candidate_id",),
     )
-    name = "st6_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
     expected = _st6_expected_rows()
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="append",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name).count() == expected,
-                f"{name}: sink never reached {expected} finalized "
-                f"windows (append-mode emission or drop rule broke)",
-            )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "append", _NOW),
+        lambda: spark.table(name).count() == expected,
+    )
     return spark.table(name)
 
 
@@ -1647,25 +1619,13 @@ def st7_pyds_one_vote_per_voter(
     dropped whether it landed in the same micro-batch as its original
     (i−5 in the same 40-row batch) or a later one (cross-batch, via
     state). ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
     cfg = _ST7
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", cfg["rpb"])
-        .option("max_rows", cfg["n"])
-        .option("replay_every", cfg["replay_every"])
-        .option("replay_offset", cfg["replay_offset"])
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
+    name = "st7_pyds_parity"
+    parsed = _via_envelope(_gate_source(
+        spark, rows_per_batch=cfg["rpb"], max_rows=cfg["n"],
+        replay_every=cfg["replay_every"],
+        replay_offset=cfg["replay_offset"],
+    ))
     agg = (
         jobs.dedup_votes(parsed)
         .groupBy("candidate_id")
@@ -1680,25 +1640,12 @@ def st7_pyds_one_vote_per_voter(
             and i >= cfg["replay_offset"]
         )
     )
-    name = "st7_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="complete",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name)
-                .agg(F.sum("vote_count"))
-                .collect()[0][0]
-                == n_unique,
-                f"{name}: sink never reached {n_unique} unique votes "
-                f"(replay dedup broke)",
-            )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "complete", _NOW),
+        lambda: spark.table(name).agg(F.sum("vote_count")).first()[0]
+        == n_unique,
+    )
     return spark.table(name)
 
 
@@ -1710,6 +1657,11 @@ def st7_pyds_one_vote_per_voter(
 # ---------------------------------------------------------------------------
 
 _ST15_N = 120
+
+# the joined columns every stream-stream join gate (st15/18/26/27) hashes
+_JOIN_COLS = (
+    "vote_id", "candidate_id", "voted_at", "r_candidate_id", "r_voted_at"
+)
 
 _ST15_SQL = f"""
 WITH ev AS (
@@ -1742,59 +1694,23 @@ def st15_pyds_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched through buffered state, which is exactly the contract being
     verified: every event pairs exactly once, whatever the arrival
     interleaving. ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
+    name = "st15_pyds_parity"
 
     def src(rpb: int) -> DataFrame:
-        stream = (
-            spark.readStream.format("vote_stream")
-            .option("rows_per_batch", rpb)
-            .option("max_rows", _ST15_N)
-            .load()
-        )
-        return envelope.parse_envelope(
-            envelope.to_envelope(stream, "vote_id"), stream.schema
+        return _via_envelope(
+            _gate_source(spark, rows_per_batch=rpb, max_rows=_ST15_N)
         )
 
     joined = jobs.stream_stream_join(
         src(60), src(44), key="vote_id",
         left_ts="voted_at", right_ts="voted_at",
         within="1 hour", watermark="10 minutes",
-    ).select(
-        "vote_id", "candidate_id", "voted_at",
-        "r_candidate_id", "r_voted_at",
+    ).select(*_JOIN_COLS)
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(joined, name, ck, "append", _NOW),
+        lambda: spark.table(name).count() == _ST15_N,
     )
-    name = "st15_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    # pinned independently of _stream_shuffle_conf: a stream-stream
-    # join commits FOUR stateful-operator stores per partition per
-    # micro-batch — _JOIN_GATE_WIDTH sizes it for gate-scale volume (the
-    # conf is baked into this query's fresh checkpoint, not the caller's)
-    _confs = {"spark.sql.shuffle.partitions": _JOIN_GATE_WIDTH, **_STREAM_CONF}
-    _old = {k: spark.conf.get(k) for k in _confs}
-    for _k, _v in _confs.items():
-        spark.conf.set(_k, _v)
-    try:
-        q = jobs.start_to_memory(
-            joined, name, ckpt, output_mode="append",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name).count() == _ST15_N,
-                f"{name}: join never produced {_ST15_N} pairs",
-            )
-        finally:
-            q.stop()
-    finally:
-        for _k, _v in _old.items():
-            spark.conf.set(_k, _v)
     return spark.table(name)
 
 
@@ -1836,49 +1752,27 @@ def st16_pyds_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     unacked Kafka messages) and must reproduce all {_ST16_N} events
     exactly once, timestamps round-tripped through the json encoding.
     ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
     from ..sources import pyds
-    from ..streaming import envelope, jobs
 
-    tune(spark)
-    pyds.register(spark)
+    parsed = _via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST16_N)
+    )
     pyds.register_sink(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST16_N)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
     out_dir = _scratch_dir(prefix="rtvs_st16_sink_")
-    ckpt = _scratch_dir(prefix="rtvs_st16_ckpt_")
     read_schema = (
         "vote_id string, voter_id string, candidate_id string, "
         "address_state string, voted_at string"
     )
-    with _stream_shuffle_conf(spark):
-        q = (
-            parsed.writeStream.format("vote_sink")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: pyds.read_committed(
-                    spark, out_dir, read_schema
-                ).count()
-                == _ST16_N,
-                f"st16: committed manifests never covered {_ST16_N} "
-                f"events",
-            )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, "st16_pyds_parity",
+        lambda ck: parsed.writeStream.format("vote_sink")
+        .option("path", out_dir)
+        .option("checkpointLocation", ck)
+        .trigger(**_NOW)
+        .start(),
+        lambda: pyds.read_committed(spark, out_dir, read_schema).count()
+        == _ST16_N,
+    )
     committed = pyds.read_committed(spark, out_dir, read_schema)
     ts = F.to_timestamp("voted_at", "yyyy-MM-dd HH:mm:ss")
     return committed.groupBy("candidate_id").agg(
@@ -1935,37 +1829,20 @@ def st18_pyds_stream_join_outer(
     outer-join trailing edge the docstring of
     streaming/jobs.stream_stream_join documents, now hash-verified.
     ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
     cfg = _ST18
-    tune(spark)
-    pyds.register(spark)
+    name = "st18_pyds_parity"
 
     def src(rpb: int, max_rows: int) -> DataFrame:
-        stream = (
-            spark.readStream.format("vote_stream")
-            .option("rows_per_batch", rpb)
-            .option("max_rows", max_rows)
-            .load()
-        )
-        return envelope.parse_envelope(
-            envelope.to_envelope(stream, "vote_id"), stream.schema
+        return _via_envelope(
+            _gate_source(spark, rows_per_batch=rpb, max_rows=max_rows)
         )
 
     joined = jobs.stream_stream_join(
         src(60, cfg["n_left"]), src(44, cfg["n_right"]), key="vote_id",
         left_ts="voted_at", right_ts="voted_at",
         within="1 hour", watermark=cfg["delay"], how="leftOuter",
-    ).select(
-        "vote_id", "candidate_id", "voted_at",
-        "r_candidate_id", "r_voted_at",
-    )
+    ).select(*_JOIN_COLS)
     expected = cfg["n_left"] - 1
-    name = "st18_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
     # multipleWatermarkPolicy=max, scoped to this query: the right
     # stream EXHAUSTS at +59 s, so under the default min policy its
     # stalled watermark would pin the global one forever and no
@@ -1973,30 +1850,12 @@ def st18_pyds_stream_join_outer(
     # finished-upstream scenario the max policy exists for. (Production
     # default stays min: with live sources, min is the only policy that
     # never evicts rows a lagging stream could still match.)
-    _confs = {
-        "spark.sql.shuffle.partitions": _JOIN_GATE_WIDTH,
-        "spark.sql.streaming.multipleWatermarkPolicy": "max",
-        **_STREAM_CONF,
-    }
-    _old = {k: spark.conf.get(k) for k in _confs}
-    for k, v in _confs.items():
-        spark.conf.set(k, v)
-    try:
-        q = jobs.start_to_memory(
-            joined, name, ckpt, output_mode="append",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name).count() == expected,
-                f"{name}: outer join never reached {expected} rows",
-            )
-        finally:
-            q.stop()
-    finally:
-        for k, v in _old.items():
-            spark.conf.set(k, v)
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(joined, name, ck, "append", _NOW),
+        lambda: spark.table(name).count() == expected,
+        conf={"spark.sql.streaming.multipleWatermarkPolicy": "max"},
+    )
     return spark.table(name)
 
 
@@ -2021,6 +1880,28 @@ def st18_pyds_stream_join_outer(
 # frontiers).
 _ST26 = {"n": 120, "remap_from": 90, "delay": "500 milliseconds",
          "within": "10 seconds"}
+
+
+def _remapped_feeds(spark: SparkSession, cfg: dict):
+    """The lockstep feeds of the full-outer join gates (st26/st27):
+    the same ``cfg["n"]`` events on two partitioned sources, the right
+    one re-keying ids ≥ ``cfg["remap_from"]`` to 'rhs-' keys — the
+    right-only population."""
+
+    def src() -> DataFrame:
+        return _via_envelope(_gate_source(
+            spark, "vote_stream_dist", rows_per_batch=40,
+            max_rows=cfg["n"], num_partitions=2,
+        ))
+
+    right = src().withColumn(
+        "vote_id",
+        F.when(
+            F.substring("vote_id", 6, 8).cast("int") >= cfg["remap_from"],
+            F.concat(F.lit("rhs-"), F.col("vote_id")),
+        ).otherwise(F.col("vote_id")),
+    )
+    return src(), right
 
 _ST26_SQL = f"""
 WITH ev AS (
@@ -2058,75 +1939,24 @@ def st26_pyds_stream_join_full(
     unmatched-key population comes from a key remap instead). The key
     column is coalesced across sides so right-only rows keep their id.
     ``sf_dir`` unused — the transports ARE the sources."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
     cfg = _ST26
-    tune(spark)
-    pyds.register(spark)
-    pyds.register_dist(spark)
-
-    def src(rpb: int, max_rows: int) -> DataFrame:
-        stream = (
-            spark.readStream.format("vote_stream_dist")
-            .option("rows_per_batch", rpb)
-            .option("max_rows", max_rows)
-            .option("num_partitions", 2)
-            .load()
-        )
-        return envelope.parse_envelope(
-            envelope.to_envelope(stream, "vote_id"), stream.schema
-        )
-
-    right = src(40, cfg["n"]).withColumn(
-        "vote_id",
-        F.when(
-            F.substring("vote_id", 6, 8).cast("int") >= cfg["remap_from"],
-            F.concat(F.lit("rhs-"), F.col("vote_id")),
-        ).otherwise(F.col("vote_id")),
-    )
+    name = "st26_pyds_parity"
+    left, right = _remapped_feeds(spark, cfg)
     joined = jobs.stream_stream_join(
-        src(40, cfg["n"]),
-        right,
-        key="vote_id",
+        left, right, key="vote_id",
         left_ts="voted_at", right_ts="voted_at",
         within=cfg["within"], watermark=cfg["delay"], how="fullOuter",
-    ).select(
-        "vote_id", "candidate_id", "voted_at",
-        "r_candidate_id", "r_voted_at",
-    )
+    ).select(*_JOIN_COLS)
     expected = 138
-    name = "st26_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
     # max watermark policy, as in st18: both streams exhaust, and under
     # the default min policy the earlier-finishing side would pin the
     # global watermark below every eviction threshold forever
-    _confs = {
-        "spark.sql.shuffle.partitions": _JOIN_GATE_WIDTH,
-        "spark.sql.streaming.multipleWatermarkPolicy": "max",
-        **_STREAM_CONF,
-    }
-    _old = {k: spark.conf.get(k) for k in _confs}
-    for k, v in _confs.items():
-        spark.conf.set(k, v)
-    try:
-        q = jobs.start_to_memory(
-            joined, name, ckpt, output_mode="append",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name).count() == expected,
-                f"{name}: full-outer join never reached {expected} rows",
-            )
-        finally:
-            q.stop()
-    finally:
-        for k, v in _old.items():
-            spark.conf.set(k, v)
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(joined, name, ck, "append", _NOW),
+        lambda: spark.table(name).count() == expected,
+        conf={"spark.sql.streaming.multipleWatermarkPolicy": "max"},
+    )
     return spark.table(name)
 
 
@@ -2183,74 +2013,24 @@ def st27_pyds_min_policy_join(
     the same plan under the max policy would emit 30 more left-only
     rows, so the gate discriminates the policies. ``sf_dir`` unused —
     the transports ARE the sources."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
     cfg = _ST27
-    tune(spark)
-    pyds.register_dist(spark)
-
-    def src(rpb: int, max_rows: int) -> DataFrame:
-        stream = (
-            spark.readStream.format("vote_stream_dist")
-            .option("rows_per_batch", rpb)
-            .option("max_rows", max_rows)
-            .option("num_partitions", 2)
-            .load()
-        )
-        return envelope.parse_envelope(
-            envelope.to_envelope(stream, "vote_id"), stream.schema
-        )
-
-    right = src(40, cfg["n"]).withColumn(
-        "vote_id",
-        F.when(
-            F.substring("vote_id", 6, 8).cast("int") >= cfg["remap_from"],
-            F.concat(F.lit("rhs-"), F.col("vote_id")),
-        ).otherwise(F.col("vote_id")),
-    )
+    name = "st27_pyds_parity"
+    left, right = _remapped_feeds(spark, cfg)
     joined = jobs.stream_stream_join(
-        src(40, cfg["n"]),
-        right,
-        key="vote_id",
+        left, right, key="vote_id",
         left_ts="voted_at", right_ts="voted_at",
         within=cfg["within"], watermark=cfg["delay"],
         right_watermark=cfg["right_delay"], how="fullOuter",
-    ).select(
-        "vote_id", "candidate_id", "voted_at",
-        "r_candidate_id", "r_voted_at",
-    )
+    ).select(*_JOIN_COLS)
     expected = 138
-    name = "st27_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
     # explicit min policy (the Spark default) — this gate exists to pin
     # that default's arithmetic, so say it out loud
-    _confs = {
-        "spark.sql.shuffle.partitions": _JOIN_GATE_WIDTH,
-        "spark.sql.streaming.multipleWatermarkPolicy": "min",
-        **_STREAM_CONF,
-    }
-    _old = {k: spark.conf.get(k) for k in _confs}
-    for k, v in _confs.items():
-        spark.conf.set(k, v)
-    try:
-        q = jobs.start_to_memory(
-            joined, name, ckpt, output_mode="append",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name).count() == expected,
-                f"{name}: min-policy join never reached {expected} rows",
-            )
-        finally:
-            q.stop()
-    finally:
-        for k, v in _old.items():
-            spark.conf.set(k, v)
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(joined, name, ck, "append", _NOW),
+        lambda: spark.table(name).count() == expected,
+        conf={"spark.sql.streaming.multipleWatermarkPolicy": "min"},
+    )
     return spark.table(name)
 
 
@@ -2298,22 +2078,10 @@ def st28_pyds_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-writer-wins compaction and the tombstone filter. The batch
     twin with a snapshot to merge ONTO is s15_cdc_apply. ``sf_dir``
     unused — the transport IS the source."""
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register_dist(spark)
-    stream = (
-        spark.readStream.format("vote_stream_dist")
-        .option("backlog_rows", _ST28_N)
-        .option("max_rows", _ST28_N)
-        .option("num_partitions", 4)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
+    parsed = _via_envelope(_gate_source(
+        spark, "vote_stream_dist", backlog_rows=_ST28_N,
+        max_rows=_ST28_N, num_partitions=4,
+    ))
     i = F.substring("vote_id", 6, 8).cast("long")
     changes = parsed.select(
         (i % 20).alias("k"),
@@ -2323,15 +2091,14 @@ def st28_pyds_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("U")).alias("op"),
         F.col("candidate_id").alias("val"),
     )
-    name = "st28_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    state = _scratch_dir(prefix=f"rtvs_{name}_state_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_changefeed_apply(
-            changes, state, ckpt, keys=("k",), seq_col="seq",
+    state = _scratch_dir(prefix="rtvs_st28_pyds_parity_state_")
+    _run_gate(
+        spark, "st28_pyds_parity",
+        lambda ck: jobs.start_changefeed_apply(
+            changes, state, ck, keys=("k",), seq_col="seq",
             trigger={"availableNow": True},
-        )
-        q.awaitTermination(120)
+        ),
+    )
     return jobs.read_changefeed_state(spark, state)
 
 
@@ -2362,65 +2129,37 @@ def st29_pyds_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than passing it vacuously. Same hash gate as st3: counts
     must be identical across state backends. ``sf_dir`` unused — the
     transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST1_PYDS_N)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
-    agg = jobs.turnout_by_location(parsed)
     name = "st29_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
+    agg = jobs.turnout_by_location(_via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST1_PYDS_N)
+    ))
+    started = []
+
+    def start(ck: str):
+        started.append(jobs.start_to_memory(agg, name, ck, "complete", _NOW))
+        return started[-1]
+
+    _run_gate(
+        spark, name, start,
+        lambda: spark.table(name).agg(F.sum("turnout")).first()[0]
+        == _ST1_PYDS_N,
+        conf={
+            "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        },
     )
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, rocks)
-    try:
-        with _stream_shuffle_conf(spark):
-            q = jobs.start_to_memory(
-                agg, name, ckpt, output_mode="complete",
-                trigger={"processingTime": "0 seconds"},
-            )
-            try:
-                _drain_until(
-                    q,
-                    lambda: spark.table(name)
-                    .agg(F.sum("turnout"))
-                    .collect()[0][0]
-                    == _ST1_PYDS_N,
-                    f"{name}: never reached {_ST1_PYDS_N} events",
-                )
-                lp = q.lastProgress or {}
-                metrics = {
-                    k
-                    for op in lp.get("stateOperators", [])
-                    for k in (op.get("customMetrics") or {})
-                }
-                if not any("rocksdb" in k.lower() for k in metrics):
-                    raise AssertionError(
-                        "st29: RocksDB provider not in effect "
-                        f"(state metrics: {sorted(metrics)[:5]})"
-                    )
-            finally:
-                q.stop()
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
+    lp = started[-1].lastProgress or {}
+    metrics = {
+        k
+        for op in lp.get("stateOperators", [])
+        for k in (op.get("customMetrics") or {})
+    }
+    if not any("rocksdb" in k.lower() for k in metrics):
+        raise AssertionError(
+            "st29: RocksDB provider not in effect "
+            f"(state metrics: {sorted(metrics)[:5]})"
+        )
     return spark.table(name)
 
 
@@ -2526,25 +2265,12 @@ def st30_pyds_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission frontier. Batch twin through the same operator code:
     st9_session_window. ``sf_dir`` unused — the transport IS the
     source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
     cfg = _ST30
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", cfg["rpb"])
-        .option("max_rows", cfg["n"])
-        .option("burst_size", cfg["burst"])
-        .option("burst_gap_s", cfg["gap_s"])
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
+    name = "st30_pyds_parity"
+    parsed = _via_envelope(_gate_source(
+        spark, rows_per_batch=cfg["rpb"], max_rows=cfg["n"],
+        burst_size=cfg["burst"], burst_gap_s=cfg["gap_s"],
+    ))
     agg = jobs.session_votes(
         parsed,
         gap=f"{cfg['session_gap_s']} seconds",
@@ -2552,23 +2278,12 @@ def st30_pyds_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="voted_at",
         group_cols=("address_state",),
     )
-    name = "st30_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
     expected = _st30_expected_rows()
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="append",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name).count() == expected,
-                f"{name}: sink never reached {expected} closed "
-                f"sessions (session merge or watermark closure broke)",
-            )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "append", _NOW),
+        lambda: spark.table(name).count() == expected,
+    )
     return spark.table(name)
 
 
@@ -2615,45 +2330,22 @@ def st19_pyds_stateful_cumulative(
     equal the event-time cumulative the oracle computes (the source is
     in-order, so arrival-order state accumulation coincides with event
     time). ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST19_N)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
-    cum = jobs.cumulative_votes_stateful(parsed)
     name = "st19_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            cum, name, ckpt, output_mode="update",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            # final state: the per-key max cumulative (= the last
-            # bucket's running total) sums to every event seen
-            _drain_until(
-                q,
-                lambda: spark.table(name)
-                .groupBy("candidate_id")
-                .agg(F.max("cumulative").alias("m"))
-                .agg(F.sum("m"))
-                .collect()[0][0]
-                == _ST19_N,
-                f"{name}: cumulative state never covered {_ST19_N}",
-            )
-        finally:
-            q.stop()
+    cum = jobs.cumulative_votes_stateful(_via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST19_N)
+    ))
+    # final state: the per-key max cumulative (= the last bucket's
+    # running total) sums to every event seen
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(cum, name, ck, "update", _NOW),
+        lambda: spark.table(name)
+        .groupBy("candidate_id")
+        .agg(F.max("cumulative").alias("m"))
+        .agg(F.sum("m"))
+        .first()[0]
+        == _ST19_N,
+    )
     return (
         spark.table(name)
         .groupBy("candidate_id", "bucket")
@@ -2696,44 +2388,20 @@ def st20_pyds_partitioned_source(
     the gate certifies the partitioned read path loses, duplicates,
     and reorders nothing. ``sf_dir`` unused — the transport IS the
     source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register_dist(spark)
-    stream = (
-        spark.readStream.format("vote_stream_dist")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST20_N)
-        .option("num_partitions", 4)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
+    name = "st20_pyds_parity"
+    parsed = _via_envelope(_gate_source(
+        spark, "vote_stream_dist", rows_per_batch=40, max_rows=_ST20_N,
+        num_partitions=4,
+    ))
     agg = parsed.groupBy("candidate_id").agg(
         F.count("*").alias("vote_count")
     )
-    name = "st20_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="complete",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name)
-                .agg(F.sum("vote_count"))
-                .collect()[0][0]
-                == _ST20_N,
-                f"{name}: sink never reached {_ST20_N} events",
-            )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "complete", _NOW),
+        lambda: spark.table(name).agg(F.sum("vote_count")).first()[0]
+        == _ST20_N,
+    )
     return spark.table(name)
 
 
@@ -2778,21 +2446,8 @@ def st21_pyds_foreachbatch_rank(
     percentage against the oracle — the exact numbers the reference's
     leading-candidates dashboard panel shows (app.py Q2).
     ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST21_N)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
+    parsed = _via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST21_N)
     )
     agg = parsed.groupBy("candidate_id").agg(
         F.count("*").alias("vote_count")
@@ -2804,32 +2459,25 @@ def st21_pyds_foreachbatch_rank(
         # the sink handoff, not a data-path materialization
         snapshots[epoch_id] = ranked.collect()
 
-    ckpt = _scratch_dir(prefix="rtvs_st21_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_ranked_snapshot(
-            agg, ckpt, sink_writer,
-            trigger={"processingTime": "0 seconds"},
+    def final():
+        # list() snapshot: the foreachBatch thread appends concurrently
+        # with this poll
+        return next(
+            (
+                rows for rows in list(snapshots.values())
+                if sum(r["vote_count"] for r in rows) == _ST21_N
+            ),
+            None,
         )
-        try:
-            deadline = _time.time() + 120
-            final = None
-            while _time.time() < deadline:
-                # list() snapshot: the foreachBatch thread appends
-                # concurrently with this poll
-                for rows in list(snapshots.values()):
-                    if sum(r["vote_count"] for r in rows) == _ST21_N:
-                        final = rows
-                        break
-                if final is not None:
-                    break
-                q.awaitTermination(0.1)
-            else:
-                raise TimeoutError(
-                    f"st21: no epoch snapshot covered {_ST21_N} events"
-                )
-        finally:
-            q.stop()
-    return _local_df(spark, final)
+
+    _run_gate(
+        spark, "st21_pyds_parity",
+        lambda ck: jobs.start_ranked_snapshot(
+            agg, ck, sink_writer, trigger=_NOW
+        ),
+        lambda: final() is not None,
+    )
+    return _local_df(spark, final())
 
 
 # ---------------------------------------------------------------------------
@@ -2858,8 +2506,9 @@ def st22_pyds_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports a 200-event backlog already queued at query start
     (``backlog_rows`` — a topic with unconsumed history), the query
     drains it through the same checkpointed exactly-once machinery as a
-    live stream, then TERMINATES ITSELF — ``awaitTermination()``
-    returns instead of polling+stop(). This is the scheduled-backfill
+    live stream, then TERMINATES ITSELF — the run waits for the query
+    to end instead of polling a completion condition. This is the
+    scheduled-backfill
     pattern (run every night, consume what accumulated, exit; restarts
     resume from the WAL) — the operational mode Kafka users run with
     ``Trigger.AvailableNow`` and the reference's always-on consumer
@@ -2870,42 +2519,20 @@ def st22_pyds_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Python DataSource API, so the backlog lands as one batch —
     documented trade-off. ``sf_dir`` unused — the transport IS the
     source."""
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register_dist(spark)
-    stream = (
-        spark.readStream.format("vote_stream_dist")
-        .option("backlog_rows", _ST22_N)
-        .option("max_rows", _ST22_N)
-        .option("num_partitions", 4)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
-    )
+    name = "st22_pyds_parity"
+    parsed = _via_envelope(_gate_source(
+        spark, "vote_stream_dist", backlog_rows=_ST22_N, max_rows=_ST22_N,
+        num_partitions=4,
+    ))
     agg = parsed.groupBy("candidate_id").agg(
         F.count("*").alias("vote_count")
     )
-    name = "st22_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="complete",
-            trigger={"availableNow": True},
-        )
-        try:
-            finished = q.awaitTermination(120)
-            if not finished:
-                raise TimeoutError(
-                    f"{name}: availableNow drain did not self-terminate"
-                )
-        finally:
-            q.stop()
-    if q.isActive:
-        raise AssertionError(f"{name}: query still active after drain")
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(
+            agg, name, ck, "complete", {"availableNow": True}
+        ),
+    )
     return spark.table(name)
 
 
@@ -2943,57 +2570,25 @@ def st23_pyds_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     every event from both feeds exactly once. This is the fan-in shape
     a multi-region deployment runs (one consumer over N topic
     mirrors). ``sf_dir`` unused — the transports ARE the sources."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
-    pyds.register_dist(spark)
     # 60/batch → 2 micro-batches per source: still multi-batch (the
     # composite-offset WAL is exercised) at half the per-batch fixed
     # cost that made this the slowest bench row at 40/batch
-    s1 = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 60)
-        .option("max_rows", _ST23_N1)
-        .load()
+    s1 = _gate_source(spark, rows_per_batch=60, max_rows=_ST23_N1)
+    s2 = _gate_source(
+        spark, "vote_stream_dist", rows_per_batch=60, max_rows=_ST23_N2,
+        id_offset=_ST23_N1, num_partitions=4,
     )
-    s2 = (
-        spark.readStream.format("vote_stream_dist")
-        .option("rows_per_batch", 60)
-        .option("max_rows", _ST23_N2)
-        .option("id_offset", _ST23_N1)
-        .option("num_partitions", 4)
-        .load()
-    )
-    merged = s1.union(s2)
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(merged, "vote_id"), merged.schema
-    )
-    agg = parsed.groupBy("candidate_id").agg(
+    agg = _via_envelope(s1.union(s2)).groupBy("candidate_id").agg(
         F.count("*").alias("vote_count")
     )
     name = "st23_pyds_parity"
     total = _ST23_N1 + _ST23_N2
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="complete",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name)
-                .agg(F.sum("vote_count"))
-                .collect()[0][0]
-                == total,
-                f"{name}: sink never reached {total} events",
-            )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "complete", _NOW),
+        lambda: spark.table(name).agg(F.sum("vote_count")).first()[0]
+        == total,
+    )
     return spark.table(name)
 
 
@@ -3030,48 +2625,24 @@ def st24_pyds_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     max == last) — and the gate proves the update stream carried
     every key to its exact final count, no lost or stale delta.
     ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST24_N)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
+    parsed = _via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST24_N)
     )
     agg = parsed.groupBy("candidate_id").agg(
         F.count("*").alias("vote_count")
     )
     name = "st24_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
     final_state = (
         lambda: spark.table(name)
         .groupBy("candidate_id")
         .agg(F.max("vote_count").alias("vote_count"))
     )
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="update",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: final_state()
-                .agg(F.sum("vote_count"))
-                .collect()[0][0]
-                == _ST24_N,
-                f"{name}: update stream never reached {_ST24_N}",
-            )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "update", _NOW),
+        lambda: final_state().agg(F.sum("vote_count")).first()[0]
+        == _ST24_N,
+    )
     return final_state()
 
 
@@ -3128,61 +2699,42 @@ def st25_pyds_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     WAL-ed), and the old output is immutable. The enrichment itself is
     stateless append — no state store, the cheapest streaming shape.
     ``sf_dir`` unused — the transport IS the source."""
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register_dist(spark)
+    name = "st25_pyds_parity"
     dim_dir = _scratch_dir(prefix="rtvs_st25_dim_")
-    ckpt = _scratch_dir(prefix="rtvs_st25_ckpt_")
     rows_acc: list = []
 
-    def run_phase(n_total: int) -> None:
-        stream = (
-            spark.readStream.format("vote_stream_dist")
-            .option("backlog_rows", n_total)
-            .option("max_rows", n_total)
-            .option("num_partitions", 4)
-            .load()
-        )
-        parsed = envelope.parse_envelope(
-            envelope.to_envelope(stream, "vote_id"), stream.schema
-        )
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        rows_acc.extend(batch_df.collect())  # 120 tiny rows per phase
+
+    def start(n_total: int):
+        parsed = _via_envelope(_gate_source(
+            spark, "vote_stream_dist", backlog_rows=n_total,
+            max_rows=n_total, num_partitions=4,
+        ))
         dim = spark.read.parquet(dim_dir)  # fresh read — sees the refresh
         enriched = parsed.join(dim, "candidate_id").select(
             "candidate_id", "party"
         )
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            rows_acc.extend(batch_df.collect())  # 120 tiny rows per phase
-
-        q = (
-            enriched.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
+        return (
+            lambda ck: enriched.writeStream.outputMode("append")
+            .option("checkpointLocation", ck)
             .foreachBatch(sink)
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError("st25: phase did not drain")
-        finally:
-            q.stop()
 
     v1 = _local_df(
         spark, _PYDS_DIM,
         "candidate_id string, candidate_name string, party string",
     ).select("candidate_id", "party")
     v1.write.mode("overwrite").parquet(dim_dir)
-    with _stream_shuffle_conf(spark):
-        run_phase(_ST25_PHASE)
-        v2 = _local_df(
-            spark, [(c, p) for c, p in _ST25_V2.items()],
-            "candidate_id string, party string",
-        )
-        v2.write.mode("overwrite").parquet(dim_dir)
-        run_phase(2 * _ST25_PHASE)
+    ckpt = _run_gate(spark, name, start(_ST25_PHASE))
+    v2 = _local_df(
+        spark, [(c, p) for c, p in _ST25_V2.items()],
+        "candidate_id string, party string",
+    )
+    v2.write.mode("overwrite").parquet(dim_dir)
+    _run_gate(spark, name, start(2 * _ST25_PHASE), ckpt=ckpt)
     if len(rows_acc) != 2 * _ST25_PHASE:
         raise AssertionError(
             f"st25: expected {2 * _ST25_PHASE} enriched rows, "
@@ -3230,43 +2782,19 @@ def st17_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     job's numbers are questioned, and the introspection surface the
     reference's black-box consumer offsets cannot offer.
     ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", 40)
-        .option("max_rows", _ST17_N)
-        .load()
-    )
-    parsed = envelope.parse_envelope(
-        envelope.to_envelope(stream, "vote_id"), stream.schema
+    parsed = _via_envelope(
+        _gate_source(spark, rows_per_batch=40, max_rows=_ST17_N)
     )
     agg = parsed.groupBy("candidate_id").agg(
         F.count("*").alias("vote_count")
     )
     name = "st17_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
-    with _stream_shuffle_conf(spark):
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="complete",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name)
-                .agg(F.sum("vote_count"))
-                .collect()[0][0]
-                == _ST17_N,
-                f"{name}: sink never reached {_ST17_N} events",
-            )
-        finally:
-            q.stop()
+    ckpt = _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "complete", _NOW),
+        lambda: spark.table(name).agg(F.sum("vote_count")).first()[0]
+        == _ST17_N,
+    )
     state = spark.read.format("statestore").load(ckpt)
     # the state-store row layout is internal and may shift across Spark
     # minor versions: derive the single value field from the schema
@@ -3408,20 +2936,11 @@ def st31_pyds_index_dedup_stream(
     epoch-sized collect is the sink handoff of the st21 precedent, not
     a data-path materialization. ``sf_dir`` unused — the transport IS
     the source."""
-    import time as _time
-
     from ..operators import dedup as dedup_ops
-    from ..sources import pyds
 
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", _ST31_RPB)
-        .option("max_rows", _ST31_N)
-        .option("replay_every", _ST31_REPLAY_EVERY)
-        .option("replay_offset", _ST31_REPLAY_OFF)
-        .load()
+    stream = _gate_source(
+        spark, rows_per_batch=_ST31_RPB, max_rows=_ST31_N,
+        replay_every=_ST31_REPLAY_EVERY, replay_offset=_ST31_REPLAY_OFF,
     )
     empty = _local_df(spark, [], "doc_id string, text string")
     state = {"idx": dedup_ops.DedupIndex.build(empty, "exact")}
@@ -3452,45 +2971,13 @@ def st31_pyds_index_dedup_stream(
             idx = idx.checkpointed()
         state["idx"] = idx
 
-    ckpt = _scratch_dir(prefix="rtvs_st31_")
-    with _stream_shuffle_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe_absorb)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = _time.time() + 120
-            total = 0
-            while _time.time() < deadline:
-                total = sum(len(v) for v in list(results.values()))
-                if total >= _ST31_N:
-                    break
-                q.awaitTermination(0.1)
-            else:
-                raise TimeoutError(
-                    f"st31: saw {total} of {_ST31_N} deliveries"
-                )
-        finally:
-            q.stop()
-    flat = [
-        (r["doc_id"], r["status"])
-        for rows in results.values()
-        for r in rows
-    ]
-    verdicts = _local_df(spark, flat, "vote_id string, status string")
-    return verdicts.groupBy("vote_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_deliveries"),
-        F.sum(F.when(F.col("status") == "kept", 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-        F.sum(
-            F.when(F.col("status") == "dup_in_index", 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_dup_in_index"),
+    _run_gate(
+        spark, "st31_pyds_parity",
+        lambda ck: stream.writeStream.foreachBatch(probe_absorb)
+        .option("checkpointLocation", ck).trigger(**_NOW).start(),
+        lambda: sum(len(v) for v in list(results.values())) >= _ST31_N,
     )
+    return _verdict_counts(spark, results)
 
 
 st31_pyds_index_dedup_stream.__doc__ = (
@@ -3639,29 +3126,16 @@ def st32_pyds_join_then_window(
     propagation ambiguity. Only finalized windows reach the append
     sink; the open window is held in state. ``sf_dir`` unused — the
     transports ARE the sources."""
-    import time as _time
-
-    from ..sources import pyds
-    from ..streaming import envelope, jobs
-
     cfg = _ST32
-    tune(spark)
-    pyds.register(spark)
+    name = "st32_pyds_parity"
 
     def src() -> DataFrame:
-        stream = (
-            spark.readStream.format("vote_stream")
-            .option("rows_per_batch", cfg["rpb"])
-            .option("max_rows", cfg["n"])
-            .option("late_every", cfg["late_every"])
-            .option("late_by", cfg["late_by"])
-            .option("very_late_every", cfg["very_late_every"])
-            .option("very_late_by", cfg["very_late_by"])
-            .load()
-        )
-        return envelope.parse_envelope(
-            envelope.to_envelope(stream, "vote_id"), stream.schema
-        )
+        return _via_envelope(_gate_source(
+            spark, rows_per_batch=cfg["rpb"], max_rows=cfg["n"],
+            late_every=cfg["late_every"], late_by=cfg["late_by"],
+            very_late_every=cfg["very_late_every"],
+            very_late_by=cfg["very_late_by"],
+        ))
 
     joined = jobs.stream_stream_join(
         src(), src(), key="vote_id",
@@ -3682,36 +3156,15 @@ def st32_pyds_join_then_window(
         )
     )
     expected = _st32_expected_rows()
-    name = "st32_pyds_parity"
-    ckpt = _scratch_dir(prefix=f"rtvs_{name}_")
     # max watermark policy as in st18/st26: both feeds exhaust, and the
     # chained aggregate can only flush once the global watermark takes
     # the final frontier
-    _confs = {
-        "spark.sql.shuffle.partitions": _JOIN_GATE_WIDTH,
-        "spark.sql.streaming.multipleWatermarkPolicy": "max",
-        **_STREAM_CONF,
-    }
-    _old = {k: spark.conf.get(k) for k in _confs}
-    for k, v in _confs.items():
-        spark.conf.set(k, v)
-    try:
-        q = jobs.start_to_memory(
-            agg, name, ckpt, output_mode="append",
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            _drain_until(
-                q,
-                lambda: spark.table(name).count() == expected,
-                f"{name}: chained join→window sink never reached "
-                f"{expected} finalized rows",
-            )
-        finally:
-            q.stop()
-    finally:
-        for k, v in _old.items():
-            spark.conf.set(k, v)
+    _run_gate(
+        spark, name,
+        lambda ck: jobs.start_to_memory(agg, name, ck, "append", _NOW),
+        lambda: spark.table(name).count() == expected,
+        conf={"spark.sql.streaming.multipleWatermarkPolicy": "max"},
+    )
     return spark.table(name)
 
 
@@ -3752,23 +3205,8 @@ def st33_pyds_index_dedup_restart(
     IS the source."""
     import json
     import os
-    import time as _time
 
     from ..operators import dedup as dedup_ops
-    from ..sources import pyds
-
-    tune(spark)
-    pyds.register(spark)
-
-    def src(max_rows: int) -> DataFrame:
-        return (
-            spark.readStream.format("vote_stream")
-            .option("rows_per_batch", _ST31_RPB)
-            .option("max_rows", max_rows)
-            .option("replay_every", _ST31_REPLAY_EVERY)
-            .option("replay_offset", _ST31_REPLAY_OFF)
-            .load()
-        )
 
     empty = _local_df(spark, [], "doc_id string, text string")
     results: dict[int, list] = {}
@@ -3789,8 +3227,9 @@ def st33_pyds_index_dedup_restart(
         nxt = idx.absorb(docs, statuses)
         # immutable per-epoch snapshot carrying the ABSORBED index AND
         # this epoch's verdicts TOGETHER, published by atomic rename —
-        # q.stop() is the simulated crash and can land anywhere, so a
-        # half-written snapshot must be invisible AND verdicts can
+        # stopping the query is the simulated crash and can land
+        # anywhere, so a half-written snapshot must be invisible AND
+        # verdicts can
         # never be counted for an epoch whose absorb was lost (nor an
         # absorbed epoch re-probed as all-dups): exactly-once output
         # through crash = the two artifacts commit as one unit
@@ -3802,69 +3241,40 @@ def st33_pyds_index_dedup_restart(
         results[epoch_id] = rows
         state["idx"] = nxt
 
-    def run_phase(max_rows: int, ckpt: str, want: int) -> None:
-        q = (
-            src(max_rows)
-            .writeStream.foreachBatch(probe_absorb)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
+    def start(max_rows: int):
+        stream = _gate_source(
+            spark, rows_per_batch=_ST31_RPB, max_rows=max_rows,
+            replay_every=_ST31_REPLAY_EVERY, replay_offset=_ST31_REPLAY_OFF,
         )
-        try:
-            deadline = _time.time() + 120
-            total = 0
-            while _time.time() < deadline:
-                total = sum(len(v) for v in list(results.values()))
-                if total >= want:
-                    break
-                q.awaitTermination(0.1)
-            else:
-                raise TimeoutError(
-                    f"st33: saw {total} of {want} deliveries"
-                )
-        finally:
-            q.stop()
+        return (
+            lambda ck: stream.writeStream.foreachBatch(probe_absorb)
+            .option("checkpointLocation", ck).trigger(**_NOW).start()
+        )
 
-    ckpt = _scratch_dir(prefix="rtvs_st33_ckpt_")
+    def seen(want: int):
+        return lambda: sum(len(v) for v in list(results.values())) >= want
+
+    name = "st33_pyds_parity"
     half = _ST31_N // 2
-    with _stream_shuffle_conf(spark):
-        run_phase(half, ckpt, half)
-        # ---- simulated crash: ALL in-memory state discarded; index
-        # AND verdict history recover from the published snapshots
-        # (an epoch Spark retries after restart then hits the results
-        # guard instead of re-probing an already-absorbed batch) ------
-        results.clear()
-        saves = sorted(
-            int(d[1:]) for d in os.listdir(idx_root) if d.startswith("e")
-        )
-        for e in saves:
-            with open(
-                os.path.join(idx_root, f"e{e}", "_verdicts.json")
-            ) as fh:
-                results[e] = [
-                    {"doc_id": d, "status": s} for d, s in json.load(fh)
-                ]
-        state["idx"] = dedup_ops.DedupIndex.load(
-            spark, os.path.join(idx_root, f"e{saves[-1]}")
-        )
-        run_phase(_ST31_N, ckpt, _ST31_N)
-    flat = [
-        (r["doc_id"], r["status"])
-        for rows in results.values()
-        for r in rows
-    ]
-    verdicts = _local_df(spark, flat, "vote_id string, status string")
-    return verdicts.groupBy("vote_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_deliveries"),
-        F.sum(F.when(F.col("status") == "kept", 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-        F.sum(
-            F.when(F.col("status") == "dup_in_index", 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_dup_in_index"),
+    ckpt = _run_gate(spark, name, start(half), seen(half))
+    # ---- simulated crash: ALL in-memory state discarded; index
+    # AND verdict history recover from the published snapshots
+    # (an epoch Spark retries after restart then hits the results
+    # guard instead of re-probing an already-absorbed batch) ------
+    results.clear()
+    saves = sorted(
+        int(d[1:]) for d in os.listdir(idx_root) if d.startswith("e")
     )
+    for e in saves:
+        with open(os.path.join(idx_root, f"e{e}", "_verdicts.json")) as fh:
+            results[e] = [
+                {"doc_id": d, "status": s} for d, s in json.load(fh)
+            ]
+    state["idx"] = dedup_ops.DedupIndex.load(
+        spark, os.path.join(idx_root, f"e{saves[-1]}")
+    )
+    _run_gate(spark, name, start(_ST31_N), seen(_ST31_N), ckpt)
+    return _verdict_counts(spark, results)
 
 
 # ---------------------------------------------------------------------------
@@ -3936,20 +3346,11 @@ def st35_pyds_index_dedup_compact(
     docstring) — running it on the live loop instead of a maintenance
     window is exactly what the fold's probe-equality contract buys.
     ``sf_dir`` unused — the transport IS the source."""
-    import time as _time
-
     from ..operators import dedup as dedup_ops
-    from ..sources import pyds
 
-    tune(spark)
-    pyds.register(spark)
-    stream = (
-        spark.readStream.format("vote_stream")
-        .option("rows_per_batch", _ST31_RPB)
-        .option("max_rows", _ST31_N)
-        .option("replay_every", _ST31_REPLAY_EVERY)
-        .option("replay_offset", _ST31_REPLAY_OFF)
-        .load()
+    stream = _gate_source(
+        spark, rows_per_batch=_ST31_RPB, max_rows=_ST31_N,
+        replay_every=_ST31_REPLAY_EVERY, replay_offset=_ST31_REPLAY_OFF,
     )
     empty = _local_df(spark, [], "doc_id string, text string")
     state = {"idx": dedup_ops.DedupIndex.build(empty, "exact")}
@@ -3985,28 +3386,12 @@ def st35_pyds_index_dedup_compact(
         state["idx"] = idx
         trace.append(str(idx.generation))
 
-    ckpt = _scratch_dir(prefix="rtvs_st35_")
-    with _stream_shuffle_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe_absorb_compact)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = _time.time() + 120
-            total = 0
-            while _time.time() < deadline:
-                total = sum(len(v) for v in list(results.values()))
-                if total >= _ST31_N:
-                    break
-                q.awaitTermination(0.1)
-            else:
-                raise TimeoutError(
-                    f"st35: saw {total} of {_ST31_N} deliveries"
-                )
-        finally:
-            q.stop()
+    _run_gate(
+        spark, "st35_pyds_parity",
+        lambda ck: stream.writeStream.foreachBatch(probe_absorb_compact)
+        .option("checkpointLocation", ck).trigger(**_NOW).start(),
+        lambda: sum(len(v) for v in list(results.values())) >= _ST31_N,
+    )
     final = state["idx"].compact()
     if final.generation != 0:
         raise AssertionError("post-shutdown compact must reset the cursor")
@@ -4015,23 +3400,7 @@ def st35_pyds_index_dedup_compact(
     size = sum(
         r["n_rows"] for r in stats if r["artifact"] == "fingerprints"
     )
-    flat = [
-        (r["doc_id"], r["status"])
-        for rows in results.values()
-        for r in rows
-    ]
-    verdicts = _local_df(spark, flat, "vote_id string, status string")
-    return verdicts.groupBy("vote_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_deliveries"),
-        F.sum(F.when(F.col("status") == "kept", 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-        F.sum(
-            F.when(F.col("status") == "dup_in_index", 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_dup_in_index"),
-    ).select(
+    return _verdict_counts(spark, results).select(
         "*",
         F.lit(",".join(trace)).alias("gen_trace"),
         F.lit(n_gens).cast("long").alias("final_generations"),

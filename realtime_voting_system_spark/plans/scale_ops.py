@@ -3956,11 +3956,9 @@ def _st34_serve(spark: SparkSession, sf_dir: str, phases) -> DataFrame:
     so a probe shuffles only the query side (IvfIndex docstring)."""
     import json
     import os
-    import time as _time
 
     from ..operators import similarity
-    from ..sources import pyds
-    from .parity import _stream_shuffle_conf
+    from .parity import _NOW, _gate_source, _run_gate
 
     cfg = _IVFPQ
     emb = _t(spark, sf_dir, "embeddings")
@@ -3978,9 +3976,8 @@ def _st34_serve(spark: SparkSession, sf_dir: str, phases) -> DataFrame:
         base, centroids=cents, codebook=_pq_codebook()
     ).absorb(batch).save(path)
 
-    pyds.register(spark)
     snap_root = _scratch_dir(prefix="rtvs_st34_snap_")
-    ckpt = _scratch_dir(prefix="rtvs_st34_ckpt_")
+    ckpt = None  # created by the first phase, resumed by the rest
     state = {"idx": None}
     results: dict[int, dict] = {}
 
@@ -4018,55 +4015,35 @@ def _st34_serve(spark: SparkSession, sf_dir: str, phases) -> DataFrame:
             ],
         }
 
-    with _stream_shuffle_conf(spark):
-        for max_rows, reload_idx in phases:
-            if reload_idx or state["idx"] is None:
-                # (re)load from the published artifacts — serving never
-                # re-touches raw embeddings (X280's restart contract)
-                state["idx"] = similarity.IvfIndex.load(spark, path)
-            if reload_idx:
-                # simulated crash: recover served history from the
-                # atomic snapshots, exactly st33's recovery seam
-                results.clear()
-                for d in os.listdir(snap_root):
-                    if not d.startswith("e"):
-                        continue
-                    with open(
-                        os.path.join(snap_root, d, "served.json")
-                    ) as fh:
-                        got = json.load(fh)
-                    results[int(d[1:])] = {
-                        "n_events": got["n_events"],
-                        "rows": [tuple(r) for r in got["rows"]],
-                    }
-            stream = (
-                spark.readStream.format("vote_stream")
-                .option("rows_per_batch", _ST34_RPB)
-                .option("max_rows", max_rows)
-                .load()
-            )
-            q = (
-                stream.writeStream.foreachBatch(probe_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="0 seconds")
-                .start()
-            )
-            try:
-                deadline = _time.time() + 120
-                total = 0
-                while _time.time() < deadline:
-                    total = sum(
-                        v["n_events"] for v in list(results.values())
-                    )
-                    if total >= max_rows:
-                        break
-                    q.awaitTermination(0.1)
-                else:
-                    raise TimeoutError(
-                        f"st34: served {total} of {max_rows} queries"
-                    )
-            finally:
-                q.stop()
+    for max_rows, reload_idx in phases:
+        if reload_idx or state["idx"] is None:
+            # (re)load from the published artifacts — serving never
+            # re-touches raw embeddings (X280's restart contract)
+            state["idx"] = similarity.IvfIndex.load(spark, path)
+        if reload_idx:
+            # simulated crash: recover served history from the
+            # atomic snapshots, exactly st33's recovery seam
+            results.clear()
+            for d in os.listdir(snap_root):
+                if not d.startswith("e"):
+                    continue
+                with open(os.path.join(snap_root, d, "served.json")) as fh:
+                    got = json.load(fh)
+                results[int(d[1:])] = {
+                    "n_events": got["n_events"],
+                    "rows": [tuple(r) for r in got["rows"]],
+                }
+        stream = _gate_source(
+            spark, rows_per_batch=_ST34_RPB, max_rows=max_rows
+        )
+        ckpt = _run_gate(
+            spark, "st34_pyds_parity",
+            lambda ck: stream.writeStream.foreachBatch(probe_batch)
+            .option("checkpointLocation", ck).trigger(**_NOW).start(),
+            lambda: sum(v["n_events"] for v in list(results.values()))
+            >= max_rows,
+            ckpt,
+        )
     flat = [r for v in results.values() for r in v["rows"]]
     return spark.createDataFrame(
         flat,

@@ -1490,10 +1490,7 @@ def test_session_stream_checkpoint_recovery_pyds(spark, tmp_path):
     final watermark frontier."""
     from datetime import timedelta
 
-    from realtime_voting_system_spark.plans.parity import (
-        _ST30,
-        _stream_shuffle_conf,
-    )
+    from realtime_voting_system_spark.plans.parity import _ST30, _run_gate
     from realtime_voting_system_spark.sources import pyds
     from realtime_voting_system_spark.sources.pyds import (
         burst_shift,
@@ -1539,25 +1536,19 @@ def test_session_stream_checkpoint_recovery_pyds(spark, tmp_path):
     half = cfg["n"] // 2
 
     def run_until(max_rows, want):
-        with _stream_shuffle_conf(spark):
-            q = jobs.start_to_parquet(
-                build(max_rows), out, ckpt, output_mode="append",
+        sessions = build(max_rows)
+        # explicit schema: a sink whose committed batches wrote no file
+        # yet reads as empty instead of failing schema inference
+        _run_gate(
+            spark, "st30_restart",
+            lambda ck: jobs.start_to_parquet(
+                sessions, out, ck, output_mode="append",
                 trigger={"processingTime": "0 seconds"},
-            )
-            try:
-                deadline = time.time() + 120
-                while time.time() < deadline:
-                    try:
-                        got = spark.read.parquet(out).count()
-                    except Exception:
-                        got = 0
-                    if got == want:
-                        break
-                    time.sleep(0.1)
-                else:
-                    raise TimeoutError(f"session sink never reached {want}")
-            finally:
-                q.stop()
+            ),
+            lambda: spark.read.schema(sessions.schema).parquet(out).count()
+            == want,
+            ckpt,
+        )
 
     p1, p2 = expected(half), expected(cfg["n"])
     assert 0 < p1 < p2  # phase 1 leaves sessions open for the restart
