@@ -7,11 +7,32 @@ Q1-Q8 (reference/app.py:66-263,441-446) and G1
 where the shape fits and written verbatim where the reference is quirky.
 Each query has a DuckDB oracle twin in ``VOTING_ORACLE_SQL`` (views:
 candidate / voter / vote) exercised by tests/test_voting.py on generated
-data (sources/generator.py).
+data (sources/generator.py) and on a hand-built edge-case star.
 
 Driver note: the external driver's tables are the TPC-H-ish testdata, so
 these registries are NOT exported via __spark_entry__; plans/parity.py maps
 every shape there. This module is parity-on-the-actual-schema.
+
+Plan rules. The reference re-runs these panels on a fixed cycle
+(app.py:273), and on a dashboard-sized star a refresh costs Spark jobs, not
+data, so every panel is written to fire as few jobs as it can:
+
+1. No Spark job while a panel is built. A total the panel needs is part of
+   the plan, never an eager ``count()`` frozen into it as a literal.
+2. The fact is aggregated once per panel: one pass over ``vote`` feeds
+   every figure the panel shows. Nothing is cached or memoised; every call
+   recomputes from the frames it is given.
+3. Once the rows are dimension-sized, the plan finishes on one partition.
+   Dimension-sized means bounded by the dimensions alone: candidates ×
+   hours or minutes, states × parties, age buckets, genders — never by
+   voters or votes. ``coalesce(1)`` at that point yields
+   ``SinglePartition``, which satisfies every later distribution, so the
+   windows (LAG / RANK / ROW_NUMBER / whole-table SUM), the re-aggregates
+   and the final ORDER BY after it add no exchange and no job.
+
+Expressions are SQL text (``F.expr`` / ``selectExpr``), the plan's shape is
+DataFrame calls: every Column-API call costs several py4j round trips, and
+a panel is built on every refresh.
 
 Determinism deviations from the reference (each mirrored in the oracle):
 - Q2's ``vote_changes`` CTE picks ONE row by ``ORDER BY hour DESC LIMIT 1``
@@ -19,13 +40,19 @@ Determinism deviations from the reference (each mirrored in the oracle):
   among ties. We add ``candidate_id`` as tie-break.
 - Q4a's ``string_agg(DISTINCT …)`` has arbitrary order in Postgres
   (app.py:159); we sort (SURVEY §4 caveat a).
+
+Percentages round half away from zero on the exact quotient, as the
+reference's Postgres does on ``NUMERIC`` (40.495 → 40.50). Spark's
+``round`` on the double quotient does this for vote totals below 10^11;
+the oracles use exact integer arithmetic, ``((20000*c + t) // (2*t)) / 100.0``,
+because DuckDB rounds the binary double (40.495 → 40.49).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import shapes
@@ -44,6 +71,12 @@ def vquery(name: str, oracle: str):
         return fn
 
     return deco
+
+
+def _pct(part: str, total: str) -> str:
+    """SQL text of ``ROUND(part * 100 / total, 2)`` in doubles — the
+    reference's percentage (functions/scalar.py ``pct_of``)."""
+    return f"ROUND({part} * 100.0D / {total}, 2)"
 
 
 def _joined(t: Tables, *, voter: bool = False, candidate: bool = False):
@@ -77,19 +110,20 @@ def q1_total_votes(t: Tables) -> DataFrame:
     """Per-hour count + MAX(voted_at) + LAG delta, newest hour only.
     The reference labels the latest HOUR's count 'total_votes' (quirk kept).
 
-    Scale: one hash-agg shuffle on hour buckets (bounded); window over
-    #hours rows; limit(1) driver-side on a tiny frame.
+    Plan: one hash-agg shuffle on hour buckets, then one partition (rule 3)
+    for the LAG window and the newest-hour pick.
     """
     hourly = (
         t["vote"]
-        .groupBy(F.date_trunc("hour", "voted_at").alias("hour"))
-        .agg(F.count("*").alias("total_votes"), F.max("voted_at").alias("last_update"))
+        .groupBy(F.expr("date_trunc('hour', voted_at) AS hour"))
+        .agg(F.expr("COUNT(*) AS total_votes"), F.expr("MAX(voted_at) AS last_update"))
+        .coalesce(1)
     )
-    w = Window.orderBy("hour")
     return (
-        hourly.withColumn(
-            "hourly_change",
-            (F.col("total_votes") - F.lag("total_votes", 1).over(w)).cast("long"),
+        hourly.selectExpr(
+            "*",
+            "CAST(total_votes - LAG(total_votes) OVER (ORDER BY hour) AS BIGINT)"
+            " AS hourly_change",
         )
         .orderBy(F.desc("hour"))
         .limit(1)
@@ -113,8 +147,8 @@ WITH hourly_votes AS (
 )
 SELECT c.first_name, c.last_name, c.party,
        COUNT(*) AS vote_count,
-       ROUND(CAST(COUNT(*) AS DOUBLE) * 100.0
-             / (SELECT COUNT(*) FROM vote), 2) AS percentage,
+       ((20000 * COUNT(*) + (SELECT COUNT(*) FROM vote))
+         // (2 * (SELECT COUNT(*) FROM vote))) / 100.0 AS percentage,
        CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, c.candidate_id) AS BIGINT)
          AS rank,
        COALESCE(vc.hourly_change, 0) AS hourly_change
@@ -132,42 +166,46 @@ def q2_votes_by_candidate(t: Tables) -> DataFrame:
     vote_count,percentage,rank,hourly_change). Tie-breaks added on
     candidate_id (module docstring).
 
-    Scale: fact aggregated by candidate (3 groups) before any window; the
-    hourly CTE aggregates to #candidates × #hours. No raw-row window.
+    Plan: ONE (candidate_id, hour) aggregate of the unjoined fact, then one
+    partition (rule 3). It feeds the unjoined total (a window sum — the
+    reference's ``(SELECT COUNT(*) FROM vote)``), the per-candidate LAG and,
+    after the candidate join, ``vote_count`` (a sum) and the change of the
+    latest (hour DESC, candidate_id) row.
     """
-    joined = _joined(t, candidate=True)
-    hourly = joined.groupBy(
-        "candidate_id", F.date_trunc("hour", "voted_at").alias("hour")
-    ).agg(F.count("*").alias("hourly_count"))
-    wl = Window.partitionBy("candidate_id").orderBy("hour")
-    changes = (
-        hourly.withColumn(
-            "hourly_change", F.col("hourly_count") - F.lag("hourly_count").over(wl)
+    hourly = (
+        t["vote"]
+        .groupBy("candidate_id", F.expr("date_trunc('hour', voted_at) AS hour"))
+        .agg(F.expr("COUNT(*) AS hourly_count"))
+        .coalesce(1)
+        .selectExpr(
+            "*",
+            "SUM(hourly_count) OVER () AS total",
+            "hourly_count - LAG(hourly_count)"
+            " OVER (PARTITION BY candidate_id ORDER BY hour) AS hourly_change",
         )
-        .orderBy(F.desc("hour"), "candidate_id")
-        .limit(1)
-        .select("candidate_id", "hourly_change")
     )
-    total = t["vote"].count()  # scalar subquery (J7) — one tiny job
-    agg = joined.groupBy(
-        "candidate_id", "first_name", "last_name", "party"
-    ).agg(F.count("*").alias("vote_count"))
-    wr = Window.orderBy(F.desc("vote_count"), "candidate_id")
-    return (
-        agg.join(F.broadcast(changes), "candidate_id", "left")
-        .select(
-            "first_name",
-            "last_name",
-            "party",
-            "vote_count",
-            F.round(F.col("vote_count").cast("double") * 100.0 / total, 2).alias(
-                "percentage"
-            ),
-            F.row_number().over(wr).cast("long").alias("rank"),
-            F.coalesce("hourly_change", F.lit(0)).alias("hourly_change"),
+    per_candidate = (
+        hourly.join(F.broadcast(t["candidate"]), "candidate_id")
+        .selectExpr(
+            "*", "ROW_NUMBER() OVER (ORDER BY hour DESC, candidate_id) = 1 AS latest"
         )
-        .orderBy(F.desc("vote_count"))
+        .groupBy("candidate_id", "first_name", "last_name", "party")
+        .agg(
+            F.expr("SUM(hourly_count) AS vote_count"),
+            F.expr("MAX(total) AS total"),
+            F.expr("MAX(CASE WHEN latest THEN hourly_change END) AS hourly_change"),
+        )
     )
+    return per_candidate.selectExpr(
+        "first_name",
+        "last_name",
+        "party",
+        "vote_count",
+        f"{_pct('vote_count', 'total')} AS percentage",
+        "CAST(ROW_NUMBER() OVER (ORDER BY vote_count DESC, candidate_id) AS BIGINT)"
+        " AS rank",
+        "COALESCE(hourly_change, 0) AS hourly_change",
+    ).orderBy(F.desc("vote_count"))
 
 
 # -- Q3: cumulative per-minute trend (app.py:126-151) -----------------------
@@ -191,30 +229,33 @@ ORDER BY vote_time
 
 @vquery("vq3_historical_trends", _Q3)
 def q3_historical_trends(t: Tables) -> DataFrame:
-    """Per-minute MAX of the running count ≡ running sum of per-minute
-    counts (aggregate-first rewrite, shapes.cumulative_bucketed: window input
-    is #buckets rows, not #events — same result, bounded state at 100 TB).
+    """Per-minute MAX of the running count per candidate_id ≡ running sum of
+    that candidate's per-minute counts. Aggregate-first: the window input is
+    (candidate, minute) rows, not votes, and runs on one partition (rule 3).
+    The series are keyed by candidate_id, as in the reference (app.py:134-
+    138); two candidates sharing a display name and party meet only in the
+    final MAX per (minute, name, party), exactly as in the oracle.
     """
-    named = _joined(t, candidate=True).select(
-        F.concat_ws(" ", "first_name", "last_name").alias("candidate_name"),
-        "party",
-        "voted_at",
+    per_minute = (
+        t["vote"]
+        .groupBy("candidate_id", F.expr("date_trunc('minute', voted_at) AS vote_time"))
+        .agg(F.expr("COUNT(*) AS votes"))
+        .coalesce(1)
+        .selectExpr(
+            "*",
+            "SUM(votes) OVER (PARTITION BY candidate_id ORDER BY vote_time"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS total_votes",
+        )
     )
-    cum = shapes.cumulative_bucketed(
-        named,
-        partition_col="candidate_name",
-        ts_col="voted_at",
-        grain="minute",
-        bucket_name="vote_time",
-        cum_name="total_votes",
-    )
-    # party is functionally dependent on candidate_name; reattach via the
-    # grouping rather than carrying it through the window partition key.
-    parties = named.select("candidate_name", "party").distinct()
     return (
-        cum.join(F.broadcast(parties), "candidate_name")
-        .select("vote_time", "candidate_name", "party", "total_votes")
-        .orderBy("vote_time", "candidate_name")
+        per_minute.join(F.broadcast(t["candidate"]), "candidate_id")
+        .groupBy(
+            "vote_time",
+            F.expr("concat_ws(' ', first_name, last_name) AS candidate_name"),
+            "party",
+        )
+        .agg(F.expr("MAX(total_votes) AS total_votes"))
+        .orderBy("vote_time", "candidate_name", "party")
     )
 
 
@@ -262,21 +303,31 @@ FROM state_party_votes WHERE rank = 1
 
 @vquery("vq4b_leading_party", _Q4B)
 def q4b_leading_party(t: Tables) -> DataFrame:
-    """Top-1-per-state with RANK (ties kept, exactly as the reference)."""
-    return shapes.top1_per_group(
-        _joined(t, voter=True, candidate=True),
-        partition_cols=["address_state"],
-        group_cols=["party"],
-        metric_name="party_votes",
-    ).select("address_state", "party", "party_votes")
+    """Top-1-per-state with RANK (ties kept, exactly as the reference): the
+    (state, party) aggregate, then one partition (rule 3) for the RANK."""
+    per_party = (
+        _joined(t, voter=True, candidate=True)
+        .groupBy("address_state", "party")
+        .agg(F.expr("COUNT(*) AS party_votes"))
+        .coalesce(1)
+    )
+    return (
+        per_party.selectExpr(
+            "*",
+            "RANK() OVER (PARTITION BY address_state ORDER BY party_votes DESC)"
+            " AS rank",
+        )
+        .where("rank = 1")
+        .select("address_state", "party", "party_votes")
+    )
 
 
 # -- Q5a: gender split (app.py:189-198) -------------------------------------
 
 _Q5A = """
 SELECT v.gender, COUNT(*) AS vote_count,
-       ROUND(CAST(COUNT(*) AS DOUBLE) * 100.0
-             / (SELECT COUNT(*) FROM vote), 2) AS percentage
+       ((20000 * COUNT(*) + (SELECT COUNT(*) FROM vote))
+         // (2 * (SELECT COUNT(*) FROM vote))) / 100.0 AS percentage
 FROM vote vt JOIN voter v ON vt.voter_id = v.voter_id
 GROUP BY v.gender
 """
@@ -285,20 +336,24 @@ GROUP BY v.gender
 @vquery("vq5a_gender_split", _Q5A)
 def q5a_gender_split(t: Tables) -> DataFrame:
     """Percentage denominator is the UNJOINED vote count (scalar subquery,
-    app.py:194) — kept verbatim rather than window-of-joined-rows, so the
-    two differ if a vote's voter is missing (FK guarantees they don't)."""
-    total = t["vote"].count()
-    return (
-        _joined(t, voter=True)
-        .groupBy("gender")
-        .agg(F.count("*").alias("vote_count"))
-        .select(
-            "gender",
-            "vote_count",
-            F.round(F.col("vote_count").cast("double") * 100.0 / total, 2).alias(
-                "percentage"
-            ),
-        )
+    app.py:194), not the joined rows: the two differ if a vote's voter is
+    missing (the FK guarantees it is not).
+
+    Plan: vote LEFT JOIN voter keeps every vote, and a ``matched`` flag
+    splits the one (matched, gender) aggregate into the shown groups and
+    the rest; the whole-table window sum over both is the unjoined total.
+    """
+    voters = t["voter"].selectExpr("voter_id", "gender", "true AS matched")
+    per_gender = (
+        t["vote"]
+        .join(voters, "voter_id", "left")
+        .groupBy("matched", "gender")
+        .agg(F.expr("COUNT(*) AS vote_count"))
+        .coalesce(1)
+        .selectExpr("*", "SUM(vote_count) OVER () AS total")
+    )
+    return per_gender.where("matched").selectExpr(
+        "gender", "vote_count", f"{_pct('vote_count', 'total')} AS percentage"
     )
 
 
@@ -308,32 +363,35 @@ _Q5B = """
 SELECT CASE WHEN age < 30 THEN '18-29' WHEN age < 45 THEN '30-44'
             WHEN age < 60 THEN '45-59' ELSE '60+' END AS age_group,
        COUNT(*) AS count,
-       ROUND(CAST(COUNT(*) AS DOUBLE) * 100.0
-             / CAST(SUM(COUNT(*)) OVER () AS DOUBLE), 2) AS percentage
+       ((20000 * COUNT(*) + SUM(COUNT(*)) OVER ())
+         // (2 * SUM(COUNT(*)) OVER ())) / 100.0 AS percentage
 FROM vote vt JOIN voter v ON vt.voter_id = v.voter_id
 GROUP BY CASE WHEN age < 30 THEN '18-29' WHEN age < 45 THEN '30-44'
               WHEN age < 60 THEN '45-59' ELSE '60+' END
 ORDER BY age_group
 """
 
+
 @vquery("vq5b_age_buckets", _Q5B)
 def q5b_age_buckets(t: Tables) -> DataFrame:
-    """CASE-bucketed share-of-total (P5/A7/A8)."""
-    bucket = (
-        F.when(F.col("age") < 30, "18-29")
-        .when(F.col("age") < 45, "30-44")
-        .when(F.col("age") < 60, "45-59")
-        .otherwise("60+")
+    """CASE-bucketed share-of-total (P5/A7/A8): the bucket aggregate, then
+    one partition (rule 3) for the whole-table sum and the ORDER BY."""
+    per_bucket = (
+        _joined(t, voter=True)
+        .groupBy(
+            F.expr(
+                "CASE WHEN age < 30 THEN '18-29' WHEN age < 45 THEN '30-44'"
+                " WHEN age < 60 THEN '45-59' ELSE '60+' END AS age_group"
+            )
+        )
+        .agg(F.expr("COUNT(*) AS count"))
+        .coalesce(1)
     )
-    out = shapes.bucketed_pct(
-        _joined(t, voter=True),
-        bucket_expr=bucket,
-        bucket_name="age_group",
-        count_name="count",
-    )
-    return out.withColumn("percentage", F.round("percentage", 2)).orderBy(
-        "age_group"
-    )
+    return per_bucket.selectExpr(
+        "age_group",
+        "count",
+        f"{_pct('count', 'SUM(count) OVER ()')} AS percentage",
+    ).orderBy("age_group")
 
 
 # -- Q6: candidate info (app.py:224-230) ------------------------------------
@@ -388,59 +446,60 @@ ORDER BY s.address_state
 @vquery("vq7_state_details", _Q7)
 def q7_state_details(t: Tables) -> DataFrame:
     """The reference's triple self-LEFT-JOIN manual pivot (app.py:255-257)
-    re-expressed as ONE pivot — 1 shuffle instead of 3 joins + 3 shuffles.
+    over ``SELECT DISTINCT address_state FROM voter``, from ONE voter-side
+    pass: voter LEFT JOIN vote LEFT JOIN candidate yields every state (rows
+    of voters who did not vote carry a NULL party) and the per-(state,
+    party) stats. After that aggregate the rows are states × parties, so
+    the pivot is one partition (rule 3) of conditional aggregates.
 
     The 'Avg Age' / 'Male %' columns reproduce the reference's quirky
     avg-of-averages: mean of the three per-party per-state values with
     missing parties counted as 0, divided by a hard 3 (app.py:252-253) —
     non-standard but replicated bit-for-bit (SURVEY §4 caveat c). The
     reference's outer AVG() is over a single row per group, i.e. identity.
+    The NULL state matches no ``state_votes`` row in the reference's join,
+    so its row is all zeros.
     """
-    # project before joining: voter and candidate both carry age/gender —
-    # qualify to voter's (the reference's v.age / v.gender) and let the scan
-    # prune to 4 columns.
-    narrow = (
-        t["vote"]
-        .select("voter_id", "candidate_id")
-        .join(t["voter"].select("voter_id", "address_state", "age", "gender"), "voter_id")
-        .join(F.broadcast(t["candidate"].select("candidate_id", "party")), "candidate_id")
+    # candidate also carries age/gender: project it to its key and party so
+    # age/gender are the voter's (the reference's v.age / v.gender).
+    rows = t["voter"].join(t["vote"], "voter_id", "left").join(
+        F.broadcast(t["candidate"].select("candidate_id", "party")),
+        "candidate_id",
+        "left",
     )
     sv = (
-        narrow.groupBy("address_state", "party")
+        rows.groupBy("address_state", "party")
         .agg(
-            F.count("*").alias("votes"),
-            F.round(F.avg(F.col("age").cast("double")), 1).alias("avg_age"),
-            F.round(
-                F.lit(100.0)
-                * F.count(F.when(F.col("gender") == "male", 1))
-                / F.count("*"),
-                1,
-            ).alias("male_pct"),
+            F.expr("COUNT(*) AS votes"),
+            F.expr("ROUND(AVG(CAST(age AS DOUBLE)), 1) AS avg_age"),
+            F.expr(
+                "ROUND(100.0D * COUNT(CASE WHEN gender = 'male' THEN 1 END)"
+                " / COUNT(*), 1) AS male_pct"
+            ),
         )
+        .coalesce(1)
     )
-    wide = (
-        sv.groupBy("address_state")
-        .pivot("party", list(PARTIES))
+    def of_party(col: str) -> list[str]:
+        """Each party's ``col`` per state, 0 where the party has no row."""
+        return [
+            f"COALESCE(MAX(CASE WHEN party = '{p}' AND address_state IS NOT NULL"
+            f" THEN {col} END), 0)"
+            for p in PARTIES
+        ]
+
+    v, a, m = of_party("votes"), of_party("avg_age"), of_party("male_pct")
+    return (
+        sv.groupBy(F.expr("address_state AS state"))
         .agg(
-            F.first("votes").alias("votes"),
-            F.first("avg_age").alias("avg_age"),
-            F.first("male_pct").alias("male_pct"),
+            F.expr(f"{v[0]} AS management_party"),
+            F.expr(f"{v[1]} AS liberation_party"),
+            F.expr(f"{v[2]} AS united_republic_party"),
+            F.expr(f"{' + '.join(v)} AS total_votes"),
+            F.expr(f"ROUND(({' + '.join(a)}) / 3, 1) AS avg_age"),
+            F.expr(f"ROUND(({' + '.join(m)}) / 3, 1) AS male_pct"),
         )
+        .orderBy("state")
     )
-    states = t["voter"].select("address_state").distinct()
-    wide = states.join(wide, "address_state", "left")
-    v = [F.coalesce(f"`{p}_votes`", F.lit(0)) for p in PARTIES]
-    a = [F.coalesce(f"`{p}_avg_age`", F.lit(0.0)) for p in PARTIES]
-    m = [F.coalesce(f"`{p}_male_pct`", F.lit(0.0)) for p in PARTIES]
-    return wide.select(
-        F.col("address_state").alias("state"),
-        v[0].alias("management_party"),
-        v[1].alias("liberation_party"),
-        v[2].alias("united_republic_party"),
-        (v[0] + v[1] + v[2]).alias("total_votes"),
-        F.round((a[0] + a[1] + a[2]) / 3, 1).alias("avg_age"),
-        F.round((m[0] + m[1] + m[2]) / 3, 1).alias("male_pct"),
-    ).orderBy("state")
 
 
 # -- Q8: leader image lookup (app.py:441-446) -------------------------------
@@ -465,8 +524,8 @@ def q8_leader_image(t: Tables, first: str = "Cand1", last: str = "Nguyen"):
 
 _G1 = """
 SELECT c.first_name, c.last_name, c.party, COUNT(*) AS vote_count,
-       ROUND(CAST(COUNT(*) AS DOUBLE) * 100.0
-             / NULLIF(CAST(SUM(COUNT(*)) OVER () AS DOUBLE), 0), 2) AS percentage
+       ((20000 * COUNT(*) + SUM(COUNT(*)) OVER ())
+         // NULLIF(2 * SUM(COUNT(*)) OVER (), 0)) / 100.0 AS percentage
 FROM candidate c LEFT JOIN vote v ON c.candidate_id = v.candidate_id
 GROUP BY c.candidate_id, c.first_name, c.last_name, c.party
 ORDER BY vote_count DESC
@@ -475,30 +534,29 @@ ORDER BY vote_count DESC
 
 @vquery("vg1_current_stats", _G1)
 def g1_current_stats(t: Tables) -> DataFrame:
-    """Verbatim LEFT JOIN + COUNT(*): a zero-vote candidate counts its own
+    """LEFT JOIN + COUNT(*): a zero-vote candidate counts its own
     NULL-extended row, showing 1 — a reference quirk preserved exactly
     (COUNT(*) vs COUNT(v.vote_id), data_generator.py:209).
 
-    Scale: counting fact-side first then left-joining counts would fix the
-    quirk but change results; instead the join keys on candidate_id where
-    the fact side is pre-aggregable — Spark still broadcasts the 3-row dim.
+    Plan: the fact is counted per candidate_id first, then LEFT JOINed to
+    the candidate PK; ``COALESCE(count, 1)`` is the NULL-extended row's
+    COUNT(*), so results are unchanged. The counts are candidate-sized, so
+    the join output is one partition (rule 3) for the total and the ORDER BY.
     """
-    joined = t["candidate"].join(
-        t["vote"], "candidate_id", "left"
+    counts = (
+        t["vote"]
+        .groupBy("candidate_id")
+        .agg(F.expr("COUNT(*) AS vote_count"))
+        .coalesce(1)
     )
-    agg = joined.groupBy(
-        "candidate_id", "first_name", "last_name", "party"
-    ).agg(F.count("*").alias("vote_count"))
-    total = F.sum("vote_count").over(Window.partitionBy()).cast("double")
-    return agg.select(
-        "first_name",
-        "last_name",
-        "party",
-        "vote_count",
-        F.round(
-            F.col("vote_count").cast("double")
-            * 100.0
-            / F.when(total == 0, None).otherwise(total),
-            2,
-        ).alias("percentage"),
-    ).orderBy(F.desc("vote_count"))
+    total = "NULLIF(CAST(SUM(vote_count) OVER () AS DOUBLE), 0)"
+    return (
+        t["candidate"]
+        .coalesce(1)
+        .join(counts, "candidate_id", "left")
+        .selectExpr(
+            "first_name", "last_name", "party", "COALESCE(vote_count, 1) AS vote_count"
+        )
+        .selectExpr("*", f"{_pct('vote_count', total)} AS percentage")
+        .orderBy(F.desc("vote_count"))
+    )
