@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Conf that can be flipped on a live session (used on driver-owned sessions).
@@ -49,12 +50,19 @@ _RUNTIME_CONF = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable determinism/perf conf to an existing session."""
+    """Apply runtime-settable determinism/perf conf to an existing session.
+
+    A static key (one Spark fixes when the session starts, such as the
+    generated-class cache size ``get_spark`` sets) can only be set on the
+    builder: if one is listed here, a live session refuses it and it is
+    skipped. Any other refusal, such as an invalid value, raises.
+    """
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable on this build — builder-time conf covers our own sessions
+        except AnalysisException as e:
+            if e.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+                raise
     return spark
 
 
@@ -83,6 +91,16 @@ def get_spark(
         # recorded parsed:null despite a healthy run).
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # Static: the JVM-wide LRU cache of compiled generated classes
+        # (default 100 entries). Measured working set: one dashboard
+        # refresh of the 11 voting panels compiles 156 classes, so at 100
+        # a warm refresh recompiles ~143 of them every cycle; the three
+        # live-election streams compile 57 at start, and each data
+        # micro-batch of each dedup stream adds one eviction predicate
+        # (~360 per 30 s dashboard cadence at 2,000 events/s, see
+        # ``streaming.jobs.dedup_votes``). ~573 in all; 1,000 keeps the
+        # panels resident across a cadence.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

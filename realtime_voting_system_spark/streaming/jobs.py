@@ -56,6 +56,15 @@ def dedup_votes(
     the bounded-state claim. With the WithinWatermark variant, state is
     O(distinct keys seen within the lateness window) — the election-day
     retention the module docstring promises.
+
+    Compile cost: Spark writes the current watermark into the state
+    eviction predicate as a literal (``value_1 <= 1730769983000000L``), so
+    every watermark advance compiles one new predicate class per query
+    that reads this stream: about one per query per data micro-batch, or
+    ~360 per 30 s dashboard cadence for three queries at 2,000 events/s.
+    They share Spark's JVM-wide compiled-class cache with the dashboard
+    panels, which is why ``session.get_spark`` sizes it well above one
+    refresh's 156 classes.
     """
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         [*key_cols]

@@ -2,7 +2,8 @@
 candidate/voter/vote data and on a hand-built edge-case star vs its DuckDB
 oracle — the §5.1 differential corpus on the actual star schema, plus the
 reference's own statistical oracle (§5: observed shares ≈ configured
-weights) and the plan rule that building a panel runs no Spark job."""
+weights), the plan rule that building a panel runs no Spark job, and that
+a warm refresh reuses every class Spark generated for the first one."""
 
 from __future__ import annotations
 
@@ -194,6 +195,24 @@ def test_building_a_panel_runs_no_job(spark, star, name):
         assert time.monotonic() < deadline, "fence job never became visible"
         time.sleep(0.01)
     assert list(st.getJobIdsForGroup(group)) == []
+
+
+def test_warm_refresh_compiles_nothing(spark, star):
+    """The dashboard re-runs the same panels every cycle; once one refresh
+    has run, the next must find all of its generated classes in Spark's
+    compiled-class cache (sized in ``session.get_spark``), not recompile
+    them."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()  # one sample per class
+
+    def refresh():
+        for build in VOTING_QUERIES.values():
+            build(star[1]).collect()
+
+    refresh()
+    before = compiles.getCount()
+    refresh()
+    assert compiles.getCount() - before == 0
 
 
 def test_schemas_match_declaration(star):
