@@ -54,11 +54,6 @@ def nullif_zero(c: Column) -> Column:
 # --- reference scalar surface (F1-F12) -------------------------------------
 
 
-def full_name(first: str = "first_name", last: str = "last_name") -> Column:
-    """F2 — ``first_name || ' ' || last_name`` (app.py:131)."""
-    return F.concat_ws(" ", F.col(first), F.col(last))
-
-
 def bucket(col: str | Column, edges: list[float], labels: list[str]) -> Column:
     """F6/P5 — multi-branch CASE bucketing (app.py:202-207). ``edges`` are
     exclusive upper bounds; one extra label is the ELSE branch."""

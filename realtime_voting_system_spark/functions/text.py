@@ -42,19 +42,6 @@ def token_count(c: Column) -> Column:
     return F.size(tokens(c))
 
 
-def char_ngrams(norm: Column, n: int = 3) -> Column:
-    """Character n-gram shingles (array, with dups) of an ALREADY-normalized
-    column. ``norm`` must be a materialized attribute (select
-    ``normalize(text)`` in its own projection first): any expression passed
-    here is inlined into the per-element lambda and re-evaluated once per
-    character position — the O(len²) trap word_ngrams documents.
-    substr is 1-based; starts are [1 .. len-n+1] via sequence()."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.lit(1), F.length(norm) - F.lit(n - 1))),
-        lambda i: norm.substr(i, F.lit(n)),
-    )
-
-
 def word_ngrams(toks: Column, n: int = 2) -> Column:
     """Word n-gram shingles from a token array.
 
@@ -83,11 +70,6 @@ def word_ngrams(toks: Column, n: int = 2) -> Column:
         )
     trimmed = F.slice(out, 1, F.greatest(sz - (n - 1), F.lit(1)))
     return F.when(sz == 0, F.array(F.lit(""))).otherwise(trimmed)
-
-
-def count_word(c: Column, word: str) -> Column:
-    """Occurrences of a word (word-boundary) in lowercased text."""
-    return F.size(F.regexp_extract_all(F.lower(c), F.lit(rf"\b{word}\b"), 0))
 
 
 def stopword_hits(c: Column, words: list[str]) -> Column:

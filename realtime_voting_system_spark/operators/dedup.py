@@ -1101,7 +1101,7 @@ def _lsh_buckets_pandas(
 ) -> DataFrame:
     """(id, tbl, bucket) for all LSH tables in ONE Arrow pass; sign bits
     from the sequential-over-dims fold (functions.vectors.make_seq_fold)
-    ⇒ bit-equal to similarity.lsh_bucket_expr per table.
+    ⇒ bit-equal to the HOF dot's sign and DuckDB's list_dot_product.
     Scale: zero shuffle — only (#rows × n_tables) 20-byte rows leave."""
     import numpy as np
 

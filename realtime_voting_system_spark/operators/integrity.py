@@ -146,8 +146,8 @@ def apply_changefeed(
     no skew funnel, nothing driver-side. At 100 TB the snapshot side is
     the big one and arrives hash-partitioned by key from the previous
     apply, so AQE reuses its layout; the changefeed side is |batch|.
-    The streaming twin (streaming/jobs.start_changefeed_apply) folds
-    this per micro-batch with tombstone retention.
+    The streaming twin (streaming/jobs.start_latest_state over the
+    feed) folds this per micro-batch with tombstone retention.
     """
     from .temporal import latest_by_key
 

@@ -701,18 +701,6 @@ DHASH_ROWS, DHASH_COLS = 8, 9
 TILE_W, TILE_H = 288, 240
 
 
-def _tile_cell(doc_id: int, i: int, j: int) -> int:
-    """Cell byte of the tile family: first md5 byte of 'id_i_j' — a real
-    avalanche (golden-ratio multiplicative mixing measurably fails to
-    decorrelate the small per-cell deltas) that both engines compute
-    identically (hashlib here, md5()::VARCHAR in DuckDB)."""
-    import hashlib
-
-    return int(
-        hashlib.md5(f"{doc_id}_{i}_{j}".encode()).hexdigest()[:2], 16
-    )
-
-
 def with_tile_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """A SMOOTH image corpus for perceptual hashing: each image-modality
     doc (doc_id % 3 == 0, matching with_binary_payload's assignment)

@@ -176,28 +176,6 @@ def ranked_share_scalable(
 # ---------------------------------------------------------------------------
 
 
-def cumulative_counts(
-    df: DataFrame,
-    partition_col: str,
-    order_col: str,
-    cum_name: str = "cumulative",
-) -> DataFrame:
-    """Running COUNT(*) per partition ordered by time, ROWS UNBOUNDED
-    PRECEDING → CURRENT ROW (app.py:134-138).
-
-    Scale: one shuffle on partition_col; rows within a partition must sort —
-    at 100 TB, partition by entity (candidate/event_type: bounded) and rely
-    on spillable window sort. For unbounded-cardinality order keys, the
-    pre-bucketed variant below keeps state bounded.
-    """
-    w = (
-        Window.partitionBy(partition_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(cum_name, F.count("*").over(w))
-
-
 def cumulative_bucketed(
     df: DataFrame,
     partition_col: str,
@@ -337,37 +315,6 @@ def bucketed_pct(
     )
     total = F.sum(count_name).over(Window.partitionBy())
     return agg.withColumn(pct_name, pct_of(F.col(count_name), total))
-
-
-# ---------------------------------------------------------------------------
-# Pivot + per-group stats      (Q7 app.py:232-263; J5-as-pivot, A3/A4/A11)
-# ---------------------------------------------------------------------------
-
-
-def pivot_counts(
-    df: DataFrame,
-    group_col: str,
-    pivot_col: str,
-    pivot_values: Sequence[str],
-    prefix: str = "",
-) -> DataFrame:
-    """Counts per group pivoted over an explicit value list — the idiomatic
-    replacement for the reference's triple self-LEFT-JOIN manual pivot
-    (app.py:255-257). Zero-fill preserves its COALESCE(...,0) semantics.
-
-    Scale: explicit pivot_values avoid the extra distinct-values job; one
-    shuffle total. Output width = |pivot_values| (bounded dimension).
-    """
-    out = (
-        df.groupBy(group_col)
-        .pivot(pivot_col, list(pivot_values))
-        .agg(F.count("*"))
-        .na.fill(0, [str(v) for v in pivot_values])
-    )
-    if prefix:
-        for v in pivot_values:
-            out = out.withColumnRenamed(str(v), f"{prefix}{v}")
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,18 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``  — exact brute-force top-k (the baseline / verifier)
-- ``ann_lsh_topk`` — random-hyperplane LSH bucketed approximate top-k
-                     (the 100 TB path; recall measured against brute force
-                     in tests/test_similarity.py)
+- ``cosine_topk``        — exact brute-force top-k (the baseline / verifier)
+- ``cosine_topk_pandas`` — the same exact top-k, batch-vectorized with a
+                           map-side local top-k
+- ``ann_lsh_topk``       — random-hyperplane LSH bucketed approximate top-k
+- ``ann_ivf_topk`` / ``ann_ivf_join_topk`` — IVF cell probe + exact rescore
+- ``ann_ivfpq_topk`` / ``IvfIndex.probe_adc`` — IVF-PQ: ADC shortlist over
+  product-quantized codes + exact re-rank. Both feed ONE plan
+  (``_ivfpq_adc_topk``); they differ only in where the
+  (neighbor_id, cell, nv_vec, __nn, codes) relation comes from — a
+  one-pass in-memory encode or the stored index artifacts.
+
+Recall of every approximate operator is measured against brute force in
+tests/test_similarity.py.
 
 Vector math is built-in HOFs (functions/vectors.py) — JVM-side, no UDFs:
 at 64-dim the zip_with/aggregate chain stays in codegen and beats Arrow
@@ -28,7 +37,6 @@ from ..functions.vectors import (
     dot,
     dot_sql,
     make_seq_fold,
-    norm,
     norm_sql,
 )
 
@@ -90,39 +98,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket_expr(
-    v: "F.Column", dim: int, n_planes: int = 16, seed: int = 42
-) -> "F.Column":
-    """Packed sign-bit bucket over an array<double> vector expression:
-    bit_j = (v · h_j > 0); bucket = Σ bit_j · 2^j. The dot is the
-    sequential-fold HOF (functions/vectors.py), so the sign — and hence
-    the bucket — bit-matches any engine evaluating the same plane literals
-    in index order (DuckDB list_dot_product; the oracle twins rely on it)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = None
-    for j, p in enumerate(planes):
-        bit = F.when(
-            dot(v, F.array(*[F.lit(x) for x in p])) > 0, F.lit(1 << j)
-        ).otherwise(0)
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("long")
-
-
-def lsh_signature(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    out: str = "bucket",
-) -> DataFrame:
-    """Random-hyperplane signature: bit_j = (v · h_j > 0); bucket = packed
-    bits. Cosine-similar vectors collide with prob 1 − θ/π per bit."""
-    return df.withColumn(
-        out, lsh_bucket_expr(as_double(F.col(vec_col)), dim, n_planes, seed)
-    )
-
-
 def _sig_tables_pandas(
     df: DataFrame,
     id_col: str,
@@ -138,8 +113,8 @@ def _sig_tables_pandas(
     All n_tables × n_planes sign bits come from one vectorized pass per
     batch — the per-plane HOF dot (aggregate∘zip_with) is interpreted, not
     codegen'd, and evaluating it 48× per row dominated ann runtime (6.1 s →
-    sub-second at sf0.1). Bit semantics identical to ``lsh_signature``:
-    bit_j = (v · h_j > 0), bucket = Σ bit_j · 2^j per table; the dot
+    sub-second at sf0.1). Bits: bit_j = (v · h_j > 0) over the
+    ``_hyperplanes`` planes, bucket = Σ bit_j · 2^j per table; the dot
     accumulates sequentially over dims (not BLAS matmul), so signs are
     bit-identical to the HOF fold and DuckDB's list_dot_product — the
     sim_ann_lsh oracle twin depends on it.
@@ -621,10 +596,6 @@ def _gnorm_sql(c: str) -> str:
     return f"greatest({norm_sql(c)}, {1e-300!r}D)"
 
 
-def _gnorm(c: F.Column) -> F.Column:
-    return F.greatest(norm(c), F.lit(1e-300))
-
-
 def _ivf_assigned(
     corpus: DataFrame, crows, id_col: str, vec_col: str,
     keep_cols: tuple = (),
@@ -731,7 +702,6 @@ def cosine_topk_pandas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    blas: bool = False,
 ) -> DataFrame:
     """Exact top-k via mapInPandas + numpy — same semantics as
     ``cosine_topk`` with two scale upgrades:
@@ -747,20 +717,15 @@ def cosine_topk_pandas(
     ``ann_ivf_join_topk`` / ``cosine_topk`` instead — both keep the
     query side distributed.
 
-    Default scoring is the sequential-over-dims fold — bit-identical
-    cosines to ``cosine_topk``/DuckDB, so the registered query is fully
-    oracle-gated. ``blas=True`` switches to one matmul per batch: faster
-    for very wide vectors (dim ≳ 256) but pairwise-summed — last-ulp
-    drift, identical neighbor SETS (asserted in tests), not bit-identical
-    doubles. Ids are emitted as long (the testdata contract).
+    Scoring is the sequential-over-dims fold — bit-identical cosines to
+    ``cosine_topk``/DuckDB, so the registered query is fully
+    oracle-gated. Ids are emitted as long (the testdata contract).
     """
     import numpy as np
 
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    __nrm = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn = qm / np.where(__nrm == 0.0, 1.0, __nrm)
     fold = make_seq_fold()
 
     def score(batches):
@@ -772,21 +737,14 @@ def cosine_topk_pandas(
                 continue
             nids = pdf[id_col].to_numpy(dtype=np.int64)
             cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if blas:
-                __nrm = np.linalg.norm(cm, axis=1, keepdims=True)
-                cn = cm / np.where(__nrm == 0.0, 1.0, __nrm)
-                sims = cn @ qn.T  # (batch, n_queries)
-            else:
-                # per query: the HOF operand order (query first), one
-                # correctly-rounded op sequence per (query, row) pair
-                cols = []
-                nrm = np.sqrt(fold(cm, cm))
-                for j in range(len(qids)):
-                    q = np.broadcast_to(qm[j], cm.shape)
-                    cols.append(
-                        fold(q, cm) / (np.sqrt(fold(q, q)) * nrm)
-                    )
-                sims = np.stack(cols, axis=1)
+            # per query: the HOF operand order (query first), one
+            # correctly-rounded op sequence per (query, row) pair
+            cols = []
+            nrm = np.sqrt(fold(cm, cm))
+            for j in range(len(qids)):
+                q = np.broadcast_to(qm[j], cm.shape)
+                cols.append(fold(q, cm) / (np.sqrt(fold(q, q)) * nrm))
+            sims = np.stack(cols, axis=1)  # (batch, n_queries)
             sims[nids[:, None] == qids[None, :]] = -np.inf  # self-matches
             kk = min(k, sims.shape[0])
             out_q, out_n, out_s = [], [], []
@@ -928,9 +886,10 @@ def pq_codebook_from_sample(
     """Train a product-quantization codebook on a bounded deterministic
     sample: the ``sample_cap`` vectors with the smallest xxhash64(id)
     (the ivf_centroids sampling contract — one TakeOrdered job, no RNG
-    state), L2-NORMALIZED (cosine serving encodes normalized vectors, so
-    the codebook must live on the unit sphere too), split into ``m_sub``
-    subspaces, each refined by ``iters`` Lloyd steps in driver numpy.
+    state), split into ``m_sub`` subspaces, each refined by ``iters``
+    Lloyd steps in driver numpy. The sample is the RAW vectors: the
+    encoders (``pq_encode_codes`` / ``ivfpq_encode``) quantize raw
+    vectors, so the codewords must live in that space.
 
     Returns a (m_sub, pq_k, dim/m_sub) numpy array — the train-once
     artifact (persist like IVF centroids; KB-sized at any corpus size).
@@ -949,8 +908,6 @@ def pq_codebook_from_sample(
     if not rows:
         raise ValueError("empty corpus")
     vm = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    __nrm = np.linalg.norm(vm, axis=1, keepdims=True)
-    vm = vm / np.where(__nrm == 0.0, 1.0, __nrm)
     dim = vm.shape[1]
     if dim % m_sub != 0:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
@@ -971,148 +928,38 @@ def pq_codebook_from_sample(
     return book
 
 
-def ann_ivfpq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-    centroids: DataFrame | None = None,
-    codebook=None,
-    m_sub: int = 4,
-    pq_k: int = 16,
-    shortlist: int | None = 32,
-    assign: str = "matmul",
-) -> DataFrame:
-    """IVF-PQ approximate top-k — the billion-vector serving layout: IVF
-    cells bound WHICH vectors a query looks at (nprobe/n_centroids of
-    the corpus), PQ codes bound HOW MUCH arithmetic each candidate costs
-    (one m_sub-entry lookup-table sum instead of a dim-wide dot), and an
-    exact sequential-fold re-rank of the per-batch ``shortlist`` keeps
-    the returned cosines bit-identical to the exact operators.
+def _book_lists(codebook) -> list:
+    """(M, K, sub) codebook (ndarray or nested lists) as nested host
+    float lists — the form the SQL-text builders inline as literals."""
+    return [[list(map(float, cw)) for cw in row] for row in codebook]
 
-    Degeneration anchor (tested): nprobe == n_centroids AND
-    shortlist=None (keep every candidate) ≡ brute-force cosine_topk —
-    the approximation is then bypassed entirely, proving the plumbing
-    adds no error of its own. Recall with a real shortlist is bounded in
-    tests on clustered vectors.
 
-    Scale: identical shape to ann_ivf_topk — ONE streaming pass over the
-    corpus, no vector shuffle; queries, centroids, and the codebook
-    (KB-sized artifacts by contract) ride the task closure. Per batch:
-    assign cells (BLAS), PQ-encode the normalized candidates once
-    (m_sub small k-means assigns — BLAS), per query sum an (m_sub ×
-    pq_k) LUT over candidate codes (ADC), shortlist, exact re-rank.
-    The window at the end sees ≤ shortlist × #batches × #queries rows.
-    Corpus-vs-corpus retrieval (query set = a table) belongs on
-    ``ann_ivf_join_topk`` — the join-based form that never materializes
-    the query side on the driver.
-    """
-    import numpy as np
+def _host_dot(a, b) -> float:
+    """Driver-side sequential dot in the SAME IEEE fold order as the
+    zip_with/aggregate `dot` and DuckDB's list_dot_product (one
+    accumulate per component, index order)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
 
-    if centroids is None:
-        centroids = ivf_centroids(corpus, id_col, vec_col, n_centroids, iters)
-    if codebook is None:
-        codebook = pq_codebook_from_sample(
-            corpus, id_col, vec_col, m_sub=m_sub, pq_k=pq_k, iters=iters
-        )
-    cids, cm = _collect_centroids(centroids)
-    __nrm = np.linalg.norm(cm, axis=1, keepdims=True)
-    cn = cm / np.where(__nrm == 0.0, 1.0, __nrm)
-    book = np.asarray(codebook, dtype=np.float64)  # (M, K, sub)
-    M, BK, sub = book.shape
-    fold = make_seq_fold()
 
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    __nrm = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn = qm / np.where(__nrm == 0.0, 1.0, __nrm)
-    take = min(nprobe, len(cids))
-    qcos = qn @ cn.T
-    probe_idx = np.argsort(-qcos, axis=1, kind="stable")[:, :take]
-    # per-query ADC lookup tables: LUT[j][m][c] = dot(qn_j sub m, book[m][c])
-    lut = np.einsum("jms,mks->jmk", qn.reshape(len(qids), M, sub), book)
-
-    sl = shortlist
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            nids = pdf[id_col].to_numpy(dtype=np.int64)
-            vm_ = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            __nrm = np.linalg.norm(vm_, axis=1, keepdims=True)
-            vn = vm_ / np.where(__nrm == 0.0, 1.0, __nrm)
-            cell = np.argsort(-(vn @ cn.T), axis=1, kind="stable")[:, 0]
-            # PQ-encode normalized candidates: per subspace, nearest codeword
-            codes = np.empty((vn.shape[0], M), dtype=np.int64)
-            vs = vn.reshape(vn.shape[0], M, sub)
-            for m in range(M):
-                d = ((vs[:, m, None, :] - book[None, m]) ** 2).sum(axis=2)
-                codes[:, m] = np.argmin(d, axis=1)
-            out = []
-            for j in range(len(qids)):
-                mask = np.isin(cell, probe_idx[j]) & (nids != qids[j])
-                if not mask.any():
-                    continue
-                cand_ids = nids[mask]
-                cand_codes = codes[mask]
-                # ADC approx cosine: sum of LUT entries along the codes
-                approx = lut[j][np.arange(M)[None, :], cand_codes].sum(axis=1)
-                if sl is not None and len(cand_ids) > sl:
-                    # rank by (-approx score, id) — deterministic ties
-                    sel = np.lexsort((cand_ids, -approx))[:sl]
-                else:
-                    sel = np.arange(len(cand_ids))
-                subm = vm_[mask][sel]
-                q = np.broadcast_to(qm[j], subm.shape)
-                cos = fold(q, subm) / (
-                    np.sqrt(fold(q, q)) * np.sqrt(fold(subm, subm))
-                )
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[j],
-                            "neighbor_id": cand_ids[sel],
-                            "cos_sim": cos,
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cos_sim double"
+def _case_by_cell_sql(clits, make_sql) -> str:
+    """CASE over the assigned/probed cell id, one arm per centroid
+    (WHENs in clits order, implicit ELSE NULL) — the selector that lets
+    centroid-dependent scalars stay host literals (or per-cell folds)
+    in a single projection; ``make_sql(cid)`` returns the arm's SQL
+    text."""
+    arms = " ".join(
+        f"WHEN `cell` = {cid} THEN {make_sql(cid)}" for cid, _, _ in clits
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
-
-
-# ---------------------------------------------------------------------------
-# IvfIndex — persisted IVF ANN index with assign-only absorb (the judge's
-# r5 item 3: the centroid artifact was train-once, but adding vectors
-# still meant retraining; this closes the incremental-maintenance gap)
-# ---------------------------------------------------------------------------
+    return f"CASE {arms} END"
 
 
 def _argmin_case_sql(prefix: str, m: int, K: int) -> str:
     """SQL text of the ≤-chain argmin over the K distance columns
-    ``{prefix}{m}_0..{K-1}`` — ties to the SMALLER code, cast to long;
-    parses to the same CASE tree the old per-arm ``F.when`` chain
-    built."""
+    ``{prefix}{m}_0..{K-1}`` — ties to the SMALLER code, cast to long
+    (the rule the DuckDB twins spell)."""
     d = [f"`{prefix}{m}_{kk}`" for kk in range(K)]
     arms = []
     for kk in range(K - 1):
@@ -1123,6 +970,88 @@ def _argmin_case_sql(prefix: str, m: int, K: int) -> str:
     )
 
 
+def _pq_distances(df: DataFrame, book, v: str, crows=None) -> DataFrame:
+    """``df`` plus the PQ distance columns ``__d{m}_{k}`` =
+    ||s_m − cw[m][k]||² over the subvectors s_m of the array<double>
+    column ``v`` (SQL text) — the ONE distance tree every encoder
+    argmins over (``_pq_codes_sql``) and every reconstruction error
+    sums (``_pq_err_sql``). Expanded L2, each dot the sequential fold
+    and |cw|² a host literal:
+
+    - plain: dot(s,s) − 2·dot(s,cw) + |cw|²;
+    - residual (``crows`` given — the row's ``cell`` selects its
+      centroid slice cs, s read as s − cs): (dot(s,s) − 2·dot(s,cs)
+      + dot(cs,cs)) − 2·(dot(s,cw) − dot(cs,cw)) + |cw|², the
+      centroid-dependent scalars selected by a CASE on ``cell``
+      (host-literal folds — under iters=0 the centroids are exact
+      corpus rows, so the DuckDB twin folds identical doubles in
+      identical order).
+
+    Both forms are token-for-token the oracles' association."""
+    sub = len(book[0][0])
+
+    def sl(m: int) -> str:
+        return f"slice({v}, {m * sub + 1}, {sub})"
+
+    if crows is not None:
+        clits = _centroid_lits(crows)
+        cvecs = {
+            int(r["centroid_id"]): [float(x) for x in r["cv"]]
+            for r in crows
+        }
+
+        def cs(cid: int, m: int) -> list:
+            return cvecs[cid][m * sub: (m + 1) * sub]
+
+        shift_cols = []
+        for m in range(len(book)):
+            shift_cols.append(F.expr(_case_by_cell_sql(
+                clits, lambda cid, _m=m: dot_sql(sl(_m), dlit_sql(cs(cid, _m)))
+            )).alias(f"__vc{m}"))
+            shift_cols.append(F.expr(_case_by_cell_sql(
+                clits,
+                lambda cid, _m=m: dnum_sql(
+                    _host_dot(cs(cid, _m), cs(cid, _m))
+                ),
+            )).alias(f"__cs2{m}"))
+        df = df.select("*", *shift_cols)
+    dcols = []
+    for m, row in enumerate(book):
+        ss = dot_sql(sl(m), sl(m))
+        if crows is not None:
+            ss = f"({ss} - 2 * `__vc{m}` + `__cs2{m}`)"
+        for kk, cw in enumerate(row):
+            sc = dot_sql(sl(m), dlit_sql(cw))
+            if crows is not None:
+                csw = _case_by_cell_sql(
+                    clits, lambda cid: dnum_sql(_host_dot(cs(cid, m), cw))
+                )
+                sc = f"({sc} - ({csw}))"
+            c2 = sum(x * x for x in cw)
+            dcols.append(F.expr(
+                f"{ss} - 2 * {sc} + {dnum_sql(c2)}"
+            ).alias(f"__d{m}_{kk}"))
+    return df.select("*", *dcols)
+
+
+def _pq_codes_sql(book) -> str:
+    """array<long> of per-subspace codes over ``_pq_distances``."""
+    return "array(" + ",".join(
+        _argmin_case_sql("__d", m, len(book[0])) for m in range(len(book))
+    ) + ")"
+
+
+def _pq_err_sql(book) -> str:
+    """Σ_m min_k of ``_pq_distances`` — the distance of the codeword the
+    encoder picks, summed over subspaces."""
+    K = len(book[0])
+    return " + ".join(
+        "least(" + ",".join(f"`__d{m}_{kk}`" for kk in range(K)) + ")"
+        if K > 1 else f"`__d{m}_0`"
+        for m in range(len(book))
+    )
+
+
 def pq_encode_codes(
     df: DataFrame,
     book,
@@ -1130,31 +1059,15 @@ def pq_encode_codes(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, codes array<long>) PQ codes as a PURE Catalyst projection —
-    zero Python in the data path (the sim_ann_ivfpq expression shape,
-    generic in M and K): per subspace m the code is the argmin of the
-    expanded L2 distance d = dot(s,s) − 2·dot(s,cw) + |cw|² over the
-    codewords, ties resolved to the SMALLER code by a ≤-chain (the same
-    rule the DuckDB twin spells), evaluated over inlined codeword
+    zero Python in the data path, generic in M and K: per subspace m the
+    code is the argmin of ``_pq_distances`` over the codewords, ties
+    resolved to the SMALLER code, evaluated over inlined codeword
     literals. ``book``: nested (M, K, sub) host list / ndarray — the
     KB-sized train-once artifact."""
-    book = [[list(map(float, cw)) for cw in row] for row in book]
-    M, K = len(book), len(book[0])
-    sub = len(book[0][0])
-    out = df.select(id_col, as_double(F.col(vec_col)).alias("__ve"))
-    dcols = []
-    for m in range(M):
-        s = f"slice(`__ve`, {m * sub + 1}, {sub})"
-        self_dot = dot_sql(s, s)
-        for kk in range(K):
-            cw = book[m][kk]
-            c2 = sum(x * x for x in cw)
-            dcols.append(F.expr(
-                f"{self_dot} - 2 * {dot_sql(s, dlit_sql(cw))} + {dnum_sql(c2)}"
-            ).alias(f"__d{m}_{kk}"))
-    out = out.select(id_col, *dcols)
-    codes = ",".join(_argmin_case_sql("__d", m, K) for m in range(M))
-    return out.select(
-        id_col, F.expr(f"array({codes})").alias("codes")
+    book = _book_lists(book)
+    v = df.select(id_col, as_double(F.col(vec_col)).alias("__ve"))
+    return _pq_distances(v, book, "`__ve`").select(
+        id_col, F.expr(_pq_codes_sql(book)).alias("codes")
     )
 
 
@@ -1165,34 +1078,218 @@ def pq_reconstruction_error(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, pq_err double) — per-vector product-quantization
-    reconstruction error Σ_m min_k ||s_m − cw[m][k]||² via the SAME
-    expanded-L2 expression tree pq_encode_codes argmins over (so the
+    reconstruction error Σ_m min_k ||s_m − cw[m][k]||² over the SAME
+    ``_pq_distances`` columns pq_encode_codes argmins over (so the
     error is exactly the distance of the codeword the encoder picks) —
     a pure Catalyst projection, the operational how-lossy-is-my-
     quantizer number."""
-    book = [[list(map(float, cw)) for cw in row] for row in book]
+    book = _book_lists(book)
+    v = df.select(id_col, as_double(F.col(vec_col)).alias("__ve"))
+    return _pq_distances(v, book, "`__ve`").select(
+        id_col, F.expr(_pq_err_sql(book)).alias("pq_err")
+    )
+
+
+def ivfpq_encode(
+    corpus: DataFrame,
+    crows,
+    codebook,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    residual: bool = False,
+) -> DataFrame:
+    """(neighbor_id, cell, nv_vec, __nn, codes) — one-pass IVF-PQ encode
+    as pure Catalyst projections: assign cells against the frozen
+    centroid literals (``_ivf_assigned``), then PQ-encode v — or, with
+    ``residual``, v − c(cell(v)), the FAISS IVFADC layout that spends
+    the codebook's resolution on the within-cell remainder — through
+    ``_pq_distances``. This is the relation ``_ivfpq_adc_topk`` serves
+    from; a multi-probe sweep caches it once instead of re-encoding per
+    nprobe setting."""
+    book = _book_lists(codebook)
+    enc = _pq_distances(
+        _ivf_assigned(corpus, crows, id_col, vec_col),
+        book,
+        "`nv_vec`",
+        crows if residual else None,
+    )
+    return enc.select(
+        "neighbor_id", "cell", "nv_vec", "__nn",
+        F.expr(_pq_codes_sql(book)).alias("codes"),
+    )
+
+
+def _ivfpq_adc_topk(
+    queries: DataFrame,
+    cand: DataFrame,
+    crows,
+    book,
+    residual: bool,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    nprobe: int,
+    shortlist: int,
+    vectors: DataFrame | None = None,
+) -> DataFrame:
+    """The IVF-PQ ADC serving plan, over a prebuilt (neighbor_id, cell,
+    nv_vec, __nn, codes) relation — ``ann_ivfpq_topk`` feeds it a fresh
+    ``ivfpq_encode``, ``IvfIndex.probe_adc`` the stored artifacts. A
+    caller whose vectors live apart from its codes passes ``cand``
+    without nv_vec/__nn and ``vectors`` as (neighbor_id, nv_vec, __nn):
+    they join after the shortlist, so only queries × shortlist rows
+    meet the vector table (joining it to every candidate first made
+    sim_ann_ivfpq_index_compact ~15 % slower at sf0.1 on 4 cores).
+
+    - probe cells: the ``_ivf_probe_assigned`` projection — sort the
+      (cos, −centroid_id) structs, keep ``nprobe``, explode;
+    - ADC lookup table hoisted on the tiny query side: column
+      ``__w{m}_{k}`` = dot(query subvector m, cw[m][k]), so each
+      candidate pays zero folds — its approximation is one CASE per
+      subspace over its codes. Residual codes quantize v − c(cell),
+      so the residual form adds the per-probe dot(q, c_cell) first
+      (dot(q, v) = dot(q, c_cell) + dot(q, v − c_cell));
+    - candidates: ONE broadcast hash join of the probe relation on cell;
+    - shortlist: the ``shortlist`` best approximations per query (ties to
+      the smaller neighbor id), re-ranked by the EXACT guarded fold
+      cosine, so returned scores are bit-equal to the exact operators.
+
+    Under the portable configuration (md5 sample order, iters=0
+    centroids, a dyadic codebook) every step is token-for-token the
+    DuckDB twins' arithmetic, so the whole approximate result sits under
+    the value-hash gate (plans/scale_ops sim_ann_ivfpq*)."""
     M, K = len(book), len(book[0])
     sub = len(book[0][0])
-    out = df.select(id_col, as_double(F.col(vec_col)).alias("__ve"))
-    terms = []
-    for m in range(M):
-        s = f"slice(`__ve`, {m * sub + 1}, {sub})"
-        self_dot = dot_sql(s, s)
-        dists = []
-        for kk in range(K):
-            cw = book[m][kk]
-            c2 = sum(x * x for x in cw)
-            dists.append(
-                f"{self_dot} - 2 * {dot_sql(s, dlit_sql(cw))} + {dnum_sql(c2)}"
-            )
-        terms.append(
-            "least(" + ",".join(dists) + ")"
-            if len(dists) > 1
-            else f"({dists[0]})"
-        )
-    return out.select(
-        id_col, F.expr(" + ".join(terms)).alias("pq_err")
+    clits = _centroid_lits(crows)
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        as_double(F.col(vec_col)).alias("qve"),
+    ).withColumn("__qn", F.expr(_gnorm_sql("`qve`")))
+    wcols = [
+        F.expr(dot_sql(
+            f"slice(`qve`, {m * sub + 1}, {sub})", dlit_sql(book[m][kk])
+        )).alias(f"__w{m}_{kk}")
+        for m in range(M)
+        for kk in range(K)
+    ]
+    structs = _cell_structs_sql(clits, "`qve`", "`__qn`")
+    probes = q.select("query_id", "qve", "__qn", *wcols).withColumn(
+        "cell",
+        F.expr(
+            f"explode(transform(slice(sort_array({structs}, false), "
+            f"1, {min(nprobe, len(crows))}), s -> CAST(-s.ncid AS BIGINT)))"
+        ),
     )
+    terms = []
+    if residual:
+        lits = {cid: lit for cid, lit, _ in clits}
+        probes = probes.withColumn("__qdotc", F.expr(_case_by_cell_sql(
+            clits, lambda cid: dot_sql("`qve`", lits[cid])
+        )))
+        terms.append("(`__qdotc`)")
+    for m in range(M):
+        arms = " ".join(
+            f"WHEN `codes`[{m}] = {kk} THEN `__w{m}_{kk}`" for kk in range(K)
+        )
+        terms.append(f"(CASE {arms} END)")
+    ws = Window.partitionBy("query_id").orderBy(
+        F.desc("__approx"), F.col("neighbor_id")
+    )
+    short = (
+        cand.join(F.broadcast(probes), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id", "neighbor_id", "qve", "__qn",
+            *[c for c in ("nv_vec", "__nn") if c in cand.columns],
+            F.expr(" + ".join(terms)).alias("__approx"),
+        )
+        .withColumn("__srn", F.row_number().over(ws))
+        .filter(F.col("__srn") <= int(shortlist))
+    )
+    if vectors is not None:
+        short = short.join(vectors, "neighbor_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.col("neighbor_id")
+    )
+    return (
+        short.select(
+            "query_id",
+            "neighbor_id",
+            (
+                dot(F.col("qve"), F.col("nv_vec"))
+                / (F.col("__qn") * F.col("__nn"))
+            ).alias("cos_sim"),
+        )
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "cos_sim", "rnk")
+    )
+
+
+def ann_ivfpq_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    centroids: DataFrame,
+    codebook,
+    residual: bool = False,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+    nprobe: int = 4,
+    shortlist: int = 12,
+) -> DataFrame:
+    """IVF-PQ approximate top-k — the billion-vector serving layout: IVF
+    cells bound WHICH vectors a query looks at (nprobe/n_centroids of
+    the corpus), PQ codes bound HOW MUCH arithmetic each candidate costs
+    (one CASE per subspace instead of a dim-wide dot), and an exact
+    re-rank of the ``shortlist`` keeps the returned cosines bit-identical
+    to the exact operators. ``residual`` quantizes v − c(cell(v))
+    instead of v (IVFADC, Jégou et al. 2011).
+
+    ``centroids``: a (centroid_id, cv) table (ivf_centroids /
+    load_ivf_centroids); ``codebook``: an (M, K, sub) codebook
+    (pq_codebook_from_sample, or a pinned portable one). Both are
+    KB-sized train-once artifacts; the only collect is the centroid
+    table. One corpus pass encodes (``ivfpq_encode``), no vector
+    shuffle; the probe relation (queries × nprobe) broadcasts; the plan
+    is ``_ivfpq_adc_topk``, shared with ``IvfIndex.probe_adc``.
+
+    Degeneration anchor (tested): nprobe == n_centroids and shortlist ≥
+    the corpus size ≡ brute-force cosine_topk — the PQ ranking only
+    ever SELECTS candidates."""
+    crows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
+    book = _book_lists(codebook)
+    return _ivfpq_adc_topk(
+        queries,
+        ivfpq_encode(corpus, crows, book, id_col, vec_col, residual),
+        crows, book, residual, id_col, vec_col, k, nprobe, shortlist,
+    )
+
+
+def _index_codes(
+    df: DataFrame, crows, book, id_col: str, vec_col: str,
+    residual: bool, gen: int,
+) -> DataFrame:
+    """(id, codes, gen) rows of an IvfIndex codes artifact. Residual
+    codes need the cell assignment (``ivfpq_encode``); plain codes only
+    the vector (``pq_encode_codes``) — routing them through the
+    assignment too cost plan construction and analysis of its
+    16-centroid expression on every build and absorb (+0.4 s on
+    sim_ivfpq_drift at sf0.1, 4 cores)."""
+    codes = (
+        ivfpq_encode(df, crows, book, id_col, vec_col, residual=True)
+        .select(F.col("neighbor_id").alias(id_col), "codes")
+        if residual
+        else pq_encode_codes(df, book, id_col, vec_col)
+    )
+    return codes.withColumn("gen", F.lit(gen).cast("long"))
+
+
+# ---------------------------------------------------------------------------
+# IvfIndex — persisted IVF ANN index with assign-only absorb (the
+# centroid artifact was train-once, but adding vectors still meant
+# retraining; this closes the incremental-maintenance gap)
+# ---------------------------------------------------------------------------
 
 
 class IvfIndex:
@@ -1276,8 +1373,8 @@ class IvfIndex:
         serving-side ANN index must be restart-complete — before this,
         the codebook was rebuilt per run). ``residual=True`` stores
         RESIDUAL codes (quantize v − c(cell(v)) — the FAISS IVFADC
-        layout, see ann_ivfpq_residual_topk); the flag persists in
-        params so a loaded index serves with the matching ADC."""
+        layout, see ivfpq_encode); the flag persists in params so a
+        loaded index serves with the matching ADC."""
         cents = (
             centroids
             if centroids is not None
@@ -1310,7 +1407,7 @@ class IvfIndex:
             F.col(id_col), as_double(F.col(vec_col)).alias("v")
         )
         if codebook is not None:
-            book = [[list(map(float, cw)) for cw in row] for row in codebook]
+            book = _book_lists(codebook)
             spark = cents.sparkSession
             arts["codebook"] = spark.createDataFrame(
                 [
@@ -1320,15 +1417,8 @@ class IvfIndex:
                 ],
                 "m int, code int, cw array<double>",
             )
-            codes = (
-                ivfpq_residual_encode(
-                    corpus, crows, book, id_col, vec_col
-                ).select(F.col("neighbor_id").alias(id_col), "codes")
-                if params["residual"]
-                else pq_encode_codes(corpus, book, id_col, vec_col)
-            )
-            arts["codes"] = codes.withColumn(
-                "gen", F.lit(0).cast("long")
+            arts["codes"] = _index_codes(
+                corpus, crows, book, id_col, vec_col, params["residual"], 0
             )
         inst = cls(params, arts, max_gen=0)
         inst._crows_cache = crows
@@ -1404,19 +1494,10 @@ class IvfIndex:
             # codebook would produce (pytest-pinned); a residual index
             # encodes batch residuals under the same frozen
             # centroids+codebook
-            codes = (
-                ivfpq_residual_encode(
-                    batch, crows, self.codebook_rows(),
-                    p["id_col"], p["vec_col"],
-                ).select(F.col("neighbor_id").alias(p["id_col"]), "codes")
-                if p.get("residual")
-                else pq_encode_codes(
-                    batch, self.codebook_rows(), p["id_col"], p["vec_col"]
-                )
-            )
-            arts["codes"] = arts["codes"].unionByName(
-                codes.withColumn("gen", F.lit(next_gen).cast("long"))
-            )
+            arts["codes"] = arts["codes"].unionByName(_index_codes(
+                batch, crows, self.codebook_rows(), p["id_col"],
+                p["vec_col"], bool(p.get("residual")), next_gen,
+            ))
         out = IvfIndex(self.params, arts, max_gen=next_gen)
         # centroids/codebook are frozen on absorb — the host copies stay valid
         out._crows_cache = self._crows_cache
@@ -1585,26 +1666,6 @@ class IvfIndex:
 
     # -- serving -------------------------------------------------------
 
-    def persisted(self) -> "IvfIndex":
-        """A COPY of this index whose row-count-heavy serving artifacts
-        (assign, codes) are marked for Spark caching — for sweep/eval
-        callers that probe one IN-MEMORY index several times in a
-        single action: without it every sweep arm re-derives the lazy
-        assignment and PQ-encode subtrees from the raw corpus. A copy
-        (not in-place mutation) so another caller holding this instance
-        does not inherit pinned artifacts it never asked for. A
-        saved-then-loaded index doesn't need this (its artifacts are
-        parquet-backed). Suite runners clear the cache between queries
-        (bench.py / selfcheck clearCache)."""
-        arts = dict(self.arts)
-        for n in ("assign", "codes"):
-            if n in arts:
-                arts[n] = arts[n].persist()
-        out = IvfIndex(self.params, arts, max_gen=self._max_gen)
-        out._crows_cache = self._crows_cache
-        out._book_cache = self._book_cache
-        return out
-
     def probe(self, queries: DataFrame, k: int = 5, nprobe: int = 4):
         """Join-form IVF top-k over the STORED assignment — the exact
         ann_ivf_join_topk serving plan (shared _ivf_probe_assigned), so
@@ -1619,7 +1680,7 @@ class IvfIndex:
                 F.col("v").alias("nv_vec"),
                 "cell",
             )
-            .withColumn("__nn", _gnorm(F.col("nv_vec")))
+            .withColumn("__nn", F.expr(_gnorm_sql("`nv_vec`")))
         )
         return _ivf_probe_assigned(
             queries, assigned, crows, p["id_col"], p["vec_col"], k, nprobe
@@ -1687,137 +1748,34 @@ class IvfIndex:
         shortlist: int = 12,
     ) -> DataFrame:
         """IVF-PQ ADC serving over the STORED artifacts (requires a
-        PQ-bearing index): candidates come from ONE broadcast hash join
-        of the persisted assignment onto the probe cells, the ADC
-        approximation is a CASE over the PERSISTED code arrays against
-        per-query lookup columns hoisted on the tiny side (zero folds
-        per candidate row, zero Python anywhere), the ``shortlist``
-        survivors are re-ranked EXACTLY against the stored vectors.
-        Because codes and codebook are artifacts, a loaded index serves
-        without re-touching raw embeddings — the restart-complete form
-        (judge-r8 #5); code recomputation happens only in absorb, only
-        for the incoming batch."""
+        PQ-bearing index): ann_ivfpq_topk's plan (``_ivfpq_adc_topk``)
+        fed assign ⋈ codes instead of a fresh encode, with the stored
+        vectors joined to the shortlist for the exact re-rank and the
+        ADC form (plain or residual) the persisted ``residual`` flag
+        names. Because codes and codebook are artifacts, a loaded index
+        serves without re-touching raw embeddings — the restart-complete
+        form; code recomputation happens only in absorb, only for the
+        incoming batch."""
         if "codebook" not in self.arts:
             raise ValueError("probe_adc requires a PQ-bearing index")
         p = self.params
-        crows = self._centroid_rows()
-        book = self.codebook_rows()
-        M, K = len(book), len(book[0])
-        sub = len(book[0][0])
 
-        q = queries.select(
-            F.col(p["id_col"]).alias("query_id"),
-            as_double(F.col(p["vec_col"])).alias("qve"),
-        )
-        wcols = []
-        for m in range(M):
-            qs = f"slice(`qve`, {m * sub + 1}, {sub})"
-            for kk in range(K):
-                wcols.append(
-                    F.expr(dot_sql(qs, dlit_sql(book[m][kk])))
-                    .alias(f"__w{m}_{kk}")
-                )
-        q = q.select("query_id", "qve", *wcols)
-        wnames = [f"__w{m}_{kk}" for m in range(M) for kk in range(K)]
-        qn = _gnorm_sql("`qve`")
-        qc = q.select(
-            "query_id", "qve", *wnames,
-            *[
-                F.expr(
-                    f"{dot_sql('`qve`', dlit_sql(r['cv']))}"
-                    f" / ({qn} * {dnum_sql(_host_norm(r['cv']))})"
-                ).alias(f"__qc{j}")
-                for j, r in enumerate(crows)
-            ],
-        ).select(
-            "query_id", "qve", *wnames,
-            F.expr(
-                "explode(array("
-                + ",".join(
-                    f"named_struct('cell', {int(r['centroid_id'])}, "
-                    f"'qcos', `__qc{j}`)"
-                    for j, r in enumerate(crows)
-                )
-                + "))"
-            ).alias("pc"),
-        ).select("query_id", "qve", *wnames, "pc.cell", "pc.qcos")
-        wq = Window.partitionBy("query_id").orderBy(
-            F.desc("qcos"), F.col("cell")
-        )
-        probes = (
-            qc.withColumn("__rn", F.row_number().over(wq))
-            .filter(F.col("__rn") <= nprobe)
-            .select("query_id", "qve", *wnames, "cell")
-        )
-        if p.get("residual"):
-            # residual ADC (ann_ivfpq_residual_topk's contract): the
-            # stored codes quantize v − c(cell), so the approximation
-            # adds the per-probe dot(q, c_cell) scalar to the LUT sum
-            _cv = {
-                int(r["centroid_id"]): [float(x) for x in r["cv"]]
-                for r in crows
-            }
-            probes = probes.withColumn(
-                "__qdotc",
-                F.expr(_case_by_cell_sql(
-                    _centroid_lits(crows),
-                    lambda cid: dot_sql("`qve`", dlit_sql(_cv[cid])),
-                )),
+        def by_id(name: str, *cols) -> DataFrame:
+            return self.arts[name].select(
+                F.col(p["id_col"]).alias("neighbor_id"), *cols
             )
 
-        cand = (
-            self.arts["assign"]
-            .select(F.col(p["id_col"]).alias("neighbor_id"), "cell")
-            .join(
-                self.arts["codes"].select(
-                    F.col(p["id_col"]).alias("neighbor_id"), "codes"
-                ),
-                "neighbor_id",
-            )
-            .join(F.broadcast(probes), "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-        )
-        terms = ["(`__qdotc`)"] if p.get("residual") else []
-        for m in range(M):
-            arms = " ".join(
-                f"WHEN `codes`[{m}] = {kk} THEN `__w{m}_{kk}`"
-                for kk in range(K)
-            )
-            terms.append(f"(CASE {arms} END)")
-        approx = F.expr(" + ".join(terms))
-        ws = Window.partitionBy("query_id").orderBy(
-            F.desc("__approx"), F.col("neighbor_id")
-        )
-        short = (
-            cand.select(
-                "query_id", "neighbor_id", "qve", approx.alias("__approx")
-            )
-            .withColumn("__srn", F.row_number().over(ws))
-            .filter(F.col("__srn") <= int(shortlist))
-        )
-        rer = short.join(
-            self.arts["vectors"].select(
-                F.col(p["id_col"]).alias("neighbor_id"), "v"
+        return _ivfpq_adc_topk(
+            queries,
+            by_id("assign", "cell").join(
+                by_id("codes", "codes"), "neighbor_id"
             ),
-            "neighbor_id",
-        ).select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qve"), F.col("v"))
-                / (
-                    F.greatest(norm(F.col("qve")), F.lit(1e-300))
-                    * F.greatest(norm(F.col("v")), F.lit(1e-300))
-                )
-            ).alias("cos_sim"),
-        )
-        wr = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.col("neighbor_id")
-        )
-        return (
-            rer.withColumn("rnk", F.row_number().over(wr).cast("long"))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "cos_sim", "rnk")
+            self._centroid_rows(), self.codebook_rows(),
+            bool(p.get("residual")), p["id_col"], p["vec_col"],
+            k, nprobe, shortlist,
+            vectors=by_id("vectors", F.col("v").alias("nv_vec")).withColumn(
+                "__nn", F.expr(_gnorm_sql("`nv_vec`"))
+            ),
         )
 
     # -- persistence ----------------------------------------------------
@@ -1951,206 +1909,4 @@ def load_published_index(
 
     return IvfIndex.load(
         spark, os.path.join(root, resolve_published(root, seq, version))
-    )
-
-
-def _host_dot(a, b) -> float:
-    """Driver-side sequential dot in the SAME IEEE fold order as the
-    zip_with/aggregate `dot` and DuckDB's list_dot_product (one
-    accumulate per component, index order)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + float(x) * float(y)
-    return acc
-
-
-def _case_by_cell_sql(clits, make_sql) -> str:
-    """CASE over the assigned/probed cell id, one arm per centroid
-    (WHENs in clits order, implicit ELSE NULL) — the selector that lets
-    centroid-dependent scalars stay host literals (or per-cell folds)
-    in a single projection; ``make_sql(cid)`` returns the arm's SQL
-    text."""
-    arms = " ".join(
-        f"WHEN `cell` = {cid} THEN {make_sql(cid)}" for cid, _, _ in clits
-    )
-    return f"CASE {arms} END"
-
-
-def ivfpq_residual_encode(
-    corpus: DataFrame,
-    crows,
-    codebook,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(neighbor_id, cell, nv_vec, __nn, codes) — IVFADC residual
-    encoding as pure Catalyst projections: assign cells against the
-    frozen centroid literals, then PQ-encode the residual v − c(cell)
-    via the expanded-L2 tree (see ann_ivfpq_residual_topk). Factored
-    out so a multi-probe sweep encodes the corpus ONCE (and may
-    cache the result) instead of once per nprobe setting."""
-    book = [[list(map(float, cw)) for cw in row] for row in codebook]
-    M, K = len(book), len(book[0])
-    sub = len(book[0][0])
-    cvecs = {
-        int(r["centroid_id"]): [float(x) for x in r["cv"]] for r in crows
-    }
-    clits = _centroid_lits(crows)
-    enc = _ivf_assigned(corpus, crows, id_col, vec_col)
-    vcols = []
-    for m in range(M):
-        vcols.append(F.expr(_case_by_cell_sql(
-            clits,
-            lambda cid, _m=m: dot_sql(
-                f"slice(`nv_vec`, {_m * sub + 1}, {sub})",
-                dlit_sql(cvecs[cid][_m * sub: (_m + 1) * sub]),
-            ),
-        )).alias(f"__vc{m}"))
-        vcols.append(F.expr(_case_by_cell_sql(
-            clits,
-            lambda cid, _m=m: dnum_sql(_host_dot(
-                cvecs[cid][_m * sub: (_m + 1) * sub],
-                cvecs[cid][_m * sub: (_m + 1) * sub],
-            )),
-        )).alias(f"__cs2{m}"))
-    enc = enc.select("*", *vcols)
-    rcols = []
-    for m in range(M):
-        s = f"slice(`nv_vec`, {m * sub + 1}, {sub})"
-        selfd = dot_sql(s, s)
-        for kk in range(K):
-            cw = book[m][kk]
-            c2 = sum(x * x for x in cw)
-            csw = _case_by_cell_sql(
-                clits,
-                lambda cid, _m=m, _cw=cw: dnum_sql(_host_dot(
-                    cvecs[cid][_m * sub: (_m + 1) * sub], _cw
-                )),
-            )
-            rcols.append(F.expr(
-                f"({selfd} - 2 * `__vc{m}` + `__cs2{m}`)"
-                f" - 2 * ({dot_sql(s, dlit_sql(cw))} - ({csw}))"
-                f" + {dnum_sql(c2)}"
-            ).alias(f"__rd{m}_{kk}"))
-    enc = enc.select("*", *rcols)
-    codes = ",".join(_argmin_case_sql("__rd", m, K) for m in range(M))
-    return enc.select(
-        "neighbor_id", "cell", "nv_vec", "__nn",
-        F.expr(f"array({codes})").alias("codes"),
-    )
-
-
-def ann_ivfpq_residual_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centroids: DataFrame,
-    codebook,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 4,
-    shortlist: int = 12,
-    encoded: DataFrame | None = None,
-) -> DataFrame:
-    """IVFADC RESIDUAL serving (Jégou et al. 2011 — the FAISS IVFADC
-    layout): PQ codes quantize the RESIDUAL v − c(cell(v)) instead of v
-    itself, so the codebook spends its resolution on the within-cell
-    remainder (the production IVF-PQ form; plain-v codes waste bits
-    re-describing the cell). ADC stays LUT-shaped because
-    dot(q, v) = dot(q, c_cell) + dot(q, r_v) ≈ dot(q, c_cell)
-    + Σ_m dot(q_m, cw[m][code_m]) — the cell term is one per-probe
-    scalar and the LUT columns are the SAME q-subvector dots plain ADC
-    hoists. Everything is pure Catalyst: residual code selection uses
-    the expanded-L2 tree ||s−cs−cw||² = (dot(s,s) − 2·dot(s,cs)
-    + dot(cs,cs)) − 2·(dot(s,cw) − dot(cs,cw)) + |cw|², token-for-token
-    the oracle's association, with the centroid-dependent scalars
-    selected by a CASE on the assigned cell (host-literal folds — the
-    centroids are exact corpus rows under iters=0, so both engines
-    fold identical doubles in identical order); the `shortlist`
-    survivors re-rank EXACTLY. One corpus pass, no vector shuffle; the
-    probe relation (queries × nprobe) broadcasts."""
-    book = [[list(map(float, cw)) for cw in row] for row in codebook]
-    M, K = len(book), len(book[0])
-    sub = len(book[0][0])
-    crows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cvecs = {
-        int(r["centroid_id"]): [float(x) for x in r["cv"]] for r in crows
-    }
-    clits = _centroid_lits(crows)
-
-    # ---- corpus side: residual PQ codes (or a caller-cached encode) --
-    enc = (
-        encoded
-        if encoded is not None
-        else ivfpq_residual_encode(corpus, crows, book, id_col, vec_col)
-    )
-
-    # ---- query side: probe cells + hoisted LUT columns ---------------
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("qve"),
-    ).withColumn("__qn", F.expr(_gnorm_sql("`qve`")))
-    wcols = [
-        F.expr(dot_sql(
-            f"slice(`qve`, {m * sub + 1}, {sub})", dlit_sql(book[m][kk])
-        )).alias(f"__w{m}_{kk}")
-        for m in range(M)
-        for kk in range(K)
-    ]
-    wnames = [f"__w{m}_{kk}" for m in range(M) for kk in range(K)]
-    take = min(nprobe, len(crows))
-    structs = _cell_structs_sql(clits, "`qve`", "`__qn`")
-    probes = (
-        q.select("query_id", "qve", "__qn", *wcols)
-        .withColumn(
-            "cell",
-            F.expr(
-                f"explode(transform(slice(sort_array({structs}, false), "
-                f"1, {take}), s -> CAST(-s.ncid AS BIGINT)))"
-            ),
-        )
-        .withColumn(
-            "__qdotc",
-            F.expr(_case_by_cell_sql(
-                clits, lambda cid: dot_sql("`qve`", dlit_sql(cvecs[cid]))
-            )),
-        )
-    )
-    cand = enc.join(F.broadcast(probes), "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    terms = ["(`__qdotc`)"]
-    for m in range(M):
-        arms = " ".join(
-            f"WHEN `codes`[{m}] = {kk} THEN `__w{m}_{kk}`"
-            for kk in range(K)
-        )
-        terms.append(f"(CASE {arms} END)")
-    approx = F.expr(" + ".join(terms))
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("__approx"), F.col("neighbor_id")
-    )
-    short = (
-        cand.select(
-            "query_id", "neighbor_id", "qve", "__qn", "nv_vec", "__nn",
-            approx.alias("__approx"),
-        )
-        .withColumn("__srn", F.row_number().over(ws))
-        .filter(F.col("__srn") <= int(shortlist))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        short.select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qve"), F.col("nv_vec"))
-                / (F.col("__qn") * F.col("__nn"))
-            ).alias("cos_sim"),
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
     )

@@ -1049,7 +1049,7 @@ def s15_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     never-seen key (c_mktsegment stays NULL — column absent from the
     feed), and untouched snapshot rows. The streaming twin with
     tombstones and restart recovery is streaming/jobs.
-    start_changefeed_apply (pytest-gated)."""
+    start_latest_state over the feed (pytest-gated)."""
     from ..operators.integrity import apply_changefeed
 
     customer = _t(spark, sf_dir, "customer").select(

@@ -2036,7 +2036,8 @@ def st27_pyds_min_policy_join(
 
 # ---------------------------------------------------------------------------
 # ST28 — streaming CDC changefeed apply under the gate (the hash-gated
-# form of streaming/jobs.start_changefeed_apply; batch twin s15)
+# form of streaming/jobs.start_latest_state over a changefeed; batch
+# twin s15)
 # ---------------------------------------------------------------------------
 
 _ST28_N = 150
@@ -2068,7 +2069,7 @@ SELECT k, seq, val FROM latest WHERE op != 'D'
 def st28_pyds_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC MERGE apply under the value-hash gate: a 150-event
     backlog drains through Trigger.AvailableNow into
-    start_changefeed_apply — per micro-batch latest-change-per-key
+    start_latest_state — per micro-batch latest-change-per-key
     compaction folded into the versioned state snapshot, 'D' rows
     retained as tombstones — and the LIVE VIEW of the final state
     (read_changefeed_state) is hashed against a full SQL replay of the
@@ -2094,9 +2095,9 @@ def st28_pyds_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = _scratch_dir(prefix="rtvs_st28_pyds_parity_state_")
     _run_gate(
         spark, "st28_pyds_parity",
-        lambda ck: jobs.start_changefeed_apply(
-            changes, state, ck, keys=("k",), seq_col="seq",
-            trigger={"availableNow": True},
+        lambda ck: jobs.start_latest_state(
+            changes, state, ck, key_cols=("k",), ts_col="seq",
+            tiebreak_cols=(), trigger={"availableNow": True},
         ),
     )
     return jobs.read_changefeed_state(spark, state)

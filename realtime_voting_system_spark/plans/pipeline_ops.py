@@ -1574,8 +1574,7 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("sim_topk_vectorized", _TOPK_SQL)
 def sim_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-side-combine top-k, sequential-fold scoring — bit-equal to the
-    brute-force oracle (same _TOPK_SQL). The blas=True switch (wide
-    vectors) stays rows-only by nature: neighbor-set equality pytest."""
+    brute-force oracle (same _TOPK_SQL)."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_topk_pandas(
         emb.filter(F.col("vec_id") < 20), emb, k=5

@@ -1196,6 +1196,107 @@ def _pq_codebook() -> list[list[list[float]]]:
     return book
 
 
+def _pq_argmin_duck(m: int) -> str:
+    """DuckDB twin of similarity._argmin_case_sql over d{m}_0..d{m}_3:
+    the lowest-index-wins ≤-chain."""
+    d = [f"d{m}_{kk}" for kk in range(_PQ_K)]
+    return (
+        f"CASE WHEN {d[0]} <= {d[1]} AND {d[0]} <= {d[2]} "
+        f"AND {d[0]} <= {d[3]} THEN 0 "
+        f"WHEN {d[1]} <= {d[2]} AND {d[1]} <= {d[3]} THEN 1 "
+        f"WHEN {d[2]} <= {d[3]} THEN 2 ELSE 3 END"
+    )
+
+
+def _pq_codes_duck() -> str:
+    """The code_0..code_3 select list over the d{m}_{k} columns."""
+    return ", ".join(
+        f"CAST({_pq_argmin_duck(m)} AS BIGINT) AS code_{m}"
+        for m in range(_PQ_M)
+    )
+
+
+def _pq_adc_duck(book, codes: str) -> str:
+    """ADC approximation over the ``codes`` relation's code_m columns:
+    Σ_m dot(q subvector m, cw[m][code_m]), left-associated — the
+    hoisted-LUT CASE sum of operators/similarity._ivfpq_adc_topk."""
+    adc_terms = []
+    for m in range(_PQ_M):
+        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
+        arms = " ".join(
+            f"WHEN {kk} THEN list_dot_product(q.ve[{lo}:{hi}], "
+            + "[" + ", ".join(repr(x) for x in book[m][kk]) + "]::DOUBLE[])"
+            for kk in range(_PQ_K)
+        )
+        adc_terms.append(f"(CASE {codes}.code_{m} {arms} END)")
+    return " + ".join(adc_terms)
+
+
+def _pq_residual_sql_cols(book) -> tuple[list[str], list[str]]:
+    """Centroid-slice exprs cs{m} + the RESIDUAL distance columns
+    (dot(s,s) − 2·dot(s,cs) + dot(cs,cs)) − 2·(dot(s,cw) − dot(cs,cw))
+    + |cw|² — the twin of similarity._pq_distances' residual form."""
+    cs_exprs = [
+        f"cv[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS cs{m}"
+        for m in range(_PQ_M)
+    ]
+    rdist_cols = []
+    for m in range(_PQ_M):
+        for kk in range(_PQ_K):
+            c = book[m][kk]
+            lits = "[" + ", ".join(repr(x) for x in c) + "]::DOUBLE[]"
+            c2_num = round(sum(x * x for x in c) * (1 << 26))
+            rdist_cols.append(
+                f"(list_dot_product(s{m}, s{m}) - 2 * "
+                f"list_dot_product(s{m}, cs{m}) + "
+                f"list_dot_product(cs{m}, cs{m})) - 2 * "
+                f"(list_dot_product(s{m}, {lits}) - "
+                f"list_dot_product(cs{m}, {lits})) "
+                f"+ (CAST({c2_num} AS DOUBLE) / 67108864.0) AS d{m}_{kk}"
+            )
+    return cs_exprs, rdist_cols
+
+
+def _ivfpq_recall_sql_tail() -> tuple[list[str], list[str]]:
+    """Per-nprobe CTEs (re-shortlist, exact re-rank, top-k under
+    prn ≤ np over a ``scored`` relation) and report rows (hits against
+    the ``bf`` ground truth) shared by both recall twins."""
+    cfg = _IVFPQ
+    total = cfg["n_queries"] * cfg["k"]
+    per_np_ctes, per_np_rows = [], []
+    for np_ in _IVFPQ_RECALL_NPROBES:
+        per_np_ctes.append(f""", short{np_} AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           ROW_NUMBER() OVER (
+             PARTITION BY query_id ORDER BY approx DESC, neighbor_id
+           ) AS srn
+    FROM scored WHERE prn <= {np_}
+  ) WHERE srn <= {cfg["shortlist"]}
+), top{np_} AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT s.query_id, s.neighbor_id,
+           ROW_NUMBER() OVER (
+             PARTITION BY s.query_id
+             ORDER BY {_COS_SQL.format(a="q.ve", b="n.ve")} DESC,
+                      s.neighbor_id
+           ) AS rnk
+    FROM short{np_} s
+    JOIN v q ON q.vec_id = s.query_id
+    JOIN v n ON n.vec_id = s.neighbor_id
+  ) WHERE rnk <= {cfg["k"]}
+)""")
+        per_np_rows.append(f"""SELECT CAST({np_} AS BIGINT) AS nprobe,
+       CAST({cfg["n_queries"]} AS BIGINT) AS n_queries,
+       CAST({cfg["k"]} AS BIGINT) AS k,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM bf
+          JOIN top{np_} USING (query_id, neighbor_id)) AS n_hits,
+       CAST((SELECT COUNT(*) FROM bf
+          JOIN top{np_} USING (query_id, neighbor_id)) AS DOUBLE)
+         / CAST({total} AS DOUBLE) AS recall_at_k""")
+    return per_np_ctes, per_np_rows
+
+
 def _pq_sql() -> str:
     """DuckDB twin: same codebook literals, same ‖x‖²−2x·c+‖c‖² distance
     (each term a sequential-fold dot product — the vec_norms portability
@@ -1220,19 +1321,7 @@ def _pq_sql() -> str:
                 f"list_dot_product(s{m}, {lits}) "
                 f"+ (CAST({c2_num} AS DOUBLE) / 67108864.0) AS d{m}_{kk}"
             )
-
-    def argmin(m: int) -> str:
-        d = [f"d{m}_{kk}" for kk in range(_PQ_K)]
-        return (
-            f"CASE WHEN {d[0]} <= {d[1]} AND {d[0]} <= {d[2]} "
-            f"AND {d[0]} <= {d[3]} THEN 0 "
-            f"WHEN {d[1]} <= {d[2]} AND {d[1]} <= {d[3]} THEN 1 "
-            f"WHEN {d[2]} <= {d[3]} THEN 2 ELSE 3 END"
-        )
-
-    codes = ", ".join(
-        f"CAST({argmin(m)} AS BIGINT) AS code_{m}" for m in range(_PQ_M)
-    )
+    codes = _pq_codes_duck()
     err = " + ".join(
         f"least(d{m}_0, d{m}_1, d{m}_2, d{m}_3)" for m in range(_PQ_M)
     )
@@ -1259,45 +1348,28 @@ def vec_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the argmin is a lowest-index-wins CASE chain — identical comparisons
     both engines. Pure projection over the scan: zero shuffle, codebook
     inlined into codegen (a broadcast join at realistic codebook sizes).
+    The distance columns are operators/similarity's one PQ distance
+    tree, the tree pq_encode_codes and IvfIndex encode with.
     """
-    from ..functions.vectors import as_double, dot
+    from ..functions.vectors import as_double
+    from ..operators import similarity
 
     book = _pq_codebook()
-    emb = _t(spark, sf_dir, "embeddings")
-    v = as_double(F.col("embedding"))
-    out = emb.select("vec_id", *[
-        F.slice(v, m * _PQ_SUB + 1, _PQ_SUB).alias(f"s{m}")
-        for m in range(_PQ_M)
-    ])
-    for m in range(_PQ_M):
-        s = F.col(f"s{m}")
-        self_dot = dot(s, s)
-        for kk in range(_PQ_K):
-            c = book[m][kk]
-            lit = _dlit_array(c)
-            c2 = sum(x * x for x in c)
-            out = out.withColumn(
-                f"d{m}_{kk}", self_dot - 2 * dot(s, lit) + F.lit(c2)
-            )
-
-    def argmin(m: int) -> F.Column:
-        d = [F.col(f"d{m}_{kk}") for kk in range(_PQ_K)]
-        return (
-            F.when((d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3]), 0)
-            .when((d[1] <= d[2]) & (d[1] <= d[3]), 1)
-            .when(d[2] <= d[3], 2)
-            .otherwise(3)
-            .cast("long")
-        )
-
-    err = None
-    for m in range(_PQ_M):
-        t = F.least(*[F.col(f"d{m}_{kk}") for kk in range(_PQ_K)])
-        err = t if err is None else err + t
-    return out.select(
+    d = similarity._pq_distances(
+        _t(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double(F.col("embedding")).alias("__ve")
+        ),
+        book,
+        "`__ve`",
+    )
+    return d.select(
         "vec_id",
-        *[argmin(m).alias(f"code_{m}") for m in range(_PQ_M)],
-        err.alias("sq_err"),
+        *[
+            F.expr(similarity._argmin_case_sql("__d", m, _PQ_K))
+            .alias(f"code_{m}")
+            for m in range(_PQ_M)
+        ],
+        F.expr(similarity._pq_err_sql(book)).alias("sq_err"),
     )
 
 
@@ -1371,14 +1443,6 @@ def j32_spatial_bin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFPQ = {"k": 5, "n_centroids": 16, "nprobe": 4, "n_queries": 20,
           "shortlist": 12}
 
-from ..functions.vectors import dlit_array as _dlit_array  # noqa: E402
-from ..functions.vectors import dlit_sql as _dlit_sql  # noqa: E402
-from ..functions.vectors import dnum_sql as _dnum_sql  # noqa: E402
-from ..functions.vectors import dot_sql as _dot_sql  # noqa: E402
-from ..functions.vectors import norm_sql as _norm_sql  # noqa: E402
-from ..operators.similarity import _argmin_case_sql  # noqa: E402
-# (moved to functions.vectors so operators/similarity shares it; the
-# bit-identity-to-F.lit property is asserted in tests)
 
 
 # norm guarded with greatest(·, 1e-300), MIRRORED in the Spark plan: for
@@ -1429,29 +1493,8 @@ def _build_ivfpq_sql(base_where: str = "") -> str:
     cfg = _IVFPQ
     book = _pq_codebook()
     sub_exprs, dist_cols = _pq_sql_cols(book)
-
-    def argmin(m: int) -> str:
-        d = [f"d{m}_{kk}" for kk in range(_PQ_K)]
-        return (
-            f"CASE WHEN {d[0]} <= {d[1]} AND {d[0]} <= {d[2]} "
-            f"AND {d[0]} <= {d[3]} THEN 0 "
-            f"WHEN {d[1]} <= {d[2]} AND {d[1]} <= {d[3]} THEN 1 "
-            f"WHEN {d[2]} <= {d[3]} THEN 2 ELSE 3 END"
-        )
-
-    codes = ", ".join(
-        f"CAST({argmin(m)} AS BIGINT) AS code_{m}" for m in range(_PQ_M)
-    )
-    adc_terms = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        arms = " ".join(
-            f"WHEN {kk} THEN list_dot_product(q.ve[{lo}:{hi}], "
-            + "[" + ", ".join(repr(x) for x in book[m][kk]) + "]::DOUBLE[])"
-            for kk in range(_PQ_K)
-        )
-        adc_terms.append(f"(CASE k.code_{m} {arms} END)")
-    adc = " + ".join(adc_terms)
+    codes = _pq_codes_duck()
+    adc = _pq_adc_duck(book, "k")
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
@@ -1527,35 +1570,24 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN serving expressed ENTIRELY as a Catalyst plan — no
     Python anywhere in the data path: cell assignment, PQ encoding, the
     ADC lookup sum, the shortlist, and the exact re-rank are all
-    built-in HOF/CASE expressions evaluated JVM-side (higher-order
-    functions are CodegenFallback expressions — interpreted, not
-    whole-stage-codegen'd, which is why the Arrow operator wins on raw
-    throughput — but there is no Python worker or Arrow round-trip
-    anywhere). Under the portable configuration (md5 sample order,
-    iters=0 init-point centroids, the X124 dyadic codebook, fold
-    cosine) the ENTIRE approximate result is value-hash-gated against
-    DuckDB.
+    built-in HOF/CASE expressions evaluated JVM-side
+    (operators/similarity.ann_ivfpq_topk — the one IVF-PQ serving plan,
+    shared with IvfIndex.probe_adc). Under the portable configuration
+    (md5 sample order, iters=0 init-point centroids, the X124 dyadic
+    codebook, fold cosine) the ENTIRE approximate result is
+    value-hash-gated against DuckDB.
 
     Shape per stage: corpus cell-assign + PQ-encode is a zero-shuffle
     projection (the 16 centroids inline as literals after a bounded
-    16-row collect — the train-once artifact); probes are a tiny
-    query×centroid window; candidates ride ONE broadcast hash join on
-    cell; the ADC sum is a 4-term CASE over code columns. The only
-    data-sized exchange is the per-query shortlist window — fine at
-    bench scale and for moderate query fan-out; the Arrow batched
-    operator (operators/similarity.ann_ivfpq_topk, X127) is the
-    million-query production form with map-side local top-k, anchored
-    by its brute-force-degeneration pytest. This query is its
-    oracle-gated declarative twin."""
-    from pyspark.sql.window import Window
-
-    from ..functions.vectors import as_double, dot, norm
+    16-row collect — the train-once artifact); probe cells are a
+    projection over the query side with the ADC lookup table hoisted
+    there; candidates ride ONE broadcast hash join on cell; the ADC sum
+    is a 4-term CASE over the codes. The only data-sized exchange is the
+    per-query shortlist window."""
     from ..operators import similarity
 
     cfg = _IVFPQ
-    book = _pq_codebook()
     emb = _t(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", as_double(F.col("embedding")).alias("ve"))
     # iters=0 ⇒ centroids are exactly the FIRST n_centroids of the md5
     # sample ordering, so sample_cap=n_centroids collects 16 rows, not
     # 4096 — bit-identical table, smaller bounded collect
@@ -1566,169 +1598,14 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_cap=cfg["n_centroids"],
         hash_fn="md5",
     )
-    crows = sorted(
-        cents.collect(), key=lambda r: r["centroid_id"]
-    )  # ≤ n_centroids rows by contract — the sanctioned bounded collect
-
-    # corpus side: argmax-cosine cell via a smallest-id-wins comparison
-    # chain over inlined centroid literals — pure projection, no shuffle.
-    # cos = dot(v,c) / (sqrt(dot(v,v)) * sqrt(dot(c,c))): the row norm is
-    # hoisted into ONE column and each centroid norm is a host-computed
-    # literal — the Python sum is the same sequential IEEE fold DuckDB
-    # runs, so the value (and the oracle hash) is unchanged while the
-    # per-row interpreted fold count drops from 48 to 17.
-    import math as _math
-
-    def _host_norm(vec) -> float:
-        acc = 0.0
-        for x in vec:
-            acc = acc + float(x) * float(x)
-        return max(_math.sqrt(acc), 1e-300)
-
-    # zero-norm guard (greatest(norm, 1e-300)) mirrors _COS_SQL: identity
-    # for every real vector, 0.0-not-NULL/NaN for a degenerate all-zero one
-    def _gcos(a: F.Column, b: F.Column) -> F.Column:
-        return dot(a, b) / (
-            F.greatest(norm(a), F.lit(1e-300))
-            * F.greatest(norm(b), F.lit(1e-300))
-        )
-
-    # Expression construction rides as SQL TEXT (one F.expr per output
-    # column) — parses to the same analyzed trees as the per-element
-    # Column builds (bit-identical values/hash) at a fraction of the
-    # driver-side py4j cost; see operators/similarity._cell_structs_sql.
-    vn = v.select(
-        "vec_id",
-        "ve",
-        F.expr(f"greatest({_norm_sql('`ve`')}, {1e-300!r}D)").alias("__nv"),
-    )
-    asg = vn.select(
-        "vec_id",
-        "ve",
-        *[
-            F.expr(
-                f"{_dot_sql('`ve`', _dlit_sql(r['cv']))}"
-                f" / (`__nv` * {_dnum_sql(_host_norm(r['cv']))})"
-            ).alias(f"__c{j}")
-            for j, r in enumerate(crows)
-        ],
-    )
-    n_c = len(crows)
-    arms = []
-    for j in range(n_c - 1):
-        cond = " AND ".join(
-            f"`__c{j}` >= `__c{o}`" for o in range(j + 1, n_c)
-        )
-        # earlier arms already lost their pairwise compares — WHEN order
-        # implements the smaller-centroid-id tie rule
-        arms.append(f"WHEN {cond} THEN {int(crows[j]['centroid_id'])}")
-    cell = F.expr(
-        "CASE " + " ".join(arms)
-        + f" ELSE {int(crows[-1]['centroid_id'])} END"
-    )
-    asg = asg.select("vec_id", "ve", cell.alias("cell"))
-
-    # PQ codes: the X124 expressions (same codebook, same argmin rule)
-    dcols = []
-    for m in range(_PQ_M):
-        s = f"slice(`ve`, {m * _PQ_SUB + 1}, {_PQ_SUB})"
-        self_dot = _dot_sql(s, s)
-        for kk in range(_PQ_K):
-            c = book[m][kk]
-            c2 = sum(x * x for x in c)
-            dcols.append(F.expr(
-                f"{self_dot} - 2 * {_dot_sql(s, _dlit_sql(c))} + {_dnum_sql(c2)}"
-            ).alias(f"__d{m}_{kk}"))
-    asg = asg.select("vec_id", "ve", "cell", *dcols)
-
-    asg = asg.select(
-        "vec_id",
-        "ve",
-        "cell",
-        *[
-            F.expr(_argmin_case_sql("__d", m, _PQ_K)).alias(f"code_{m}")
-            for m in range(_PQ_M)
-        ],
-    )
-
-    # query side: tiny (n_queries × n_centroids) window for probe cells.
-    # The classic ADC lookup table is hoisted HERE: w[m][k] = dot(query
-    # subvector m, codebook[m][k]) — n_queries × M × K scalars computed
-    # once on the tiny side, so the per-candidate interpreted-HOF fold
-    # count after the broadcast join drops from M×K=16 to ZERO (the ADC
-    # sum becomes a CASE over already-computed columns). Same dot over
-    # the same data in the same fold order ⇒ value/hash bit-unchanged.
-    q = v.filter(F.col("vec_id") < cfg["n_queries"]).select(
-        F.col("vec_id").alias("query_id"), F.col("ve").alias("qve")
-    )
-    wcols = []
-    for m in range(_PQ_M):
-        qs = f"slice(`qve`, {m * _PQ_SUB + 1}, {_PQ_SUB})"
-        for kk in range(_PQ_K):
-            wcols.append(
-                F.expr(_dot_sql(qs, _dlit_sql(book[m][kk])))
-                .alias(f"__w{m}_{kk}")
-            )
-    q = q.select("query_id", "qve", *wcols)
-    wnames = [f"__w{m}_{kk}" for m in range(_PQ_M) for kk in range(_PQ_K)]
-    qc = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "qve",
-        *wnames,
-        "centroid_id",
-        _gcos(F.col("qve"), F.col("cv")).alias("__qcos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("__qcos"), F.col("centroid_id")
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= cfg["nprobe"])
-        .select(
-            "query_id", "qve", *wnames, F.col("centroid_id").alias("cell")
-        )
-    )
-
-    # candidates: ONE broadcast hash join on cell; ADC approx is a
-    # 4-term CASE over the code columns against the HOISTED per-query
-    # lookup columns — zero folds per candidate row
-    cand = asg.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    terms = []
-    for m in range(_PQ_M):
-        arms_ = " ".join(
-            f"WHEN `code_{m}` = {kk} THEN `__w{m}_{kk}`"
-            for kk in range(_PQ_K)
-        )
-        terms.append(f"(CASE {arms_} END)")
-    approx = F.expr(" + ".join(terms))
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        "qve",
-        F.col("ve").alias("nve"),
-        approx.alias("__approx"),
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("__approx"), F.col("neighbor_id")
-    )
-    short = (
-        scored.withColumn("__srn", F.row_number().over(ws))
-        .filter(F.col("__srn") <= cfg["shortlist"])
-    )
-    rer = short.select(
-        "query_id",
-        "neighbor_id",
-        _gcos(F.col("qve"), F.col("nve")).alias("cos_sim"),
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rnk") <= cfg["k"])
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
+    return similarity.ann_ivfpq_topk(
+        emb.filter(F.col("vec_id") < cfg["n_queries"]),
+        emb,
+        cents,
+        _pq_codebook(),
+        k=cfg["k"],
+        nprobe=cfg["nprobe"],
+        shortlist=cfg["shortlist"],
     )
 
 
@@ -2040,18 +1917,20 @@ _IVFPQ_IDX_MOD = 5   # base = vec_id % 5 != 0 at build; the rest absorbed
 def sim_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X280 (judge-r8 ask #5): the restart-complete IVF-PQ serving
     index. Before this, IvfIndex persisted centroids + assignments but
-    ann_ivfpq_topk retrained its PQ codebook per run — a restart lost
-    the quantizer. Now the codebook and every vector's PQ codes are
+    not the PQ codebook — a restart lost the quantizer. Now the
+    codebook and every vector's PQ codes are
     index ARTIFACTS with the full build/absorb/save/load contract:
     BUILD on 80% of the corpus (vec_id % {mod} ≠ 0) with the pinned
     dyadic codebook, ABSORB the 20% batch (assignment + PQ encoding
     only, both pure projections under the FROZEN centroid and codebook
     artifacts — no retrain, no touch of existing rows), SAVE to parquet,
     LOAD into a fresh object, and serve ADC top-k from the STORED codes
-    (IvfIndex.probe_adc — candidates via one broadcast hash join on
-    cell, ADC approx a CASE over persisted code arrays against hoisted
-    per-query lookup columns, exact re-rank of the shortlist from the
-    stored vectors). Hash-gated end to end: the oracle derives codes
+    (IvfIndex.probe_adc — ann_ivfpq_topk's ADC plan over the stored
+    assign ⋈ codes: candidates via one broadcast hash join on cell, ADC
+    approx a CASE over persisted code arrays against hoisted per-query
+    lookup columns, exact re-rank of the shortlist from the stored
+    vectors).
+    Hash-gated end to end: the oracle derives codes
     and scores from the synthesis formulas, so the gate proves the
     loaded artifacts ARE the quantizer, not a cache of it. At 100 TB
     the daily delta folds into the index with two zero-shuffle
@@ -2714,7 +2593,7 @@ def vec_prefix_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     # materialize the widened array ONCE: expressions inlined into HOF
-    # lambdas re-evaluate per element (the char_ngrams trap)
+    # lambdas re-evaluate per element
     v = emb.select("vec_id", as_double(F.col("embedding")).alias("ve"))
     n = v.select(
         "vec_id",
@@ -3003,61 +2882,9 @@ def _build_ivfpq_recall_sql() -> str:
     book = _pq_codebook()
     sub_exprs, dist_cols = _pq_sql_cols(book)
     max_np = max(_IVFPQ_RECALL_NPROBES)
-
-    def argmin(m: int) -> str:
-        d = [f"d{m}_{kk}" for kk in range(_PQ_K)]
-        return (
-            f"CASE WHEN {d[0]} <= {d[1]} AND {d[0]} <= {d[2]} "
-            f"AND {d[0]} <= {d[3]} THEN 0 "
-            f"WHEN {d[1]} <= {d[2]} AND {d[1]} <= {d[3]} THEN 1 "
-            f"WHEN {d[2]} <= {d[3]} THEN 2 ELSE 3 END"
-        )
-
-    codes = ", ".join(
-        f"CAST({argmin(m)} AS BIGINT) AS code_{m}" for m in range(_PQ_M)
-    )
-    adc_terms = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        arms = " ".join(
-            f"WHEN {kk} THEN list_dot_product(q.ve[{lo}:{hi}], "
-            + "[" + ", ".join(repr(x) for x in book[m][kk]) + "]::DOUBLE[])"
-            for kk in range(_PQ_K)
-        )
-        adc_terms.append(f"(CASE k.code_{m} {arms} END)")
-    adc = " + ".join(adc_terms)
-    per_np_ctes, per_np_rows = [], []
-    total = cfg["n_queries"] * cfg["k"]
-    for np_ in _IVFPQ_RECALL_NPROBES:
-        per_np_ctes.append(f""", short{np_} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY query_id ORDER BY approx DESC, neighbor_id
-           ) AS srn
-    FROM scored WHERE prn <= {np_}
-  ) WHERE srn <= {cfg["shortlist"]}
-), top{np_} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT s.query_id, s.neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY s.query_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="n.ve")} DESC,
-                      s.neighbor_id
-           ) AS rnk
-    FROM short{np_} s
-    JOIN v q ON q.vec_id = s.query_id
-    JOIN v n ON n.vec_id = s.neighbor_id
-  ) WHERE rnk <= {cfg["k"]}
-)""")
-        per_np_rows.append(f"""SELECT CAST({np_} AS BIGINT) AS nprobe,
-       CAST({cfg["n_queries"]} AS BIGINT) AS n_queries,
-       CAST({cfg["k"]} AS BIGINT) AS k,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM bf
-          JOIN top{np_} USING (query_id, neighbor_id)) AS n_hits,
-       CAST((SELECT COUNT(*) FROM bf
-          JOIN top{np_} USING (query_id, neighbor_id)) AS DOUBLE)
-         / CAST({total} AS DOUBLE) AS recall_at_k""")
+    codes = _pq_codes_duck()
+    adc = _pq_adc_duck(book, "k")
+    per_np_ctes, per_np_rows = _ivfpq_recall_sql_tail()
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
@@ -3118,28 +2945,20 @@ WITH v AS (
 """
 
 
-@query("sim_ann_ivfpq_recall_eval", _build_ivfpq_recall_sql())
-def sim_ann_ivfpq_recall_eval(
-    spark: SparkSession, sf_dir: str
+def _ivfpq_recall(
+    spark: SparkSession, sf_dir: str, residual: bool
 ) -> DataFrame:
-    """X292 (judge-r9 ask #3): measured ADC recall for the IVF-PQ
-    serving path — exact brute-force top-{k} (ground truth) vs
-    probe_adc's final output at nprobe ∈ {nps} of {nc} cells, mean
-    recall from exact hit counts (X233's discipline, stopped one step
-    FURTHER than before: X280 gave probe_adc correctness gates, this
-    row gives it the number a serving fleet actually tunes M/K/nprobe
-    against). One index build; each setting re-probes the STORED codes
-    (shortlist {sl}, exact re-rank), so the sweep prices exactly what
-    production would serve. The CANDIDATE SET is monotone in nprobe by
-    construction, but at a fixed shortlist recall itself is only
-    expected-monotone: a larger probe set can displace a true neighbor
-    from the ADC shortlist with an approx-high-scoring candidate from
-    a newly probed cell, so a mildly non-monotone row is possible
-    without any probe bug (guaranteed monotone only when shortlist ≥
-    candidate count)."""
-    cfg = _IVFPQ
+    """(nprobe, n_queries, k, n_hits, recall_at_k) per setting in
+    _IVFPQ_RECALL_NPROBES: exact brute-force top-k (ground truth) joined
+    to the IVF-PQ ADC top-k served at that nprobe — plain or
+    ``residual`` codes. The corpus is encoded ONCE (the codes are
+    setting-independent) and the ground truth computed once; each
+    setting re-probes both through the one ADC serving plan
+    (operators/similarity._ivfpq_adc_topk, the plan ann_ivfpq_topk and
+    IvfIndex.probe_adc run)."""
     from ..operators import similarity
 
+    cfg = _IVFPQ
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < cfg["n_queries"])
     cents = similarity.ivf_centroids(
@@ -3149,20 +2968,21 @@ def sim_ann_ivfpq_recall_eval(
         sample_cap=cfg["n_centroids"],
         hash_fn="md5",
     )
-    # one in-memory index probed once per sweep arm: persist the lazy
-    # assign/codes artifacts and the shared ground truth so each is
-    # computed once across the union'd arms, not once per arm
-    idx = similarity.IvfIndex.build(
-        emb, centroids=cents, codebook=_pq_codebook()
-    ).persisted()
+    crows = sorted(cents.collect(), key=lambda r: r["centroid_id"])
+    book = _pq_codebook()
+    # persisted/cached: computed once across the union'd arms, not per arm
     bf = similarity.cosine_topk(q, emb, k=cfg["k"]).select(
         "query_id", "neighbor_id"
     ).persist()
+    enc = similarity.ivfpq_encode(
+        emb, crows, book, residual=residual
+    ).cache()
     total = cfg["n_queries"] * cfg["k"]
     out = None
     for np_ in _IVFPQ_RECALL_NPROBES:
-        adc = idx.probe_adc(
-            q, k=cfg["k"], nprobe=np_, shortlist=cfg["shortlist"]
+        adc = similarity._ivfpq_adc_topk(
+            q, enc, crows, book, residual, "vec_id", "embedding",
+            cfg["k"], np_, cfg["shortlist"],
         ).select("query_id", "neighbor_id")
         row = (
             bf.join(adc, ["query_id", "neighbor_id"])
@@ -3180,6 +3000,28 @@ def sim_ann_ivfpq_recall_eval(
         )
         out = row if out is None else out.unionByName(row)
     return out
+
+
+@query("sim_ann_ivfpq_recall_eval", _build_ivfpq_recall_sql())
+def sim_ann_ivfpq_recall_eval(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """X292: measured ADC recall for the IVF-PQ
+    serving path — exact brute-force top-{k} (ground truth) vs the ADC
+    plan's final output (the one ann_ivfpq_topk and probe_adc share) at
+    nprobe ∈ {nps} of {nc} cells, mean recall from exact hit counts
+    (X233's discipline: X280 gave probe_adc correctness gates, this
+    row gives it the number a serving fleet actually tunes M/K/nprobe
+    against). One encode; each setting re-probes the same codes
+    (shortlist {sl}, exact re-rank), so the sweep prices exactly what
+    production would serve. The CANDIDATE SET is monotone in nprobe by
+    construction, but at a fixed shortlist recall itself is only
+    expected-monotone: a larger probe set can displace a true neighbor
+    from the ADC shortlist with an approx-high-scoring candidate from
+    a newly probed cell, so a mildly non-monotone row is possible
+    without any probe bug (guaranteed monotone only when shortlist ≥
+    candidate count)."""
+    return _ivfpq_recall(spark, sf_dir, residual=False)
 
 
 sim_ann_ivfpq_recall_eval.__doc__ = sim_ann_ivfpq_recall_eval.__doc__.format(
@@ -3270,7 +3112,7 @@ def s16_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_ivfpq_residual_sql(base_where: str = "") -> str:
-    """DuckDB twin of ann_ivfpq_residual_topk: cents/asg/probes are
+    """DuckDB twin of ann_ivfpq_topk(residual=True): cents/asg/probes are
     _build_ivfpq_sql's; residual code selection uses the expanded-L2
     tree (dot(s,s) − 2·dot(s,cs) + dot(cs,cs)) − 2·(dot(s,cw) −
     dot(cs,cw)) + |cw|² with the assigned cell's centroid slices joined
@@ -3281,47 +3123,9 @@ def _build_ivfpq_residual_sql(base_where: str = "") -> str:
     cfg = _IVFPQ
     book = _pq_codebook()
     sub_exprs, _ = _pq_sql_cols(book)
-    cs_exprs = [
-        f"cv[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS cs{m}"
-        for m in range(_PQ_M)
-    ]
-    rdist_cols = []
-    for m in range(_PQ_M):
-        for kk in range(_PQ_K):
-            c = book[m][kk]
-            lits = "[" + ", ".join(repr(x) for x in c) + "]::DOUBLE[]"
-            c2_num = round(sum(x * x for x in c) * (1 << 26))
-            rdist_cols.append(
-                f"(list_dot_product(s{m}, s{m}) - 2 * "
-                f"list_dot_product(s{m}, cs{m}) + "
-                f"list_dot_product(cs{m}, cs{m})) - 2 * "
-                f"(list_dot_product(s{m}, {lits}) - "
-                f"list_dot_product(cs{m}, {lits})) "
-                f"+ (CAST({c2_num} AS DOUBLE) / 67108864.0) AS d{m}_{kk}"
-            )
-
-    def argmin(m: int) -> str:
-        d = [f"d{m}_{kk}" for kk in range(_PQ_K)]
-        return (
-            f"CASE WHEN {d[0]} <= {d[1]} AND {d[0]} <= {d[2]} "
-            f"AND {d[0]} <= {d[3]} THEN 0 "
-            f"WHEN {d[1]} <= {d[2]} AND {d[1]} <= {d[3]} THEN 1 "
-            f"WHEN {d[2]} <= {d[3]} THEN 2 ELSE 3 END"
-        )
-
-    codes = ", ".join(
-        f"CAST({argmin(m)} AS BIGINT) AS code_{m}" for m in range(_PQ_M)
-    )
-    adc_terms = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        arms = " ".join(
-            f"WHEN {kk} THEN list_dot_product(q.ve[{lo}:{hi}], "
-            + "[" + ", ".join(repr(x) for x in book[m][kk]) + "]::DOUBLE[])"
-            for kk in range(_PQ_K)
-        )
-        adc_terms.append(f"(CASE r.code_{m} {arms} END)")
-    adc = " + ".join(adc_terms)
+    cs_exprs, rdist_cols = _pq_residual_sql_cols(book)
+    codes = _pq_codes_duck()
+    adc = _pq_adc_duck(book, "r")
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
@@ -3408,9 +3212,8 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the ADC chain are token-identical left-associated IEEE
     expressions in both engines. nprobe == n_centroids degeneration ≡
     brute force is pytest-pinned, the residual codes differ from
-    plain-v codes by construction (tested), and X292's recall harness
-    shape applies unchanged if a fleet wants the residual-vs-plain
-    recall delta measured per config."""
+    plain-v codes by construction (tested), and X297 measures the
+    residual-vs-plain recall delta per nprobe."""
     cfg = _IVFPQ
     from ..operators import similarity
 
@@ -3422,11 +3225,12 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_cap=cfg["n_centroids"],
         hash_fn="md5",
     )
-    return similarity.ann_ivfpq_residual_topk(
+    return similarity.ann_ivfpq_topk(
         emb.filter(F.col("vec_id") < cfg["n_queries"]),
         emb,
         cents,
         _pq_codebook(),
+        residual=True,
         k=cfg["k"],
         nprobe=cfg["nprobe"],
         shortlist=cfg["shortlist"],
@@ -3445,79 +3249,10 @@ def _build_ivfpq_residual_recall_sql() -> str:
     book = _pq_codebook()
     sub_exprs, _ = _pq_sql_cols(book)
     max_np = max(_IVFPQ_RECALL_NPROBES)
-    cs_exprs = [
-        f"cv[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS cs{m}"
-        for m in range(_PQ_M)
-    ]
-    rdist_cols = []
-    for m in range(_PQ_M):
-        for kk in range(_PQ_K):
-            c = book[m][kk]
-            lits = "[" + ", ".join(repr(x) for x in c) + "]::DOUBLE[]"
-            c2_num = round(sum(x * x for x in c) * (1 << 26))
-            rdist_cols.append(
-                f"(list_dot_product(s{m}, s{m}) - 2 * "
-                f"list_dot_product(s{m}, cs{m}) + "
-                f"list_dot_product(cs{m}, cs{m})) - 2 * "
-                f"(list_dot_product(s{m}, {lits}) - "
-                f"list_dot_product(cs{m}, {lits})) "
-                f"+ (CAST({c2_num} AS DOUBLE) / 67108864.0) AS d{m}_{kk}"
-            )
-
-    def argmin(m: int) -> str:
-        d = [f"d{m}_{kk}" for kk in range(_PQ_K)]
-        return (
-            f"CASE WHEN {d[0]} <= {d[1]} AND {d[0]} <= {d[2]} "
-            f"AND {d[0]} <= {d[3]} THEN 0 "
-            f"WHEN {d[1]} <= {d[2]} AND {d[1]} <= {d[3]} THEN 1 "
-            f"WHEN {d[2]} <= {d[3]} THEN 2 ELSE 3 END"
-        )
-
-    codes = ", ".join(
-        f"CAST({argmin(m)} AS BIGINT) AS code_{m}" for m in range(_PQ_M)
-    )
-    adc_terms = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        arms = " ".join(
-            f"WHEN {kk} THEN list_dot_product(q.ve[{lo}:{hi}], "
-            + "[" + ", ".join(repr(x) for x in book[m][kk]) + "]::DOUBLE[])"
-            for kk in range(_PQ_K)
-        )
-        adc_terms.append(f"(CASE r.code_{m} {arms} END)")
-    adc = " + ".join(adc_terms)
-    per_np_ctes, per_np_rows = [], []
-    total = cfg["n_queries"] * cfg["k"]
-    for np_ in _IVFPQ_RECALL_NPROBES:
-        per_np_ctes.append(f""", short{np_} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY query_id ORDER BY approx DESC, neighbor_id
-           ) AS srn
-    FROM scored WHERE prn <= {np_}
-  ) WHERE srn <= {cfg["shortlist"]}
-), top{np_} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT s.query_id, s.neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY s.query_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="n.ve")} DESC,
-                      s.neighbor_id
-           ) AS rnk
-    FROM short{np_} s
-    JOIN v q ON q.vec_id = s.query_id
-    JOIN v n ON n.vec_id = s.neighbor_id
-  ) WHERE rnk <= {cfg["k"]}
-)""")
-        per_np_rows.append(f"""SELECT CAST({np_} AS BIGINT) AS nprobe,
-       CAST({cfg["n_queries"]} AS BIGINT) AS n_queries,
-       CAST({cfg["k"]} AS BIGINT) AS k,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM bf
-          JOIN top{np_} USING (query_id, neighbor_id)) AS n_hits,
-       CAST((SELECT COUNT(*) FROM bf
-          JOIN top{np_} USING (query_id, neighbor_id)) AS DOUBLE)
-         / CAST({total} AS DOUBLE) AS recall_at_k""")
+    cs_exprs, rdist_cols = _pq_residual_sql_cols(book)
+    codes = _pq_codes_duck()
+    adc = _pq_adc_duck(book, "r")
+    per_np_ctes, per_np_rows = _ivfpq_recall_sql_tail()
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
@@ -3593,52 +3328,7 @@ def sim_ann_ivfpq_residual_recall(
     the extra encode arithmetic for a given corpus. Same ground truth,
     same shortlist and exact re-rank; only the code selection and the
     ADC cell term differ."""
-    cfg = _IVFPQ
-    from ..operators import similarity
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < cfg["n_queries"])
-    cents = similarity.ivf_centroids(
-        emb,
-        n_centroids=cfg["n_centroids"],
-        iters=0,
-        sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
-    )
-    # shared ground truth: one brute-force pass, not one per nprobe arm
-    # (head-to-head 3-rep: 12.7 s with persist vs 13.6 s without)
-    bf = similarity.cosine_topk(q, emb, k=cfg["k"]).select(
-        "query_id", "neighbor_id"
-    ).persist()
-    total = cfg["n_queries"] * cfg["k"]
-    book = _pq_codebook()
-    crows = sorted(cents.collect(), key=lambda r: r["centroid_id"])
-    # encode the corpus ONCE across the sweep (the codes are setting-
-    # independent); each nprobe setting re-probes the cached relation
-    enc = similarity.ivfpq_residual_encode(emb, crows, book).cache()
-    out = None
-    for np_ in _IVFPQ_RECALL_NPROBES:
-        adc = similarity.ann_ivfpq_residual_topk(
-            q, emb, cents, book,
-            k=cfg["k"], nprobe=np_, shortlist=cfg["shortlist"],
-            encoded=enc,
-        ).select("query_id", "neighbor_id")
-        row = (
-            bf.join(adc, ["query_id", "neighbor_id"])
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-            .select(
-                F.lit(np_).cast("long").alias("nprobe"),
-                F.lit(cfg["n_queries"]).cast("long").alias("n_queries"),
-                F.lit(cfg["k"]).cast("long").alias("k"),
-                "n_hits",
-                (
-                    F.col("n_hits").cast("double")
-                    / F.lit(total).cast("double")
-                ).alias("recall_at_k"),
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    return _ivfpq_recall(spark, sf_dir, residual=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3732,29 +3422,8 @@ def _build_retrain_swap_sql() -> str:
     cfg = _IVFPQ
     book = _pq_codebook()
     sub_exprs, dist_cols = _pq_sql_cols(book)
-
-    def argmin(m: int) -> str:
-        d = [f"d{m}_{kk}" for kk in range(_PQ_K)]
-        return (
-            f"CASE WHEN {d[0]} <= {d[1]} AND {d[0]} <= {d[2]} "
-            f"AND {d[0]} <= {d[3]} THEN 0 "
-            f"WHEN {d[1]} <= {d[2]} AND {d[1]} <= {d[3]} THEN 1 "
-            f"WHEN {d[2]} <= {d[3]} THEN 2 ELSE 3 END"
-        )
-
-    codes = ", ".join(
-        f"CAST({argmin(m)} AS BIGINT) AS code_{m}" for m in range(_PQ_M)
-    )
-    adc_terms = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        arms = " ".join(
-            f"WHEN {kk} THEN list_dot_product(q.ve[{lo}:{hi}], "
-            + "[" + ", ".join(repr(x) for x in book[m][kk]) + "]::DOUBLE[])"
-            for kk in range(_PQ_K)
-        )
-        adc_terms.append(f"(CASE k.code_{m} {arms} END)")
-    adc = " + ".join(adc_terms)
+    codes = _pq_codes_duck()
+    adc = _pq_adc_duck(book, "k")
 
     def phase(tag: str, seq: int, cents_where: str) -> str:
         return f"""cents_{tag} AS (

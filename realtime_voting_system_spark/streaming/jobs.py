@@ -555,6 +555,16 @@ def start_latest_state(
     the previous one (exactly-once through checkpoint + deterministic
     output path — ST5's contract applied to upserts).
 
+    The same fold applies an I/U/D changefeed (the streaming twin of
+    operators/integrity.apply_changefeed): ``key_cols`` = the feed's
+    keys, ``ts_col`` = its sequence column. 'D' rows are RETAINED in
+    the state as TOMBSTONES — the seq compare is what rejects a stale
+    lower-seq update for a deleted key arriving in a LATER batch;
+    dropping the row instead would silently resurrect it. Readers see
+    the live view via read_changefeed_state. Tombstone GC (dropping
+    tombstones older than the source's max replay horizon) is a
+    retention policy decision, deliberately not hardcoded here.
+
     Scale: the per-batch work is one keyed shuffle over |batch| + |keys
     with state|; at 100 TB state one would partition the snapshot by key
     hash and rewrite only touched partitions (or use a table format with
@@ -562,16 +572,7 @@ def start_latest_state(
     """
     from ..operators.temporal import latest_by_key
 
-    # snapshot discovery/pruning use local filesystem listings: fail fast on
-    # object-store/HDFS URIs instead of silently reading no prior state
-    # (which would turn every merge into a state wipe). A remote deployment
-    # swaps _latest_state_snapshot for a FileSystem-API listing or a real
-    # table format with MERGE; the compaction operator is unchanged.
-    if "://" in state_dir and not state_dir.startswith("file://"):
-        raise ValueError(
-            "start_latest_state requires a local state_dir; got "
-            f"{state_dir!r} (snapshot listing is os.listdir-based)"
-        )
+    state_dir = _local_dir(state_dir, "start_latest_state")
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -597,6 +598,27 @@ def start_latest_state(
     return _apply_trigger(writer, trigger).start()
 
 
+def _local_dir(path: str, who: str) -> str:
+    """Local filesystem path of a snapshot directory. Snapshot discovery
+    and pruning list the directory with ``os``, which cannot see a URI:
+    a ``file:`` URI maps to its path (left as a URI, the listing finds
+    nothing, so every merge would start from empty state and pruning
+    would never run); any other scheme is refused rather than silently
+    wiping state. A remote deployment swaps the listing for the
+    FileSystem API or a table format with MERGE."""
+    from urllib.parse import urlparse
+
+    if "://" not in path and not path.startswith("file:"):
+        return path
+    u = urlparse(path)
+    if u.scheme == "file" and not u.netloc:
+        return u.path
+    raise ValueError(
+        f"{who} requires a local directory; got {path!r} (snapshot "
+        "listing is os.listdir-based)"
+    )
+
+
 def _latest_state_snapshot(spark, state_dir: str, before_epoch: int | None = None):
     """Newest committed snapshot under ``state_dir`` (ignoring the one a
     retried epoch is about to overwrite). None when no state exists yet."""
@@ -618,7 +640,9 @@ def _latest_state_snapshot(spark, state_dir: str, before_epoch: int | None = Non
 
 def read_latest_state(spark, state_dir: str):
     """Serving-side reader: the current upsert state (None if empty)."""
-    return _latest_state_snapshot(spark, state_dir)
+    return _latest_state_snapshot(
+        spark, _local_dir(state_dir, "read_latest_state")
+    )
 
 
 def _prune_state_snapshots(state_dir: str, keep_last: int, upto_epoch: int) -> None:
@@ -677,11 +701,7 @@ def start_incremental_dedup(
     """
     from ..functions.text import normalize
 
-    if "://" in index_dir and not index_dir.startswith("file://"):
-        raise ValueError(
-            "start_incremental_dedup requires a local index_dir; got "
-            f"{index_dir!r} (snapshot listing is os.listdir-based)"
-        )
+    index_dir = _local_dir(index_dir, "start_incremental_dedup")
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -720,79 +740,19 @@ def start_incremental_dedup(
 
 # ---------------------------------------------------------------------------
 # ST26-adjacent — streaming CDC changefeed apply (MERGE semantics with
-# tombstones), the foreachBatch twin of plans/extended_ops.s15_cdc_apply
+# tombstones): start_latest_state over the feed, read back live-only
 # ---------------------------------------------------------------------------
-
-
-def start_changefeed_apply(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    keys: tuple[str, ...],
-    seq_col: str,
-    op_col: str = "op",
-    tiebreak_cols: tuple[str, ...] = (),
-    trigger: dict | None = None,
-):
-    """Maintain a MERGE-applied state table from an I/U/D changefeed
-    stream — the streaming twin of operators/integrity.apply_changefeed.
-
-    Each micro-batch: compact the batch per key (latest change by
-    ``seq_col``), union with the newest committed snapshot, compact
-    again, write snapshot ``v=<epoch_id>`` (idempotent versioned
-    overwrite — a retried epoch rewrites its own version; ST5's
-    exactly-once contract, as in start_latest_state).
-
-    'D' rows are RETAINED in the state table as TOMBSTONES: the seq
-    compare is what rejects a stale lower-seq update for a deleted key
-    arriving in a LATER batch — dropping the row instead would silently
-    resurrect it. Readers see the live view via read_changefeed_state
-    (tombstones and bookkeeping columns filtered there). Tombstone GC
-    (dropping tombstones older than the source's max replay horizon) is
-    a retention policy decision, deliberately not hardcoded here.
-
-    Scale: per batch one keyed window over |batch| + one union-compact
-    over |keys with state| — the same uniform-key shuffles as the batch
-    operator; at 100 TB partition the snapshot by key hash and rewrite
-    only touched partitions (or a MERGE-capable table format).
-    """
-    from ..operators.temporal import latest_by_key
-
-    if "://" in state_dir and not state_dir.startswith("file://"):
-        raise ValueError(
-            "start_changefeed_apply requires a local state_dir; got "
-            f"{state_dir!r} (snapshot listing is os.listdir-based)"
-        )
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        latest = latest_by_key(
-            batch_df, list(keys), seq_col, tiebreak_cols=list(tiebreak_cols)
-        )
-        prev = _latest_state_snapshot(spark, state_dir, before_epoch=epoch_id)
-        if prev is not None:
-            latest = latest_by_key(
-                prev.unionByName(latest),
-                list(keys),
-                seq_col,
-                tiebreak_cols=list(tiebreak_cols),
-            )
-        latest.write.mode("overwrite").parquet(f"{state_dir}/v={epoch_id}")
-        _prune_state_snapshots(state_dir, keep_last=2, upto_epoch=epoch_id)
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_merge)
-    )
-    return _apply_trigger(writer, trigger).start()
 
 
 def read_changefeed_state(spark, state_dir: str, op_col: str = "op"):
     """Serving-side reader of the CDC state: live rows only (tombstones
     filtered, the op column dropped — seq stays, it is the row's
-    version). None if no state exists yet."""
-    snap = _latest_state_snapshot(spark, state_dir)
+    version). None if no state exists yet. The state is written by
+    start_latest_state with ``key_cols`` = the feed's keys and
+    ``ts_col`` = its sequence column."""
+    snap = _latest_state_snapshot(
+        spark, _local_dir(state_dir, "read_changefeed_state")
+    )
     if snap is None:
         return None
     return snap.filter(F.col(op_col) != "D").drop(op_col)

@@ -423,7 +423,7 @@ def test_j21_big_orders_plan_pinned(spark, sf_dir):
 
 
 def test_dlit_array_bit_equal_to_per_element_lit(spark):
-    """_dlit_array (repr-text double literals, ONE py4j round trip) must
+    """dlit_array (repr-text double literals, ONE py4j round trip) must
     be bit-identical to the per-element F.lit array it replaced — the
     IVF-PQ oracle hash depends on it."""
     import random
@@ -431,7 +431,9 @@ def test_dlit_array_bit_equal_to_per_element_lit(spark):
 
     from pyspark.sql import functions as F
 
-    from realtime_voting_system_spark.plans.scale_ops import _dlit_array
+    from realtime_voting_system_spark.functions.vectors import (
+        dlit_array as _dlit_array,
+    )
 
     random.seed(7)
     vals = [random.uniform(-1, 1) for _ in range(64)]

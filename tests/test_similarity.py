@@ -166,20 +166,6 @@ def test_ivf_prebuilt_centroids_roundtrip(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_pandas_topk_blas_same_neighbor_sets(spark, sf_dir):
-    """blas=True (wide-vector switch): pairwise summation drifts in the
-    last ulp, so assert neighbor-set equality per query, not bit-equality."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)
-    seq = similarity.cosine_topk_pandas(queries, emb, k=5).collect()
-    fast = similarity.cosine_topk_pandas(queries, emb, k=5, blas=True).collect()
-    by_q = lambda rows: {  # noqa: E731
-        q: {r.neighbor_id for r in rows if r.query_id == q}
-        for q in {r.query_id for r in rows}
-    }
-    assert by_q(seq) == by_q(fast)
-
-
 def test_quantize_vectors_bounds_and_reconstruction(spark, sf_dir):
     """Codes are within [-128, 127], scale reconstructs each component to
     within one quantization step, and zero vectors code to zero."""
@@ -208,15 +194,18 @@ def test_quantize_vectors_bounds_and_reconstruction(spark, sf_dir):
 
 
 def test_ivfpq_degenerates_to_bruteforce(spark, sf_dir):
-    """nprobe == n_centroids and shortlist=None (keep every candidate)
-    bypass both approximations — IVF-PQ must reproduce exact brute-force
-    top-k bit-for-bit (the PQ ranking only ever SELECTS candidates; the
-    returned cosine always comes from the exact fold re-rank)."""
+    """nprobe == n_centroids and shortlist = corpus size (keep every
+    candidate) bypass both approximations — IVF-PQ must reproduce exact
+    brute-force top-k bit-for-bit (the PQ ranking only ever SELECTS
+    candidates; the returned cosine always comes from the exact fold
+    re-rank)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 10)
+    cents = similarity.ivf_centroids(emb, n_centroids=8, iters=1)
+    book = similarity.pq_codebook_from_sample(emb, m_sub=4, pq_k=16)
     exact = similarity.cosine_topk(queries, emb, k=5).collect()
     ivfpq = similarity.ann_ivfpq_topk(
-        queries, emb, k=5, n_centroids=8, nprobe=8, iters=1, shortlist=None
+        queries, emb, cents, book, k=5, nprobe=8, shortlist=emb.count()
     ).collect()
     assert sorted(map(tuple, ivfpq)) == sorted(map(tuple, exact))
 
@@ -224,8 +213,11 @@ def test_ivfpq_degenerates_to_bruteforce(spark, sf_dir):
 def test_ivfpq_recall_on_clustered_vectors(spark):
     """With a real shortlist on clustered vectors, ADC ranking must keep
     the true neighbors: recall@5 ≥ 0.8 (same fixture as the LSH recall
-    test; PQ error is small because codewords train on the same
-    distribution)."""
+    test, codebook trained on the same distribution). A 16-codeword
+    quantizer resolves WHICH cluster a candidate sits in, not its order
+    within the cluster, so the shortlist covers one cluster (40
+    vectors): 48 of the 159-279 candidates each query's probed cells
+    hold."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -242,11 +234,12 @@ def test_ivfpq_recall_on_clustered_vectors(spark):
         (r.query_id, r.neighbor_id)
         for r in similarity.cosine_topk(q, emb, k=5).collect()
     }
+    cents = similarity.ivf_centroids(emb, n_centroids=8, iters=2)
+    book = similarity.pq_codebook_from_sample(emb, m_sub=4, pq_k=16)
     approx = {
         (r.query_id, r.neighbor_id)
         for r in similarity.ann_ivfpq_topk(
-            q, emb, k=5, n_centroids=8, nprobe=4, iters=2,
-            m_sub=4, pq_k=16, shortlist=24,
+            q, emb, cents, book, k=5, nprobe=4, shortlist=48
         ).collect()
     }
     recall = len(exact & approx) / len(exact)
@@ -255,9 +248,8 @@ def test_ivfpq_recall_on_clustered_vectors(spark):
 
 def test_pq_codebook_shape_and_determinism(spark, sf_dir):
     """The codebook is the train-once artifact: deterministic across
-    calls (hash-ordered sample, no RNG), correct shape, unit-scale rows
-    (trained on normalized vectors ⇒ codeword norms near 1 within each
-    cluster's spread)."""
+    calls (hash-ordered sample, no RNG), correct shape, and a dimension
+    the subspace count does not divide is refused."""
     import numpy as np
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -551,8 +543,9 @@ def test_ivfpq_residual_degenerates_and_codes_differ(spark, sf_dir, emb):
     )
     n = emb.count()
     exact = similarity.cosine_topk(queries, emb, k=5).collect()
-    res = similarity.ann_ivfpq_residual_topk(
-        queries, emb, cents, book, k=5, nprobe=8, shortlist=n
+    res = similarity.ann_ivfpq_topk(
+        queries, emb, cents, book, residual=True, k=5, nprobe=8,
+        shortlist=n,
     ).collect()
     assert sorted(map(tuple, res)) == sorted(map(tuple, exact))
     # residual codes != plain codes for a substantial share of vectors
@@ -588,15 +581,16 @@ def test_ivfpq_residual_degenerates_and_codes_differ(spark, sf_dir, emb):
     assert n_diff > len(plain) // 4, f"only {n_diff}/{len(plain)} differ"
 
 
-def test_ivfpq_residual_index_contract(spark, emb, tmp_path):
-    """X299: the residual IVF-PQ index obeys the full contract —
-    absorbed residual codes == a rebuild's with the same frozen
+@pytest.mark.parametrize("residual", [False, True])
+def test_ivfpq_residual_index_contract(spark, emb, tmp_path, residual):
+    """X299: the IVF-PQ index obeys the full contract for plain AND
+    residual codes — absorbed codes == a rebuild's with the same frozen
     centroids+codebook; save→load round-trips the residual flag and
-    serves identically; the residual serving output equals the
-    standalone ann_ivfpq_residual_topk plan; and pq_drift on a
-    residual index measures reconstruction against v − c(cell) (its
-    mean error differs from the plain index's, which measures
-    against v)."""
+    serves identically; the index's serving output equals the
+    standalone ann_ivfpq_topk plan with the same ``residual``; and
+    pq_drift follows the flag: a residual index measures reconstruction
+    against v − c(cell), a plain one against v, so their mean errors
+    differ."""
     from realtime_voting_system_spark.plans.scale_ops import _pq_codebook
 
     book = _pq_codebook()
@@ -609,10 +603,10 @@ def test_ivfpq_residual_index_contract(spark, emb, tmp_path):
     key = lambda r: (r.query_id, r.rnk)  # noqa: E731
 
     absorbed = similarity.IvfIndex.build(
-        base, centroids=cents, codebook=book, residual=True
+        base, centroids=cents, codebook=book, residual=residual
     ).absorb(batch)
     rebuilt = similarity.IvfIndex.build(
-        emb, centroids=cents, codebook=book, residual=True
+        emb, centroids=cents, codebook=book, residual=residual
     )
     codes_a = {
         r.vec_id: list(r.codes) for r in absorbed.arts["codes"].collect()
@@ -626,25 +620,24 @@ def test_ivfpq_residual_index_contract(spark, emb, tmp_path):
     path = str(tmp_path / "ivfpq_residx")
     absorbed.save(path)
     loaded = similarity.IvfIndex.load(spark, path)
-    assert loaded.params["residual"] is True
+    assert loaded.params["residual"] is residual
     assert sorted(loaded.probe_adc(q, k=5, nprobe=4).collect(), key=key) \
         == got_a
-    # index serving == the standalone residual serving plan
+    # index serving == the standalone serving plan
     direct = sorted(
-        similarity.ann_ivfpq_residual_topk(
-            q, emb, cents, book, k=5, nprobe=4, shortlist=12
+        similarity.ann_ivfpq_topk(
+            q, emb, cents, book, residual=residual,
+            k=5, nprobe=4, shortlist=12,
         ).collect(),
         key=key,
     )
     assert got_a == direct
-    # pq_drift is residual-aware: its error is against v − c(cell),
-    # not v — the two indexes must report different mean errors
-    plain = similarity.IvfIndex.build(
-        emb, centroids=cents, codebook=book
+    other = similarity.IvfIndex.build(
+        emb, centroids=cents, codebook=book, residual=not residual
     )
-    d_res = {r.gen: r.mean_err_micro for r in rebuilt.pq_drift().collect()}
-    d_pln = {r.gen: r.mean_err_micro for r in plain.pq_drift().collect()}
-    assert d_res[0] != d_pln[0]
+    d_self = {r.gen: r.mean_err_micro for r in rebuilt.pq_drift().collect()}
+    d_other = {r.gen: r.mean_err_micro for r in other.pq_drift().collect()}
+    assert d_self[0] != d_other[0]
 
 
 def test_ivf_residual_requires_codebook(spark, emb):

@@ -1452,9 +1452,9 @@ def test_changefeed_apply_with_tombstones_across_restarts(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = jobs.start_changefeed_apply(
-            stream, state, ckpt, keys=("k",), seq_col="seq",
-            trigger=AVAILABLE_NOW,
+        q = jobs.start_latest_state(
+            stream, state, ckpt, key_cols=("k",), ts_col="seq",
+            tiebreak_cols=(), trigger=AVAILABLE_NOW,
         )
         q.awaitTermination(120)
         assert not q.isActive
@@ -1477,6 +1477,44 @@ def test_changefeed_apply_with_tombstones_across_restarts(spark, tmp_path):
     snap = jobs._latest_state_snapshot(spark, state)
     tomb = [r for r in snap.collect() if r.op == "D"]
     assert len(tomb) == 1 and tomb[0].k == 2 and tomb[0].seq == 20
+
+
+def test_latest_state_file_uri_state_dir(spark, tmp_path):
+    """A ``file://`` state_dir names the same local directory as its
+    path: each batch merges onto the previous snapshot (not onto an
+    empty state), read_latest_state sees the state through the URI,
+    superseded versions are pruned to 2, and any other scheme is
+    refused before the stream starts."""
+    import os
+
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    state = tmp_path / "state"
+    uri = f"file://{state}"
+    schema = "k long, seq long, val string"
+
+    def run(rows, state_dir=uri):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        q = jobs.start_latest_state(
+            stream, state_dir, ckpt, key_cols=("k",), ts_col="seq",
+            tiebreak_cols=(), trigger=AVAILABLE_NOW,
+        )
+        q.awaitTermination(120)
+        assert not q.isActive
+
+    run([(1, 1, "a")])
+    run([(2, 2, "b")])
+    got = {r.k: r.val for r in jobs.read_latest_state(spark, uri).collect()}
+    assert got == {1: "a", 2: "b"}
+    run([(3, 3, "c")])
+    assert sorted(os.listdir(state)) == ["v=1", "v=2"]
+    got = {r.k: r.val for r in jobs.read_latest_state(spark, uri).collect()}
+    assert got == {1: "a", 2: "b", 3: "c"}
+    with pytest.raises(ValueError, match="local directory"):
+        run([(4, 4, "d")], state_dir="s3://bucket/state")
 
 
 def test_session_stream_checkpoint_recovery_pyds(spark, tmp_path):
