@@ -1328,8 +1328,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     n_centroids: int = 16,
-    assign: str = "matmul",
-    hash_fn: str = "xxhash64",
     iters: int = 2,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
@@ -1340,8 +1338,8 @@ def semantic_dedup(
     Returns (id, cell, keep): ``keep`` is false iff a smaller-id same-cell
     near-duplicate exists — the keep-lowest rule, engine-independent.
 
-    Scale: the published algorithm's own shape — assignment is one Arrow
-    pass over the corpus (similarity.assign_cells, no vector shuffle);
+    Scale: the published algorithm's own shape — assignment is one
+    zero-shuffle projection over the corpus (similarity.assign_cells);
     the quadratic pair step is confined within each cell, so cell size is
     the knob (pick n_centroids ~ n/target_cell_size; SemDeDup runs 50k
     clusters at 5B scale). Candidate pairs are a self-join on cell id of
@@ -1356,10 +1354,9 @@ def semantic_dedup(
 
     if centroids is None:
         centroids = ivf_centroids(
-            df, id_col, vec_col,
-            n_centroids=n_centroids, iters=iters, hash_fn=hash_fn,
+            df, id_col, vec_col, n_centroids=n_centroids, iters=iters
         )
-    cells = assign_cells(df, centroids, id_col, vec_col, assign).cache()
+    cells = assign_cells(df, centroids, id_col, vec_col).cache()
     a, b = cells.alias("a"), cells.alias("b")
     cands = a.join(
         b,
@@ -1398,7 +1395,6 @@ def incremental_semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    assign: str = "matmul",
 ) -> DataFrame:
     """Embedding-space sibling of ``incremental_dedup`` /
     ``incremental_minhash_dedup`` — the incremental SemDeDup shape: an
@@ -1407,7 +1403,7 @@ def incremental_semantic_dedup(
     table) instead of re-clustering the whole corpus per crawl.
 
     Per batch vector: assign its cell with the SAME centroids the corpus
-    was indexed with (one Arrow pass, no shuffle), equi-join the corpus
+    was indexed with (one zero-shuffle projection), equi-join the corpus
     assignments on cell, cosine-verify candidates (sequential fold —
     bit-portable), then ``dup_of`` = smallest corpus id with cos ≥
     threshold (NULL if none), ``status`` = near_dup / kept.
@@ -1422,7 +1418,7 @@ def incremental_semantic_dedup(
     from ..functions.vectors import as_double, seq_cosine_pandas
     from .similarity import assign_cells
 
-    bc = assign_cells(new_df, centroids, id_col, vec_col, assign).select(
+    bc = assign_cells(new_df, centroids, id_col, vec_col).select(
         F.col(id_col).alias("__bid"), "cell"
     )
     ec = corpus_assign.select(F.col(id_col).alias("__eid"), "cell")
@@ -1809,13 +1805,13 @@ class DedupIndex:
         """Build the index artifacts from an initial corpus. Params are
         the matching operator's (id_col/text_col/n/num_hashes/bands/
         threshold/hash_fn for text kinds; id_col/vec_col/n_centroids/
-        threshold/assign/iters for semantic)."""
+        threshold/iters for semantic). A key outside the defaults below
+        raises ValueError instead of being stored and ignored."""
         p = {
             "id_col": "doc_id" if kind != "semantic" else "vec_id",
             "text_col": "text", "vec_col": "embedding",
             "n": 3, "num_hashes": 64, "bands": 16, "threshold": 0.5,
-            "hash_fn": "md5", "n_centroids": 16, "assign": "matmul",
-            "iters": 2,
+            "hash_fn": "md5", "n_centroids": 16, "iters": 2,
             # phash kind: Hamming envelope + band count over the 64-bit
             # dHash (max_hamming <= hamming_bands-1 keeps banding
             # lossless — the pigeonhole contract)
@@ -1827,6 +1823,11 @@ class DedupIndex:
             "k": 4, "max_postings": 10, "min_shared": 2,
             "hashed": False,
         }
+        # "signatures" (scenes kind) is transient: popped below, never
+        # persisted
+        unknown = set(params) - set(p) - {"signatures"}
+        if unknown:
+            raise ValueError(f"unknown DedupIndex params: {sorted(unknown)}")
         p.update(params)
         if kind == "exact":
             arts = {"fingerprints": cls._fps(corpus, p)}
@@ -1865,13 +1866,11 @@ class DedupIndex:
             cents = ivf_centroids(
                 corpus, p["id_col"], p["vec_col"],
                 n_centroids=p["n_centroids"], iters=p["iters"],
-                hash_fn=p["hash_fn"] if p["hash_fn"] in ("md5", "xxhash64")
-                else "md5",
             )
             arts = {
                 "centroids": cents,
                 "assign": assign_cells(
-                    corpus, cents, p["id_col"], p["vec_col"], p["assign"]
+                    corpus, cents, p["id_col"], p["vec_col"]
                 ),
                 "vectors": corpus.select(p["id_col"], p["vec_col"]),
             }
@@ -1963,7 +1962,7 @@ class DedupIndex:
         return incremental_semantic_dedup(
             new_df, self._art("centroids"), self._art("assign"),
             vecs.withColumnRenamed(vecs.columns[1], p["vec_col"]),
-            p["id_col"], p["vec_col"], p["threshold"], p["assign"],
+            p["id_col"], p["vec_col"], p["threshold"],
         )
 
     def absorb(
@@ -2023,9 +2022,9 @@ class DedupIndex:
             # the SAME frozen centroids absorb would use (incremental_
             # semantic_dedup's front half IS assign_cells, same argmax +
             # tie rule), so the verdict's (id, cell) projection replaces
-            # the re-assignment Arrow pass over the kept rows — one
-            # centroid collect and one mapInPandas pass removed per
-            # absorb (guide §2.4: remove passes outright). Persisting the
+            # the re-assignment pass over the kept rows — one centroid
+            # collect and one projection pass removed per absorb
+            # (guide §2.4: remove passes outright). Persisting the
             # two-column frame instead of the bare ids costs 8 bytes/row.
             kept_cells = (
                 st.filter(F.col("status") == "kept")
@@ -2134,8 +2133,7 @@ class DedupIndex:
                 from .similarity import assign_cells
 
                 new_assign = assign_cells(
-                    kept, self._art("centroids"), p["id_col"],
-                    p["vec_col"], p["assign"],
+                    kept, self._art("centroids"), p["id_col"], p["vec_col"]
                 )
             arts["assign"] = arts["assign"].unionByName(tag(new_assign))
             arts["vectors"] = arts["vectors"].unionByName(
@@ -2301,7 +2299,6 @@ class DedupIndex:
     def retrain(
         self,
         iters: int | None = None,
-        hash_fn: str | None = None,
         sample_cap: int = 4096,
     ) -> "DedupIndex":
         """Semantic kind only: fresh index trained on the FULL current
@@ -2325,19 +2322,15 @@ class DedupIndex:
         p = self.params
         vecs = self._art("vectors")
         corpus = vecs.withColumnRenamed(vecs.columns[1], p["vec_col"])
-        hf = p["hash_fn"] if hash_fn is None else hash_fn
         cents = ivf_centroids(
             corpus, p["id_col"], p["vec_col"],
             n_centroids=p["n_centroids"],
             iters=p["iters"] if iters is None else iters,
             sample_cap=sample_cap,
-            hash_fn=hf if hf in ("md5", "xxhash64") else "md5",
         )
         arts = {
             "centroids": cents,
-            "assign": assign_cells(
-                corpus, cents, p["id_col"], p["vec_col"], p["assign"]
-            ),
+            "assign": assign_cells(corpus, cents, p["id_col"], p["vec_col"]),
             "vectors": corpus.select(p["id_col"], p["vec_col"]),
         }
         return DedupIndex(self.kind, p, arts, generation=0)

@@ -5,6 +5,7 @@
                            map-side local top-k
 - ``ann_lsh_topk``       — random-hyperplane LSH bucketed approximate top-k
 - ``ann_ivf_topk`` / ``ann_ivf_join_topk`` — IVF cell probe + exact rescore
+  (queries shipped in a task closure / a distributed query table)
 - ``ann_ivfpq_topk`` / ``IvfIndex.probe_adc`` — IVF-PQ: ADC shortlist over
   product-quantized codes + exact re-rank. Both feed ONE plan
   (``_ivfpq_adc_topk``); they differ only in where the
@@ -18,10 +19,19 @@ Vector math is built-in HOFs (functions/vectors.py) — JVM-side, no UDFs:
 at 64-dim the zip_with/aggregate chain stays in codegen and beats Arrow
 round-trips for this shape.
 
-Degenerate inputs: every numpy L2 normalization in this module guards the
-zero norm (``np.where(norm == 0, 1, norm)``) so an all-zero embedding
-stays an all-zero vector — cosine 0 against everything, never NaN rows
-poisoning a codebook or candidate scoring.
+IVF cell assignment has one rule: centroids from the md5-ordered sample
+(``ivf_centroids``), and a vector's cell is the centroid with the largest
+sequential-fold cosine, ties to the smaller centroid id. The JVM
+projection ``_ivf_assigned`` writes it for every join-form operator,
+index and ``assign_cells``; ``ann_ivf_topk``'s closure writes the same
+op sequence in numpy; the DuckDB twins write it in one CTE builder
+(plans/pipeline_ops._ivf_cells_sql).
+
+Degenerate inputs: in the IVF and IVF-PQ operators an all-zero embedding
+scores cosine 0 against everything, never NaN — their fold cosines
+divide by the guarded norm ``max(sqrt(fold(v, v)), 1e-300)``, and the
+numpy L2 normalizations of centroid training use
+``np.where(norm == 0, 1, norm)``.
 """
 
 from __future__ import annotations
@@ -224,7 +234,6 @@ def ivf_centroids(
     n_centroids: int = 16,
     iters: int = 2,
     sample_cap: int = 4096,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """(centroid_id, cv) — k-means-style centroids trained on a BOUNDED
     deterministic sample, the standard IVF training contract (an inverted
@@ -233,12 +242,14 @@ def ivf_centroids(
     query it serves).
 
     Sample: the ``sample_cap`` corpus vectors with the smallest
-    xxhash64(id) — a reproducible pseudo-random sample, no RNG state; one
-    TakeOrdered job is the only cluster work. Initial centroids = first
+    md5-slice(id) (``_md5_order``: the first 8 md5 hex digits of the id
+    as an integer — the portable hash base of the dedup family) — a
+    reproducible pseudo-random sample, no RNG state; one TakeOrdered job
+    is the only cluster work. Initial centroids = first
     ``n_centroids`` of that ordering; refinement = ``iters`` Lloyd steps
     in driver numpy over the sample. Assignment ties break to the SMALLER
-    centroid index via stable argsort — the same rule ann_ivf_topk's
-    corpus-side scorer applies, so training and serving agree. A cell
+    centroid index via stable argsort — the same rule every serving-side
+    assignment applies, so training and serving agree. A cell
     that receives no sample vectors keeps its previous centroid, so the
     table never shrinks below ``n_centroids`` (reduced to the corpus size
     when the corpus has fewer vectors; empty corpus raises).
@@ -246,30 +257,19 @@ def ivf_centroids(
     The result is the train-once-persist artifact: see save_ivf_centroids
     / load_ivf_centroids and ann_ivf_topk's ``centroids=`` parameter.
 
-    ``hash_fn``: sample-ordering hash. ``xxhash64`` (default) is the fast
-    engine-specific path; ``md5`` (first-8-hex-as-int, the same portable
-    base used across the dedup family) lets another engine reproduce the
-    exact sample order — with ``iters=0`` the centroid table (= the first
-    ``n_centroids`` sample vectors, no float averaging) is then
-    bit-reproducible cross-engine, which the sim_ann_ivf DuckDB oracle
-    twin relies on.
+    The md5 order is reproducible in another engine: with ``iters=0``
+    the centroid table (= the first ``n_centroids`` sample vectors, no
+    float averaging) is bit-identical cross-engine, which every IVF
+    DuckDB oracle twin relies on.
     """
     import numpy as np
 
     spark = corpus.sparkSession
-    if hash_fn == "xxhash64":
-        h = F.xxhash64(F.col("vid").cast("string"))
-    elif hash_fn == "md5":
-        h = F.conv(
-            F.substring(F.md5(F.col("vid").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     rows = (
         corpus.select(
             F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("vv")
         )
-        .withColumn("h", h)
+        .withColumn("h", _md5_order(F.col("vid")))
         .orderBy("h", "vid")
         .limit(sample_cap)
         .collect()
@@ -299,6 +299,15 @@ def ivf_centroids(
     )
 
 
+def _md5_order(c):
+    """The sample-order hash of every trained artifact: the first 8 md5
+    hex digits of the id's string form, as a long — one expression
+    DuckDB reproduces (``('0x' || substr(md5(id::VARCHAR), 1, 8))``)."""
+    return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast(
+        "long"
+    )
+
+
 def save_ivf_centroids(cents: DataFrame, path: str) -> None:
     """Persist the trained centroid artifact (parquet via sources.io) — at
     100 TB centroids are trained once and reused by every query/job, never
@@ -314,17 +323,6 @@ def load_ivf_centroids(spark, path: str) -> DataFrame:
     return read(spark, path)
 
 
-def _collect_centroids(cents: DataFrame):
-    """(cids, cm) numpy pair from a (centroid_id, cv) table, sorted by id —
-    K rows by contract; the one sanctioned collect in this module."""
-    import numpy as np
-
-    rows = sorted(cents.collect(), key=lambda r: r["centroid_id"])
-    cids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    cm = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in rows])
-    return cids, cm
-
-
 def ann_ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -335,7 +333,6 @@ def ann_ivf_topk(
     nprobe: int = 4,
     iters: int = 2,
     centroids: DataFrame | None = None,
-    assign: str = "matmul",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their nearest-centroid
     cell; a query probes its ``nprobe`` nearest cells and rescores exactly
@@ -357,53 +354,50 @@ def ann_ivf_topk(
     final window sees only scored candidates. When the query set is
     itself a TABLE (corpus-vs-corpus retrieval), use
     ``ann_ivf_join_topk`` — the join-based form that never materializes
-    the query side on the driver. Scores come from the
-    sequential fold (functions.vectors.make_seq_fold) ⇒ bit-equal to the
-    HOF cosine, which the brute-force anchor test depends on. IVF adapts
-    to the data's cluster structure; LSH (ann_lsh_topk) needs no training
-    — same serving shape either way: probe → rescore.
+    the query side on the driver; both forms return the same rows on the
+    same centroid table (pytest). For a few queries the closure is the
+    faster form: sim_ann_ivf's 20 queries at sf0.1 on 4 cores, centroid
+    training included, took a median 1.02 s here and 2.09 s through the
+    join form (6 interleaved runs each, one session).
 
-    ``assign``: how assignment/probe cosines are computed. ``matmul``
-    (default) is one BLAS product per batch — fastest, pairwise-summed.
-    ``fold`` evaluates cos(v, c_k) with the sequential fold (one loop over
-    the K centroids, still row-vectorized) — bit-identical to DuckDB's
-    ``list_dot_product`` expression, so cell assignment and probe choice
-    are reproducible cross-engine; the oracle-gated sim_ann_ivf query
-    uses this with md5/iters=0 centroids. Both modes break cos ties to
-    the smaller centroid id (stable argsort over ids ascending).
+    Every cosine — cell assignment, probe choice and the rescore — is
+    the sequential fold (functions.vectors.make_seq_fold) with the
+    zero-norm guard ``max(sqrt(fold), 1e-300)``: bit-equal to the JVM
+    projection and to DuckDB's guarded ``list_dot_product`` expression,
+    and an all-zero vector scores 0 against everything, never NaN. IVF
+    adapts to the data's cluster structure; LSH (ann_lsh_topk) needs no
+    training — same serving shape either way: probe → rescore.
     """
     import numpy as np
 
     if centroids is None:
         centroids = ivf_centroids(corpus, id_col, vec_col, n_centroids, iters)
-    cids, cm = _collect_centroids(centroids)
-    __nrm = np.linalg.norm(cm, axis=1, keepdims=True)
-    cn = cm / np.where(__nrm == 0.0, 1.0, __nrm)
+    crows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
+    cm = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in crows])
+    cnorms = [_host_norm(r["cv"]) for r in crows]
     fold = make_seq_fold()
-    if assign not in ("matmul", "fold"):
-        raise ValueError(f"unknown assign {assign!r}")
 
-    def _cents_cos(vm):
-        """(rows × K) cos matrix against the centroid table, fold mode:
-        per-centroid sequential fold — the DuckDB op sequence
-        ldp(v,c) / (sqrt(ldp(v,v)) * sqrt(ldp(c,c)))."""
-        out = np.empty((vm.shape[0], cm.shape[0]))
-        nv = np.sqrt(fold(vm, vm))
-        for j in range(cm.shape[0]):
-            c = np.broadcast_to(cm[j], vm.shape)
-            out[:, j] = fold(vm, c) / (nv * np.sqrt(fold(c, c)))
-        return out
+    def gnorm(vm):
+        return np.maximum(np.sqrt(fold(vm, vm)), 1e-300)
+
+    def cell_cos(vm):
+        """(rows × K) guarded fold cosines against the centroid table,
+        in centroid-id order."""
+        nv = gnorm(vm)
+        return np.stack(
+            [
+                fold(vm, np.broadcast_to(c, vm.shape)) / (nv * cnorm)
+                for c, cnorm in zip(cm, cnorms)
+            ],
+            axis=1,
+        )
 
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    __nrm = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn = qm / np.where(__nrm == 0.0, 1.0, __nrm)
-    take = min(nprobe, len(cids))
-    # per-query probed cells: same stable smaller-id tie rule as the
-    # corpus-side assignment below
-    qcos = qn @ cn.T if assign == "matmul" else _cents_cos(qm)
-    probe_idx = np.argsort(-qcos, axis=1, kind="stable")[:, :take]
+    take = min(nprobe, len(crows))
+    # stable argsort over ids ascending: cos ties go to the smaller id
+    probe_idx = np.argsort(-cell_cos(qm), axis=1, kind="stable")[:, :take]
 
     def score(batches):
         import numpy as np
@@ -414,17 +408,7 @@ def ann_ivf_topk(
                 continue
             nids = pdf[id_col].to_numpy(dtype=np.int64)
             vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if assign == "matmul":
-                __nrm = np.linalg.norm(vm, axis=1, keepdims=True)
-                vn = vm / np.where(__nrm == 0.0, 1.0, __nrm)
-                vcos = vn @ cn.T
-            else:
-                vcos = np.empty((vm.shape[0], cm.shape[0]))
-                nv = np.sqrt(fold(vm, vm))
-                for jj in range(cm.shape[0]):
-                    c = np.broadcast_to(cm[jj], vm.shape)
-                    vcos[:, jj] = fold(vm, c) / (nv * np.sqrt(fold(c, c)))
-            cell = np.argsort(-vcos, axis=1, kind="stable")[:, 0]
+            cell = np.argsort(-cell_cos(vm), axis=1, kind="stable")[:, 0]
             out = []
             for j in range(len(qids)):
                 mask = np.isin(cell, probe_idx[j]) & (nids != qids[j])
@@ -433,9 +417,7 @@ def ann_ivf_topk(
                 sub = vm[mask]
                 q = np.broadcast_to(qm[j], sub.shape)
                 # query first, then neighbor — the HOF operand order
-                cos = fold(q, sub) / (
-                    np.sqrt(fold(q, q)) * np.sqrt(fold(sub, sub))
-                )
+                cos = fold(q, sub) / (gnorm(q) * gnorm(sub))
                 out.append(
                     pd.DataFrame(
                         {
@@ -478,8 +460,8 @@ def ann_ivf_join_topk(
     contract would bottleneck on the driver).
 
     Nothing query-sized ever touches the driver: the only collect is the
-    ``n_centroids``-row centroid table (the train-once artifact — same
-    sanctioned bounded collect as ``_collect_centroids``). Plan shape:
+    ``n_centroids``-row centroid table (the train-once artifact, a
+    bounded K-row collect). Plan shape:
 
     - corpus cell assignment: one zero-shuffle projection — the K
       centroid literals are inlined and ``array_max`` over
@@ -780,53 +762,21 @@ def assign_cells(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "matmul",
 ) -> DataFrame:
-    """(id, cell) — nearest-centroid assignment of every corpus vector in
-    ONE Arrow pass (no vector shuffle; only 16-byte id/cell rows leave the
-    task). Same tie rule as ann_ivf_topk (stable argsort → cos ties go to
-    the smaller centroid id) and the same ``assign`` modes: ``matmul``
-    (BLAS, fast default) or ``fold`` (sequential dot — bit-equal to
-    DuckDB's list_dot_product, the oracle-gateable mode).
+    """(id, cell) — nearest-centroid assignment of every corpus vector:
+    the ``_ivf_assigned`` zero-shuffle JVM projection (K centroid
+    literals inlined, guarded fold cosine, cos ties to the smaller
+    centroid id) that IvfIndex assigns with, so both indexes put a
+    vector in the same cell and both match the DuckDB asg CTE bit for
+    bit.
 
     The clustering front half of SemDeDup-style semantic dedup
     (dedup.semantic_dedup) and of any per-cluster downstream job.
     """
-    import numpy as np
-
-    from ..functions.vectors import as_double, make_seq_fold
-
-    cids, cm = _collect_centroids(centroids)
-    __nrm = np.linalg.norm(cm, axis=1, keepdims=True)
-    cn = cm / np.where(__nrm == 0.0, 1.0, __nrm)
-    fold = make_seq_fold()
-    if assign not in ("matmul", "fold"):
-        raise ValueError(f"unknown assign {assign!r}")
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vm = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            if assign == "matmul":
-                __nrm = np.linalg.norm(vm, axis=1, keepdims=True)
-                vn = vm / np.where(__nrm == 0.0, 1.0, __nrm)
-                vcos = vn @ cn.T
-            else:
-                vcos = np.empty((vm.shape[0], cm.shape[0]))
-                nv = np.sqrt(fold(vm, vm))
-                for j in range(cm.shape[0]):
-                    c = np.broadcast_to(cm[j], vm.shape)
-                    vcos[:, j] = fold(vm, c) / (nv * np.sqrt(fold(c, c)))
-            cell = np.argsort(-vcos, axis=1, kind="stable")[:, 0]
-            yield pd.DataFrame({id_col: ids, "cell": cids[cell]})
-
-    v = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-    return v.mapInPandas(gen, f"{id_col} long, cell long")
+    crows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
+    return _ivf_assigned(corpus, crows, id_col, vec_col).select(
+        F.col("neighbor_id").alias(id_col), "cell"
+    )
 
 
 def quantize_vectors(
@@ -884,7 +834,7 @@ def pq_codebook_from_sample(
     iters: int = 2,
 ):
     """Train a product-quantization codebook on a bounded deterministic
-    sample: the ``sample_cap`` vectors with the smallest xxhash64(id)
+    sample: the ``sample_cap`` vectors with the smallest md5-slice(id)
     (the ivf_centroids sampling contract — one TakeOrdered job, no RNG
     state), split into ``m_sub`` subspaces, each refined by ``iters``
     Lloyd steps in driver numpy. The sample is the RAW vectors: the
@@ -900,7 +850,7 @@ def pq_codebook_from_sample(
 
     rows = (
         corpus.select(id_col, vec_col)
-        .withColumn("__h", F.xxhash64(F.col(id_col)))
+        .withColumn("__h", _md5_order(F.col(id_col)))
         .orderBy("__h", id_col)
         .limit(sample_cap)
         .collect()
@@ -1361,7 +1311,6 @@ class IvfIndex:
         vec_col: str = "embedding",
         n_centroids: int = 16,
         iters: int = 2,
-        hash_fn: str = "xxhash64",
         centroids: DataFrame | None = None,
         codebook=None,
         residual: bool = False,
@@ -1378,9 +1327,7 @@ class IvfIndex:
         cents = (
             centroids
             if centroids is not None
-            else ivf_centroids(
-                corpus, id_col, vec_col, n_centroids, iters, hash_fn=hash_fn
-            )
+            else ivf_centroids(corpus, id_col, vec_col, n_centroids, iters)
         )
         if residual and codebook is None:
             # a silent downgrade to a plain IVF index would only
@@ -1545,7 +1492,6 @@ class IvfIndex:
     def retrain(
         self,
         iters: int = 2,
-        hash_fn: str = "xxhash64",
         sample_cap: int | None = None,
     ) -> "IvfIndex":
         """Fresh index trained on the FULL current corpus (base + every
@@ -1567,7 +1513,6 @@ class IvfIndex:
             corpus, p["id_col"], p["vec_col"], n_centroids=n_cents,
             iters=iters,
             sample_cap=sample_cap if sample_cap is not None else 4096,
-            hash_fn=hash_fn,
         )
         return IvfIndex.build(
             corpus, id_col=p["id_col"], vec_col=p["vec_col"],

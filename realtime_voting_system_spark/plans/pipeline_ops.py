@@ -403,20 +403,115 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.incremental_minhash_dedup(batch, corpus)
 
 
+# ---------------------------------------------------------------------------
+# The IVF cell-assignment rule in DuckDB — every IVF / semantic-dedup twin
+# (here and in scale_ops) writes its centroid and cell CTEs through
+# _ivf_cells_sql
+# ---------------------------------------------------------------------------
+
+# fold cosine, norm guarded with greatest(·, 1e-300), MIRRORED in the Spark
+# plans: for any non-degenerate vector the guard is the identity (norm ≫
+# 1e-300, so the value and the oracle hash are bit-unchanged), but an
+# all-zero embedding yields cos = 0.0 in BOTH engines instead of Spark's
+# non-ANSI NULL vs DuckDB's IEEE inf/NaN — the one input where unguarded
+# twins could diverge
+_COS_SQL = (
+    "list_dot_product({a}, {b})"
+    " / (greatest(sqrt(list_dot_product({a}, {a})), 1e-300)"
+    " * greatest(sqrt(list_dot_product({b}, {b})), 1e-300))"
+)
+
+# the same fold cosine unguarded — the pair verifies and rescoring of the
+# semantic-dedup twins, sim_ann_ivf and vec_matryoshka_recall, whose Spark
+# sides divide by the raw norms
+_FOLD_COS_SQL = (
+    "list_dot_product({a}, {b})"
+    " / (sqrt(list_dot_product({a}, {a}))"
+    " * sqrt(list_dot_product({b}, {b})))"
+)
+
+
+def _ivf_cells_sql(
+    n_centroids: int,
+    sample: str = "v",
+    asg: tuple = (("asg", "v", "v"),),
+    probe_from: str | None = None,
+    n_queries: int | None = None,
+    nprobe: int = 0,
+    keep: tuple = (),
+    prn: bool = False,
+    tag: str = "",
+) -> str:
+    """The ``cents``/``asg``/``probes`` CTE text of the portable IVF
+    configuration (operators/similarity: md5 sample order, iters=0
+    init-point centroids, guarded fold cosine, cos ties to the smaller
+    centroid id), comma-joined for a WITH list over a relation ``v`` of
+    (vec_id, ve) rows.
+
+    - ``cents{tag}``: the first ``n_centroids`` rows of ``sample`` (a
+      relation, optionally with a WHERE — the build-time cohort) in
+      (md5-slice(vec_id), vec_id) order;
+    - one nearest-cell CTE per ``asg`` entry (name, relation, alias):
+      (vec_id, cell) of every row of the relation;
+    - with ``probe_from``: ``probes{tag}`` = (query_id, cell) for the
+      ``nprobe`` nearest cells of each ``probe_from`` row (vec_id <
+      ``n_queries`` when given), plus the probe rank ``prn`` when
+      ``prn``.
+
+    ``keep`` columns ride both the assignment and the probe rows (the
+    filtered probe's label)."""
+    cents = f"cents{tag}"
+    ko = "".join(f", {c}" for c in keep)
+
+    def nearest(name, src, a, out, rank, extra="", where=""):
+        ki = "".join(f", {a}.{c}" for c in keep)
+        sel = f"{a}.vec_id" if out == "vec_id" else f"{a}.vec_id AS {out}"
+        return f"""{name} AS (
+  SELECT {out}{ko}, cell{extra} FROM (
+    SELECT {sel}{ki}, c.centroid_id AS cell,
+           ROW_NUMBER() OVER (
+             PARTITION BY {a}.vec_id
+             ORDER BY {_COS_SQL.format(a=f"{a}.ve", b="c.cv")} DESC,
+                      c.centroid_id
+           ) AS rn
+    FROM {src}, {cents} c{where}
+  ) WHERE {rank}
+)"""
+
+    ctes = [f"""{cents} AS (
+  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
+           AS centroid_id,
+         ve AS cv
+  FROM (
+    SELECT vec_id, ve,
+           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
+    FROM {sample} ORDER BY h, vec_id LIMIT {n_centroids}
+  )
+)"""]
+    for name, rel, a in asg:
+        src = rel if rel == a else f"{rel} {a}"
+        ctes.append(nearest(name, src, a, "vec_id", "rn = 1"))
+    if probe_from is not None:
+        ctes.append(nearest(
+            f"probes{tag}", f"{probe_from} q", "q", "query_id",
+            f"rn <= {nprobe}", ", rn AS prn" if prn else "",
+            "" if n_queries is None else f" WHERE q.vec_id < {n_queries}",
+        ))
+    return ",\n".join(ctes)
+
+
 _INCR_SEM = {"n_centroids": 16, "threshold": 0.30}
 
 
 def _build_semantic_incr_sql() -> str:
     """DuckDB twin of the incremental SemDeDup probe under the portable
-    config: centroids trained on the EVEN-id corpus only (md5 sample
-    order, iters=0 init points — the persisted artifact), corpus AND
-    batch assigned with the same fold cosine + smaller-id tie rule, and
-    the odd-id batch verified against same-cell corpus vectors."""
+    config: centroids trained on the EVEN-id corpus only (the persisted
+    artifact), corpus AND batch assigned with the same rule, and the
+    odd-id batch verified against same-cell corpus vectors."""
     cfg = _INCR_SEM
-    cos = (
-        "list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b})))"
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], sample="corp",
+        asg=(("easg", "corp", "e"), ("basg", "bat", "b")),
     )
     return f"""
 WITH v AS (
@@ -425,40 +520,13 @@ WITH v AS (
   SELECT * FROM v WHERE vec_id % 2 = 0
 ), bat AS (
   SELECT * FROM v WHERE vec_id % 2 = 1
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM corp ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), easg AS (
-  SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos.format(a="e.ve", b="c.cv")} DESC, c.centroid_id
-           ) AS rn
-    FROM corp e, cents c
-  ) WHERE rn = 1
-), basg AS (
-  SELECT vec_id, cell FROM (
-    SELECT b.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY b.vec_id
-             ORDER BY {cos.format(a="b.ve", b="c.cv")} DESC, c.centroid_id
-           ) AS rn
-    FROM bat b, cents c
-  ) WHERE rn = 1
-), dups AS (
+), {cells}, dups AS (
   SELECT b.vec_id, MIN(e.vec_id) AS dup_of
   FROM basg b
   JOIN easg e USING (cell)
   JOIN bat vb ON vb.vec_id = b.vec_id
   JOIN corp vee ON vee.vec_id = e.vec_id
-  WHERE {cos.format(a="vb.ve", b="vee.ve")} >= {cfg["threshold"]}
+  WHERE {_FOLD_COS_SQL.format(a="vb.ve", b="vee.ve")} >= {cfg["threshold"]}
   GROUP BY b.vec_id
 )
 SELECT b.vec_id, b.cell, d.dup_of,
@@ -489,18 +557,13 @@ def dedup_incremental_semantic(
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
-    )
-    corpus_assign = similarity.assign_cells(
-        corpus, cents, assign="fold"
     )
     return dedup.incremental_semantic_dedup(
         batch,
         cents,
-        corpus_assign,
+        similarity.assign_cells(corpus, cents),
         corpus,
         threshold=cfg["threshold"],
-        assign="fold",
     )
 
 
@@ -1105,60 +1168,30 @@ _ANN_IVF = {"k": 5, "n_centroids": 16, "nprobe": 8, "n_queries": 20}
 
 def _build_ann_ivf_sql() -> str:
     """DuckDB twin of the full IVF pipeline under the portable config
-    (hash_fn='md5', iters=0, assign='fold'):
+    (md5 sample order, iters=0):
 
     - centroid table = the first n_centroids corpus vectors ordered by
       (md5-slice(vec_id), vec_id) — k-means init points, no float
       averaging, so the table is bit-reproducible cross-engine;
-    - cell assignment / probe choice = argmax cosine with the
-      cos-desc-then-centroid-id tie rule, cosines from the sequential
-      dot (list_dot_product ≡ the Arrow fold — same IEEE op sequence);
+    - cell assignment / probe choice = _ivf_cells_sql: argmax guarded
+      fold cosine with the cos-desc-then-centroid-id tie rule
+      (list_dot_product ≡ the numpy fold — same IEEE op sequence);
     - rescore = exact cosine + row_number ≤ k within probed cells.
 
     The full approximate RESULT is hash-checked, not just recall — the
     dedup_embedding_lsh technique extended from data-independent
-    hyperplanes to a deterministically-sampled centroid table. Lloyd
-    refinement (iters>0) stays the library default, anchored by the
-    nprobe==n_centroids ≡ brute-force bit-equality pytest."""
+    hyperplanes to a deterministically-sampled centroid table."""
     cfg = _ANN_IVF
-    cos = (
-        "list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b})))"
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], probe_from="v", n_queries=cfg["n_queries"],
+        nprobe=cfg["nprobe"],
     )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {cos.format(a="v.ve", b="c.cv")} DESC, c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {cos.format(a="q.ve", b="c.cv")} DESC, c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {cfg["nprobe"]}
-), scored AS (
+), {cells}, scored AS (
   SELECT p.query_id, n.vec_id AS neighbor_id,
-         {cos.format(a="qv.ve", b="n.ve")} AS cos_sim
+         {_FOLD_COS_SQL.format(a="qv.ve", b="n.ve")} AS cos_sim
   FROM probes p
   JOIN asg a ON a.cell = p.cell
   JOIN v n ON n.vec_id = a.vec_id
@@ -1181,40 +1214,17 @@ _SEMANTIC = {"n_centroids": 16, "threshold": 0.30}
 
 def _build_semantic_sql() -> str:
     """DuckDB twin of dedup.semantic_dedup under the portable config
-    (md5 sample order, iters=0 init-point centroids, fold assignment):
-    the cents/asg CTEs are the sim_ann_ivf builder's, the within-cell
-    pair verify is the embedding-LSH builder's cosine, and the verdict
-    is the keep-lowest rule."""
+    (md5 sample order, iters=0 init-point centroids): the cents/asg
+    CTEs are _ivf_cells_sql's, the within-cell pair verify is the
+    embedding-LSH builder's cosine, and the verdict is the keep-lowest
+    rule."""
     cfg = _SEMANTIC
-    cos = (
-        "list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b})))"
-    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {cos.format(a="v.ve", b="c.cv")} DESC, c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), pairs AS (
+), {_ivf_cells_sql(cfg["n_centroids"])}, pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         {cos.format(a="va.ve", b="vb.ve")} AS cos_sim
+         {_FOLD_COS_SQL.format(a="va.ve", b="vb.ve")} AS cos_sim
   FROM asg a
   JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
   JOIN v va ON va.vec_id = a.vec_id
@@ -1232,8 +1242,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup, fully oracle-gated in the portable
     configuration (md5 sample order, init-point centroids, fold
     assignment + fold cosine — every float both engines compute is the
-    same IEEE op sequence). Learned-centroid mode (iters>0, matmul)
-    stays the library default, anchored by the single-cell ≡ all-pairs
+    same IEEE op sequence). Lloyd-refined centroids (iters>0) stay the
+    library default, anchored by the single-cell ≡ all-pairs
     equivalence pytest.
 
     Scale sizing (measured): within-cell verification is quadratic in
@@ -1247,13 +1257,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = _SEMANTIC
     emb = _t(spark, sf_dir, "embeddings")
     cents = similarity.ivf_centroids(
-        emb, n_centroids=cfg["n_centroids"], iters=0, hash_fn="md5"
+        emb, n_centroids=cfg["n_centroids"], iters=0
     )
     return dedup.semantic_dedup(
-        emb,
-        centroids=cents,
-        threshold=cfg["threshold"],
-        assign="fold",
+        emb, centroids=cents, threshold=cfg["threshold"]
     )
 
 
@@ -1261,14 +1268,14 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully oracle-gated IVF serving path: portable md5 sample order,
     init-point centroids (iters=0), fold-exact assignment — the whole
-    probe→rescore result is value-hash-checked against DuckDB. The
-    learned-centroid configuration (iters>0, matmul assignment) remains
-    the library default, anchored by test_ivf_full_probe_equals_bruteforce
-    and the recall/persistence pytests."""
+    probe→rescore result is value-hash-checked against DuckDB.
+    Lloyd-refined centroids (iters>0) stay the library default,
+    anchored by test_ivf_full_probe_equals_bruteforce and the
+    recall/persistence pytests."""
     cfg = _ANN_IVF
     emb = _t(spark, sf_dir, "embeddings")
     cents = similarity.ivf_centroids(
-        emb, n_centroids=cfg["n_centroids"], iters=0, hash_fn="md5"
+        emb, n_centroids=cfg["n_centroids"], iters=0
     )
     return similarity.ann_ivf_topk(
         emb.filter(F.col("vec_id") < cfg["n_queries"]),
@@ -1276,7 +1283,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=cfg["k"],
         nprobe=cfg["nprobe"],
         centroids=cents,
-        assign="fold",
     )
 
 
@@ -5194,47 +5200,19 @@ def _build_sem_retrain_sql() -> str:
     the retrain, exactly 0 after it — the generation-ledger reset made
     hash-visible)."""
     cfg = _RETR_SEM
-    cos = (
-        "list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b})))"
-    )
 
-    def phase(tag: str, seq: int, cents_where: str, share: str) -> str:
-        return f"""cents_{tag} AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v {cents_where}ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), casg_{tag} AS (
-  SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos.format(a="e.ve", b="c.cv")} DESC, c.centroid_id
-           ) AS rn
-    FROM v e, cents_{tag} c
-  ) WHERE rn = 1
-), pasg_{tag} AS (
-  SELECT vec_id, cell FROM (
-    SELECT b.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY b.vec_id
-             ORDER BY {cos.format(a="b.ve", b="c.cv")} DESC, c.centroid_id
-           ) AS rn
-    FROM pb b, cents_{tag} c
-  ) WHERE rn = 1
-), dups_{tag} AS (
+    def phase(tag: str, seq: int, sample: str, share: str) -> str:
+        cells = _ivf_cells_sql(
+            cfg["n_centroids"], sample=sample, tag=f"_{tag}",
+            asg=((f"casg_{tag}", "v", "e"), (f"pasg_{tag}", "pb", "b")),
+        )
+        return f"""{cells}, dups_{tag} AS (
   SELECT p.vec_id, MIN(e.vec_id) AS dup_of
   FROM pasg_{tag} p
   JOIN casg_{tag} e USING (cell)
   JOIN pb vp ON vp.vec_id = p.vec_id
   JOIN v vv ON vv.vec_id = e.vec_id
-  WHERE {cos.format(a="vp.ve", b="vv.ve")} >= {cfg["threshold"]}
+  WHERE {_FOLD_COS_SQL.format(a="vp.ve", b="vv.ve")} >= {cfg["threshold"]}
   GROUP BY p.vec_id
 ), fin_{tag} AS (
   SELECT '{tag}_swap' AS phase, CAST({seq} AS BIGINT) AS served_seq,
@@ -5260,8 +5238,8 @@ WITH v AS (
 ), pb AS (
   SELECT vec_id + {cfg["poff"]} AS vec_id, ve
   FROM v WHERE vec_id % {cfg["pmod"]} = 0
-), {phase("pre", 1, f"WHERE vec_id < {cfg['off']} ", share_pre)},
-{phase("post", 2, "", "CAST(0.0 AS DOUBLE)")}
+), {phase("pre", 1, f"v WHERE vec_id < {cfg['off']}", share_pre)},
+{phase("post", 2, "v", "CAST(0.0 AS DOUBLE)")}
 SELECT * FROM fin_pre UNION ALL SELECT * FROM fin_post
 """
 
@@ -5310,8 +5288,7 @@ def dedup_semantic_retrain_swap(
     )
     idx0 = dedup.DedupIndex.build(
         base, "semantic",
-        n_centroids=cfg["n_centroids"], threshold=cfg["threshold"],
-        iters=0, hash_fn="md5", assign="fold",
+        n_centroids=cfg["n_centroids"], threshold=cfg["threshold"], iters=0,
     )
     if idx0.retrain_needed():
         raise AssertionError("fresh index must not ask for a retrain")
@@ -5321,7 +5298,7 @@ def dedup_semantic_retrain_swap(
     share_pre = serving.absorbed_share()
     if not serving.retrain_needed():
         raise AssertionError("planted drift must fire the retrain trigger")
-    retrained = serving.retrain(iters=0, hash_fn="md5")
+    retrained = serving.retrain(iters=0)
     seq2 = dedup.publish_index(retrained, root)
     head = dedup.load_published_index(spark, root)
     share_post = head.absorbed_share()
@@ -5433,11 +5410,6 @@ def _build_matryoshka_sql() -> str:
     top-k per prefix width (qv[1:d] — identical fold order), hits
     counted by (query, neighbor) equi-join against the truth."""
     cfg = _MATRYOSHKA
-    cos = (
-        "list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b})))"
-    )
 
     def ranked(tag: str, d: int) -> str:
         qa = f"qv[1:{d}]"
@@ -5447,7 +5419,7 @@ def _build_matryoshka_sql() -> str:
     SELECT query_id, neighbor_id,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id
-             ORDER BY {cos.format(a=qa, b=ca)} DESC, neighbor_id
+             ORDER BY {_FOLD_COS_SQL.format(a=qa, b=ca)} DESC, neighbor_id
            ) AS BIGINT) AS rnk
     FROM q, c WHERE query_id != neighbor_id
   ) WHERE rnk <= {cfg["k"]}

@@ -19,6 +19,7 @@ from ..functions.text import token_count
 from ..operators import chunking, incremental, layout, shapes
 from ..sources.io import scratch_dir as _scratch_dir
 from .parity import _t, query
+from .pipeline_ops import _COS_SQL, _ivf_cells_sql
 
 # ---------------------------------------------------------------------------
 # X56 — token-window chunking
@@ -1444,18 +1445,53 @@ _IVFPQ = {"k": 5, "n_centroids": 16, "nprobe": 4, "n_queries": 20,
           "shortlist": 12}
 
 
+def _rnk_sql(rel: str, k: int) -> str:
+    """Final top-k over ``rel``'s (query_id, neighbor_id, cos_sim) rows:
+    rnk by cos desc then neighbor id."""
+    return f"""SELECT query_id, neighbor_id, cos_sim, rnk FROM (
+  SELECT query_id, neighbor_id, cos_sim,
+         CAST(ROW_NUMBER() OVER (
+           PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
+         ) AS BIGINT) AS rnk
+  FROM {rel}
+) WHERE rnk <= {k}"""
 
-# norm guarded with greatest(·, 1e-300), MIRRORED in the Spark plan: for
-# any non-degenerate vector the guard is the identity (norm ≫ 1e-300, so
-# the value and the oracle hash are bit-unchanged), but an all-zero
-# embedding now yields cos = 0.0 in BOTH engines instead of Spark's
-# non-ANSI NULL vs DuckDB's IEEE inf/NaN — the one input where the
-# unguarded twins could diverge
-_COS_SQL = (
-    "list_dot_product({a}, {b})"
-    " / (greatest(sqrt(list_dot_product({a}, {a})), 1e-300)"
-    " * greatest(sqrt(list_dot_product({b}, {b})), 1e-300))"
+
+def _ivf_rescore_sql(k: int, on: str = "a.cell = p.cell") -> str:
+    """The exact-rescore tail of the join-form IVF twins: every (probe,
+    asg) candidate joined ``on`` its cell, scored by the guarded fold
+    cosine, then the top-k."""
+    return f"""scored AS (
+  SELECT p.query_id, n.vec_id AS neighbor_id,
+         {_COS_SQL.format(a="qv.ve", b="n.ve")} AS cos_sim
+  FROM probes p
+  JOIN asg a ON {on}
+  JOIN v n ON n.vec_id = a.vec_id
+  JOIN v qv ON qv.vec_id = p.query_id
+  WHERE n.vec_id != p.query_id
 )
+{_rnk_sql("scored", k)}"""
+
+
+def _pq_rerank_sql(shortlist: int, k: int) -> str:
+    """The IVF-PQ serving tail over a ``scored`` (query_id, neighbor_id,
+    approx) relation: ADC shortlist, exact guarded-fold re-rank, top-k."""
+    return f"""short AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           ROW_NUMBER() OVER (
+             PARTITION BY query_id ORDER BY approx DESC, neighbor_id
+           ) AS srn
+    FROM scored
+  ) WHERE srn <= {shortlist}
+), rer AS (
+  SELECT s.query_id, s.neighbor_id,
+         {_COS_SQL.format(a="q.ve", b="n.ve")} AS cos_sim
+  FROM short s
+  JOIN v q ON q.vec_id = s.query_id
+  JOIN v n ON n.vec_id = s.neighbor_id
+)
+{_rnk_sql("rer", k)}"""
 
 
 def _pq_sql_cols(book) -> tuple[list[str], list[str]]:
@@ -1483,9 +1519,8 @@ def _pq_sql_cols(book) -> tuple[list[str], list[str]]:
 
 def _build_ivfpq_sql(base_where: str = "") -> str:
     """DuckDB twin of the declarative IVF-PQ path: the cents/asg/probes
-    CTEs are pipeline_ops._build_ann_ivf_sql's (portable md5 sample
-    order, iters=0 init-point centroids, fold cosine), the code columns
-    are _pq_sql's, and ADC approx = Σ_m dot(query-subvector,
+    CTEs are pipeline_ops._ivf_cells_sql's, the code columns are
+    _pq_sql's, and ADC approx = Σ_m dot(query-subvector,
     codeword[code_m]) with the same dyadic codebook literals.
     ``base_where`` restricts the CENTROID SAMPLE only (the X219
     incremental twist: centroids frozen at build time over the base
@@ -1493,75 +1528,28 @@ def _build_ivfpq_sql(base_where: str = "") -> str:
     cfg = _IVFPQ
     book = _pq_codebook()
     sub_exprs, dist_cols = _pq_sql_cols(book)
-    codes = _pq_codes_duck()
-    adc = _pq_adc_duck(book, "k")
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], sample=f"v {base_where}", probe_from="v",
+        n_queries=cfg["n_queries"], nprobe=cfg["nprobe"],
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v {base_where}ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {cfg["nprobe"]}
-), sub AS (
+), {cells}, sub AS (
   SELECT vec_id, {', '.join(sub_exprs)} FROM v
 ), dists AS (
   SELECT vec_id, {', '.join(dist_cols)} FROM sub
 ), codes AS (
-  SELECT vec_id, {codes} FROM dists
+  SELECT vec_id, {_pq_codes_duck()} FROM dists
 ), scored AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id, {adc} AS approx
+  SELECT p.query_id, a.vec_id AS neighbor_id,
+         {_pq_adc_duck(book, "k")} AS approx
   FROM probes p
   JOIN asg a ON a.cell = p.cell
   JOIN codes k ON k.vec_id = a.vec_id
   JOIN v q ON q.vec_id = p.query_id
   WHERE a.vec_id != p.query_id
-), short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY query_id ORDER BY approx DESC, neighbor_id
-           ) AS srn
-    FROM scored
-  ) WHERE srn <= {cfg["shortlist"]}
-), rer AS (
-  SELECT s.query_id, s.neighbor_id,
-         {_COS_SQL.format(a="q.ve", b="n.ve")} AS cos_sim
-  FROM short s
-  JOIN v q ON q.vec_id = s.query_id
-  JOIN v n ON n.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-         ) AS BIGINT) AS rnk
-  FROM rer
-) WHERE rnk <= {cfg["k"]}
+), {_pq_rerank_sql(cfg["shortlist"], cfg["k"])}
 """
 
 
@@ -1596,7 +1584,6 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     return similarity.ann_ivfpq_topk(
         emb.filter(F.col("vec_id") < cfg["n_queries"]),
@@ -1619,59 +1606,19 @@ _ANN_IVF_JOIN = {"k": 5, "n_centroids": 16, "nprobe": 4, "n_queries": 64}
 def _build_ann_ivf_join_sql() -> str:
     """DuckDB twin of operators/similarity.ann_ivf_join_topk under the
     portable config (md5 sample order, iters=0 init-point centroids,
-    guarded fold cosine — _COS_SQL): identical CTE structure to
-    pipeline_ops._build_ann_ivf_sql, with the zero-norm guard mirrored
-    and a larger query set (the point of the join variant is that the
-    query side is a TABLE, never driver-materialized)."""
+    guarded fold cosine — _COS_SQL): pipeline_ops._ivf_cells_sql's
+    cells, the guarded rescore tail and a larger query set (the point
+    of the join variant is that the query side is a TABLE, never
+    driver-materialized)."""
     cfg = _ANN_IVF_JOIN
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], probe_from="v", n_queries=cfg["n_queries"],
+        nprobe=cfg["nprobe"],
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {cfg["nprobe"]}
-), scored AS (
-  SELECT p.query_id, n.vec_id AS neighbor_id,
-         {_COS_SQL.format(a="qv.ve", b="n.ve")} AS cos_sim
-  FROM probes p
-  JOIN asg a ON a.cell = p.cell
-  JOIN v n ON n.vec_id = a.vec_id
-  JOIN v qv ON qv.vec_id = p.query_id
-  WHERE n.vec_id != p.query_id
-)
-SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-         ) AS BIGINT) AS rnk
-  FROM scored
-) WHERE rnk <= {cfg["k"]}
+), {cells}, {_ivf_rescore_sql(cfg["k"])}
 """
 
 
@@ -1681,54 +1628,14 @@ def _build_ann_ivf_filtered_sql() -> str:
     (cell, label) — the predicate prunes candidates before any cosine,
     exactly as the engine's composite join key does."""
     cfg = _ANN_IVF_JOIN
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], probe_from="v", n_queries=cfg["n_queries"],
+        nprobe=cfg["nprobe"], keep=("label",),
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS ve FROM embeddings
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, label, cell FROM (
-    SELECT v.vec_id, v.label, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, label, cell FROM (
-    SELECT q.vec_id AS query_id, q.label, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {cfg["nprobe"]}
-), scored AS (
-  SELECT p.query_id, n.vec_id AS neighbor_id,
-         {_COS_SQL.format(a="qv.ve", b="n.ve")} AS cos_sim
-  FROM probes p
-  JOIN asg a ON a.cell = p.cell AND a.label = p.label
-  JOIN v n ON n.vec_id = a.vec_id
-  JOIN v qv ON qv.vec_id = p.query_id
-  WHERE n.vec_id != p.query_id
-)
-SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-         ) AS BIGINT) AS rnk
-  FROM scored
-) WHERE rnk <= {cfg["k"]}
+), {cells}, {_ivf_rescore_sql(cfg["k"], "a.cell = p.cell AND a.label = p.label")}
 """
 
 
@@ -1756,7 +1663,6 @@ def sim_ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     return similarity.ann_ivf_join_topk_filtered(
         emb.filter(F.col("vec_id") < cfg["n_queries"]),
@@ -1788,7 +1694,6 @@ def sim_ann_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     return similarity.ann_ivf_join_topk(
         emb.filter(F.col("vec_id") < cfg["n_queries"]),
@@ -1818,55 +1723,14 @@ def _build_ann_ivf_incr_sql() -> str:
     frozen centroids and the probe sees the union — bit-identically to
     an index rebuilt from the union with those same centroids."""
     cfg = _ANN_IVF_INCR
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], sample=f"v WHERE vec_id % {cfg['mod']} <> 0",
+        probe_from="v", n_queries=cfg["n_queries"], nprobe=cfg["nprobe"],
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v WHERE vec_id % {cfg["mod"]} <> 0
-    ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {cfg["nprobe"]}
-), scored AS (
-  SELECT p.query_id, n.vec_id AS neighbor_id,
-         {_COS_SQL.format(a="qv.ve", b="n.ve")} AS cos_sim
-  FROM probes p
-  JOIN asg a ON a.cell = p.cell
-  JOIN v n ON n.vec_id = a.vec_id
-  JOIN v qv ON qv.vec_id = p.query_id
-  WHERE n.vec_id != p.query_id
-)
-SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-         ) AS BIGINT) AS rnk
-  FROM scored
-) WHERE rnk <= {cfg["k"]}
+), {cells}, {_ivf_rescore_sql(cfg["k"])}
 """
 
 
@@ -1892,7 +1756,6 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     idx = similarity.IvfIndex.build(base, centroids=cents).absorb(batch)
     return idx.probe(
@@ -1947,7 +1810,6 @@ def sim_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     idx = similarity.IvfIndex.build(
         base, centroids=cents, codebook=_pq_codebook()
@@ -2630,6 +2492,10 @@ _IVF_EVAL = {"k": 5, "n_centroids": 16, "nprobe": 4, "n_queries": 20}
 
 def _build_ivf_recall_sql() -> str:
     cfg = _IVF_EVAL
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], probe_from="v", n_queries=cfg["n_queries"],
+        nprobe=cfg["nprobe"],
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
@@ -2643,36 +2509,7 @@ WITH v AS (
     FROM v q JOIN v n ON n.vec_id != q.vec_id
     WHERE q.vec_id < {cfg["n_queries"]}
   ) WHERE rnk <= {cfg["k"]}
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {cfg["nprobe"]}
-), ivf AS (
+), {cells}, ivf AS (
   SELECT query_id, neighbor_id FROM (
     SELECT p.query_id, n.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (
@@ -2716,7 +2553,6 @@ def sim_ann_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     bf = similarity.cosine_topk(q, emb, k=cfg["k"]).select(
         "query_id", "neighbor_id"
@@ -2856,7 +2692,6 @@ def sim_ivfpq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=_IVFPQ["n_centroids"],
         iters=0,
         sample_cap=_IVFPQ["n_centroids"],
-        hash_fn="md5",
     )
     idx = similarity.IvfIndex.build(
         base, centroids=cents, codebook=_pq_codebook()
@@ -2881,10 +2716,13 @@ def _build_ivfpq_recall_sql() -> str:
     cfg = _IVFPQ
     book = _pq_codebook()
     sub_exprs, dist_cols = _pq_sql_cols(book)
-    max_np = max(_IVFPQ_RECALL_NPROBES)
     codes = _pq_codes_duck()
     adc = _pq_adc_duck(book, "k")
     per_np_ctes, per_np_rows = _ivfpq_recall_sql_tail()
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], probe_from="v", n_queries=cfg["n_queries"],
+        nprobe=max(_IVFPQ_RECALL_NPROBES), prn=True,
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
@@ -2898,36 +2736,7 @@ WITH v AS (
     FROM v q JOIN v n ON n.vec_id != q.vec_id
     WHERE q.vec_id < {cfg["n_queries"]}
   ) WHERE rnk <= {cfg["k"]}
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell, rn AS prn FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {max_np}
-), sub AS (
+), {cells}, sub AS (
   SELECT vec_id, {', '.join(sub_exprs)} FROM v
 ), dists AS (
   SELECT vec_id, {', '.join(dist_cols)} FROM sub
@@ -2966,7 +2775,6 @@ def _ivfpq_recall(
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     crows = sorted(cents.collect(), key=lambda r: r["centroid_id"])
     book = _pq_codebook()
@@ -3112,10 +2920,11 @@ def s16_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_ivfpq_residual_sql(base_where: str = "") -> str:
-    """DuckDB twin of ann_ivfpq_topk(residual=True): cents/asg/probes are
-    _build_ivfpq_sql's; residual code selection uses the expanded-L2
-    tree (dot(s,s) − 2·dot(s,cs) + dot(cs,cs)) − 2·(dot(s,cw) −
-    dot(cs,cw)) + |cw|² with the assigned cell's centroid slices joined
+    """DuckDB twin of ann_ivfpq_topk(residual=True): cents/asg/probes
+    are pipeline_ops._ivf_cells_sql's; residual code selection uses the
+    expanded-L2 tree (dot(s,s) − 2·dot(s,cs) + dot(cs,cs)) −
+    2·(dot(s,cw) − dot(cs,cw)) + |cw|² with the assigned cell's
+    centroid slices joined
     in (runtime folds ≡ the engine's host-literal folds: iters=0
     centroids are exact corpus rows, and both engines accumulate in
     index order); ADC approx = dot(q, c_cell) + Σ_m LUT, the same
@@ -3126,39 +2935,14 @@ def _build_ivfpq_residual_sql(base_where: str = "") -> str:
     cs_exprs, rdist_cols = _pq_residual_sql_cols(book)
     codes = _pq_codes_duck()
     adc = _pq_adc_duck(book, "r")
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], sample=f"v {base_where}", probe_from="v",
+        n_queries=cfg["n_queries"], nprobe=cfg["nprobe"],
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v {base_where}ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {cfg["nprobe"]}
-), rsub AS (
+), {cells}, rsub AS (
   SELECT v.vec_id, a.cell, {', '.join(sub_exprs)}, {', '.join(cs_exprs)}
   FROM v
   JOIN asg a USING (vec_id)
@@ -3175,28 +2959,7 @@ WITH v AS (
   JOIN cents c ON c.centroid_id = p.cell
   JOIN v q ON q.vec_id = p.query_id
   WHERE r.vec_id != p.query_id
-), short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY query_id ORDER BY approx DESC, neighbor_id
-           ) AS srn
-    FROM scored
-  ) WHERE srn <= {cfg["shortlist"]}
-), rer AS (
-  SELECT s.query_id, s.neighbor_id,
-         {_COS_SQL.format(a="q.ve", b="n.ve")} AS cos_sim
-  FROM short s
-  JOIN v q ON q.vec_id = s.query_id
-  JOIN v n ON n.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-         ) AS BIGINT) AS rnk
-  FROM rer
-) WHERE rnk <= {cfg["k"]}
+), {_pq_rerank_sql(cfg["shortlist"], cfg["k"])}
 """
 
 
@@ -3223,7 +2986,6 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     return similarity.ann_ivfpq_topk(
         emb.filter(F.col("vec_id") < cfg["n_queries"]),
@@ -3248,11 +3010,14 @@ def _build_ivfpq_residual_recall_sql() -> str:
     cfg = _IVFPQ
     book = _pq_codebook()
     sub_exprs, _ = _pq_sql_cols(book)
-    max_np = max(_IVFPQ_RECALL_NPROBES)
     cs_exprs, rdist_cols = _pq_residual_sql_cols(book)
     codes = _pq_codes_duck()
     adc = _pq_adc_duck(book, "r")
     per_np_ctes, per_np_rows = _ivfpq_recall_sql_tail()
+    cells = _ivf_cells_sql(
+        cfg["n_centroids"], probe_from="v", n_queries=cfg["n_queries"],
+        nprobe=max(_IVFPQ_RECALL_NPROBES), prn=True,
+    )
     return f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings
@@ -3266,36 +3031,7 @@ WITH v AS (
     FROM v q JOIN v n ON n.vec_id != q.vec_id
     WHERE q.vec_id < {cfg["n_queries"]}
   ) WHERE rnk <= {cfg["k"]}
-), cents AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cell, rn AS prn FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v q, cents c WHERE q.vec_id < {cfg["n_queries"]}
-  ) WHERE rn <= {max_np}
-), rsub AS (
+), {cells}, rsub AS (
   SELECT v.vec_id, a.cell, {', '.join(sub_exprs)}, {', '.join(cs_exprs)}
   FROM v
   JOIN asg a USING (vec_id)
@@ -3370,7 +3106,6 @@ def sim_ann_ivfpq_residual_index(
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     idx = similarity.IvfIndex.build(
         base, centroids=cents, codebook=_pq_codebook(), residual=True
@@ -3425,37 +3160,13 @@ def _build_retrain_swap_sql() -> str:
     codes = _pq_codes_duck()
     adc = _pq_adc_duck(book, "k")
 
-    def phase(tag: str, seq: int, cents_where: str) -> str:
-        return f"""cents_{tag} AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM v {cents_where}ORDER BY h, vec_id LIMIT {cfg["n_centroids"]}
-  )
-), asg_{tag} AS (
-  SELECT vec_id, cell FROM (
-    SELECT v.vec_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY {_COS_SQL.format(a="v.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM v, cents_{tag} c
-  ) WHERE rn = 1
-), probes_{tag} AS (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_COS_SQL.format(a="q.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM qv q, cents_{tag} c
-  ) WHERE rn <= {cfg["nprobe"]}
-), scored_{tag} AS (
+    def phase(tag: str, seq: int, sample: str) -> str:
+        cells = _ivf_cells_sql(
+            cfg["n_centroids"], sample=sample, tag=f"_{tag}",
+            asg=((f"asg_{tag}", "v", "v"),), probe_from="qv",
+            nprobe=cfg["nprobe"],
+        )
+        return f"""{cells}, scored_{tag} AS (
   SELECT p.query_id, a.vec_id AS neighbor_id, {adc} AS approx
   FROM probes_{tag} p
   JOIN asg_{tag} a ON a.cell = p.cell
@@ -3505,8 +3216,8 @@ WITH v AS (
   SELECT vec_id, {', '.join(dist_cols)} FROM sub
 ), codes AS (
   SELECT vec_id, {codes} FROM dists
-), {phase("pre", 1, f"WHERE vec_id < {_DRIFT_OFF} ")},
-{phase("post", 2, "")}
+), {phase("pre", 1, f"v WHERE vec_id < {_DRIFT_OFF}")},
+{phase("post", 2, "v")}
 SELECT * FROM fin_pre UNION ALL SELECT * FROM fin_post
 """
 
@@ -3553,7 +3264,6 @@ def sim_ann_drift_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     idx0 = similarity.IvfIndex.build(
         base, centroids=cents0, codebook=_pq_codebook()
@@ -3566,9 +3276,7 @@ def sim_ann_drift_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not serving.retrain_needed():
         raise AssertionError("planted drift must fire the retrain trigger")
     seq2 = similarity.publish_index(
-        serving.retrain(
-            iters=0, hash_fn="md5", sample_cap=cfg["n_centroids"]
-        ),
+        serving.retrain(iters=0, sample_cap=cfg["n_centroids"]),
         root,
     )
     qs = emb.filter(F.col("vec_id") < cfg["n_queries"])
@@ -3638,7 +3346,6 @@ def _st34_serve(spark: SparkSession, sf_dir: str, phases) -> DataFrame:
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     path = _scratch_dir(prefix="rtvs_st34_idx_")
     similarity.IvfIndex.build(
@@ -3796,7 +3503,6 @@ def sim_ann_ivfpq_index_compact(
         n_centroids=cfg["n_centroids"],
         iters=0,
         sample_cap=cfg["n_centroids"],
-        hash_fn="md5",
     )
     idx = (
         similarity.IvfIndex.build(

@@ -60,21 +60,36 @@ def test_semantic_index_probe_matches_operator(spark, emb, tmp_path):
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter(F.col("vec_id") % 2 == 1)
     idx = dedup.DedupIndex.build(
-        corpus, "semantic", threshold=0.30, iters=0, hash_fn="md5",
-        assign="fold",
+        corpus, "semantic", threshold=0.30, iters=0
     )
-    cents = similarity.ivf_centroids(
-        corpus, n_centroids=16, iters=0, hash_fn="md5"
-    )
+    cents = similarity.ivf_centroids(corpus, n_centroids=16, iters=0)
     direct = dedup.incremental_semantic_dedup(
-        batch, cents, similarity.assign_cells(
-            corpus, cents, assign="fold"
-        ), corpus, threshold=0.30, assign="fold",
+        batch, cents, similarity.assign_cells(corpus, cents), corpus,
+        threshold=0.30,
     )
     assert _rows(idx.probe(batch)) == _rows(direct)
     idx.save(str(tmp_path / "sem_idx"))
     loaded = dedup.DedupIndex.load(spark, str(tmp_path / "sem_idx"))
     assert _rows(loaded.probe(batch)) == _rows(direct)
+
+
+def test_build_rejects_unknown_params(spark, emb, tmp_path):
+    """A key build() does not know — here the removed ``assign`` option —
+    is refused by name instead of being stored and ignored, while an
+    index saved with such a key in its params still loads and serves."""
+    corpus = emb.filter(F.col("vec_id") % 2 == 0)
+    batch = emb.filter(F.col("vec_id") % 2 == 1)
+    with pytest.raises(ValueError, match="assign"):
+        dedup.DedupIndex.build(corpus, "semantic", assign="fold")
+    idx = dedup.DedupIndex.build(
+        corpus, "semantic", threshold=0.30, iters=0
+    )
+    dedup.DedupIndex(
+        idx.kind, {**idx.params, "assign": "fold"}, idx.arts
+    ).save(str(tmp_path / "old_params"))
+    loaded = dedup.DedupIndex.load(spark, str(tmp_path / "old_params"))
+    assert loaded.params["assign"] == "fold"
+    assert _rows(loaded.probe(batch)) == _rows(idx.probe(batch))
 
 
 @pytest.mark.parametrize("kind", ["exact", "minhash"])
@@ -103,8 +118,7 @@ def test_absorb_semantic_freezes_centroids(spark, emb):
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 80))
     idx = dedup.DedupIndex.build(
-        corpus, "semantic", threshold=0.95, iters=0, hash_fn="md5",
-        assign="fold",
+        corpus, "semantic", threshold=0.95, iters=0
     )
     idx2 = idx.absorb(batch)
     # train-once contract: the centroid artifact is the same object/rows
@@ -195,8 +209,7 @@ def test_generation_cursor_persisted_explicitly(spark, emb, tmp_path):
         & (F.col("vec_id") >= 80) & (F.col("vec_id") < 160)
     )
     idx1 = dedup.DedupIndex.build(
-        corpus, "semantic", threshold=0.95, iters=0, hash_fn="md5",
-        assign="fold",
+        corpus, "semantic", threshold=0.95, iters=0
     ).absorb(b1)
     assert idx1.generation == 1
     idx1.save(str(tmp_path / "sem_cursor"))
@@ -497,13 +510,13 @@ def test_retrain_lifecycle_and_ledger(spark, emb, tmp_path):
     )
     idx = dedup.DedupIndex.build(
         base, "semantic", n_centroids=8, threshold=0.95,
-        iters=0, hash_fn="md5", assign="fold",
+        iters=0,
     )
     assert idx.absorbed_share() == 0.0 and not idx.retrain_needed()
     grown = idx.absorb(batch)
     n_total = grown.arts["assign"].count()
     assert grown.absorbed_share() > 0.5 and grown.retrain_needed()
-    fresh = grown.retrain(iters=0, hash_fn="md5")
+    fresh = grown.retrain(iters=0)
     assert fresh.generation == 0
     assert fresh.absorbed_share() == 0.0 and not fresh.retrain_needed()
     assert fresh.arts["assign"].count() == n_total
@@ -528,7 +541,7 @@ def test_dedup_publish_audit_refusal(spark, emb, tmp_path):
     base = emb.filter(F.col("vec_id") % 3 == 0)
     idx = dedup.DedupIndex.build(
         base, "semantic", n_centroids=8, threshold=0.95,
-        iters=0, hash_fn="md5", assign="fold",
+        iters=0,
     )
     seq1 = dedup.publish_index(idx, root)
     assert seq1 == 1

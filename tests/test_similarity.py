@@ -282,19 +282,32 @@ def test_ivf_join_full_probe_equals_bruteforce(spark, sf_dir):
 def test_ivf_join_matches_closure_variant(spark, sf_dir):
     """Same centroid artifact ⇒ the distributed-query-side join plan and
     the ship-queries-in-the-closure operator return the SAME rows (fold
-    scoring both sides — bit-equal cosines, identical tie rules)."""
+    scoring both sides — bit-equal cosines, identical tie rules). An
+    all-zero vector, as a query and in the corpus, scores 0.0 against
+    everything in both forms (guarded norms), never NULL."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 16)
     cents = similarity.ivf_centroids(
-        emb, n_centroids=16, iters=0, sample_cap=16, hash_fn="md5"
+        emb, n_centroids=16, iters=0, sample_cap=16
+    )
+    zero_id = 10**6
+    emb = emb.unionByName(
+        emb.limit(1).select(
+            F.lit(zero_id).cast("long").alias("vec_id"),
+            F.array_repeat(F.lit(0.0).cast("float"), 64).alias("embedding"),
+            "label",
+        )
+    )
+    queries = emb.filter(
+        (F.col("vec_id") < 16) | (F.col("vec_id") == zero_id)
     )
     a = similarity.ann_ivf_topk(
-        queries, emb, k=5, nprobe=4, centroids=cents, assign="fold"
+        queries, emb, k=5, nprobe=4, centroids=cents
     ).collect()
     b = similarity.ann_ivf_join_topk(
         queries, emb, k=5, nprobe=4, centroids=cents
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    assert [r.cos_sim for r in a if r.query_id == zero_id] == [0.0] * 5
 
 
 def test_ivf_join_query_side_stays_distributed(spark, sf_dir):
@@ -311,7 +324,7 @@ def test_ivf_join_query_side_stays_distributed(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 16)
     cents = similarity.ivf_centroids(
-        emb, n_centroids=8, iters=0, sample_cap=8, hash_fn="md5"
+        emb, n_centroids=8, iters=0, sample_cap=8
     )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -350,7 +363,7 @@ def test_ivf_index_absorb_equals_rebuilt_probe(spark, emb, tmp_path):
     base = emb.filter(F.col("vec_id") % 5 != 0)
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     cents = similarity.ivf_centroids(
-        base, n_centroids=8, iters=0, hash_fn="md5"
+        base, n_centroids=8, iters=0
     )
     q = emb.filter(F.col("vec_id") < 10)
 
@@ -380,8 +393,7 @@ def test_ivf_index_drift_and_retrain_trigger(spark, emb):
     0.5 trigger; absorbing a batch larger than the base crosses it. A
     freshly built index (nothing absorbed) never wants a retrain."""
     base = emb.filter(F.col("vec_id") < 100)
-    idx = similarity.IvfIndex.build(base, n_centroids=4, iters=0,
-                                    hash_fn="md5")
+    idx = similarity.IvfIndex.build(base, n_centroids=4, iters=0)
     assert idx.retrain_needed() is False
 
     small = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 120))
@@ -415,7 +427,7 @@ def test_ivfpq_index_codes_absorb_save_load(spark, emb, tmp_path):
     base = emb.filter(F.col("vec_id") % 5 != 0)
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     cents = similarity.ivf_centroids(
-        base, n_centroids=8, iters=0, hash_fn="md5"
+        base, n_centroids=8, iters=0
     )
     q = emb.filter(F.col("vec_id") < 10)
     key = lambda r: (r.query_id, r.rnk)  # noqa: E731
@@ -505,7 +517,7 @@ def test_pq_drift_generations_and_errors(spark, emb):
     base = emb.filter(F.col("vec_id") % 5 != 0)
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     cents = similarity.ivf_centroids(
-        base, n_centroids=8, iters=0, hash_fn="md5"
+        base, n_centroids=8, iters=0
     )
     idx = similarity.IvfIndex.build(
         base, centroids=cents, codebook=book
@@ -539,7 +551,7 @@ def test_ivfpq_residual_degenerates_and_codes_differ(spark, sf_dir, emb):
     book = _pq_codebook()
     queries = emb.filter(F.col("vec_id") < 10)
     cents = similarity.ivf_centroids(
-        emb, n_centroids=8, iters=0, sample_cap=8, hash_fn="md5"
+        emb, n_centroids=8, iters=0, sample_cap=8
     )
     n = emb.count()
     exact = similarity.cosine_topk(queries, emb, k=5).collect()
@@ -597,7 +609,7 @@ def test_ivfpq_residual_index_contract(spark, emb, tmp_path, residual):
     base = emb.filter(F.col("vec_id") % 5 != 0)
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     cents = similarity.ivf_centroids(
-        base, n_centroids=8, iters=0, hash_fn="md5"
+        base, n_centroids=8, iters=0
     )
     q = emb.filter(F.col("vec_id") < 10)
     key = lambda r: (r.query_id, r.rnk)  # noqa: E731
@@ -672,7 +684,7 @@ def test_publish_index_swap_refusal_and_continuity(spark, emb, tmp_path):
         (F.col("vec_id") + 10_000).alias("vec_id"), "embedding", "label"
     )
     idx = similarity.IvfIndex.build(
-        base, n_centroids=4, iters=0, hash_fn="md5",
+        base, n_centroids=4, iters=0,
         codebook=_pq_codebook(),
     )
     assert publish_index(idx, root) == 1
@@ -695,7 +707,7 @@ def test_publish_index_swap_refusal_and_continuity(spark, emb, tmp_path):
     seq1_reader = load_published_index(spark, root, seq=1)
     assert seq1_reader.probe_adc(q, k=3).count() > 0  # continuity
     # retrain: generations reset, corpus carried whole, PQ artifacts kept
-    rt = head.retrain(iters=0, hash_fn="md5", sample_cap=4)
+    rt = head.retrain(iters=0, sample_cap=4)
     assert rt.arts["vectors"].count() == head.arts["vectors"].count()
     gens = {r.gen for r in rt.arts["assign"].select("gen").distinct().collect()}
     assert gens == {0}
@@ -714,12 +726,12 @@ def test_retrain_needed_arms_and_retrain_resolves(spark, emb):
         F.transform(F.col("embedding"), lambda x: -x).alias("embedding"),
     )
     idx = similarity.IvfIndex.build(
-        base, n_centroids=4, iters=0, hash_fn="md5"
+        base, n_centroids=4, iters=0
     )
     assert not idx.retrain_needed()
     grown = idx.absorb(drifted)
     assert grown.retrain_needed()
-    rt = grown.retrain(iters=0, hash_fn="md5", sample_cap=4)
+    rt = grown.retrain(iters=0, sample_cap=4)
     assert not rt.retrain_needed()
 
 
@@ -737,7 +749,7 @@ def test_ivf_index_compact_serving_and_trigger_reset(spark, emb, tmp_path):
     base = emb.filter(F.col("vec_id") % 5 != 0)
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     cents = similarity.ivf_centroids(
-        base, n_centroids=8, iters=0, hash_fn="md5"
+        base, n_centroids=8, iters=0
     )
     q = emb.filter(F.col("vec_id") < 10)
     key = lambda r: (r.query_id, r.rnk)  # noqa: E731
@@ -822,7 +834,7 @@ def test_ivf_filtered_attr_is_join_key(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 16)
     cents = similarity.ivf_centroids(
-        emb, n_centroids=8, iters=0, sample_cap=8, hash_fn="md5"
+        emb, n_centroids=8, iters=0, sample_cap=8
     )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
