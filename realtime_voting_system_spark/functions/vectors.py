@@ -81,8 +81,17 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     """cos(a,b) = dot/(|a|*|b|) — each step a single correctly-rounded IEEE
-    op in fixed order; bit-stable across engines given identical inputs."""
-    return dot(a, b) / (norm(a) * norm(b))
+    op in fixed order; bit-stable across engines given identical inputs.
+    Each norm is guarded with ``greatest(norm, 1e-300)``, the IVF family's
+    rule: the identity on any non-zero vector, while an all-zero vector
+    scores 0.0 against a non-zero one instead of raising DIVIDE_BY_ZERO
+    under ANSI (DuckDB twin: plans.pipeline_ops._COS_SQL)."""
+    return dot(a, b) / (_gnorm(a) * _gnorm(b))
+
+
+def _gnorm(a: Column) -> Column:
+    """``norm`` with the 1e-300 zero guard."""
+    return F.greatest(norm(a), F.lit(1e-300))
 
 
 def make_seq_fold():

@@ -27,10 +27,11 @@ index and ``assign_cells``; ``ann_ivf_topk``'s closure writes the same
 op sequence in numpy; the DuckDB twins write it in one CTE builder
 (plans/pipeline_ops._ivf_cells_sql).
 
-Degenerate inputs: in the IVF and IVF-PQ operators an all-zero embedding
-scores cosine 0 against everything, never NaN — their fold cosines
-divide by the guarded norm ``max(sqrt(fold(v, v)), 1e-300)``, and the
-numpy L2 normalizations of centroid training use
+Degenerate inputs: in the brute-force, LSH, IVF and IVF-PQ operators an
+all-zero embedding scores cosine 0 against any non-zero vector, never
+NaN, NULL or DIVIDE_BY_ZERO — their fold cosines divide by the guarded
+norm ``max(sqrt(fold(v, v)), 1e-300)`` (``functions.vectors.cosine`` on
+the JVM side), and the numpy L2 normalizations of centroid training use
 ``np.where(norm == 0, 1, norm)``.
 """
 
@@ -722,10 +723,11 @@ def cosine_topk_pandas(
             # per query: the HOF operand order (query first), one
             # correctly-rounded op sequence per (query, row) pair
             cols = []
-            nrm = np.sqrt(fold(cm, cm))
+            nrm = np.maximum(np.sqrt(fold(cm, cm)), 1e-300)
             for j in range(len(qids)):
                 q = np.broadcast_to(qm[j], cm.shape)
-                cols.append(fold(q, cm) / (np.sqrt(fold(q, q)) * nrm))
+                qn = np.maximum(np.sqrt(fold(q, q)), 1e-300)
+                cols.append(fold(q, cm) / (qn * nrm))
             sims = np.stack(cols, axis=1)  # (batch, n_queries)
             sims[nids[:, None] == qids[None, :]] = -np.inf  # self-matches
             kk = min(k, sims.shape[0])

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..sources.io import scratch_dir as _scratch_dir
 from ..operators import shapes
-from ..session import tune
+from ..session import LOCAL_CHECKPOINT_MANAGER, tune
 from ..streaming import jobs
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1131,16 +1131,18 @@ def _local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
     return spark.createDataFrame(rdd, schema)
 
 
-# conf scoped around every gate's streaming run, on top of the width:
-# Spark 4.1 validates checkpoint files with checksums computed on a
-# side thread pool (ChecksumCheckpointFileManager), and every state/WAL
-# file CLOSE blocks in awaitResult on its checksum future — thread
-# dumps of the gate's task threads parked there; task runtime 670 ms at
-# 42 ms CPU on the st32 join stage, −0.3..−0.9 s/gate when disabled
-# (interleaved A/B, min of 2). The gates' checkpoints are ephemeral
-# tempdirs discarded at stop, so recovery-time corruption detection
-# buys nothing here; durable deployments keep the default.
+# conf scoped around every gate's streaming run, on top of the width.
+# Gate checkpoints are local scratch dirs, so gates commit them through
+# the FileSystem manager that session.get_spark sets on its builder
+# (driver-owned sessions get it only for the gate's run): without
+# libhadoop the default FileContext manager forks a `readlink` per
+# rename, on top of RawLocalFileSystem's `chmod` per create. Those forks
+# are what the checkpoint file closes of gate task threads waited on;
+# the checksum switch below was first added against that wait. Gate
+# checkpoints are discarded at stop, so recovery-time corruption
+# detection buys nothing here; durable deployments keep checksums on.
 _STREAM_CONF = {
+    "spark.sql.streaming.checkpointFileManagerClass": LOCAL_CHECKPOINT_MANAGER,
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
 }
 
@@ -1194,14 +1196,17 @@ def _stream_shuffle_conf(spark: SparkSession, conf: dict | None = None):
         **_STREAM_CONF,
         **(conf or {}),
     }
-    old = {k: spark.conf.get(k) for k in confs}
+    old = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
         yield
     finally:
         for k, v in old.items():
-            spark.conf.set(k, v)
+            if v is None:  # the caller never set it
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # micro-batch as fast as the gate's capped source delivers

@@ -410,20 +410,21 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # fold cosine, norm guarded with greatest(·, 1e-300), MIRRORED in the Spark
-# plans: for any non-degenerate vector the guard is the identity (norm ≫
-# 1e-300, so the value and the oracle hash are bit-unchanged), but an
-# all-zero embedding yields cos = 0.0 in BOTH engines instead of Spark's
-# non-ANSI NULL vs DuckDB's IEEE inf/NaN — the one input where unguarded
-# twins could diverge
+# plans (functions.vectors.cosine and the IVF family): for any
+# non-degenerate vector the guard is the identity (norm ≫ 1e-300, so the
+# value and the oracle hash are bit-unchanged), but an all-zero embedding
+# yields cos = 0.0 in BOTH engines instead of Spark's ANSI DIVIDE_BY_ZERO
+# (non-ANSI NULL) vs DuckDB's inf/NaN — the one input where unguarded twins
+# could diverge
 _COS_SQL = (
     "list_dot_product({a}, {b})"
     " / (greatest(sqrt(list_dot_product({a}, {a})), 1e-300)"
     " * greatest(sqrt(list_dot_product({b}, {b})), 1e-300))"
 )
 
-# the same fold cosine unguarded — the pair verifies and rescoring of the
-# semantic-dedup twins, sim_ann_ivf and vec_matryoshka_recall, whose Spark
-# sides divide by the raw norms
+# the same fold cosine unguarded — the pair verifies of the semantic-dedup
+# twins, whose Spark sides divide by the raw norms, and sim_ann_ivf's
+# rescore
 _FOLD_COS_SQL = (
     "list_dot_product({a}, {b})"
     " / (sqrt(list_dot_product({a}, {a}))"
@@ -673,15 +674,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dup_clusters(docs, pairs)
 
 
-_EMB_DUP_SQL = """
+_EMB_DUP_SQL = f"""
 WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings WHERE vec_id < 200
 )
 SELECT * FROM (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         list_dot_product(a.ve, b.ve)
-           / (sqrt(list_dot_product(a.ve, a.ve))
-              * sqrt(list_dot_product(b.ve, b.ve))) AS cos_sim
+         {_COS_SQL.format(a="a.ve", b="b.ve")} AS cos_sim
   FROM v a JOIN v b ON a.vec_id < b.vec_id
 ) WHERE cos_sim >= 0.35
 """
@@ -762,7 +761,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search
 # ---------------------------------------------------------------------------
 
-_TOPK_SQL = """
+_TOPK_SQL = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
   FROM embeddings WHERE vec_id < 20
@@ -770,9 +769,7 @@ WITH q AS (
   SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings
 ), scored AS (
   SELECT query_id, neighbor_id,
-         list_dot_product(qv, cv)
-           / (sqrt(list_dot_product(qv, qv))
-              * sqrt(list_dot_product(cv, cv))) AS cos_sim
+         {_COS_SQL.format(a="qv", b="cv")} AS cos_sim
   FROM q, c WHERE query_id != neighbor_id
 ), ranked AS (
   SELECT query_id, neighbor_id, cos_sim,
@@ -829,9 +826,7 @@ WITH v AS (
     ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.query_id != c.vec_id
 ), scored AS (
   SELECT query_id, neighbor_id,
-         list_dot_product(qv.ve, nv.ve)
-           / (sqrt(list_dot_product(qv.ve, qv.ve))
-              * sqrt(list_dot_product(nv.ve, nv.ve))) AS cos_sim
+         {_COS_SQL.format(a="qv.ve", b="nv.ve")} AS cos_sim
   FROM cands
   JOIN v qv ON cands.query_id = qv.vec_id
   JOIN v nv ON cands.neighbor_id = nv.vec_id
@@ -2995,9 +2990,7 @@ WITH bm AS (
   WHERE vec_id = {_RRF_VEC_Q}
 ), vscored AS (
   SELECT vec_id AS doc_id,
-         list_dot_product(qv, cv)
-           / (sqrt(list_dot_product(qv, qv))
-              * sqrt(list_dot_product(cv, cv))) AS cos_sim
+         {_COS_SQL.format(a="qv", b="cv")} AS cos_sim
   FROM (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings), vq
   WHERE vec_id != {_RRF_VEC_Q}
 ), vtop AS (
@@ -5419,7 +5412,7 @@ def _build_matryoshka_sql() -> str:
     SELECT query_id, neighbor_id,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id
-             ORDER BY {_FOLD_COS_SQL.format(a=qa, b=ca)} DESC, neighbor_id
+             ORDER BY {_COS_SQL.format(a=qa, b=ca)} DESC, neighbor_id
            ) AS BIGINT) AS rnk
     FROM q, c WHERE query_id != neighbor_id
   ) WHERE rnk <= {cfg["k"]}

@@ -1,7 +1,8 @@
 """Spark-free tests of the streaming-gate run helper (plans/parity._run_gate):
 fake session and query objects pin the lifecycle contract every st* gate
 relies on — the gate conf is in force while the query runs and restored
-after, the query is always stopped, a missed deadline raises TimeoutError,
+after (a key the caller never set, such as the checkpoint manager class
+here, is unset again), the query is always stopped, a missed deadline raises TimeoutError,
 and a dead stream's exception surfaces at once."""
 
 from __future__ import annotations
@@ -23,11 +24,14 @@ class FakeConf:
     def __init__(self, values):
         self.values = dict(values)
 
-    def get(self, key):
-        return self.values[key]
+    def get(self, key, default):
+        return self.values.get(key, default)
 
     def set(self, key, value):
         self.values[key] = value
+
+    def unset(self, key):
+        del self.values[key]
 
 
 def fake_spark():
@@ -90,6 +94,9 @@ def test_condition_met_runs_under_gate_conf_and_returns_checkpoint():
     assert ckpt == "ckpt-dir"
     assert q.conf_at_start == {
         "spark.sql.shuffle.partitions": str(parity._STREAM_WIDTH),
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            parity.LOCAL_CHECKPOINT_MANAGER
+        ),
         "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
         "spark.sql.streaming.multipleWatermarkPolicy": "max",
     }

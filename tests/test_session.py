@@ -1,11 +1,19 @@
-"""``session.tune``: which conf refusals it skips and which it raises."""
+"""``session``: which conf refusals ``tune`` skips and which it raises,
+and the streaming checkpoint manager ``get_spark`` sets."""
 
 from __future__ import annotations
 
+import glob
+import os
+from datetime import datetime
+
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import IllegalArgumentException
 
 from realtime_voting_system_spark import session
+from realtime_voting_system_spark.schemas import VOTE_EVENT
+from realtime_voting_system_spark.streaming import envelope, jobs
 
 
 def test_tune_skips_static_keys(spark, monkeypatch):
@@ -32,3 +40,76 @@ def test_tune_raises_on_invalid_value(spark, monkeypatch):
     with pytest.raises(IllegalArgumentException):
         session.tune(spark)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def _vote(vote_id, voter_id, cand, minute):
+    return (
+        vote_id, voter_id, cand, datetime(2024, 11, 5, 10, minute), 1,
+        f"Voter {voter_id}", f"Cand {cand}", "Management Party", "Ohio",
+    )
+
+
+def test_local_checkpoints_commit_through_filesystem_manager(spark, tmp_path):
+    """get_spark commits streaming checkpoints through the FileSystem
+    manager (no fork per rename without libhadoop), and the checkpoint
+    keeps its contract under it: a dedup → count stream stops, restarts
+    on new files from its checkpoint, and counts each voter once; the
+    state store keeps Spark's checksum sidecars and Hadoop's .crc files;
+    an atomic create onto an existing file fails on close instead of
+    overwriting it."""
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == session.LOCAL_CHECKPOINT_MANAGER
+    )
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+
+    def publish(rows):
+        df = spark.createDataFrame(rows, VOTE_EVENT)
+        envelope.to_envelope(df.coalesce(1), "vote_id").write.mode(
+            "append"
+        ).json(src)
+
+    def run():
+        stream = envelope.read_envelope_stream(spark, src, VOTE_EVENT)
+        q = jobs.start_to_memory(
+            jobs.votes_per_candidate(jobs.dedup_votes(stream)),
+            "ckpt_manager_counts", ckpt, output_mode="complete",
+            trigger={"availableNow": True},
+        )
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+        return {
+            r.candidate_id: r.vote_count
+            for r in spark.sql("SELECT * FROM ckpt_manager_counts").collect()
+        }
+
+    publish([_vote("v1", "A", "c1", 0), _vote("v2", "B", "c1", 1),
+             _vote("v3", "C", "c2", 2), _vote("v4", "A", "c2", 3)])
+    assert run() == {"c1": 2, "c2": 1}
+    # restart on new files: A's replay is dropped by the recovered state
+    publish([_vote("v5", "A", "c2", 4), _vote("v6", "D", "c2", 5),
+             _vote("v7", "E", "c1", 6)])
+    assert run() == {"c1": 3, "c2": 2}
+
+    deltas = sorted(glob.glob(f"{ckpt}/state/*/*/*.delta"))
+    assert deltas
+    for delta in deltas:
+        d, name = os.path.split(delta)
+        assert os.path.exists(f"{d}/{name}.crc")  # Spark checksum sidecar
+        assert os.path.exists(f"{d}/.{name}.crc")  # Hadoop checksum
+
+    jvm = spark._jvm
+    offset = jvm.org.apache.hadoop.fs.Path(f"file://{ckpt}/offsets/0")
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    fm = manager.CheckpointFileManager.create(
+        offset.getParent(), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert fm.getClass().getName() == session.LOCAL_CHECKPOINT_MANAGER
+    before = (tmp_path / "ckpt/offsets/0").read_bytes()
+    out = fm.createAtomic(offset, False)
+    out.write(0)
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        out.close()
+    assert (tmp_path / "ckpt/offsets/0").read_bytes() == before

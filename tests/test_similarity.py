@@ -134,6 +134,36 @@ def test_pandas_topk_matches_hof(spark, sf_dir):
         assert abs(psim - sim) < 1e-9
 
 
+@pytest.mark.parametrize(
+    "topk", [similarity.cosine_topk, similarity.cosine_topk_pandas]
+)
+def test_bruteforce_zero_vector_scores_zero(spark, sf_dir, topk):
+    """An all-zero embedding, as a query and in the corpus, scores 0.0
+    against every non-zero vector (guarded norms): no DIVIDE_BY_ZERO
+    under ANSI, no NULL. k covers the whole corpus, so every score of
+    the zero vector is in the result; the zero query's neighbors tie at
+    0.0 and come in neighbor-id order."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 30
+    )
+    zero_id = 10**6
+    emb = emb.unionByName(
+        emb.limit(1).select(
+            F.lit(zero_id).cast("long").alias("vec_id"),
+            F.array_repeat(F.lit(0.0).cast("float"), 64).alias("embedding"),
+            "label",
+        )
+    )
+    queries = emb.filter((F.col("vec_id") < 4) | (F.col("vec_id") == zero_id))
+    got = topk(queries, emb, k=30).collect()
+    assert len(got) == 5 * 30
+    zero_q = sorted((r.rnk, r.neighbor_id, r.cos_sim) for r in got
+                    if r.query_id == zero_id)
+    assert zero_q == [(i + 1, i, 0.0) for i in range(30)]
+    zero_n = [r.cos_sim for r in got if r.neighbor_id == zero_id]
+    assert zero_n == [0.0] * 4
+
+
 def test_ivf_centroids_never_shrink(spark, sf_dir):
     """Lloyd refinement with more centroids than distinct clusters leaves
     some cells empty; those must carry the previous centroid forward so

@@ -1,0 +1,104 @@
+#!/usr/bin/env python
+"""Fork census of the live-election streams: how many processes the
+machine starts per streaming micro-batch.
+
+Runs perfbench's three ``live_election`` queries (ST2 and ST3 over
+``dedup_votes``, and the parquet serving table) on the perfbench rig
+against the 20 backlog files, then publishes ``--files`` more files one
+at a time, draining all three queries after each, so every file is one
+data micro-batch per query. The ``processes`` counter of /proc/stat (every
+fork on the machine) is read before the queries start and after they
+stop; the run only reads it. Without libhadoop, Hadoop's local file
+system forks for checkpoint file operations, which this makes visible.
+Run nothing else on the machine meanwhile: the counter is machine-wide.
+
+Usage, from the root of a checkout:
+
+    python tools/fork_census.py [--files 20] [--seed 1]
+
+Prints one JSON line: forks, batches per query, and forks per data
+micro-batch.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import sys
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+sys.path.insert(0, ROOT)
+
+
+def forks_so_far() -> int:
+    with open("/proc/stat") as f:
+        for line in f:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    raise RuntimeError("/proc/stat has no processes line")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--files", type=int, default=20)
+    ap.add_argument("--seed", type=int, default=1)
+    args = ap.parse_args()
+
+    import run as bench  # perfbench/run.py: the rig and the JVM stop
+
+    rig = bench.pin_rig()
+    import workloads
+    from tracer import Tracer
+
+    ctx = workloads.Context(
+        os.path.join(bench.WORK, "census"), args.seed, 0.0, Tracer(False)
+    )
+    try:
+        ctx.start_session()
+        root = ctx.path("events")
+        backlog = workloads.BACKLOG_FILES
+        files, _, _ = workloads.stage_events(ctx, root, backlog + args.files)
+        src = os.path.join(root, "src")
+        os.makedirs(src)
+
+        def publish(path):
+            os.rename(path, os.path.join(src, os.path.basename(path)))
+
+        for path in files[:backlog]:
+            publish(path)
+        f0, t0 = forks_so_far(), time.perf_counter()
+        queries, *_ = workloads.start_queries(ctx, src, "census")
+        for path in [None, *files[backlog:]]:
+            if path is not None:
+                publish(path)
+            for q in queries.values():
+                q.processAllAvailable()
+        progress = {n: list(q.recentProgress) for n, q in queries.items()}
+        for q in queries.values():
+            q.stop()
+        forks, wall = forks_so_far() - f0, time.perf_counter() - t0
+    finally:
+        bench.stop_spark(ctx)
+        shutil.rmtree(bench.WORK, ignore_errors=True)
+
+    data = {
+        n: sum(p["numInputRows"] > 0 for p in prog)
+        for n, prog in progress.items()
+    }
+    print(json.dumps({
+        "cpus": rig["SPARK_GRAFT_CPUS"],
+        "files": backlog + args.files,
+        "forks": forks,
+        "wall_s": round(wall, 1),
+        "batches": {n: len(p) for n, p in progress.items()},
+        "data_batches": data,
+        "forks_per_data_batch": round(forks / sum(data.values()), 1),
+    }))
+
+
+if __name__ == "__main__":
+    main()
