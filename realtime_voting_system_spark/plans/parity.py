@@ -1136,14 +1136,13 @@ def _local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
 # the FileSystem manager that session.get_spark sets on its builder
 # (driver-owned sessions get it only for the gate's run): without
 # libhadoop the default FileContext manager forks a `readlink` per
-# rename, on top of RawLocalFileSystem's `chmod` per create. Those forks
-# are what the checkpoint file closes of gate task threads waited on;
-# the checksum switch below was first added against that wait. Gate
-# checkpoints are discarded at stop, so recovery-time corruption
-# detection buys nothing here; durable deployments keep checksums on.
+# rename, on top of RawLocalFileSystem's `chmod` per create, and the
+# checkpoint file closes of gate task threads waited on those forks.
+# Checkpoint checksums stay on: with this manager, turning them off
+# changed the 30 gates' summed time by -1.9 % (median of 7 interleaved
+# pairs at sf0.1, 4 cores), inside the checksum-on runs' quartile spread.
 _STREAM_CONF = {
     "spark.sql.streaming.checkpointFileManagerClass": LOCAL_CHECKPOINT_MANAGER,
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
 }
 
 

@@ -13,8 +13,9 @@ natively:
   Local sessions (``session.get_spark``) commit it through Spark's
   FileSystem checkpoint manager: without libhadoop the default FileContext
   manager forks a ``readlink`` per rename (665 forks per micro-batch of
-  each live-election query, against 144). Sessions we did not build keep FileContext,
-  the manager whose rename is atomic without overwrite on HDFS.
+  each live-election query, against 144). Sessions we did not build keep
+  FileContext, the manager whose rename is atomic without overwrite on
+  HDFS.
 - ST8        = 30 s processing-time trigger default.
 - W2/W3-in-streaming (ranked outputs) = ``foreachBatch`` recompute — rank
   windows are unsupported in pure writeStream; the aggregate is

@@ -2,8 +2,8 @@
 fake session and query objects pin the lifecycle contract every st* gate
 relies on — the gate conf is in force while the query runs and restored
 after (a key the caller never set, such as the checkpoint manager class
-here, is unset again), the query is always stopped, a missed deadline raises TimeoutError,
-and a dead stream's exception surfaces at once."""
+here, is unset again), the query is always stopped, a missed deadline
+raises TimeoutError, and a dead stream's exception surfaces at once."""
 
 from __future__ import annotations
 
@@ -97,7 +97,7 @@ def test_condition_met_runs_under_gate_conf_and_returns_checkpoint():
         "spark.sql.streaming.checkpointFileManagerClass": (
             parity.LOCAL_CHECKPOINT_MANAGER
         ),
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled": "true",
         "spark.sql.streaming.multipleWatermarkPolicy": "max",
     }
 
