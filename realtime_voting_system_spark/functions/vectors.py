@@ -82,16 +82,23 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """cos(a,b) = dot/(|a|*|b|) — each step a single correctly-rounded IEEE
     op in fixed order; bit-stable across engines given identical inputs.
-    Each norm is guarded with ``greatest(norm, 1e-300)``, the IVF family's
-    rule: the identity on any non-zero vector, while an all-zero vector
-    scores 0.0 against a non-zero one instead of raising DIVIDE_BY_ZERO
-    under ANSI (DuckDB twin: plans.pipeline_ops._COS_SQL)."""
-    return dot(a, b) / (_gnorm(a) * _gnorm(b))
+    The divisor is guarded (``cos_from``)."""
+    return cos_from(dot(a, b), norm(a), norm(b))
 
 
-def _gnorm(a: Column) -> Column:
-    """``norm`` with the 1e-300 zero guard."""
-    return F.greatest(norm(a), F.lit(1e-300))
+def cos_from(d: Column, na: Column, nb: Column) -> Column:
+    """``d / greatest(na * nb, 1e-300)``, the zero guard of every cosine
+    (IVF family included; DuckDB twin: plans.pipeline_ops._COS_SQL). On
+    non-zero vectors it is the identity, the same single multiply, while
+    an all-zero vector scores 0.0 against any vector, itself included,
+    instead of raising DIVIDE_BY_ZERO under ANSI. The product is guarded,
+    not each norm: 1e-300 * 1e-300 underflows to 0.0."""
+    return d / F.greatest(na * nb, F.lit(1e-300))
+
+
+def cos_sql(d: str, na: str, nb: str) -> str:
+    """SQL text of ``cos_from``."""
+    return f"{d} / greatest({na} * {nb}, {1e-300!r}D)"
 
 
 def make_seq_fold():

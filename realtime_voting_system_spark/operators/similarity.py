@@ -28,11 +28,11 @@ op sequence in numpy; the DuckDB twins write it in one CTE builder
 (plans/pipeline_ops._ivf_cells_sql).
 
 Degenerate inputs: in the brute-force, LSH, IVF and IVF-PQ operators an
-all-zero embedding scores cosine 0 against any non-zero vector, never
-NaN, NULL or DIVIDE_BY_ZERO — their fold cosines divide by the guarded
-norm ``max(sqrt(fold(v, v)), 1e-300)`` (``functions.vectors.cosine`` on
-the JVM side), and the numpy L2 normalizations of centroid training use
-``np.where(norm == 0, 1, norm)``.
+all-zero embedding scores cosine 0 against any vector, another all-zero
+one included, never NaN, NULL or DIVIDE_BY_ZERO — their fold cosines
+divide by the guarded product of the norms ``max(|a|*|b|, 1e-300)``
+(``functions.vectors.cos_from`` on the JVM side), and the numpy L2
+normalizations of centroid training use ``np.where(norm == 0, 1, norm)``.
 """
 
 from __future__ import annotations
@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import (
     as_double,
+    cos_from,
+    cos_sql,
     cosine,
     dlit_sql,
     dnum_sql,
@@ -363,7 +365,7 @@ def ann_ivf_topk(
 
     Every cosine — cell assignment, probe choice and the rescore — is
     the sequential fold (functions.vectors.make_seq_fold) with the
-    zero-norm guard ``max(sqrt(fold), 1e-300)``: bit-equal to the JVM
+    zero guard ``max(|a|*|b|, 1e-300)``: bit-equal to the JVM
     projection and to DuckDB's guarded ``list_dot_product`` expression,
     and an all-zero vector scores 0 against everything, never NaN. IVF
     adapts to the data's cluster structure; LSH (ann_lsh_topk) needs no
@@ -378,16 +380,17 @@ def ann_ivf_topk(
     cnorms = [_host_norm(r["cv"]) for r in crows]
     fold = make_seq_fold()
 
-    def gnorm(vm):
-        return np.maximum(np.sqrt(fold(vm, vm)), 1e-300)
+    def nrm(vm):
+        return np.sqrt(fold(vm, vm))
 
     def cell_cos(vm):
         """(rows × K) guarded fold cosines against the centroid table,
         in centroid-id order."""
-        nv = gnorm(vm)
+        nv = nrm(vm)
         return np.stack(
             [
-                fold(vm, np.broadcast_to(c, vm.shape)) / (nv * cnorm)
+                fold(vm, np.broadcast_to(c, vm.shape))
+                / np.maximum(nv * cnorm, 1e-300)
                 for c, cnorm in zip(cm, cnorms)
             ],
             axis=1,
@@ -418,7 +421,7 @@ def ann_ivf_topk(
                 sub = vm[mask]
                 q = np.broadcast_to(qm[j], sub.shape)
                 # query first, then neighbor — the HOF operand order
-                cos = fold(q, sub) / (gnorm(q) * gnorm(sub))
+                cos = fold(q, sub) / np.maximum(nrm(q) * nrm(sub), 1e-300)
                 out.append(
                     pd.DataFrame(
                         {
@@ -483,7 +486,7 @@ def ann_ivf_join_topk(
 
     Scores are the sequential-fold HOF cosine with norms hoisted (one
     per row each side; centroid norms host-computed in the same IEEE
-    fold order) and the ``greatest(norm, 1e-300)`` zero-norm guard —
+    fold order) and the ``greatest(|a|*|b|, 1e-300)`` zero guard —
     bit-equal to DuckDB's guarded ``list_dot_product`` expression, so
     the whole result sits under the value-hash gate
     (plans/scale_ops.sim_ann_ivf_join). ``nprobe == n_centroids``
@@ -540,13 +543,13 @@ def ann_ivf_join_topk_filtered(
 
 def _host_norm(vec) -> float:
     """Driver-side L2 norm in the SAME IEEE fold order as the sequential
-    dot (one accumulate per component), with the 1e-300 zero guard."""
+    dot (one accumulate per component)."""
     import math as _math
 
     acc = 0.0
     for x in vec:
         acc = acc + float(x) * float(x)
-    return max(_math.sqrt(acc), 1e-300)
+    return _math.sqrt(acc)
 
 
 def _centroid_lits(crows):
@@ -569,14 +572,10 @@ def _cell_structs_sql(clits, v: str, nrm: str) -> str:
     lexicographic, so max/desc-sort orders by cos desc then
     centroid_id asc."""
     return "array(" + ",".join(
-        f"named_struct('cos', {dot_sql(v, lit)} / ({nrm} * {dnum_sql(cn)}), "
+        f"named_struct('cos', {cos_sql(dot_sql(v, lit), nrm, dnum_sql(cn))}, "
         f"'ncid', CAST({-cid} AS BIGINT))"
         for cid, lit, cn in clits
     ) + ")"
-
-
-def _gnorm_sql(c: str) -> str:
-    return f"greatest({norm_sql(c)}, {1e-300!r}D)"
 
 
 def _ivf_assigned(
@@ -598,7 +597,7 @@ def _ivf_assigned(
             as_double(F.col(vec_col)).alias("nv_vec"),
             *[F.col(c) for c in keep_cols],
         )
-        .withColumn("__nn", F.expr(_gnorm_sql("`nv_vec`")))
+        .withColumn("__nn", F.expr(norm_sql("`nv_vec`")))
         .withColumn(
             "cell",
             F.expr(f"CAST(-array_max({structs}).ncid AS BIGINT)"),
@@ -633,7 +632,7 @@ def _ivf_probe_assigned(
             as_double(F.col(vec_col)).alias("qv_vec"),
             *([F.col(match_col)] if match_col else []),
         )
-        .withColumn("__qn", F.expr(_gnorm_sql("`qv_vec`")))
+        .withColumn("__qn", F.expr(norm_sql("`qv_vec`")))
         .withColumn(
             "cell",
             F.expr(
@@ -652,8 +651,10 @@ def _ivf_probe_assigned(
             "neighbor_id",
             "cell",
             (
-                dot(F.col("qv_vec"), F.col("nv_vec"))
-                / (F.col("__qn") * F.col("__nn"))
+                cos_from(
+                    dot(F.col("qv_vec"), F.col("nv_vec")),
+                    F.col("__qn"), F.col("__nn"),
+                )
             ).alias("cos_sim"),
         )
     )
@@ -723,11 +724,11 @@ def cosine_topk_pandas(
             # per query: the HOF operand order (query first), one
             # correctly-rounded op sequence per (query, row) pair
             cols = []
-            nrm = np.maximum(np.sqrt(fold(cm, cm)), 1e-300)
+            nrm = np.sqrt(fold(cm, cm))
             for j in range(len(qids)):
                 q = np.broadcast_to(qm[j], cm.shape)
-                qn = np.maximum(np.sqrt(fold(q, q)), 1e-300)
-                cols.append(fold(q, cm) / (qn * nrm))
+                qn = np.sqrt(fold(q, q))
+                cols.append(fold(q, cm) / np.maximum(qn * nrm, 1e-300))
             sims = np.stack(cols, axis=1)  # (batch, n_queries)
             sims[nids[:, None] == qids[None, :]] = -np.inf  # self-matches
             kk = min(k, sims.shape[0])
@@ -1116,7 +1117,7 @@ def _ivfpq_adc_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         as_double(F.col(vec_col)).alias("qve"),
-    ).withColumn("__qn", F.expr(_gnorm_sql("`qve`")))
+    ).withColumn("__qn", F.expr(norm_sql("`qve`")))
     wcols = [
         F.expr(dot_sql(
             f"slice(`qve`, {m * sub + 1}, {sub})", dlit_sql(book[m][kk])
@@ -1168,8 +1169,10 @@ def _ivfpq_adc_topk(
             "query_id",
             "neighbor_id",
             (
-                dot(F.col("qve"), F.col("nv_vec"))
-                / (F.col("__qn") * F.col("__nn"))
+                cos_from(
+                    dot(F.col("qve"), F.col("nv_vec")),
+                    F.col("__qn"), F.col("__nn"),
+                )
             ).alias("cos_sim"),
         )
         .withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -1536,8 +1539,8 @@ class IvfIndex:
         cos_by_cell = F.expr(
             "map("
             + ",".join(
-                f"{cid}, {dot_sql('`v`', lit)}"
-                f" / ({_gnorm_sql('`v`')} * {dnum_sql(cn)})"
+                f"{cid}, "
+                + cos_sql(dot_sql("`v`", lit), norm_sql("`v`"), dnum_sql(cn))
                 for cid, lit, cn in _centroid_lits(crows)
             )
             + ")"
@@ -1627,7 +1630,7 @@ class IvfIndex:
                 F.col("v").alias("nv_vec"),
                 "cell",
             )
-            .withColumn("__nn", F.expr(_gnorm_sql("`nv_vec`")))
+            .withColumn("__nn", F.expr(norm_sql("`nv_vec`")))
         )
         return _ivf_probe_assigned(
             queries, assigned, crows, p["id_col"], p["vec_col"], k, nprobe
@@ -1721,7 +1724,7 @@ class IvfIndex:
             bool(p.get("residual")), p["id_col"], p["vec_col"],
             k, nprobe, shortlist,
             vectors=by_id("vectors", F.col("v").alias("nv_vec")).withColumn(
-                "__nn", F.expr(_gnorm_sql("`nv_vec`"))
+                "__nn", F.expr(norm_sql("`nv_vec`"))
             ),
         )
 

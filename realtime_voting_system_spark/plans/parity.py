@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..sources.io import scratch_dir as _scratch_dir
 from ..operators import shapes
-from ..session import LOCAL_CHECKPOINT_MANAGER, tune
+from ..session import LOCAL_CHECKPOINT_MANAGER, LOCAL_STREAM_WIDTH, tune
 from ..streaming import jobs
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1104,14 +1104,6 @@ _PYDS_DIM_SQL = ", ".join(f"('{c}', '{n}', '{p}')" for c, n, p in _PYDS_DIM)
 from contextlib import contextmanager
 
 
-# State-store partitions per stateful operator in every streaming gate.
-# Interleaved A/B (3 trials, medians) against the old defaultParallelism
-# width of 32: st2 13.7→5.2 s, st31 20.2→12.7 s, st30 26→13 s, st7
-# 18→8 s. Stream-stream joins commit FOUR stores per partition per
-# micro-batch; their A/B at widths 8/4/2 (min-of-3): st32 7.06/6.21/
-# 6.14 s, st15 5.27/5.13/4.98 s — 8→4 is a consistent win, 4→2 is inside
-# the noise, so one width serves join and non-join gates alike.
-_STREAM_WIDTH = 4
 _GATE_DEADLINE_S = 120.0  # wall-clock budget of one gate run
 
 
@@ -1177,8 +1169,8 @@ def _drain_until(q, check, what: str) -> None:
 
 @contextmanager
 def _stream_shuffle_conf(spark: SparkSession, conf: dict | None = None):
-    """Scope shuffle partitions to _STREAM_WIDTH (plus _STREAM_CONF and
-    the gate's own ``conf``) around a streaming run and RESTORE the
+    """Scope shuffle partitions to LOCAL_STREAM_WIDTH (plus _STREAM_CONF
+    and the gate's own ``conf``) around a streaming run and RESTORE the
     caller's values after: state-store instances = shuffle partitions,
     so every stateful operator commits that many store files per
     micro-batch — pure checkpoint overhead at gate-sized event volumes
@@ -1187,11 +1179,17 @@ def _stream_shuffle_conf(spark: SparkSession, conf: dict | None = None):
     reason its sources cap at max_rows. The width is baked into the
     checkpoint at first start, so every (re)start against one
     checkpoint must run inside such a scope; the caller's batch-query
-    conf is none of our business."""
+    conf is none of our business.
+
+    Measured widths (interleaved A/B): against the old defaultParallelism
+    width of 32 (3 trials, medians) st2 13.7→5.2 s, st31 20.2→12.7 s,
+    st30 26→13 s, st7 18→8 s. Against width 4 (the 27 streaming gates
+    summed, ``python bench.py <gate names>`` at sf0.1, 4 cores, 5 pairs)
+    the median went 145.4 → 138.3 s, inside width 4's own quartile
+    spread (129.6-150.9 s), so the gates share the local sessions' one
+    width rather than keep a second."""
     confs = {
-        "spark.sql.shuffle.partitions": str(
-            min(spark.sparkContext.defaultParallelism, _STREAM_WIDTH)
-        ),
+        "spark.sql.shuffle.partitions": str(LOCAL_STREAM_WIDTH),
         **_STREAM_CONF,
         **(conf or {}),
     }

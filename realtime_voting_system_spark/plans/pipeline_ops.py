@@ -409,17 +409,18 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # _ivf_cells_sql
 # ---------------------------------------------------------------------------
 
-# fold cosine, norm guarded with greatest(·, 1e-300), MIRRORED in the Spark
-# plans (functions.vectors.cosine and the IVF family): for any
-# non-degenerate vector the guard is the identity (norm ≫ 1e-300, so the
-# value and the oracle hash are bit-unchanged), but an all-zero embedding
-# yields cos = 0.0 in BOTH engines instead of Spark's ANSI DIVIDE_BY_ZERO
+# fold cosine, the norms' product guarded with greatest(·, 1e-300),
+# MIRRORED in the Spark plans (functions.vectors.cos_from, the IVF family
+# included): for any non-degenerate pair the guard is the identity
+# (|a|*|b| ≫ 1e-300, so the value and the oracle hash are bit-unchanged),
+# but an all-zero embedding yields cos = 0.0 in BOTH engines, against
+# another all-zero one too, instead of Spark's ANSI DIVIDE_BY_ZERO
 # (non-ANSI NULL) vs DuckDB's inf/NaN — the one input where unguarded twins
 # could diverge
 _COS_SQL = (
     "list_dot_product({a}, {b})"
-    " / (greatest(sqrt(list_dot_product({a}, {a})), 1e-300)"
-    " * greatest(sqrt(list_dot_product({b}, {b})), 1e-300))"
+    " / greatest(sqrt(list_dot_product({a}, {a}))"
+    " * sqrt(list_dot_product({b}, {b})), 1e-300)"
 )
 
 # the same fold cosine unguarded — the pair verifies of the semantic-dedup

@@ -30,6 +30,10 @@ LOCAL_CHECKPOINT_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
+# Shuffle partitions of the streams of a local session: one state store
+# per stateful operator per micro-batch (see get_spark)
+LOCAL_STREAM_WIDTH = 1
+
 # Conf that can be flipped on a live session (used on driver-owned sessions).
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
@@ -78,9 +82,11 @@ def get_spark(
 ) -> SparkSession:
     """Build the tuned local session.
 
-    ``local[$SPARK_GRAFT_CPUS]`` (default 32). Shuffle partitions default to
-    the core count: at sf0.1 every shuffle fits in memory; on a real cluster
-    this is AQE-coalesced from a higher initial number instead.
+    ``local[$SPARK_GRAFT_CPUS]`` (default 32). Batch plans shuffle to
+    ``shuffle_partitions`` (default: the core count), set as AQE's initial
+    partition number: at sf0.1 every shuffle fits in memory; on a real
+    cluster AQE coalesces from a higher initial number instead. Streams
+    shuffle to ``LOCAL_STREAM_WIDTH``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -88,7 +94,26 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Two widths. Streaming plans never run AQE, so their stateful
+        # operators get spark.sql.shuffle.partitions: one state-store
+        # version (a task, a delta and a checksum file, their .crc files,
+        # a forked chmod each without libhadoop) per partition per
+        # micro-batch. Batch plans with AQE and partition coalescing on
+        # (_RUNTIME_CONF) take initialPartitionNum instead
+        # (SQLConf.numShufflePartitions), so they keep the core count.
+        # perfbench live_election (4 cores, 10 interleaved pairs) at width
+        # 4 → 1: latency_p50_s 1.21 → 0.71 s, refresh_p50_s 15.5 → 10.3 s;
+        # vote-count state commit 117 → 6 ms, 144 → 59 forks per query
+        # data micro-batch (tools/fork_census.py); width 2 read higher
+        # than 1 in 2 of 2 pairs. A caller who turns AQE off on such a
+        # session gets width-1 batch plans. Kept out of
+        # _RUNTIME_CONF/tune(): a driver-owned session's streams may run
+        # on a cluster.
+        .config("spark.sql.shuffle.partitions", str(LOCAL_STREAM_WIDTH))
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions),
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Keep stdout/stderr free of stage-progress bars: the bench

@@ -27,6 +27,13 @@ O(events). The dedup state is the one unbounded key-space (voter_id) —
 bounded by the watermark via ``dropDuplicatesWithinWatermark``: voters
 outside the lateness window age out of state, mirroring "an election day"
 retention (plain dropDuplicates would keep voter_id state forever).
+Each stateful operator commits one state-store version per shuffle
+partition per micro-batch, so local sessions run streams at one partition
+(``session.LOCAL_STREAM_WIDTH``): at ~1,000 events per batch a wider
+store only multiplies commit files and tasks. A checkpoint keeps the
+width its query first started with, whatever the session says later;
+on a cluster, size ``spark.sql.shuffle.partitions`` to the key
+cardinality and throughput before that first start.
 """
 
 from __future__ import annotations

@@ -11,6 +11,7 @@ from types import SimpleNamespace
 
 import pytest
 
+from realtime_voting_system_spark import session
 from realtime_voting_system_spark.plans import parity
 
 CALLER_CONF = {
@@ -35,10 +36,7 @@ class FakeConf:
 
 
 def fake_spark():
-    return SimpleNamespace(
-        conf=FakeConf(CALLER_CONF),
-        sparkContext=SimpleNamespace(defaultParallelism=8),
-    )
+    return SimpleNamespace(conf=FakeConf(CALLER_CONF))
 
 
 class FakeQuery:
@@ -93,7 +91,7 @@ def test_condition_met_runs_under_gate_conf_and_returns_checkpoint():
     )
     assert ckpt == "ckpt-dir"
     assert q.conf_at_start == {
-        "spark.sql.shuffle.partitions": str(parity._STREAM_WIDTH),
+        "spark.sql.shuffle.partitions": str(session.LOCAL_STREAM_WIDTH),
         "spark.sql.streaming.checkpointFileManagerClass": (
             parity.LOCAL_CHECKPOINT_MANAGER
         ),

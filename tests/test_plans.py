@@ -9,6 +9,8 @@ import pytest
 
 from realtime_voting_system_spark.plans.parity import QUERIES
 
+from .conftest import BATCH_WIDTH, batch_width, exchange_widths
+
 
 def _plan(spark, sf_dir, name: str) -> str:
     df = QUERIES[name](spark, sf_dir)
@@ -255,13 +257,14 @@ def test_results_partition_invariant(spark, sf_dir):
         )
 
     base = {n: run(n) for n in names}
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
+    # the setting reaches the plans: the salted aggregate's exchanges
+    # narrow from the suite's 8 to 3
+    probe = "a19_salted_agg"
+    assert exchange_widths(QUERIES[probe](spark, sf_dir)) == {8}
+    with batch_width(spark, 3):
+        assert exchange_widths(QUERIES[probe](spark, sf_dir)) == {3}
         for n in names:
             assert run(n) == base[n], f"{n} varies with partition count"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_tpch_topk_avoid_global_sort(spark, sf_dir):
@@ -544,7 +547,7 @@ def test_aqe_skew_join_splits_hot_partition(spark):
         # low byte threshold, and an incompressible payload (lz4 on a
         # constant key + sequential ids would deflate the hot partition
         # under the threshold — measured while building this test)
-        "spark.sql.shuffle.partitions": "100",
+        BATCH_WIDTH: "100",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.5",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
@@ -717,19 +720,15 @@ def test_pagerank_partition_count_invariance(spark, sf_dir):
     partitions — the property float PageRank fundamentally lacks."""
     from realtime_voting_system_spark.plans.parity import QUERIES
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     results = []
-    try:
-        for n in ("3", "8"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
+    for n in (3, 8):
+        with batch_width(spark, n):
             rows = sorted(
                 map(tuple, QUERIES["g4_pagerank_fixedpoint"](
                     spark, sf_dir).collect())
             )
             results.append(rows)
             spark.catalog.clearCache()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert results[0] == results[1]
 
 
@@ -741,19 +740,15 @@ def test_label_propagation_partition_count_invariance(spark, sf_dir):
     labels than nodes) and every label is itself a node id."""
     from realtime_voting_system_spark.plans.parity import QUERIES
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     results = []
-    try:
-        for n in ("3", "8"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
+    for n in (3, 8):
+        with batch_width(spark, n):
             rows = sorted(
                 map(tuple, QUERIES["g6_label_propagation"](
                     spark, sf_dir).collect())
             )
             results.append(rows)
             spark.catalog.clearCache()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert results[0] == results[1]
     nodes = {r[0] for r in results[0]}
     labels = {r[1] for r in results[0]}
@@ -791,19 +786,15 @@ def test_markov_stationary_partition_count_invariance(spark, sf_dir):
     sanity: total scaled mass never grows (integer floor losses only)."""
     from realtime_voting_system_spark.plans.parity import QUERIES
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     results = []
-    try:
-        for n in ("3", "8"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
+    for n in (3, 8):
+        with batch_width(spark, n):
             rows = sorted(
                 map(tuple, QUERIES["g7_markov_stationary"](
                     spark, sf_dir).collect())
             )
             results.append(rows)
             spark.catalog.clearCache()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert results[0] == results[1]
     total = sum(r[1] for r in results[0])
     assert 0 < total <= len(results[0]) * 1_000_000_000
@@ -832,18 +823,14 @@ def test_kcore_partition_count_invariance(spark, sf_dir):
     from realtime_voting_system_spark.plans.graph_ops import _KC_K
     from realtime_voting_system_spark.plans.parity import QUERIES
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     results = []
-    try:
-        for n in ("3", "8"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
+    for n in (3, 8):
+        with batch_width(spark, n):
             rows = sorted(
                 map(tuple, QUERIES["g8_kcore"](spark, sf_dir).collect())
             )
             results.append(rows)
             spark.catalog.clearCache()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert results[0] == results[1]
     assert results[0]  # non-degenerate: a core exists at test scale
     total_deg = sum(r[1] for r in results[0])
@@ -974,18 +961,14 @@ def test_hyperanf_partition_invariance_and_monotone(spark, sf_dir):
     verdicts — must be identical across partition layouts; the
     neighborhood function must be monotone with N(0) = n_nodes and every
     sketch within the envelope."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
+    with batch_width(spark, 3):
         a = sorted(
             map(tuple, QUERIES["g11_hyperanf"](spark, sf_dir).collect())
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with batch_width(spark, 8):
         b = sorted(
             map(tuple, QUERIES["g11_hyperanf"](spark, sf_dir).collect())
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert a == b
     ns = [r[1] for r in a]            # ordered by t after sort
     assert ns == sorted(ns)           # monotone neighborhood function

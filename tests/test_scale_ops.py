@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from realtime_voting_system_spark.operators import chunking, incremental, layout, shapes
 from realtime_voting_system_spark.plans.parity import QUERIES
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, batch_width
 
 
 # ---------------------------------------------------------------------------
@@ -723,16 +723,12 @@ def test_heavy_hitters_mg_bit_equal_to_exact_any_layout(spark):
     exact = QUERIES["text_heavy_hitters"](spark, SF_DIR)
     base = sorted(map(tuple, exact.collect()))
     assert base  # non-vacuous
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for parts in ("3", "17"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+    for parts in (3, 17):
+        with batch_width(spark, parts):
             got = sorted(
                 map(tuple, QUERIES["text_heavy_hitters_mg"](spark, SF_DIR).collect())
             )
-            assert got == base, f"MG path diverged at {parts} partitions"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        assert got == base, f"MG path diverged at {parts} partitions"
 
 
 def test_sliding_dau_hll_in_bound_and_layout_independent(spark):
@@ -742,15 +738,11 @@ def test_sliding_dau_hll_in_bound_and_layout_independent(spark):
     rows = QUERIES["events_sliding_dau_hll"](spark, SF_DIR).collect()
     assert rows and all(r["sketch_in_bound"] for r in rows)
     base = sorted(map(tuple, rows))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
+    with batch_width(spark, 7):
         again = sorted(
             map(tuple, QUERIES["events_sliding_dau_hll"](spark, SF_DIR).collect())
         )
-        assert again == base
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert again == base
 
 
 def test_walk_to_root_depths_and_cycle_refusal(spark):
@@ -824,15 +816,11 @@ def test_ivfpq_declarative_layout_independent_and_no_cartesian(spark):
         map(tuple, QUERIES["sim_ann_ivfpq"](spark, SF_DIR).collect())
     )
     assert base
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "5")
+    with batch_width(spark, 5):
         again = sorted(
             map(tuple, QUERIES["sim_ann_ivfpq"](spark, SF_DIR).collect())
         )
-        assert again == base
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert again == base
     df = QUERIES["sim_ann_ivfpq"](spark, SF_DIR)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -1,5 +1,7 @@
 """``session``: which conf refusals ``tune`` skips and which it raises,
-and the streaming checkpoint manager ``get_spark`` sets."""
+the streaming checkpoint manager ``get_spark`` sets, and its two shuffle
+widths (batch plans at AQE's initial partition number, streams at
+``LOCAL_STREAM_WIDTH``)."""
 
 from __future__ import annotations
 
@@ -14,6 +16,10 @@ from pyspark.errors import IllegalArgumentException
 from realtime_voting_system_spark import session
 from realtime_voting_system_spark.schemas import VOTE_EVENT
 from realtime_voting_system_spark.streaming import envelope, jobs
+
+from .conftest import BATCH_WIDTH, exchange_widths
+
+STREAM_WIDTH = "spark.sql.shuffle.partitions"
 
 
 def test_tune_skips_static_keys(spark, monkeypatch):
@@ -49,6 +55,91 @@ def _vote(vote_id, voter_id, cand, minute):
     )
 
 
+FIRST_VOTES = [_vote("v1", "A", "c1", 0), _vote("v2", "B", "c1", 1),
+               _vote("v3", "C", "c2", 2), _vote("v4", "A", "c2", 3)]
+MORE_VOTES = [_vote("v5", "A", "c2", 4), _vote("v6", "D", "c2", 5),
+              _vote("v7", "E", "c1", 6)]
+
+
+def _publish(spark, src, rows):
+    df = spark.createDataFrame(rows, VOTE_EVENT)
+    envelope.to_envelope(df.coalesce(1), "vote_id").write.mode(
+        "append"
+    ).json(src)
+
+
+def _count_votes(spark, src, ckpt):
+    """Run dedup → votes_per_candidate over ``src`` until it is drained
+    (restarting from ``ckpt``): the counts per candidate, and the state
+    store instances of each stateful operator in each data micro-batch."""
+    stream = envelope.read_envelope_stream(spark, src, VOTE_EVENT)
+    q = jobs.start_to_memory(
+        jobs.votes_per_candidate(jobs.dedup_votes(stream)),
+        "vote_counts", ckpt, output_mode="complete",
+        trigger={"availableNow": True},
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    stores = {
+        op["numStateStoreInstances"]
+        for p in q.recentProgress if p["numInputRows"]
+        for op in p["stateOperators"]
+    }
+    counts = {
+        r.candidate_id: r.vote_count
+        for r in spark.sql("SELECT * FROM vote_counts").collect()
+    }
+    return counts, stores
+
+
+def test_batch_plans_shuffle_at_initial_partition_number(spark):
+    """Batch plans take AQE's initial partition number (the suite's 8),
+    not spark.sql.shuffle.partitions, which is the stream width."""
+    assert spark.conf.get(STREAM_WIDTH) == str(session.LOCAL_STREAM_WIDTH)
+    assert spark.conf.get(BATCH_WIDTH) == "8"
+    df = spark.range(100).selectExpr("id % 7 AS k").groupBy("k").count()
+    assert exchange_widths(df) == {8}
+    assert len(df.collect()) == 7
+
+
+def test_streams_commit_one_state_store_per_operator(spark, tmp_path):
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    _publish(spark, src, FIRST_VOTES)
+    counts, stores = _count_votes(spark, src, ckpt)
+    assert counts == {"c1": 2, "c2": 1}
+    assert stores == {session.LOCAL_STREAM_WIDTH} == {1}
+    # one partition directory per operator: dedup and count
+    assert len(glob.glob(f"{ckpt}/state/*/[0-9]*")) == 2
+
+
+def test_tune_leaves_both_widths_alone(spark):
+    """tune() is for sessions it did not build, whose streams may run on
+    a cluster: neither width is its business."""
+    widths = {k: spark.conf.get(k) for k in (STREAM_WIDTH, BATCH_WIDTH)}
+    session.tune(spark)
+    assert {k: spark.conf.get(k) for k in widths} == widths
+    assert not set(widths) & set(session._RUNTIME_CONF)
+
+
+def test_checkpoint_width_wins_on_restart(spark, tmp_path):
+    """A stream first started at width 4 keeps 4 state stores per
+    operator after a restart on a width-1 session: the width is recorded
+    in the checkpoint's offset log."""
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    _publish(spark, src, FIRST_VOTES)
+    spark.conf.set(STREAM_WIDTH, "4")
+    try:
+        counts, stores = _count_votes(spark, src, ckpt)
+    finally:
+        spark.conf.set(STREAM_WIDTH, str(session.LOCAL_STREAM_WIDTH))
+    assert (counts, stores) == ({"c1": 2, "c2": 1}, {4})
+    _publish(spark, src, MORE_VOTES)
+    counts, stores = _count_votes(spark, src, ckpt)
+    assert (counts, stores) == ({"c1": 3, "c2": 2}, {4})
+
+
 def test_local_checkpoints_commit_through_filesystem_manager(spark, tmp_path):
     """get_spark commits streaming checkpoints through the FileSystem
     manager (no fork per rename without libhadoop), and the checkpoint
@@ -62,36 +153,11 @@ def test_local_checkpoints_commit_through_filesystem_manager(spark, tmp_path):
         == session.LOCAL_CHECKPOINT_MANAGER
     )
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-
-    def publish(rows):
-        df = spark.createDataFrame(rows, VOTE_EVENT)
-        envelope.to_envelope(df.coalesce(1), "vote_id").write.mode(
-            "append"
-        ).json(src)
-
-    def run():
-        stream = envelope.read_envelope_stream(spark, src, VOTE_EVENT)
-        q = jobs.start_to_memory(
-            jobs.votes_per_candidate(jobs.dedup_votes(stream)),
-            "ckpt_manager_counts", ckpt, output_mode="complete",
-            trigger={"availableNow": True},
-        )
-        try:
-            assert q.awaitTermination(120)
-        finally:
-            q.stop()
-        return {
-            r.candidate_id: r.vote_count
-            for r in spark.sql("SELECT * FROM ckpt_manager_counts").collect()
-        }
-
-    publish([_vote("v1", "A", "c1", 0), _vote("v2", "B", "c1", 1),
-             _vote("v3", "C", "c2", 2), _vote("v4", "A", "c2", 3)])
-    assert run() == {"c1": 2, "c2": 1}
+    _publish(spark, src, FIRST_VOTES)
+    assert _count_votes(spark, src, ckpt)[0] == {"c1": 2, "c2": 1}
     # restart on new files: A's replay is dropped by the recovered state
-    publish([_vote("v5", "A", "c2", 4), _vote("v6", "D", "c2", 5),
-             _vote("v7", "E", "c1", 6)])
-    assert run() == {"c1": 3, "c2": 2}
+    _publish(spark, src, MORE_VOTES)
+    assert _count_votes(spark, src, ckpt)[0] == {"c1": 3, "c2": 2}
 
     deltas = sorted(glob.glob(f"{ckpt}/state/*/*/*.delta"))
     assert deltas

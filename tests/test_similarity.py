@@ -134,34 +134,62 @@ def test_pandas_topk_matches_hof(spark, sf_dir):
         assert abs(psim - sim) < 1e-9
 
 
+def _ivf_exact(queries, corpus, k):
+    """IVF probing every cell: exact, through the IVF cosines."""
+    return similarity.ann_ivf_join_topk(
+        queries, corpus, k=k, n_centroids=4, nprobe=4
+    )
+
+
 @pytest.mark.parametrize(
-    "topk", [similarity.cosine_topk, similarity.cosine_topk_pandas]
+    "topk",
+    [similarity.cosine_topk, similarity.cosine_topk_pandas, _ivf_exact],
+    ids=["cosine_topk", "cosine_topk_pandas", "ann_ivf_join_topk"],
 )
 def test_bruteforce_zero_vector_scores_zero(spark, sf_dir, topk):
-    """An all-zero embedding, as a query and in the corpus, scores 0.0
-    against every non-zero vector (guarded norms): no DIVIDE_BY_ZERO
-    under ANSI, no NULL. k covers the whole corpus, so every score of
-    the zero vector is in the result; the zero query's neighbors tie at
-    0.0 and come in neighbor-id order."""
+    """Two all-zero embeddings, as queries and in the corpus, score 0.0
+    against every vector, each other included: no DIVIDE_BY_ZERO under
+    ANSI, no NULL or NaN. The norms' product is guarded; guarding each
+    norm gave two zero vectors a 1e-300 * 1e-300 = 0.0 divisor. k covers
+    the whole corpus, so every score of a zero vector is in the result;
+    a zero query's neighbors tie at 0.0 and come in neighbor-id order."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 30
     )
-    zero_id = 10**6
+    zero_ids = [10**6, 10**6 + 1]
     emb = emb.unionByName(
         emb.limit(1).select(
-            F.lit(zero_id).cast("long").alias("vec_id"),
+            F.explode(F.array(*map(F.lit, zero_ids))).alias("vec_id"),
             F.array_repeat(F.lit(0.0).cast("float"), 64).alias("embedding"),
             "label",
         )
     )
-    queries = emb.filter((F.col("vec_id") < 4) | (F.col("vec_id") == zero_id))
-    got = topk(queries, emb, k=30).collect()
-    assert len(got) == 5 * 30
-    zero_q = sorted((r.rnk, r.neighbor_id, r.cos_sim) for r in got
-                    if r.query_id == zero_id)
-    assert zero_q == [(i + 1, i, 0.0) for i in range(30)]
-    zero_n = [r.cos_sim for r in got if r.neighbor_id == zero_id]
-    assert zero_n == [0.0] * 4
+    queries = emb.filter((F.col("vec_id") < 4) | (F.col("vec_id") >= 10**6))
+    got = topk(queries, emb, k=31).collect()
+    assert len(got) == 6 * 31
+    for q, other in zip(zero_ids, reversed(zero_ids)):
+        zero_q = sorted((r.rnk, r.neighbor_id, r.cos_sim) for r in got
+                        if r.query_id == q)
+        assert zero_q == [
+            (i + 1, n, 0.0) for i, n in enumerate([*range(30), other])
+        ]
+    zero_n = [r.cos_sim for r in got
+              if r.neighbor_id in zero_ids and r.query_id < 4]
+    assert zero_n == [0.0] * 8
+
+
+def test_oracle_cosine_of_two_zero_vectors_is_zero():
+    """The DuckDB twin of the guarded cosine, as the oracles write it."""
+    import duckdb
+
+    # parity imports the plan modules in the order their imports need
+    from realtime_voting_system_spark.plans import parity  # noqa: F401
+    from realtime_voting_system_spark.plans.pipeline_ops import _COS_SQL
+
+    z = "[0.0, 0.0]::DOUBLE[]"
+    assert duckdb.sql(f"SELECT {_COS_SQL.format(a=z, b=z)}").fetchone() == (
+        0.0,
+    )
 
 
 def test_ivf_centroids_never_shrink(spark, sf_dir):

@@ -12,12 +12,19 @@ stop; the run only reads it. Without libhadoop, Hadoop's local file
 system forks for checkpoint file operations, which this makes visible.
 Run nothing else on the machine meanwhile: the counter is machine-wide.
 
+Over the same interval it reads the CPU seconds of each JVM thread from
+/proc/<jvm pid>/task/*/stat and sums them per thread class: the JIT
+compiler threads, Spark task threads, stream execution threads, the
+process reaper that waits on forked children, and GC. CPU of threads that
+exited meanwhile is the process total less the live threads'. Spark's job
+and stage metrics cover only task time, so the rest shows here alone.
+
 Usage, from the root of a checkout:
 
     python tools/fork_census.py [--files 20] [--seed 1]
 
-Prints one JSON line: forks, batches per query, and forks per data
-micro-batch.
+Prints one JSON line: forks, batches per query, forks per data
+micro-batch, and JVM CPU seconds per thread class.
 """
 
 from __future__ import annotations
@@ -40,6 +47,53 @@ def forks_so_far() -> int:
             if line.startswith("processes "):
                 return int(line.split()[1])
     raise RuntimeError("/proc/stat has no processes line")
+
+
+# thread class → prefixes of the thread name in /proc (at most 15 chars)
+THREAD_CLASSES = {
+    "compiler": ("C1 CompilerThre", "C2 CompilerThre"),
+    "executor_task": ("Executor task l",),
+    "stream_execution": ("stream executio",),
+    "process_reaper": ("process reaper",),
+    "gc": ("GC Thread", "G1 "),
+}
+
+
+def _cpu_s(stat: str) -> tuple[str, float]:
+    """(thread name, utime + stime in s) of one /proc stat line."""
+    name = stat[stat.index("(") + 1:stat.rindex(")")]
+    fields = stat[stat.rindex(")") + 2:].split()  # from field 3, state
+    return name, (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+
+
+def jvm_cpu(pid: int) -> tuple[float, dict[int, tuple[str, float]]]:
+    """The process's CPU seconds so far (exited threads included), and
+    each live thread's: {tid: (name, s)}."""
+    threads = {}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                threads[int(tid)] = _cpu_s(f.read())
+        except FileNotFoundError:  # exited since the listing
+            pass
+    with open(f"/proc/{pid}/stat") as f:
+        return _cpu_s(f.read())[1], threads
+
+
+def cpu_by_class(before, after) -> dict[str, float]:
+    """CPU seconds per thread class between two ``jvm_cpu`` readings."""
+    (total0, threads0), (total1, threads1) = before, after
+    out = dict.fromkeys([*THREAD_CLASSES, "other"], 0.0)
+    for tid, (name, s) in threads1.items():
+        used = s - threads0.get(tid, (name, 0.0))[1]
+        cls = next(
+            (c for c, pre in THREAD_CLASSES.items() if name.startswith(pre)),
+            "other",
+        )
+        out[cls] += used
+    out["exited_threads"] = (total1 - total0) - sum(out.values())
+    out["total"] = total1 - total0
+    return {c: round(s, 2) for c, s in out.items()}
 
 
 def main() -> None:
@@ -70,6 +124,8 @@ def main() -> None:
 
         for path in files[:backlog]:
             publish(path)
+        pid = ctx.jvm_pid()
+        cpu0 = jvm_cpu(pid)
         f0, t0 = forks_so_far(), time.perf_counter()
         queries, *_ = workloads.start_queries(ctx, src, "census")
         for path in [None, *files[backlog:]]:
@@ -77,6 +133,7 @@ def main() -> None:
                 publish(path)
             for q in queries.values():
                 q.processAllAvailable()
+        cpu = cpu_by_class(cpu0, jvm_cpu(pid))  # the stream threads live
         progress = {n: list(q.recentProgress) for n, q in queries.items()}
         for q in queries.values():
             q.stop()
@@ -97,6 +154,7 @@ def main() -> None:
         "batches": {n: len(p) for n, p in progress.items()},
         "data_batches": data,
         "forks_per_data_batch": round(forks / sum(data.values()), 1),
+        "jvm_cpu_s": cpu,
     }))
 
 
