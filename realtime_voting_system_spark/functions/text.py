@@ -53,8 +53,9 @@ def word_ngrams(toks: Column, n: int = 2) -> Column:
     fewer than n tokens → one truncated shingle; zero tokens → [""] —
     both mirrored by the DuckDB oracle (plans/pipeline_ops.py).
 
-    ``toks`` must be a materialized column (not an inline split — see
-    dedup.shingle_sets) or each slice re-tokenizes.
+    ``toks`` must be a materialized column (its own projection, not an
+    inline split: CollapseProject keeps a twice-referenced split apart)
+    or each slice re-tokenizes.
     """
     if n <= 1:
         return toks

@@ -88,7 +88,7 @@ def cosine(a: Column, b: Column) -> Column:
 
 def cos_from(d: Column, na: Column, nb: Column) -> Column:
     """``d / greatest(na * nb, 1e-300)``, the zero guard of every cosine
-    (IVF family included; DuckDB twin: plans.pipeline_ops._COS_SQL). On
+    (IVF family included; DuckDB twin: plans.sql_fragments._COS_SQL). On
     non-zero vectors it is the identity, the same single multiply, while
     an all-zero vector scores 0.0 against any vector, itself included,
     instead of raising DIVIDE_BY_ZERO under ANSI. The product is guarded,
@@ -119,6 +119,34 @@ def make_seq_fold():
         return acc
 
     return fold
+
+
+def make_sign_buckets(tables):
+    """Arrow-side hyperplane-LSH kernel. ``tables``: one (n_planes × dim)
+    plane list per table. Returns ``buckets(V)``, which maps a (rows × dim)
+    float64 matrix to a (rows × n_tables) int64 matrix whose column t is
+    Σ_j (v · h_tj > 0) · 2^j. All n_tables · n_planes dots accumulate
+    SEQUENTIALLY over dims, as ``make_seq_fold`` does, so every sign bit
+    is bit-identical to the HOF fold and DuckDB's list_dot_product. A
+    nested closure for the same reason as ``make_seq_fold``."""
+    import numpy as np
+
+    n_tables, n_planes = len(tables), len(tables[0])
+    planes = np.asarray(tables, dtype=np.float64).reshape(
+        n_tables * n_planes, -1
+    )
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+
+    def buckets(V):
+        import numpy as np
+
+        acc = np.zeros((V.shape[0], planes.shape[0]))
+        for d in range(V.shape[1]):
+            acc = acc + V[:, d][:, None] * planes[:, d][None, :]
+        bits = (acc > 0).astype(np.int64)
+        return bits.reshape(V.shape[0], n_tables, n_planes) @ weights
+
+    return buckets
 
 
 def seq_cosine_pandas(

@@ -13,11 +13,11 @@ these are the batch-scale variants the driver grades as first-class:
 - clustering     — connected components over pairs → canonical doc
 
 Candidate generation and verification are keyed DataFrame joins
-(explode/groupBy/join — never all-pairs); per-document hashing runs as
-Arrow-batched mapInPandas one-pass signatures under the portable md5
-family (bit-equal to the JVM reference implementations, zero shuffle —
-the hot paths are vectorized numpy, not row-at-a-time Python). Each
-docstring carries the 100 TB scale argument for its shuffle layout.
+(explode/groupBy/join — never all-pairs); per-document shingling and
+hashing run as Arrow-batched mapInPandas one-pass signatures under the
+portable md5 family (equal to the DuckDB oracle twins' CTEs, zero
+shuffle — the hot paths are vectorized numpy, not row-at-a-time Python).
+Each docstring carries the 100 TB scale argument for its shuffle layout.
 """
 
 from __future__ import annotations
@@ -81,27 +81,6 @@ def drop_exact_dups(
 # ---------------------------------------------------------------------------
 
 
-def shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, shingles: array<string>) — distinct word n-grams per document.
-
-    Tokenization is materialized in its OWN projection: inlining
-    ``tokens(text)`` into the n-gram lambda makes Catalyst re-evaluate
-    split+filter once per shingle index — O(tokens²) per document
-    (measured 26 s to shingle 5k docs; 2 s split out). CollapseProject
-    keeps the stages separate because ``toks`` is referenced twice and
-    split is non-cheap.
-    """
-    toked = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("toks")
-    )
-    return toked.select(
-        F.col(id_col),
-        F.array_distinct(word_ngrams(F.col("toks"), n)).alias("shingles"),
-    )
-
-
 def _exploded(shingles_df: DataFrame, id_col: str) -> DataFrame:
     return shingles_df.select(
         id_col, F.explode("shingles").alias("shingle")
@@ -111,12 +90,15 @@ def _exploded(shingles_df: DataFrame, id_col: str) -> DataFrame:
 def shingle_sets_pandas(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, shingles) in ONE Arrow pass — same content as ``shingle_sets``
-    (asserted in tests), ~2× faster at sf0.1: the zip_with/concat_ws/
-    array_distinct chain is interpreted expression eval per element, while
-    Python splits+joins each document once. Distinct keeps first-occurrence
-    order, matching array_distinct (downstream consumers are order-
-    insensitive either way: explode, array_intersect, len).
+    """(id, shingles: array<string>) — distinct word n-grams per document,
+    in ONE Arrow pass. Same sets as the ``sh`` CTE of the DuckDB MinHash
+    twin (plans/pipeline_ops._minhash_sql_prefix; asserted in
+    tests/test_dedup.py), ~2× faster at sf0.1 than the same chain as
+    zip_with/concat_ws/array_distinct expressions, which Catalyst evaluates
+    interpreted per element. Distinct keeps first-occurrence order
+    (downstream consumers are order-insensitive: explode, array_intersect,
+    len). N-gram edge rules match functions.text.word_ngrams (<n tokens →
+    one truncated shingle; zero tokens → [""]); NULL text drops the doc.
 
     The closure is cloudpickle-self-contained (locals only) — see the note
     in minhash_signatures_pandas.
@@ -136,7 +118,7 @@ def shingle_sets_pandas(
                 continue
             ids, out = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:  # JVM twin: explode(null shingles) drops
+                if text is None:
                     continue
                 toks = [t for t in split.split(text.lower()) if t]
                 if toks:
@@ -242,8 +224,8 @@ _MINHASH_P = 4294967311  # smallest prime > 2^32
 def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Seeded affine-mix coefficients (a_i, b_i): a_i odd < 2^30 so every
     a·h product (h < 2^32) stays < 2^62 — overflow-safe int64 in Spark,
-    numpy, and DuckDB alike. Shared by the JVM path, the Arrow path, and
-    the oracle-SQL builder so all three compute the same family."""
+    numpy, and DuckDB alike. Shared by the Arrow pass and the oracle-SQL
+    builder so both compute the same family."""
     coeffs, state = [], 42
     for _ in range(num_hashes):
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
@@ -253,71 +235,6 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return coeffs
 
 
-def _h32_expr(c, hash_fn: str):
-    """32-bit base hash of a string column. ``xxhash64``: fast JVM default
-    (engine-specific). ``md5``: first 8 hex chars as an int — portable, the
-    same value hashlib/DuckDB compute, enabling cross-engine oracles."""
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(c), F.lit(4294967296).cast("long"))
-    if hash_fn == "md5":
-        return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """(id, sig: array<long>[num_hashes]) — minhash over word n-grams.
-
-    Hash family: ONE base hash per shingle folded to 32 bits (``hash_fn``:
-    xxhash64 default, md5-slice for cross-engine oracles — _h32_expr), then
-    ``num_hashes`` affine mixes h_i = (a_i·h + b_i) mod p (p prime > 2^32,
-    a_i < 2^30 so every product < 2^62 — ANSI-safe, no overflow). This is
-    the classic universal family; ~60× cheaper than hashing each shingle
-    num_hashes times (measured 20s → sub-second on 260k shingles).
-
-    Scale: explode produces #shingles rows keyed by doc id; the aggregate's
-    partial min per map task bounds shuffle volume by (#docs × num_hashes).
-    ``minhash_signatures_pandas`` computes the md5 family with NO explode
-    and no shuffle at all — the preferred plan; this one is the JVM
-    reference implementation the Arrow path is equivalence-tested against.
-    """
-    coeffs = _minhash_coeffs(num_hashes)
-    # NOT shingle_sets: minhash is invariant to duplicate shingles (min is
-    # idempotent), so skip the per-doc array_distinct — interpreted
-    # higher-order eval is the cost floor here.
-    toked = _spread(df).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("toks")
-    )
-    nonempty = toked.select(
-        F.col(id_col), word_ngrams(F.col("toks"), n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    sh = _exploded(nonempty, id_col)
-    # materialize the base hash once; inlined it would be re-evaluated in
-    # each of the num_hashes mix columns (subexpr elimination does not
-    # reach across all codegen paths)
-    based = sh.select(id_col, _h32_expr(F.col("shingle"), hash_fn).alias("h32"))
-    h32 = F.col("h32")
-    hashed = based.select(
-        id_col,
-        *[
-            ((h32 * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"h{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ],
-    )
-    out = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
-    )
-    return out.select(
-        id_col, F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_signatures_pandas(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -325,20 +242,29 @@ def minhash_signatures_pandas(
     n: int = 3,
     num_hashes: int = 64,
 ) -> DataFrame:
-    """Per-document minhash signatures in ONE Arrow pass — md5 family only.
+    """(id, sig: array<long>[num_hashes]) — minhash over word n-grams, in
+    ONE Arrow pass.
+
+    Hash family: ONE base hash per shingle, the first 8 md5 hex chars as
+    an int (portable: the same value hashlib and DuckDB compute), then
+    ``num_hashes`` affine mixes h_i = (a_i·h + b_i) mod p (p prime > 2^32,
+    a_i < 2^30 so every product < 2^62 — no overflow in any engine). This
+    is the classic universal family; ~60× cheaper than hashing each
+    shingle num_hashes times.
 
     Scale: zero shuffle. Each task tokenizes, shingles, hashes, and
     minimizes its own documents (a (#shingles × num_hashes) numpy matrix
-    per doc); only the (id, 64-long) signature rows leave the task — the
-    explode shuffle of ``minhash_signatures`` disappears entirely. This is
-    the NOTES.md round-1 plan ("per-doc signatures in one mapInPandas
-    pass") and the registered 100 TB layout.
+    per doc); only the (id, 64-long) signature rows leave the task — no
+    explode of shingle rows, no aggregate. This is the NOTES.md round-1
+    plan ("per-doc signatures in one mapInPandas pass") and the registered
+    100 TB layout.
 
-    Bit-equal to ``minhash_signatures(hash_fn="md5")``: same tokenization
+    Equal to the ``sig`` CTE of the DuckDB twin
+    (plans/pipeline_ops._minhash_sql_prefix): same tokenization
     (TOKEN_SPLIT_RE on lowercased text), same truncated-shingle edge rules
     as functions.text.word_ngrams (len<n → one truncated shingle; 0 tokens
-    → [""]), same first-8-hex md5 base hash, same affine mixes — asserted
-    in tests/test_dedup.py::test_minhash_pandas_matches_jvm.
+    → [""]), same base hash, same affine mixes — asserted in
+    tests/test_dedup.py.
     """
     import hashlib
     import re as _re
@@ -372,9 +298,7 @@ def minhash_signatures_pandas(
             # hash each BATCH-unique shingle once and reuse; the memo is
             # per-batch, bounding executor memory by batch vocabulary.
             # digest()[:4] big-endian ≡ int(hexdigest[:8], 16), ~20%
-            # cheaper. Production callers wanting raw JVM-side throughput
-            # use hash_fn="xxhash64" (minhash_signatures) — md5 is the
-            # cross-engine-portable verification family.
+            # cheaper.
             memo: dict = {}
 
             def hmd5(s):
@@ -386,7 +310,7 @@ def minhash_signatures_pandas(
 
             ids, sigs = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:  # JVM twin: explode(null shingles) drops
+                if text is None:  # the twin's unnest drops the doc
                     continue
                 toks = [t for t in split.split(text.lower()) if t]
                 if toks:
@@ -416,20 +340,16 @@ def _banded_keys(
     id_col: str,
     num_hashes: int,
     bands: int,
-    hash_fn: str,
 ) -> DataFrame:
     """(id, band, bucket) rows from a signature column — the LSH blocking
     key shared by the batch self-join and the incremental batch⋈index
-    probe. md5 family: the bucket is the band's values comma-joined
-    (equality of decimal strings ≡ equality of the value tuple — engine
-    portable); xxhash64 family: a rehash of the band tuple."""
+    probe. The bucket is the band's values comma-joined (equality of the
+    decimal strings ≡ equality of the value tuple — engine portable)."""
     r = num_hashes // bands
 
     def _band_key(b: int):
         vals = [F.col("sig")[b * r + j] for j in range(r)]
-        if hash_fn == "md5":  # portable: join key = the values themselves
-            return F.concat_ws(",", *[v.cast("string") for v in vals])
-        return F.xxhash64(*vals).cast("string")
+        return F.concat_ws(",", *[v.cast("string") for v in vals])
 
     return sigs.select(
         id_col,
@@ -456,38 +376,26 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     verify: bool = True,
-    hash_fn: str = "xxhash64",
-    vectorized: bool = False,
 ) -> DataFrame:
     """Candidate pairs via banded LSH, optionally verified with exact Jaccard.
 
     rows-per-band r = num_hashes/bands; collision prob at jaccard j is
     1-(1-j^r)^bands (r=4, b=16 → s-curve centered ≈ 0.5).
 
-    ``hash_fn="md5"`` selects the portable base-hash family (identical in
-    DuckDB — the oracle gate) and a portable band key (the band's values
-    comma-joined: equality of the decimal strings ≡ equality of the value
-    tuple, so candidate sets match any engine). ``vectorized=True`` (md5
-    only) computes signatures in one Arrow pass with no explode shuffle —
-    the registered scale path.
+    Signatures come from ``minhash_signatures_pandas`` (one Arrow pass,
+    portable md5 family) and the band key from ``_banded_keys``, so
+    candidate sets match the DuckDB twin exactly (the oracle gate).
 
     Scale: candidates come from groupBy(band, band-key) — docs only meet if
     a whole band matches, so the shuffle is (#docs × bands) rows. The
     verify step re-joins only candidate ids against shingle sets (semi-join
     pruned), never all pairs. This is the canonical petabyte dedup layout.
     """
-    r = num_hashes // bands
-    if vectorized:
-        if hash_fn != "md5":
-            raise ValueError("vectorized signatures are md5-family only")
-        sigs = minhash_signatures_pandas(df, id_col, text_col, n, num_hashes)
-    else:
-        sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, hash_fn)
-
+    sigs = minhash_signatures_pandas(df, id_col, text_col, n, num_hashes)
     # cached: the candidate self-join consumes banded TWICE — without the
     # cache the whole signature computation runs once per side (bench.py
     # clears caches between queries)
-    banded = _banded_keys(sigs, id_col, num_hashes, bands, hash_fn).cache()
+    banded = _banded_keys(sigs, id_col, num_hashes, bands).cache()
     a = banded.alias("a")
     b = banded.alias("b")
     cands = (
@@ -524,72 +432,23 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """(id, simhash: long) — sign-aggregated token hashes.
-
-    bit_b(doc) = 1 iff Σ_tokens (bit_b(hash(token)) ? +1 : −1) > 0.
-    The ±1 sum is computed branch-free as 2·Σ bit_b − n_tokens (identical
-    integer value), so the aggregate input is a bare shift-and-mask per
-    bit — one shuffle of (id, token-hash) pairs; all sums map-side partial.
-
-    ``hash_fn="md5"``: the portable 64-bit hash is the first 16 md5 hex
-    chars split into two 32-bit halves (hi = hex[0:8], lo = hex[8:16]; the
-    64-bit value is hi·2^32 + lo) — both halves fit a signed long in every
-    engine, so no unsigned-overflow games; bit_b comes from lo for b<32,
-    hi for b≥32. Identical in hashlib and DuckDB (the oracle twin).
-    ``simhash_pandas`` computes the same md5 family with no explode
-    shuffle — the registered scale path.
-    """
-    toks = _spread(df).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
-    )
-    if hash_fn == "xxhash64":
-        hashed = toks.withColumn("th", F.xxhash64("tok"))
-
-        def bit(b: int):
-            return F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1))
-
-    elif hash_fn == "md5":
-        md5 = F.md5(F.col("tok"))
-        hashed = toks.withColumn(
-            "hi", F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
-        ).withColumn(
-            "lo", F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
-        )
-
-        def bit(b: int):
-            src, off = ("lo", b) if b < 32 else ("hi", b - 32)
-            return F.shiftright(F.col(src), off).bitwiseAND(F.lit(1))
-
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sums = hashed.groupBy(id_col).agg(
-        F.count("*").alias("__n"),
-        *[F.sum(bit(b)).alias(f"b{b}") for b in range(bits)],
-    )
-    sim = None
-    for b in range(bits):
-        pos = (F.col(f"b{b}") * 2) > F.col("__n")
-        term = F.when(pos, F.lit(1).cast("long") * (2**b if b < 63 else -(2**63))).otherwise(0)
-        sim = term if sim is None else sim + term
-    return sums.select(F.col(id_col), sim.alias("simhash"))
-
-
 def simhash_pandas(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Per-document simhash in ONE Arrow pass — md5 family only, bit-equal
-    to ``simhash(hash_fn="md5")`` (asserted in tests). Zero shuffle: each
-    task tokenizes, hashes, and sign-aggregates its own documents (one
-    (#tokens × 64) numpy bit matrix per doc); only (id, long) rows leave
-    the task — the explode shuffle disappears. Zero-token docs are skipped,
-    matching explode's empty-array behavior."""
+    """(id, simhash: long) — sign-aggregated token hashes, in ONE Arrow
+    pass.
+
+    bit_b(doc) = 1 iff Σ_tokens (bit_b(hash(token)) ? +1 : −1) > 0. The
+    64-bit token hash is the first 16 md5 hex chars (hi = hex[0:8],
+    lo = hex[8:16]; the value is hi·2^32 + lo) — identical in hashlib and
+    DuckDB. Equal to the ``sim`` CTE of the DuckDB twin
+    (plans/pipeline_ops._simhash_sql_prefix; asserted in
+    tests/test_dedup.py).
+
+    Scale: zero shuffle. Each task tokenizes, hashes, and sign-aggregates
+    its own documents (one (#tokens × 64) numpy bit matrix per doc); only
+    (id, long) rows leave the task. Zero-token and NULL-text docs are
+    skipped, as the twin's unnest of an empty token list drops them."""
     import hashlib
     import re as _re
 
@@ -656,26 +515,17 @@ def simhash_near_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
-    vectorized: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming.
 
     Banding: split the 64-bit hash into `bands` 16-bit chunks; any pair
     within Hamming ≤ bands−1 shares ≥1 exact chunk (pigeonhole), so the
     join is keyed on (band, chunk) — no all-pairs comparison. Hamming is
-    then verified exactly with bit_count(xor). ``hash_fn="md5"`` selects
-    the portable family (DuckDB oracle twin); ``vectorized=True`` (md5
-    only) computes hashes in one Arrow pass with no explode shuffle.
+    then verified exactly with bit_count(xor). Hashes come from
+    ``simhash_pandas`` (portable md5 family, the DuckDB twin's).
     """
-    if vectorized:
-        if hash_fn != "md5":
-            raise ValueError("vectorized simhash is md5-family only")
-        hs = simhash_pandas(df, id_col, text_col)
-    else:
-        hs = simhash(df, id_col, text_col, hash_fn=hash_fn)
     return hamming_near_pairs(
-        hs, id_col=id_col, hash_col="simhash",
+        simhash_pandas(df, id_col, text_col), id_col=id_col, hash_col="simhash",
         max_hamming=max_hamming, bands=bands,
     )
 
@@ -697,26 +547,9 @@ def hamming_near_pairs(
     max_hamming ≤ bands−1 (the oracle may then verify all-pairs) and
     never all-pairs engine-side. Hamming is verified exactly with
     bit_count(xor)."""
-    width = 64 // bands
     # cached: the pair self-join consumes banded twice — without the cache
     # the hash computation runs once per side (bench.py clears caches)
-    banded = hashes.select(
-        id_col,
-        hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col(hash_col), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, hash_col, "bb.band", "bb.chunk").cache()
+    banded = _hamming_band_rows(hashes, id_col, hash_col, bands).cache()
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
         a.join(
@@ -1100,21 +933,15 @@ def _lsh_buckets_pandas(
     seed: int,
 ) -> DataFrame:
     """(id, tbl, bucket) for all LSH tables in ONE Arrow pass; sign bits
-    from the sequential-over-dims fold (functions.vectors.make_seq_fold)
+    from functions.vectors.make_sign_buckets (sequential-over-dims fold)
     ⇒ bit-equal to the HOF dot's sign and DuckDB's list_dot_product.
     Scale: zero shuffle — only (#rows × n_tables) 20-byte rows leave."""
-    import numpy as np
-
+    from ..functions.vectors import make_sign_buckets
     from .similarity import _hyperplanes
 
-    planes = np.concatenate(
-        [
-            np.asarray(_hyperplanes(dim, n_planes, seed + t), dtype=np.float64)
-            for t in range(n_tables)
-        ],
-        axis=0,
-    )  # (n_tables·n_planes, dim)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
+    buckets = make_sign_buckets(
+        [_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    )
 
     def gen(batches):
         import numpy as np
@@ -1124,22 +951,14 @@ def _lsh_buckets_pandas(
             if pdf.empty:
                 continue
             ids = pdf[id_col].to_numpy()
-            vm = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            # sequential over dims (vectors.make_seq_fold order), outer over planes
-            acc = np.zeros((vm.shape[0], planes.shape[0]))
-            for d in range(vm.shape[1]):
-                acc = acc + vm[:, d][:, None] * planes[:, d][None, :]
-            bits = acc > 0
-            frames = []
-            for t in range(n_tables):
-                buckets = (
-                    bits[:, t * n_planes : (t + 1) * n_planes].astype(np.int64)
-                    @ weights
-                )
-                frames.append(
-                    pd.DataFrame({id_col: ids, "tbl": t, "bucket": buckets})
-                )
-            yield pd.concat(frames, ignore_index=True)
+            bk = buckets(np.stack(pdf["v"].to_numpy()).astype(np.float64))
+            yield pd.concat(
+                [
+                    pd.DataFrame({id_col: ids, "tbl": t, "bucket": bk[:, t]})
+                    for t in range(n_tables)
+                ],
+                ignore_index=True,
+            )
 
     return v_df.mapInPandas(gen, f"{id_col} long, tbl int, bucket long")
 
@@ -1211,8 +1030,6 @@ def incremental_minhash_dedup(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    hash_fn: str = "md5",
-    vectorized: bool = True,
     corpus_bands: DataFrame | None = None,
     corpus_shingles: DataFrame | None = None,
     batch_shingles: DataFrame | None = None,
@@ -1244,22 +1061,15 @@ def incremental_minhash_dedup(
             "need corpus_df or BOTH corpus_bands and corpus_shingles"
         )
     # ``batch_signatures``: a precomputed (id, sig) relation for the
-    # batch (same family/params) — a caller that also appends the
-    # batch's banded keys to a persisted index (DedupIndex.absorb)
-    # computes the signature pass once and shares it
-    if batch_signatures is not None:
-        sig_b = batch_signatures
-    elif vectorized:
-        if hash_fn != "md5":
-            raise ValueError("vectorized signatures are md5-family only")
-        sig_b = minhash_signatures_pandas(
-            new_df, id_col, text_col, n, num_hashes
-        )
-    else:
-        sig_b = minhash_signatures(
-            new_df, id_col, text_col, n, num_hashes, hash_fn
-        )
-    bb = _banded_keys(sig_b, id_col, num_hashes, bands, hash_fn).select(
+    # batch (same params) — a caller that also appends the batch's
+    # banded keys to a persisted index (DedupIndex.absorb) computes the
+    # signature pass once and shares it
+    sig_b = (
+        batch_signatures
+        if batch_signatures is not None
+        else minhash_signatures_pandas(new_df, id_col, text_col, n, num_hashes)
+    )
+    bb = _banded_keys(sig_b, id_col, num_hashes, bands).select(
         F.col(id_col).alias("__bid"), "band", "bucket"
     )
     if corpus_bands is not None and corpus_shingles is not None:
@@ -1272,15 +1082,10 @@ def incremental_minhash_dedup(
             F.col(id_col).alias("__eid"), F.col("shingles").alias("__sh_e")
         )
     else:
-        if vectorized:
-            sig_e = minhash_signatures_pandas(
-                corpus_df, id_col, text_col, n, num_hashes
-            )
-        else:
-            sig_e = minhash_signatures(
-                corpus_df, id_col, text_col, n, num_hashes, hash_fn
-            )
-        be = _banded_keys(sig_e, id_col, num_hashes, bands, hash_fn).select(
+        sig_e = minhash_signatures_pandas(
+            corpus_df, id_col, text_col, n, num_hashes
+        )
+        be = _banded_keys(sig_e, id_col, num_hashes, bands).select(
             F.col(id_col).alias("__eid"), "band", "bucket"
         )
         sh_e = shingle_sets_pandas(corpus_df, id_col, text_col, n).select(
@@ -1804,14 +1609,14 @@ class DedupIndex:
     def build(cls, corpus: DataFrame, kind: str, **params) -> "DedupIndex":
         """Build the index artifacts from an initial corpus. Params are
         the matching operator's (id_col/text_col/n/num_hashes/bands/
-        threshold/hash_fn for text kinds; id_col/vec_col/n_centroids/
+        threshold for text kinds; id_col/vec_col/n_centroids/
         threshold/iters for semantic). A key outside the defaults below
         raises ValueError instead of being stored and ignored."""
         p = {
             "id_col": "doc_id" if kind != "semantic" else "vec_id",
             "text_col": "text", "vec_col": "embedding",
             "n": 3, "num_hashes": 64, "bands": 16, "threshold": 0.5,
-            "hash_fn": "md5", "n_centroids": 16, "iters": 2,
+            "n_centroids": 16, "iters": 2,
             # phash kind: Hamming envelope + band count over the 64-bit
             # dHash (max_hamming <= hamming_bands-1 keeps banding
             # lossless — the pigeonhole contract)
@@ -1886,18 +1691,11 @@ class DedupIndex:
 
     @staticmethod
     def _bands(df: DataFrame, p: dict) -> DataFrame:
-        sig = (
-            minhash_signatures_pandas(
-                df, p["id_col"], p["text_col"], p["n"], p["num_hashes"]
-            )
-            if p["hash_fn"] == "md5"
-            else minhash_signatures(
-                df, p["id_col"], p["text_col"], p["n"], p["num_hashes"],
-                p["hash_fn"],
-            )
+        sig = minhash_signatures_pandas(
+            df, p["id_col"], p["text_col"], p["n"], p["num_hashes"]
         )
         return _banded_keys(
-            sig, p["id_col"], p["num_hashes"], p["bands"], p["hash_fn"]
+            sig, p["id_col"], p["num_hashes"], p["bands"]
         ).select(p["id_col"], "band", "bucket")
 
     @staticmethod
@@ -1935,8 +1733,7 @@ class DedupIndex:
         if self.kind == "minhash":
             return incremental_minhash_dedup(
                 new_df, None, p["id_col"], p["text_col"], p["n"],
-                p["num_hashes"], p["bands"], p["threshold"], p["hash_fn"],
-                vectorized=p["hash_fn"] == "md5",
+                p["num_hashes"], p["bands"], p["threshold"],
                 corpus_bands=self._art("bands"),
                 corpus_shingles=self._art("shingles"),
                 batch_shingles=shingles,
@@ -1991,16 +1788,8 @@ class DedupIndex:
             # verify; absorb: the bands/shingles increments) — compute
             # each once, persisted, and share (guide §2.4; the semantic
             # kind's kept_cells discipline, text lane)
-            bsig = (
-                minhash_signatures_pandas(
-                    new_df, p["id_col"], p["text_col"], p["n"],
-                    p["num_hashes"],
-                )
-                if p["hash_fn"] == "md5"
-                else minhash_signatures(
-                    new_df, p["id_col"], p["text_col"], p["n"],
-                    p["num_hashes"], p["hash_fn"],
-                )
+            bsig = minhash_signatures_pandas(
+                new_df, p["id_col"], p["text_col"], p["n"], p["num_hashes"],
             ).persist()
             bsh = shingle_sets_pandas(
                 new_df, p["id_col"], p["text_col"], p["n"]
@@ -2066,7 +1855,7 @@ class DedupIndex:
                 # text (signatures/shingles are per-doc pure functions)
                 new_bands = _banded_keys(
                     bsig.join(kept_ids, p["id_col"], "semi"),
-                    p["id_col"], p["num_hashes"], p["bands"], p["hash_fn"],
+                    p["id_col"], p["num_hashes"], p["bands"],
                 ).select(p["id_col"], "band", "bucket")
                 new_shingles = bsh.join(
                     kept_ids, p["id_col"], "semi"
@@ -2451,6 +2240,15 @@ class DedupIndex:
         meta = read(spark, f"{path}/_meta")
         row = meta.collect()[0]
         kind, params = row["kind"], json.loads(row["params"])
+        # indexes saved while the signature family was a param carry
+        # hash_fn. probe() computes md5-family bands only, so bands of
+        # any other family would make every probe silently miss
+        legacy = params.pop("hash_fn", "md5")
+        if legacy != "md5":
+            raise ValueError(
+                f"index at {path} was built with hash_fn={legacy!r}; "
+                "only md5-family indexes load — rebuild it"
+            )
         arts = {
             name: read(spark, f"{path}/{name}")
             for name in cls._ARTS[kind]

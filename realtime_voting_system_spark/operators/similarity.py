@@ -25,7 +25,7 @@ sequential-fold cosine, ties to the smaller centroid id. The JVM
 projection ``_ivf_assigned`` writes it for every join-form operator,
 index and ``assign_cells``; ``ann_ivf_topk``'s closure writes the same
 op sequence in numpy; the DuckDB twins write it in one CTE builder
-(plans/pipeline_ops._ivf_cells_sql).
+(plans/sql_fragments._ivf_cells_sql).
 
 Degenerate inputs: in the brute-force, LSH, IVF and IVF-PQ operators an
 all-zero embedding scores cosine 0 against any vector, another all-zero
@@ -127,21 +127,17 @@ def _sig_tables_pandas(
     batch — the per-plane HOF dot (aggregate∘zip_with) is interpreted, not
     codegen'd, and evaluating it 48× per row dominated ann runtime (6.1 s →
     sub-second at sf0.1). Bits: bit_j = (v · h_j > 0) over the
-    ``_hyperplanes`` planes, bucket = Σ bit_j · 2^j per table; the dot
-    accumulates sequentially over dims (not BLAS matmul), so signs are
-    bit-identical to the HOF fold and DuckDB's list_dot_product — the
-    sim_ann_lsh oracle twin depends on it.
+    ``_hyperplanes`` planes, bucket = Σ bit_j · 2^j per table, from
+    functions.vectors.make_sign_buckets: the dot accumulates sequentially
+    over dims (not BLAS matmul), so signs are bit-identical to the HOF
+    fold and DuckDB's list_dot_product — the sim_ann_lsh oracle twin
+    depends on it.
     """
-    import numpy as np
+    from ..functions.vectors import make_sign_buckets
 
-    planes = np.concatenate(
-        [
-            np.asarray(_hyperplanes(dim, n_planes, seed0 + t), dtype=np.float64)
-            for t in range(n_tables)
-        ],
-        axis=0,
-    )  # (n_tables·n_planes, dim)
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
+    buckets = make_sign_buckets(
+        [_hyperplanes(dim, n_planes, seed0 + t) for t in range(n_tables)]
+    )
 
     def gen(batches):
         import numpy as np
@@ -152,28 +148,22 @@ def _sig_tables_pandas(
                 continue
             ids = pdf[id_col].to_numpy()
             vm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            acc = np.zeros((vm.shape[0], planes.shape[0]))
-            for d in range(vm.shape[1]):  # sequential over dims
-                acc = acc + vm[:, d][:, None] * planes[:, d][None, :]
-            bits = acc > 0  # (batch, n_tables·n_planes)
+            bk = buckets(vm)
             vecs = list(vm)
-            frames = []
-            for t in range(n_tables):
-                buckets = (
-                    bits[:, t * n_planes : (t + 1) * n_planes].astype(np.int64)
-                    @ weights
-                )
-                frames.append(
+            yield pd.concat(
+                [
                     pd.DataFrame(
                         {
                             f"{prefix}_id": ids,
                             f"{prefix}v": vecs,
                             "tbl": t,
-                            "bucket": buckets,
+                            "bucket": bk[:, t],
                         }
                     )
-                )
-            yield pd.concat(frames, ignore_index=True)
+                    for t in range(n_tables)
+                ],
+                ignore_index=True,
+            )
 
     return df.select(id_col, vec_col).mapInPandas(
         gen, f"{prefix}_id long, {prefix}v array<double>, tbl int, bucket long"

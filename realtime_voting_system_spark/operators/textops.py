@@ -280,15 +280,16 @@ def repetition_stats(
 
     Scale: per-document metrics must NOT shuffle — and none do. One Arrow
     ``mapInPandas`` pass: tokenize, shingle, and Counter each document in
-    Python (the same shingle_sets_pandas trade — a per-element interpreted
-    fold over sorted bigram arrays measured 24.7 s at sf0.1 vs 1.5 s for
-    this pass; see repetition_stats_hof, kept as the pure-JVM equivalence
-    anchor). The explode→groupBy(doc,bigram)→max alternative would shuffle
-    every bigram of every document — never. Fractions are single Python
-    float divisions — IEEE-identical to the DuckDB twin's ``::DOUBLE /``.
-    N-gram edge semantics match functions.text.word_ngrams (<n tokens →
-    one truncated shingle; zero tokens → [""]). NULL text yields NULL
-    stats, like the SQL twin.
+    Python (the same shingle_sets_pandas trade — the same fold as
+    higher-order functions over sorted bigram arrays, interpreted per
+    element, measured 24.7 s at sf0.1 vs 1.5 s for this pass). The
+    explode→groupBy(doc,bigram)→max alternative would shuffle every
+    bigram of every document — never. Fractions are single Python float
+    divisions — IEEE-identical to the DuckDB twin's ``::DOUBLE /``
+    (plans/extended_ops._REPETITION_SQL; equality asserted in
+    tests/test_temporal.py). N-gram edge semantics match
+    functions.text.word_ngrams (<n tokens → one truncated shingle; zero
+    tokens → [""]). NULL text yields NULL stats, like the SQL twin.
     """
     import re as _re
 
@@ -350,55 +351,6 @@ def repetition_stats(
         schema=(
             f"{id_col} {id_type}, n_tokens long, n_bigrams long, "
             "top_bigram_cnt long, top_bigram_frac double, dup_ngram_frac double"
-        ),
-    )
-
-
-def repetition_stats_hof(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Pure-JVM twin of ``repetition_stats``: the top-bigram count is a fold
-    over the SORTED bigram array (max equal-run length == max multiset
-    count) via higher-order functions. Bit-equal output (asserted in
-    tests/test_temporal.py) but ~16× slower at sf0.1 — Catalyst evaluates
-    the struct-state lambda interpreted, per element. Kept as the
-    no-Python-dependency variant and as the semantics anchor."""
-    toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
-    shingled = toked.select(
-        id_col,
-        F.size("toks").cast("long").alias("n_tokens"),
-        word_ngrams(F.col("toks"), 2).alias("bigrams"),
-        word_ngrams(F.col("toks"), n).alias("ngrams"),
-    )
-    sorted_b = F.array_sort(F.col("bigrams"))
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"),
-    )
-
-    def step(acc, x):
-        newrun = F.when(acc.prev.isNotNull() & (acc.prev == x), acc.run + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        return F.struct(
-            x.alias("prev"),
-            newrun.alias("run"),
-            F.greatest(acc.best, newrun).alias("best"),
-        )
-
-    top_cnt = F.aggregate(sorted_b, zero, step, lambda acc: acc.best)
-    n_big = F.size("bigrams").cast("long")
-    n_ng = F.size("ngrams").cast("long")
-    n_ng_distinct = F.size(F.array_distinct("ngrams")).cast("long")
-    return shingled.select(
-        id_col,
-        "n_tokens",
-        n_big.alias("n_bigrams"),
-        top_cnt.alias("top_bigram_cnt"),
-        F.when(n_big > 0, top_cnt.cast("double") / n_big).alias("top_bigram_frac"),
-        F.when(n_ng > 0, (n_ng - n_ng_distinct).cast("double") / n_ng).alias(
-            "dup_ngram_frac"
         ),
     )
 

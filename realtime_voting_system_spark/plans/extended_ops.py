@@ -19,7 +19,16 @@ from pyspark.sql import functions as F
 
 from ..operators import sampling, temporal, textops
 from .parity import _t, query
-from .pipeline_ops import _split_case_sql, _unit_sql
+from .sql_fragments import (
+    _BM25_K,
+    _BM25_SQL,
+    _BM25_TERMS,
+    _QUALITY_SQL,
+    _build_langid_sql,
+    _split_case_sql,
+    _split_sum_sql,
+    _unit_sql,
+)
 
 # ---------------------------------------------------------------------------
 # J9 — as-of join: each click joined to the user's latest prior purchase
@@ -372,9 +381,9 @@ FROM sh JOIN top USING (doc_id)
 @query("text_repetition", _REPETITION_SQL)
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filters: top-bigram fraction + duplicate
-    word-3-gram fraction per document. Spark computes the top-bigram count
-    as a fold over the sorted bigram array (max equal-run length) — zero
-    shuffle; the oracle uses the declarative unnest→group→max form."""
+    word-3-gram fraction per document. Spark counts each document's
+    bigrams in one Arrow pass (textops.repetition_stats) — zero shuffle;
+    the oracle uses the declarative unnest→group→max form."""
     docs = _t(spark, sf_dir, "documents")
     out = textops.repetition_stats(docs, n=_REP_N)
     return out.select(
@@ -431,54 +440,6 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # X264 — BM25 top-k keyword search (the retrieval direction of tf-idf)
 # ---------------------------------------------------------------------------
-
-_BM25_TERMS = ("data", "scan", "hash")
-_BM25_K = 20
-# k1 = 1.2, b = 0.75 (the standard Robertson constants); written as the
-# pre-folded literals 2.2 = k1+1 and 0.25/0.75 = (1-b)/b so both engines
-# evaluate the IDENTICAL expression tree
-_BM25_SQL = f"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(coalesce(text, '')),
-                     '[^a-z0-9]+'), t -> t != '') AS toks
-  FROM documents
-), base AS (
-  SELECT doc_id, CAST(len(toks) AS BIGINT) AS len,
-         {", ".join(
-             f"CAST(len(list_filter(toks, x -> x = '{t}')) AS BIGINT)"
-             f" AS tf{i}" for i, t in enumerate(_BM25_TERMS, 1))}
-  FROM d
-), stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(len) AS BIGINT) AS sumlen,
-         {", ".join(
-             f"CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT)"
-             f" AS df{i}" for i in range(1, len(_BM25_TERMS) + 1))}
-  FROM base
-), scored AS (
-  SELECT doc_id, len,
-         {", ".join(f"tf{i}" for i in range(1, len(_BM25_TERMS) + 1))},
-         {" + ".join(
-             f"(((CAST(n AS DOUBLE) - CAST(df{i} AS DOUBLE) + 0.5)"
-             f" / (CAST(df{i} AS DOUBLE) + 0.5))"
-             f" * (CAST(tf{i} AS DOUBLE) * 2.2)"
-             f" / (CAST(tf{i} AS DOUBLE)"
-             f" + 1.2 * (0.25 + 0.75 * (CAST(len AS DOUBLE)"
-             f" / (CAST(sumlen AS DOUBLE) / CAST(n AS DOUBLE))))))"
-             for i in range(1, len(_BM25_TERMS) + 1))} AS score
-  FROM base CROSS JOIN stats
-)
-SELECT doc_id, len AS n_tokens,
-       {", ".join(
-           f"tf{i} AS tf_{t}" for i, t in enumerate(_BM25_TERMS, 1))},
-       score,
-       CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-         AS rank
-FROM scored WHERE score > 0.0
-ORDER BY score DESC, doc_id LIMIT {_BM25_K}
-"""
-
 
 @query("text_bm25_topk", _BM25_SQL)
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,8 +812,6 @@ def a13_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_pretrain_sql() -> str:
-    from .pipeline_ops import _QUALITY_SQL, _build_langid_sql
-
     return rf"""
 WITH q AS ({_QUALITY_SQL}),
 l AS ({_build_langid_sql()}),
@@ -1106,17 +1065,6 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Statistical moments (deterministic formulation), value-range rolling
 # window, SCD2 history
 # ---------------------------------------------------------------------------
-
-def _split_sum_sql(expr: str, scale: int = 4) -> str:
-    """Twin of scalar.exact_sum_portable: int-part + frac-part, each a
-    single correctly-rounded conversion (a direct DECIMAL→DOUBLE cast is
-    double-rounded engine-specifically once unscaled > 2^53)."""
-    s = f"SUM(CAST({expr} AS DECIMAL(38,{scale})))"
-    return (
-        f"(CAST(CAST(FLOOR({s}) AS BIGINT) AS DOUBLE)"
-        f" + CAST({s} - FLOOR({s}) AS DOUBLE))"
-    )
-
 
 _MOMENTS_SQL = f"""
 WITH s AS (
@@ -2671,8 +2619,8 @@ def text_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``err_ok`` (overestimate ≤ 4N/w — integer-exact comparison
     (est−exact)·w ≤ 4N, true on the fixtures at every scale with d=4
     rows; an out-of-envelope sketch fails the hash). Hash family is the
-    portable md5-prefix (operators/dedup._h32_expr) with the row index
-    salted into the key."""
+    portable md5 prefix (first 8 hex chars as an int, the minhash base
+    hash) with the row index salted into the key."""
     from ..functions.text import tokens as _tokens
 
     d, w = _CMS_D, _CMS_W

@@ -20,6 +20,19 @@ from pyspark.sql import functions as F
 from ..operators import dedup, multimodal, sampling, similarity, textops
 from ..sources.io import scratch_dir as _scratch_dir
 from .parity import _t, query
+from .sql_fragments import (
+    _BM25_SQL,
+    _CLUSTERS_SQL,
+    _COS_SQL,
+    _JACCARD_SQL,
+    _QUALITY_SQL,
+    _SPLIT_FRACTIONS,
+    _build_jaccard_sql,
+    _build_langid_sql,
+    _ivf_cells_sql,
+    _split_case_sql,
+    _unit_sql,
+)
 
 # ---------------------------------------------------------------------------
 # Dedup family
@@ -198,60 +211,6 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _build_jaccard_sql(
-    n: int = 3, threshold: float = 0.5, max_postings: int | None = None
-) -> str:
-    """DuckDB twin of the n-gram shingle pipeline; token/shingle
-    construction is mirrored exactly (incl. the short-doc shingle
-    truncation — see dedup.shingle_sets ↔ the range/slice expressions).
-    ``max_postings`` mirrors the posting cap that is MANDATORY at 100 TB
-    (a shingle shared by k docs emits k² join rows): hot shingles drop
-    from the JOIN side only; set sizes stay full, so found-pair scores
-    are exact and only pairs sharing nothing but hot shingles are missed.
-    One builder serves the exact, capped, and clustering oracles."""
-    if max_postings is None:
-        cap_ctes, join_src = "", "e"
-    else:
-        cap_ctes = f"""), pf AS (
-  SELECT shingle, COUNT(*) AS pf FROM e GROUP BY shingle
-), ef AS (
-  SELECT e.doc_id, e.shingle
-  FROM e JOIN pf USING (shingle) WHERE pf.pf <= {max_postings}
-"""
-        join_src = "ef"
-    return rf"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     t -> t != '') AS toks
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-             range(1, greatest(1, len(toks) - {n - 1}) + 1),
-             i -> coalesce(array_to_string(toks[i:i+{n - 1}], ' '), ''))) AS shingles
-  FROM toks
-), e AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-{cap_ctes}), sizes AS (
-  SELECT doc_id, len(shingles) AS set_size FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-  FROM {join_src} a JOIN {join_src} b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, common,
-       sa.set_size AS size_a, sb.set_size AS size_b,
-       common::DOUBLE / (sa.set_size + sb.set_size - common) AS jaccard
-FROM common
-JOIN sizes sa ON common.id_a = sa.doc_id
-JOIN sizes sb ON common.id_b = sb.doc_id
-WHERE common::DOUBLE / (sa.set_size + sb.set_size - common) >= {threshold}
-"""
-
-
-_JACCARD_SQL = _build_jaccard_sql()
 _JACCARD_CAP = 5
 
 
@@ -350,13 +309,9 @@ SELECT * FROM (
 @query("dedup_minhash_lsh", _build_minhash_lsh_sql())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable md5 hash family + one-Arrow-pass signatures (no explode
-    shuffle) — the registered scale path, now fully oracle-gated. The
-    xxhash64 family stays the fast default for library callers."""
+    shuffle) — the registered scale path, fully oracle-gated."""
     return dedup.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.5,
-        hash_fn="md5",
-        vectorized=True,
+        _t(spark, sf_dir, "documents"), threshold=0.5
     )
 
 
@@ -404,24 +359,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# The IVF cell-assignment rule in DuckDB — every IVF / semantic-dedup twin
-# (here and in scale_ops) writes its centroid and cell CTEs through
-# _ivf_cells_sql
+# IVF / semantic-dedup twins — their centroid and cell CTEs come from
+# sql_fragments._ivf_cells_sql (the IVF cell-assignment rule in DuckDB)
 # ---------------------------------------------------------------------------
-
-# fold cosine, the norms' product guarded with greatest(·, 1e-300),
-# MIRRORED in the Spark plans (functions.vectors.cos_from, the IVF family
-# included): for any non-degenerate pair the guard is the identity
-# (|a|*|b| ≫ 1e-300, so the value and the oracle hash are bit-unchanged),
-# but an all-zero embedding yields cos = 0.0 in BOTH engines, against
-# another all-zero one too, instead of Spark's ANSI DIVIDE_BY_ZERO
-# (non-ANSI NULL) vs DuckDB's inf/NaN — the one input where unguarded twins
-# could diverge
-_COS_SQL = (
-    "list_dot_product({a}, {b})"
-    " / greatest(sqrt(list_dot_product({a}, {a}))"
-    " * sqrt(list_dot_product({b}, {b})), 1e-300)"
-)
 
 # the same fold cosine unguarded — the pair verifies of the semantic-dedup
 # twins, whose Spark sides divide by the raw norms, and sim_ann_ivf's
@@ -431,75 +371,6 @@ _FOLD_COS_SQL = (
     " / (sqrt(list_dot_product({a}, {a}))"
     " * sqrt(list_dot_product({b}, {b})))"
 )
-
-
-def _ivf_cells_sql(
-    n_centroids: int,
-    sample: str = "v",
-    asg: tuple = (("asg", "v", "v"),),
-    probe_from: str | None = None,
-    n_queries: int | None = None,
-    nprobe: int = 0,
-    keep: tuple = (),
-    prn: bool = False,
-    tag: str = "",
-) -> str:
-    """The ``cents``/``asg``/``probes`` CTE text of the portable IVF
-    configuration (operators/similarity: md5 sample order, iters=0
-    init-point centroids, guarded fold cosine, cos ties to the smaller
-    centroid id), comma-joined for a WITH list over a relation ``v`` of
-    (vec_id, ve) rows.
-
-    - ``cents{tag}``: the first ``n_centroids`` rows of ``sample`` (a
-      relation, optionally with a WHERE — the build-time cohort) in
-      (md5-slice(vec_id), vec_id) order;
-    - one nearest-cell CTE per ``asg`` entry (name, relation, alias):
-      (vec_id, cell) of every row of the relation;
-    - with ``probe_from``: ``probes{tag}`` = (query_id, cell) for the
-      ``nprobe`` nearest cells of each ``probe_from`` row (vec_id <
-      ``n_queries`` when given), plus the probe rank ``prn`` when
-      ``prn``.
-
-    ``keep`` columns ride both the assignment and the probe rows (the
-    filtered probe's label)."""
-    cents = f"cents{tag}"
-    ko = "".join(f", {c}" for c in keep)
-
-    def nearest(name, src, a, out, rank, extra="", where=""):
-        ki = "".join(f", {a}.{c}" for c in keep)
-        sel = f"{a}.vec_id" if out == "vec_id" else f"{a}.vec_id AS {out}"
-        return f"""{name} AS (
-  SELECT {out}{ko}, cell{extra} FROM (
-    SELECT {sel}{ki}, c.centroid_id AS cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY {a}.vec_id
-             ORDER BY {_COS_SQL.format(a=f"{a}.ve", b="c.cv")} DESC,
-                      c.centroid_id
-           ) AS rn
-    FROM {src}, {cents} c{where}
-  ) WHERE {rank}
-)"""
-
-    ctes = [f"""{cents} AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT)
-           AS centroid_id,
-         ve AS cv
-  FROM (
-    SELECT vec_id, ve,
-           ('0x' || substr(md5(vec_id::VARCHAR), 1, 8))::BIGINT AS h
-    FROM {sample} ORDER BY h, vec_id LIMIT {n_centroids}
-  )
-)"""]
-    for name, rel, a in asg:
-        src = rel if rel == a else f"{rel} {a}"
-        ctes.append(nearest(name, src, a, "vec_id", "rn = 1"))
-    if probe_from is not None:
-        ctes.append(nearest(
-            f"probes{tag}", f"{probe_from} q", "q", "query_id",
-            f"rn <= {nprobe}", ", rn AS prn" if prn else "",
-            "" if n_queries is None else f" WHERE q.vec_id < {n_queries}",
-        ))
-    return ",\n".join(ctes)
 
 
 _INCR_SEM = {"n_centroids": 16, "threshold": 0.30}
@@ -569,13 +440,13 @@ def dedup_incremental_semantic(
     )
 
 
-def _build_simhash_sql(max_hamming: int = 3, bands: int = 4) -> str:
-    """DuckDB twin of the portable-md5 SimHash pipeline. The 64-bit token
-    hash is hi·2^32 + lo (first/second 8 md5 hex chars) — each half a
-    plain BIGINT, so the per-bit shift-and-mask is identical to Spark's.
-    Packing goes through HUGEINT (bit 63 would overflow BIGINT) and wraps
-    to signed at the end; band chunks are taken from the unsigned value,
-    matching Spark's shiftrightunsigned."""
+def _simhash_sql_prefix() -> str:
+    """CTE prefix (tokens → md5 halves → bit sums → ``packed`` unsigned
+    HUGEINT → ``sim`` signed BIGINT) of the SimHash oracle. The 64-bit
+    token hash is hi·2^32 + lo (first/second 8 md5 hex chars) — each half
+    a plain BIGINT, so the per-bit shift-and-mask is identical to numpy's
+    (dedup.simhash_pandas). Packing goes through HUGEINT (bit 63 would
+    overflow BIGINT) and wraps to signed at the end."""
     bit_sums = ",\n         ".join(
         f"SUM(({'lo' if b < 32 else 'hi'} >> {b if b < 32 else b - 32}) & 1)"
         f" AS b{b}"
@@ -584,13 +455,6 @@ def _build_simhash_sql(max_hamming: int = 3, bands: int = 4) -> str:
     packed = "\n           + ".join(
         f"(CASE WHEN 2*b{b} > n THEN {1 << b}::HUGEINT ELSE 0::HUGEINT END)"
         for b in range(64)
-    )
-    width = 64 // bands
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {b} AS band,"
-        f" ((pu // {1 << (b * width)}::HUGEINT) % {1 << width})::BIGINT AS chunk"
-        " FROM packed"
-        for b in range(bands)
     )
     return f"""
 WITH t AS (
@@ -616,7 +480,22 @@ WITH t AS (
          (CASE WHEN pu >= {1 << 63}::HUGEINT
                THEN pu - {1 << 64}::HUGEINT ELSE pu END)::BIGINT AS simhash
   FROM packed
-), banded AS (
+)"""
+
+
+def _build_simhash_sql(max_hamming: int = 3, bands: int = 4) -> str:
+    """DuckDB twin of the SimHash near-pair pipeline: the shared prefix,
+    band chunks taken from the unsigned ``packed`` value (matching
+    Spark's shiftrightunsigned), the (band, chunk) self-join and the
+    exact bit_count(xor) verify."""
+    width = 64 // bands
+    band_rows = "\nUNION ALL\n".join(
+        f"SELECT doc_id, {b} AS band,"
+        f" ((pu // {1 << (b * width)}::HUGEINT) % {1 << width})::BIGINT AS chunk"
+        " FROM packed"
+        for b in range(bands)
+    )
+    return f"""{_simhash_sql_prefix()}, banded AS (
 {band_rows}
 ), cands AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -636,33 +515,10 @@ SELECT * FROM (
 @query("dedup_simhash", _build_simhash_sql())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable md5 family + one-Arrow-pass hashes (no explode shuffle) —
-    fully oracle-gated; xxhash64 stays the fast default for library use."""
+    fully oracle-gated."""
     return dedup.simhash_near_pairs(
-        _t(spark, sf_dir, "documents"),
-        max_hamming=3,
-        hash_fn="md5",
-        vectorized=True,
+        _t(spark, sf_dir, "documents"), max_hamming=3
     )
-
-
-# Clusters over the exact-Jaccard pairs (themselves oracle-gated above):
-# undirected reachability via recursive CTE, cluster = min reachable id —
-# identical to min-label-propagation's fixpoint.
-_CLUSTERS_SQL = rf"""
-WITH RECURSIVE dup_pairs AS (
-{_JACCARD_SQL.strip()}
-), dup_edges AS (
-  SELECT id_a AS src, id_b AS dst FROM dup_pairs
-  UNION ALL
-  SELECT id_b, id_a FROM dup_pairs
-), reach AS (
-  SELECT doc_id AS n, doc_id AS m FROM documents
-  UNION
-  SELECT r.n, dup_edges.dst FROM reach r
-  JOIN dup_edges ON dup_edges.src = r.m
-)
-SELECT n AS doc_id, MIN(m) AS cluster_id FROM reach GROUP BY n
-"""
 
 
 @query("dedup_clusters", _CLUSTERS_SQL)
@@ -886,60 +742,9 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.text_stats(_t(spark, sf_dir, "documents"))
 
 
-_QUALITY_SQL = r"""
-WITH f AS (
-  SELECT doc_id,
-         len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-             t -> t != ''))::BIGINT AS n_tokens,
-         len(regexp_extract_all(lower(text), '\b(the|and|of|to|is)\b'))::BIGINT
-           AS stop_hits,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE
-           / length(text) AS alpha_ratio
-  FROM documents
-)
-SELECT doc_id, n_tokens, stop_hits,
-       0.4::DOUBLE * (least(n_tokens, 64)::DOUBLE / 64.0::DOUBLE)
-       + 0.3::DOUBLE * alpha_ratio
-       + 0.3::DOUBLE * (least(stop_hits, 16)::DOUBLE / 16.0::DOUBLE) AS quality
-FROM f
-"""
-
-
 @query("text_quality", _QUALITY_SQL)
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.quality_score(_t(spark, sf_dir, "documents"))
-
-
-def _lang_hits_sql(lang: str, words: list[str]) -> str:
-    pat = "|".join(words)
-    return (
-        rf"len(regexp_extract_all(lower(text), '\b({pat})\b'))::BIGINT"
-        rf" AS hits_{lang}"
-    )
-
-
-def _build_langid_sql() -> str:
-    from ..functions.text import LANG_MARKERS
-
-    langs = sorted(LANG_MARKERS)
-    hits = ",\n         ".join(
-        _lang_hits_sql(lg, LANG_MARKERS[lg]) for lg in langs
-    )
-    branches = []
-    for lg in langs:
-        conds = [f"hits_{lg} >= hits_{o}" for o in langs if o != lg]
-        conds.append(f"hits_{lg} > 0")
-        branches.append(f"WHEN {' AND '.join(conds)} THEN '{lg}'")
-    case = "CASE " + " ".join(branches) + " ELSE 'und' END"
-    cols = ", ".join(f"hits_{lg}" for lg in langs)
-    return f"""
-WITH f AS (
-  SELECT doc_id,
-         {hits}
-  FROM documents
-)
-SELECT doc_id, {cols}, {case} AS pred_lang FROM f
-"""
 
 
 @query("text_lang_id", _build_langid_sql())
@@ -1495,30 +1300,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unit draw is computed bit-identically in DuckDB, so assignment, sampling,
 # and the contamination join are all full-hash oracle-gated.
 # ---------------------------------------------------------------------------
-
-# DuckDB twin of sampling._unit_hash(doc_id, salt)
-def _unit_sql(salt: str) -> str:
-    return (
-        f"(('0x' || substr(md5('{salt}:' || doc_id::VARCHAR), 1, 8))::BIGINT"
-        f" / 4294967296.0)"
-    )
-
-
-_SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
-
-
-def _split_case_sql() -> str:
-    """CASE over the SAME accumulated thresholds hash_split compares
-    against (emitted via repr — 0.8+0.1 is 0.9000000000000001 in IEEE,
-    not 0.9; a hand-written 0.9 would disagree on u values in between)."""
-    names = list(_SPLIT_FRACTIONS)
-    u = _unit_sql("split")
-    branches, cum = [], 0.0
-    for name in names[:-1]:
-        cum += _SPLIT_FRACTIONS[name]
-        branches.append(f"WHEN {u} < {cum!r} THEN '{name}'")
-    return "CASE " + " ".join(branches) + f" ELSE '{names[-1]}' END"
-
 
 _SPLIT_SQL = f"""
 SELECT doc_id, {_split_case_sql()} AS split
@@ -2231,12 +2012,8 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     single long→double divisions."""
     docs = _t(spark, sf_dir, "documents")
     exact = dedup.ngram_jaccard_pairs(docs, threshold=0.5)
-    cands = dedup.minhash_lsh_pairs(
-        docs, threshold=0.5, hash_fn="md5", vectorized=True, verify=False
-    )
-    ver = dedup.minhash_lsh_pairs(
-        docs, threshold=0.5, hash_fn="md5", vectorized=True
-    )
+    cands = dedup.minhash_lsh_pairs(docs, threshold=0.5, verify=False)
+    ver = dedup.minhash_lsh_pairs(docs, threshold=0.5)
     n_exact = exact.groupBy().agg(
         F.count(F.lit(1)).alias("n_exact_pairs")
     )
@@ -2981,8 +2758,6 @@ _RRF_TOPK = 10      # fused results returned
 
 
 def _build_hybrid_rrf_sql() -> str:
-    from .extended_ops import _BM25_SQL
-
     return f"""
 WITH bm AS (
   {_BM25_SQL.strip()}
@@ -5104,7 +4879,7 @@ def dedup_lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     union = F.size("sh_a") + F.size("sh_b") - inter
     out = None
     for b in _LSH_SWEEP_BANDS:
-        banded = _banded_keys(sigs, "doc_id", 64, b, "md5").cache()
+        banded = _banded_keys(sigs, "doc_id", 64, b).cache()
         ba, bb = banded.alias("a"), banded.alias("b")
         cands = (
             ba.join(

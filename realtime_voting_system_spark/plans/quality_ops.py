@@ -263,7 +263,7 @@ _CARD_QUALITY_T = 0.55
 
 def _dataset_card_sql() -> str:
     from ..functions.text import LANG_MARKERS
-    from .pipeline_ops import _lang_hits_sql
+    from .sql_fragments import _lang_hits_sql
 
     langs = sorted(LANG_MARKERS)
     hits = ",\n         ".join(

@@ -11,7 +11,7 @@ top-k revenue reports, correlated-aggregate filters, scalar-subquery
 thresholds, disjunctive pushdown, distribution histograms.
 
 Every query keeps the exact-decimal determinism discipline of
-functions/scalar.exact_sum_portable (see extended_ops._split_sum_sql): sums
+functions/scalar.exact_sum_portable (see sql_fragments._split_sum_sql): sums
 of money accumulate in DECIMAL(38,s) and emerge through the floor-split
 double conversion both engines perform identically.
 
@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import exact_sum_portable
-from .extended_ops import _split_sum_sql
 from .parity import _t, query
+from .sql_fragments import _split_sum_sql
 
 _REV = "l.l_extendedprice * (1 - l.l_discount)"
 

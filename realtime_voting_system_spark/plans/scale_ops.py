@@ -19,7 +19,13 @@ from ..functions.text import token_count
 from ..operators import chunking, incremental, layout, shapes
 from ..sources.io import scratch_dir as _scratch_dir
 from .parity import _t, query
-from .pipeline_ops import _COS_SQL, _ivf_cells_sql
+from .sql_fragments import (
+    _CLUSTERS_SQL,
+    _COS_SQL,
+    _QUALITY_SQL,
+    _ivf_cells_sql,
+    _split_sum_sql,
+)
 
 # ---------------------------------------------------------------------------
 # X56 — token-window chunking
@@ -541,8 +547,6 @@ _RATE_K = 3
 
 
 def _build_canonical_sql() -> str:
-    from .pipeline_ops import _CLUSTERS_SQL, _QUALITY_SQL
-
     return f"""
 WITH clusters AS ({_CLUSTERS_SQL}),
 q AS ({_QUALITY_SQL}),
@@ -1519,7 +1523,7 @@ def _pq_sql_cols(book) -> tuple[list[str], list[str]]:
 
 def _build_ivfpq_sql(base_where: str = "") -> str:
     """DuckDB twin of the declarative IVF-PQ path: the cents/asg/probes
-    CTEs are pipeline_ops._ivf_cells_sql's, the code columns are
+    CTEs are sql_fragments._ivf_cells_sql's, the code columns are
     _pq_sql's, and ADC approx = Σ_m dot(query-subvector,
     codeword[code_m]) with the same dyadic codebook literals.
     ``base_where`` restricts the CENTROID SAMPLE only (the X219
@@ -1606,7 +1610,7 @@ _ANN_IVF_JOIN = {"k": 5, "n_centroids": 16, "nprobe": 4, "n_queries": 64}
 def _build_ann_ivf_join_sql() -> str:
     """DuckDB twin of operators/similarity.ann_ivf_join_topk under the
     portable config (md5 sample order, iters=0 init-point centroids,
-    guarded fold cosine — _COS_SQL): pipeline_ops._ivf_cells_sql's
+    guarded fold cosine — _COS_SQL): sql_fragments._ivf_cells_sql's
     cells, the guarded rescore tail and a larger query set (the point
     of the join variant is that the query side is a TABLE, never
     driver-materialized)."""
@@ -1869,7 +1873,6 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _register_curriculum_sql() -> None:
     from .parity import ORACLE_SQL
-    from .pipeline_ops import _QUALITY_SQL
 
     ORACLE_SQL["pipeline_curriculum"] = _CURRICULUM_SQL.format(
         quality=_QUALITY_SQL
@@ -1995,7 +1998,6 @@ def pipeline_quality_classifier(
 
 def _register_qcls_sql() -> None:
     from .parity import ORACLE_SQL
-    from .pipeline_ops import _QUALITY_SQL
 
     ORACLE_SQL["pipeline_quality_classifier"] = _QCLS_SQL.format(
         quality=_QUALITY_SQL
@@ -2085,7 +2087,6 @@ def pipeline_quality_calibration(
 
 def _register_qcal_sql() -> None:
     from .parity import ORACLE_SQL
-    from .pipeline_ops import _QUALITY_SQL
 
     ORACLE_SQL["pipeline_quality_calibration"] = _QCAL_SQL.format(
         qcls=_QCLS_SQL.format(quality=_QUALITY_SQL),
@@ -2104,7 +2105,6 @@ _register_qcal_sql()
 
 
 def _part_prune_sql() -> str:
-    from .extended_ops import _split_sum_sql
 
     return f"""
 SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -2143,7 +2143,6 @@ def s11_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _compaction_sql() -> str:
-    from .extended_ops import _split_sum_sql
 
     return f"""
 SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -2205,7 +2204,6 @@ _register_part_prune_sql()
 
 
 def _schema_evo_sql() -> str:
-    from .extended_ops import _split_sum_sql
 
     return f"""
 SELECT b, CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -2273,7 +2271,6 @@ _register_schema_evo_sql()
 
 
 def _bucketed_join_sql() -> str:
-    from .extended_ops import _split_sum_sql
 
     return f"""
 SELECT c.c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -2343,7 +2340,6 @@ _register_bucketed_join_sql()
 
 
 def _wap_sql() -> str:
-    from .extended_ops import _split_sum_sql
 
     return f"""
 SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -2921,7 +2917,7 @@ def s16_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _build_ivfpq_residual_sql(base_where: str = "") -> str:
     """DuckDB twin of ann_ivfpq_topk(residual=True): cents/asg/probes
-    are pipeline_ops._ivf_cells_sql's; residual code selection uses the
+    are sql_fragments._ivf_cells_sql's; residual code selection uses the
     expanded-L2 tree (dot(s,s) − 2·dot(s,cs) + dot(cs,cs)) −
     2·(dot(s,cw) − dot(cs,cw)) + |cw|² with the assigned cell's
     centroid slices joined

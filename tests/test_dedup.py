@@ -1,5 +1,7 @@
-"""Property tests for dedup operators without SQL twins (SURVEY.md §5 item 2;
-the exact-Jaccard operator is the in-suite oracle for MinHash/SimHash)."""
+"""Property tests for the dedup operators (SURVEY.md §5 item 2; the
+exact-Jaccard operator is the in-suite oracle for MinHash/SimHash), plus
+the per-document Arrow passes checked against the CTEs of their DuckDB
+oracle twins."""
 
 from __future__ import annotations
 
@@ -7,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from realtime_voting_system_spark.operators import dedup
+
+from .oracle import duckdb_run
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +59,7 @@ def test_minhash_lsh_finds_high_jaccard_pairs(spark, docs):
 
 def test_minhash_jaccard_estimate_close(spark, docs):
     """Signature agreement rate ≈ true Jaccard (64 hashes → ±~0.12 at 95%)."""
-    sigs = dedup.minhash_signatures(docs)
+    sigs = dedup.minhash_signatures_pandas(docs)
     a, b = sigs.alias("a"), sigs.alias("b")
     est = (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
@@ -85,37 +89,30 @@ def test_minhash_jaccard_estimate_close(spark, docs):
         assert abs(r.est - true_j) < 0.25, (r.id_a, r.id_b, r.est, true_j)
 
 
-def test_minhash_pandas_matches_jvm(spark, docs):
-    """The one-Arrow-pass signature path (no explode shuffle) must be
-    bit-equal to the JVM reference under the shared md5 hash family —
-    anchors the registered scale plan to the oracle-gated arithmetic."""
-    jvm = {
-        r.doc_id: list(r.sig)
-        for r in dedup.minhash_signatures(docs, hash_fn="md5").collect()
+def _minhash_twin(sf_dir, select):
+    from realtime_voting_system_spark.plans.pipeline_ops import (
+        _minhash_sql_prefix,
+    )
+
+    return duckdb_run(_minhash_sql_prefix(3, 64, 16) + select, sf_dir)
+
+
+def test_minhash_pandas_matches_jvm(spark, docs, sf_dir):
+    """The one-Arrow-pass signatures must equal, all 64 values for every
+    doc, the ``sig`` CTE of the DuckDB twin — anchors the registered scale
+    plan to the oracle-gated arithmetic."""
+    cols = ", ".join(f"h{i}" for i in range(64))
+    twin = {
+        int(r.doc_id): list(r[1:])
+        for r in _minhash_twin(
+            sf_dir, f"\nSELECT doc_id, {cols} FROM sig"
+        ).itertuples(index=False)
     }
     arrow = {
         r.doc_id: list(r.sig)
         for r in dedup.minhash_signatures_pandas(docs).collect()
     }
-    assert jvm == arrow
-
-
-def test_minhash_hash_families_equivalent_pairs(spark, docs):
-    """xxhash64 (fast default) and md5 (portable) families must find the
-    same verified pairs — the verify step is hash-independent exact
-    Jaccard, so only candidate recall can differ; at j ≥ 0.7 both
-    s-curves sit at ≈ 0.98 collision probability."""
-    fast = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_pairs(docs, threshold=0.7).collect()
-    }
-    portable = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_pairs(
-            docs, threshold=0.7, hash_fn="md5", vectorized=True
-        ).collect()
-    }
-    assert fast and fast == portable
+    assert twin and twin == arrow
 
 
 def test_simhash_near_pairs_are_high_jaccard(spark, docs):
@@ -134,15 +131,18 @@ def test_simhash_near_pairs_are_high_jaccard(spark, docs):
     assert found >= 0.8, f"simhash found only {found} of near-identical pairs"
 
 
-def test_simhash_pandas_matches_jvm(spark, docs):
-    """One-Arrow-pass simhash must be bit-equal to the JVM reference under
-    the shared md5 family (anchors the registered plan to the oracle)."""
-    jvm = {
-        r.doc_id: r.simhash
-        for r in dedup.simhash(docs, hash_fn="md5").collect()
-    }
+def test_simhash_pandas_matches_jvm(spark, docs, sf_dir):
+    """One-Arrow-pass simhash must equal the ``sim`` CTE of the DuckDB
+    twin bit for bit (anchors the registered plan to the oracle)."""
+    from realtime_voting_system_spark.plans.pipeline_ops import (
+        _simhash_sql_prefix,
+    )
+
+    twin = duckdb_run(
+        _simhash_sql_prefix() + "\nSELECT doc_id, simhash FROM sim", sf_dir
+    )
     arrow = {r.doc_id: r.simhash for r in dedup.simhash_pandas(docs).collect()}
-    assert jvm == arrow
+    assert arrow and dict(zip(twin.doc_id, twin.simhash)) == arrow
 
 
 def test_embedding_lsh_pairs_subset_of_bruteforce(spark, sf_dir):
@@ -203,19 +203,21 @@ def test_embedding_dup_pairs_symmetric_bounds(spark, sf_dir):
     assert -1.0000001 <= sims[0] and sims[1] <= 1.0000001
 
 
-def test_shingle_sets_pandas_matches_hof(spark, docs):
+def test_shingle_sets_pandas_matches_hof(spark, docs, sf_dir):
     """The Arrow shingling pass must produce the same distinct shingle sets
-    as the HOF reference (order-insensitive — consumers are explode /
-    array_intersect / len)."""
-    hof = {
-        r.doc_id: sorted(r.shingles)
-        for r in dedup.shingle_sets(docs, "doc_id", "text", 3).collect()
+    as the ``sh`` CTE of the DuckDB MinHash twin (order-insensitive —
+    consumers are explode / array_intersect / len)."""
+    twin = {
+        int(r.doc_id): sorted(r.shingles)
+        for r in _minhash_twin(
+            sf_dir, "\nSELECT doc_id, shingles FROM sh"
+        ).itertuples(index=False)
     }
     arrow = {
         r.doc_id: sorted(r.shingles)
         for r in dedup.shingle_sets_pandas(docs, "doc_id", "text", 3).collect()
     }
-    assert hof == arrow
+    assert twin and twin == arrow
 
 
 def test_dup_clusters_transitive_chain(spark):
@@ -234,8 +236,8 @@ def test_dup_clusters_transitive_chain(spark):
 
 
 def test_arrow_paths_drop_null_text_like_jvm(spark):
-    """NULL text must not crash the Arrow paths; they mirror the JVM
-    explode-drop semantics (doc simply absent from shingle/signature
+    """NULL text must not crash the Arrow paths; they mirror the twins'
+    unnest-drop semantics (doc simply absent from shingle/signature
     output)."""
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, None), (3, "alpha beta gamma")],
@@ -244,8 +246,6 @@ def test_arrow_paths_drop_null_text_like_jvm(spark):
     assert {r.doc_id for r in dedup.shingle_sets_pandas(df, "doc_id", "text").collect()} == {1, 3}
     assert {r.doc_id for r in dedup.minhash_signatures_pandas(df).collect()} == {1, 3}
     assert {r.doc_id for r in dedup.simhash_pandas(df).collect()} == {1, 3}
-    jvm = {r.doc_id for r in dedup.simhash(df, hash_fn="md5").collect()}
-    assert jvm == {1, 3}
 
 
 def test_incremental_dedup_statuses(spark):

@@ -56,6 +56,27 @@ def test_minhash_index_probe_matches_operator(spark, docs, tmp_path):
     assert _rows(loaded.probe(batch)) == _rows(direct)
 
 
+def test_minhash_index_saved_with_hash_fn(spark, docs, tmp_path):
+    """Indexes saved while the signature family was a param carry
+    ``hash_fn``: a stored md5 is dropped and the index serves; any other
+    family raises, since its bands would never match a probe's md5 bands.
+    build() no longer takes the key."""
+    corpus = docs.filter(F.col("doc_id") % 2 == 0)
+    batch = docs.filter(F.col("doc_id") % 2 == 1)
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.DedupIndex.build(corpus, "minhash", hash_fn="md5")
+    idx = dedup.DedupIndex.build(corpus, "minhash")
+    for fam in ("md5", "xxhash64"):
+        dedup.DedupIndex(
+            idx.kind, {**idx.params, "hash_fn": fam}, idx.arts
+        ).save(str(tmp_path / fam))
+    loaded = dedup.DedupIndex.load(spark, str(tmp_path / "md5"))
+    assert loaded.params == idx.params
+    assert _rows(loaded.probe(batch)) == _rows(idx.probe(batch))
+    with pytest.raises(ValueError, match="xxhash64"):
+        dedup.DedupIndex.load(spark, str(tmp_path / "xxhash64"))
+
+
 def test_semantic_index_probe_matches_operator(spark, emb, tmp_path):
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter(F.col("vec_id") % 2 == 1)

@@ -182,8 +182,6 @@ def test_oracle_cosine_of_two_zero_vectors_is_zero():
     """The DuckDB twin of the guarded cosine, as the oracles write it."""
     import duckdb
 
-    # parity imports the plan modules in the order their imports need
-    from realtime_voting_system_spark.plans import parity  # noqa: F401
     from realtime_voting_system_spark.plans.pipeline_ops import _COS_SQL
 
     z = "[0.0, 0.0]::DOUBLE[]"

@@ -272,12 +272,17 @@ def test_approx_count_distinct_within_bound(spark, sf_dir):
 
 
 def test_repetition_arrow_matches_hof(spark, sf_dir):
-    """The Arrow fast path and the pure-JVM fold are bit-equal on the real
-    corpus (including the float divisions — same IEEE ops both sides)."""
+    """The Arrow pass equals its DuckDB twin on the real corpus, dtypes
+    and float divisions included (same IEEE ops both sides)."""
+    from realtime_voting_system_spark.plans.extended_ops import _REPETITION_SQL
+
+    from .oracle import assert_frames_match, duckdb_run
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fast = textops.repetition_stats(docs, n=3).toPandas().sort_values("doc_id", ignore_index=True)
-    slow = textops.repetition_stats_hof(docs, n=3).toPandas().sort_values("doc_id", ignore_index=True)
-    assert fast.equals(slow)
+    got = textops.repetition_stats(docs, n=3).toPandas()
+    assert_frames_match(
+        got, duckdb_run(_REPETITION_SQL, sf_dir), "repetition_stats"
+    )
 
 
 def test_profile_counts_nulls_and_distinct(spark):
